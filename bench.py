@@ -250,12 +250,12 @@ def main() -> None:
         # names only inline (bounded); full messages are on stderr above
         out["errors"] = sorted(errs)
 
+    q2: dict[str, float] = {}
+    errs2: dict[str, str] = {}
     if (
         os.path.isdir(secondary)
         and os.path.abspath(secondary) != os.path.abspath(sf_dir)
     ):
-        q2: dict[str, float] = {}
-        errs2: dict[str, str] = {}
         for ci, chunk in enumerate(chunks):
             spark.stop()
             spark = fresh_session(f"vdbi-bench-sec-{ci}", secondary)
@@ -283,7 +283,7 @@ def main() -> None:
         full["queries"] = qtimes  # pre-truncation, full precision
         if errs:
             full["errors_full"] = errs
-        if "q2" in dir() and q2:
+        if q2:
             full["queries_secondary"] = q2
             if errs2:
                 full["errors_secondary"] = errs2

@@ -347,106 +347,8 @@ def test_rev_edges_mirror_forward_and_n_live_tracks(spark, corpus, tmp_path):
     assert meta["n_live"] == vecs.count() == N0 + NB
 
 
-def test_migration_from_unbucketed_artifact_rebuilds(spark, tmp_path):
-    """An r08-era artifact (no bucket partitioning, meta without
-    "buckets"/"rev"/"n_live") must survive the first post-upgrade
-    batch via the rebuild path instead of KeyError'ing."""
-    import vectordbindexing_spark.streaming.graph_ingest as gi
-
-    import json as _json
-
-    from vectordbindexing_spark.operators.graph import build_two_layer_index
-    from vectordbindexing_spark.streaming import atomic
-
-    base = spark.createDataFrame(
-        [(i, [float((i * 3) % 7), float(i % 5), 1.0]) for i in range(60)],
-        "id long, vec array<double>",
-    )
-    art = str(tmp_path / "legacy_art")
-    import os
-
-    os.makedirs(art)
-    edges = build_two_layer_index(base, M0=4, M1=2, metric="cosine", M_level=16)
-    atomic.swap_in(base, art + "/vectors", coalesce=None)
-    atomic.swap_in(edges, art + "/edges", coalesce=None)
-    atomic.write_json_atomic(
-        art + "/meta.json",
-        {"n_at_rebuild": 60, "M0": 4, "M1": 2, "M_level": 16,
-         "metric": "cosine"},
-    )
-
-    batch = spark.createDataFrame(
-        [(100, [1.0, 2.0, 3.0]), (101, [2.0, 1.0, 0.5])],
-        "id long, vec array<double>",
-    )
-    assert upsert_graph_artifact(batch, art, refresh_factor=10.0) == "rebuild"
-    vecs, edges2, meta = load_graph_artifact(spark, art)
-    assert vecs.count() == 62
-    assert meta["buckets"] > 0 and meta["rev"] is True
-    assert meta["n_live"] == meta["n_at_rebuild"] == 62
-    # post-migration batches take the incremental path with the mirror
-    b2 = spark.createDataFrame(
-        [(102, [0.1, 0.2, 0.9])], "id long, vec array<double>"
-    )
-    assert upsert_graph_artifact(b2, art, refresh_factor=10.0) == "upsert"
-    from vectordbindexing_spark.streaming.graph_ingest import (
-        rev_edges_resolved,
-    )
-
-    got = sorted(
-        (r["layer"], r["src"], r["dst"])
-        for r in rev_edges_resolved(spark, art).collect()
-    )
-    want = sorted(
-        (r["layer"], r["src"], r["dst"])
-        for r in gi.edges_resolved(spark, art).collect()
-    )
-    assert got == want
 
 
-def test_migration_bucketed_but_no_rev_materializes_inverse(
-    spark, tmp_path
-):
-    """An r09-era artifact (bucketed, meta without "rev") gets the
-    inverted adjacency materialized once — no rebuild — and proceeds
-    incrementally."""
-    import vectordbindexing_spark.streaming.graph_ingest as gi
-
-    import json as _json
-    import shutil
-
-    base = spark.createDataFrame(
-        [(i, [float((i * 3) % 7), float(i % 5), 1.0]) for i in range(60)],
-        "id long, vec array<double>",
-    )
-    art = str(tmp_path / "norev_art")
-    init_graph_artifact(base, art, M0=4, M1=2, buckets=8)
-    shutil.rmtree(art + "/rev_edges")
-    meta = _json.load(open(art + "/meta.json"))
-    del meta["rev"]
-    del meta["n_live"]  # r09 meta had neither
-    _json.dump(meta, open(art + "/meta.json", "w"))
-
-    batch = spark.createDataFrame(
-        [(100, [1.0, 2.0, 3.0])], "id long, vec array<double>"
-    )
-    assert upsert_graph_artifact(batch, art, refresh_factor=10.0) == "upsert"
-    vecs, edges, meta = load_graph_artifact(spark, art)
-    assert vecs.count() == 61 and meta["rev"] is True
-    assert meta["n_live"] == 61
-    from vectordbindexing_spark.streaming.graph_ingest import (
-        rev_edges_resolved,
-    )
-
-    got = sorted(
-        (r["layer"], r["src"], r["dst"])
-        for r in rev_edges_resolved(spark, art).collect()
-    )
-    want = sorted(
-        (r["layer"], r["src"], r["dst"])
-        for r in gi.edges_resolved(spark, art).collect()
-    )
-    assert got == want
 
 
 def test_replay_noop_reads_only_the_batch_bucket_footprint(
@@ -669,40 +571,6 @@ def test_crash_before_rev_delta_write_heals_on_replay(
     assert upsert_graph_artifact(b1, art, refresh_factor=10.0) == "noop"
 
 
-def test_pre_clear_rev_delta_removes_only_its_own_seq(tmp_path):
-    """The replay pre-clear must match d<seq>.parquet and
-    d<seq>-<i>.parquet EXACTLY — a bare d<seq>* pattern would also
-    delete d<seq>0…'s files (seq 1 eating seq 10's delta)."""
-    import os
-
-    import vectordbindexing_spark.streaming.graph_ingest as gi
-
-    adds = tmp_path / "rev_delta" / "adds" / "bucket=3"
-    tombs = tmp_path / "rev_delta" / "tombs"
-    adds.mkdir(parents=True)
-    tombs.mkdir(parents=True)
-    for n in [
-        "d1.parquet", "d1-0.parquet", "d1-1.parquet",
-        "d10.parquet", "d10-0.parquet", "d12-0.parquet",
-    ]:
-        (adds / n).write_bytes(b"x")
-    (tombs / "d1.parquet").write_bytes(b"x")
-    (tombs / "d10.parquet").write_bytes(b"x")
-
-    # flat-layout files straight under adds/ must follow the same
-    # exact-seq rule
-    flat = tmp_path / "rev_delta" / "adds"
-    for n in ["d1-0.parquet", "d10-0.parquet"]:
-        (flat / n).write_bytes(b"x")
-
-    gi._pre_clear_rev_delta(str(tmp_path), 1, [3, 99])  # 99: absent dir
-    assert sorted(os.listdir(adds)) == [
-        "d10-0.parquet", "d10.parquet", "d12-0.parquet"
-    ]
-    assert sorted(
-        n for n in os.listdir(flat) if not n.startswith("bucket=")
-    ) == ["d10-0.parquet"]
-    assert sorted(os.listdir(tombs)) == ["d10.parquet"]
 
 
 def test_write_rev_delta_moves_every_part_file(spark, tmp_path, monkeypatch):
@@ -995,44 +863,3 @@ def test_ivf_mirror_crash_before_delta_append_heals_on_replay(
     vecs, edges, _ = load_graph_artifact(spark, art)
     gt1 = _gt(q, base.unionByName(b1))
     assert _recall(spark, q, vecs, edges, gt1) >= 0.6
-
-
-def test_legacy_per_bucket_delta_folds_away_and_appends_flat(
-    spark, corpus, tmp_path, monkeypatch
-):
-    """Pre-r12 logs hold one adds file PER TOUCHED BUCKET — a listing
-    cost that grows with batch count (measured at 2M: ~15k fwd + ~23k
-    rev files PER 1000-row batch, ~10k-task scans after a handful of
-    batches). The first upsert against such an artifact must fold the
-    legacy log away (the fold IS the migration) and append flat
-    bucket-sorted files from then on, with resolution unchanged."""
-    import glob
-    import os
-
-    import vectordbindexing_spark.streaming.graph_ingest as gi
-
-    full, base, b1, b2, q = corpus
-    art = str(tmp_path / "legacy_art")
-    init_graph_artifact(base, art, M0=M0, M1=M1, buckets=8)
-
-    # a legacy-era batch: pin the writers into the per-bucket layout
-    monkeypatch.setattr(gi, "_legacy_delta", lambda *a, **k: True)
-    upsert_graph_artifact(b1, art)
-    monkeypatch.undo()
-    assert glob.glob(os.path.join(art, "rev_delta", "adds", "bucket=*"))
-    assert glob.glob(os.path.join(art, "fwd_delta", "adds", "bucket=*"))
-    n_legacy = gi.edges_resolved(spark, art).count()
-
-    # the next upsert folds the legacy logs (migration) and its own
-    # delta lands as flat files under adds/
-    out = upsert_graph_artifact(b2, art)
-    assert out == "upsert"
-    for log in ("rev_delta", "fwd_delta"):
-        assert not glob.glob(os.path.join(art, log, "adds", "bucket=*"))
-        flat = glob.glob(os.path.join(art, log, "adds", "d*-*.parquet"))
-        assert flat, f"{log}: no flat delta files appended"
-    # resolution still serves the union state
-    assert gi.edges_resolved(spark, art).count() > n_legacy
-    vecs, edges, _ = load_graph_artifact(spark, art)
-    gt = _gt(q, full)
-    assert _recall(spark, q, vecs, edges, gt) >= 0.6

@@ -475,54 +475,6 @@ def test_stream_sink_partition_is_idempotent_on_redelivery(
     assert spark.read.parquet(sink).count() == len(once)
 
 
-def test_pre_hashing_artifact_migrates_in_place(spark, docs, tmp_path):
-    """An artifact built by the legacy string-grams layout upgrades on
-    its first upsert (ghash = sorted distinct det_hash60 of the stored
-    strings — no text re-ingest) and behaves identically afterwards."""
-    import vectordbindexing_spark.streaming.neardup as nd
-    from vectordbindexing_spark.operators.dedup import (
-        band_rows,
-        minhash_signatures,
-    )
-    from vectordbindexing_spark.streaming.atomic import (
-        swap_in,
-        write_json_atomic,
-    )
-
-    base, b1, _ = _split(docs)
-    art = str(tmp_path / "legacy")
-    os.makedirs(art, exist_ok=True)
-    buckets = 16
-    # replicate the legacy init: raw gram STRINGS persisted
-    g = minhash_signatures(base)  # (did, grams, sig)
-    swap_in(
-        g.withColumn("bucket", nd._did_bucket(buckets)),
-        os.path.join(art, "signatures"), coalesce=None,
-        partition_by=["bucket"],
-    )
-    br = band_rows(g, 8, 2)
-    swap_in(
-        br.withColumn("bucket", nd._band_bucket(buckets)),
-        os.path.join(art, "bands"), coalesce=None, partition_by=["bucket"],
-    )
-    write_json_atomic(
-        os.path.join(art, "meta.json"),
-        {"n_docs": base.count(), "n": 3, "num_hashes": 16, "bands": 8,
-         "buckets": buckets},
-    )
-
-    pairs = _pairs_set(upsert_neardup_artifact(b1, art))
-    exp = _pairs_set(
-        minhash_dedup_pairs(base.unionByName(b1)).where(
-            (F.col("id_a") % 3 == 1) | (F.col("id_b") % 3 == 1)
-        )
-    )
-    assert pairs == exp
-    sig = spark.read.parquet(os.path.join(art, "signatures"))
-    assert "ghash" in sig.columns and "grams" not in sig.columns
-    ref = str(tmp_path / "legacyref")
-    init_neardup_artifact(base.unionByName(b1), ref, buckets=16)
-    assert _state(spark, art) == _state(spark, ref)
 
 
 def test_bands_delta_is_append_only_and_compaction_folds(
@@ -577,22 +529,6 @@ def test_bands_delta_is_append_only_and_compaction_folds(
     assert meta["band_seq"] == 2 and meta["pending"] is None
 
 
-def test_pre_clear_band_delta_removes_only_its_own_seq(tmp_path):
-    """Replay pre-clear matches d<seq>.parquet / d<seq>-<i>.parquet
-    exactly — a bare d<seq>* pattern would eat d<seq>0…'s files."""
-    import vectordbindexing_spark.streaming.neardup as nd
-
-    adds = tmp_path / "bands_delta" / "adds" / "bucket=5"
-    tombs = tmp_path / "bands_delta" / "tombs"
-    adds.mkdir(parents=True)
-    tombs.mkdir(parents=True)
-    for n in ["d1.parquet", "d1-0.parquet", "d10-0.parquet", "d12.parquet"]:
-        (adds / n).write_bytes(b"x")
-    (tombs / "d1.parquet").write_bytes(b"x")
-    (tombs / "d10.parquet").write_bytes(b"x")
-    nd._pre_clear_band_delta(str(tmp_path), 1, [5, 99])
-    assert sorted(os.listdir(adds)) == ["d10-0.parquet", "d12.parquet"]
-    assert sorted(os.listdir(tombs)) == ["d10.parquet"]
 
 
 def test_band_tombs_without_adds_serves_instead_of_throwing(

@@ -850,7 +850,7 @@ def editdist_neardup_pairs(
     q: int = 3,
     key_col: str = "text",
     id_col: str = "doc_id",
-    cell_cap: int | None = 10_000,
+    cell_cap: int = 10_000,
 ) -> DataFrame:
     """Fuzzy-key near-dup pairs within Levenshtein distance ``d`` via
     LOSSLESS q-gram prefix filtering (Ed-Join, Xiao et al. VLDB'08) —
@@ -935,7 +935,7 @@ def editdist_neardup_pairs(
         F.lit("\x00SHORT").alias("_gram"), F.lit(0).alias("_k"),
     )
     inv = prefix.unionByName(short)
-    if cell_cap is not None and df.limit(cell_cap + 1).count() > cell_cap:
+    if df.limit(cell_cap + 1).count() > cell_cap:
         # n_rows <= cap already proves no cell can overflow (one cheap
         # columnar count — the common exact path pays only that).
         # Above it, ONE scan+agg probe (no windows/joins in its
@@ -973,38 +973,20 @@ def editdist_neardup_pairs(
     # of inv would also dedup the subtree but crashes Spark 4.1's
     # constraint rewrite ("key not found" — the Generate-derived
     # size(transform(text..)) constraint references the pruned input
-    # column). With cell_cap=None (the caller's explicit opt-out)
-    # nothing bounds a cell, so the spill-safe self-join is kept for
-    # that path — same pair set either way (pinned by test).
-    if cell_cap is None:
-        cand = (
-            inv.alias("a")
-            .join(inv.alias("b"), ["_gram", "_k"])
-            .filter(
-                (F.col("a._id") < F.col("b._id"))
-                & (F.abs(F.col("a._len") - F.col("b._len")) <= d)
-            )
-            .select(
-                F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-            )
-            .distinct()
+    # column).
+    cells = inv.groupBy("_gram", "_k").agg(
+        F.collect_list(F.struct("_id", "_len")).alias("_xs")
+    )
+    cand = (
+        cells.select(F.explode("_xs").alias("a"), "_xs")
+        .select("a", F.explode("_xs").alias("b"))
+        .filter(
+            (F.col("a._id") < F.col("b._id"))
+            & (F.abs(F.col("a._len") - F.col("b._len")) <= d)
         )
-    else:
-        cells = inv.groupBy("_gram", "_k").agg(
-            F.collect_list(F.struct("_id", "_len")).alias("_xs")
-        )
-        cand = (
-            cells.select(F.explode("_xs").alias("a"), "_xs")
-            .select("a", F.explode("_xs").alias("b"))
-            .filter(
-                (F.col("a._id") < F.col("b._id"))
-                & (F.abs(F.col("a._len") - F.col("b._len")) <= d)
-            )
-            .select(
-                F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-            )
-            .distinct()
-        )
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        .distinct()
+    )
     keys = base.select("_id", "_key")
     verified = (
         cand.join(keys.withColumnRenamed("_id", "id_a")

@@ -237,6 +237,22 @@ def write_json_atomic(path: str, obj: dict) -> None:
     os.replace(tmp, path)
 
 
+def read_meta(path: str, fmt: int) -> dict:
+    """Load an artifact's meta.json and check its ``format`` stamp. An
+    artifact written in another on-disk layout (or before the stamp
+    existed) raises instead of being misread; the fix is to rebuild it
+    with the maintainer's init."""
+    with open(path) as f:
+        meta = json.load(f)
+    found = meta.get("format")
+    if found != fmt:
+        raise ValueError(
+            f"{path}: artifact format {found!r}, expected {fmt}; "
+            "re-run init to rebuild the artifact"
+        )
+    return meta
+
+
 def write_local_parquet(rows: list, schema, path: str) -> int:
     """DRIVER-LOCAL rows → one parquet file at ``path``, no Spark job.
 
@@ -285,3 +301,28 @@ def count_parquet_rows(path: str) -> int:
             if f.endswith(".parquet"):
                 total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
     return total
+
+
+def append_local_delta(
+    adds_dir: str,
+    tombs_dir: str,
+    seq: int,
+    tomb_rows: list,
+    tomb_schema,
+    add_rows: list,
+    add_schema,
+) -> int:
+    """Append one batch to an LSM delta log from DRIVER-LOCAL rows: the
+    tombstone file ``tombs/d<seq>.parquet`` FIRST (every add of this
+    seq that lands is then already covered by its same-seq tombstone
+    rule), then ``adds/d<seq>-0.parquet``. Each file is written to a
+    hidden temp name and renamed into place, and both carry the batch's
+    seq, so a crash replay overwrites its own attempt. Returns bytes
+    appended (the fold-trigger accounting)."""
+    tmp_t = os.path.join(tombs_dir, f".d{seq}.parquet.tmp")
+    tmp_a = os.path.join(adds_dir, f".d{seq}-0.parquet.tmp")
+    appended = write_local_parquet(tomb_rows, tomb_schema, tmp_t)
+    os.replace(tmp_t, os.path.join(tombs_dir, f"d{seq}.parquet"))
+    appended += write_local_parquet(add_rows, add_schema, tmp_a)
+    os.replace(tmp_a, os.path.join(adds_dir, f"d{seq}-0.parquet"))
+    return appended

@@ -28,9 +28,10 @@ artifact):
 * ``rev_delta/`` — the mirror's LSM-style delta log (the r10 fix for
   the mirror's write amplification: rewriting dirty rev buckets cost
   a third dirty-fraction swap per batch, measured at ~+50% upsert
-  wall-clock at 500k). ``adds/bucket=K/d<seq>-<i>.parquet`` holds one
-  batch's merged dirty adjacency, normally one file per touched dst
-  bucket (every writer part file is moved — AQE may split one);
+  wall-clock at 500k). ``adds/d<seq>-<i>.parquet`` holds one batch's
+  merged dirty adjacency as a dst-bucket-sorted flat file (``bucket``
+  rides as a data column and row-group stats carry the pruning; every
+  writer part file is moved — AQE may split one);
   ``tombs/d<seq>.parquet`` is a GLOBAL per-batch tombstone file of
   that batch's dirty srcs. Resolution (``_rev_live``): a row is live
   iff no newer src-tombstone exists (``row.seq >= tseq`` keeps a
@@ -43,9 +44,11 @@ artifact):
   and for free at every rebuild; a half-finished fold is exact (base
   keeps each row's seq, duplicates between base and a not-yet-removed
   delta are identical payloads deduped on key).
-* ``meta.json``— {n_at_rebuild, n_live, build params, buckets, rev,
+* ``meta.json``— {format, n_at_rebuild, n_live, build params, buckets,
   pending}; written atomically (write-temp + os.replace) so a crash
-  mid-dump can never brick the artifact.
+  mid-dump can never brick the artifact. ``format`` stamps the on-disk
+  layout above: an artifact without the current :data:`FORMAT` fails
+  to load (atomic.read_meta) instead of being misread — re-run init.
 
 Per micro-batch (:func:`upsert_graph_artifact`):
 
@@ -81,33 +84,27 @@ Per micro-batch (:func:`upsert_graph_artifact`):
    is guaranteed by not recomputing.
 
 CRASH-WINDOW LEDGER (``meta["pending"]``): before the first swap the
-batch's work list — its ins ids, replaced ids, and fresh ids (bounded
-by |batch|) — is stamped into meta.json atomically; the final meta
-write (after all three swaps) clears it. A replay that finds a pending
-ledger re-queues every pending id that is stored-with-matching-vector
-but whose edge work may not have landed, and re-applies the pending
-REPLACED set to the stale-edge drop — this closes the update-crash
-hole where a crash between the vectors swap and the edges swap left
-vec == stored (so ``changed`` was empty) while the id's old-geometry
-adjacency was still live. The ``needs_edges`` probe (unchanged ids
-missing layer-0 adjacency entirely) remains as defense-in-depth for
-pre-ledger artifacts. One narrow window is recompute-not-detect: a
-crash AFTER the swaps but BEFORE the meta write replays the edge
-recompute for the pending ids — correct geometry against the already
-swapped vectors, possibly last-ulp different dists. Every other replay
-is bit-exact or a detected no-op.
+batch's work list — its ins ids, replaced ids and fresh ids (bounded
+by |batch|) plus its delta ``seq`` — is stamped into meta.json
+atomically; the final meta write (after all three swaps) clears it. A
+replay that finds a pending ledger first removes its own seq's delta
+files, then re-queues every pending id that is stored with a matching
+vector but whose edge work may not have landed, and re-applies the
+pending REPLACED set to the stale-edge drop — this closes the
+update-crash hole where a crash between the vectors swap and the edges
+swap left vec == stored (so ``changed`` was empty) while the id's
+old-geometry adjacency was still live. The ``needs_rows`` probe
+(unchanged ids missing layer-0 adjacency entirely) remains as
+defense-in-depth. One narrow window is recompute-not-detect: a crash
+AFTER the swaps but BEFORE the meta write replays the edge recompute
+for the pending ids — correct geometry against the already swapped
+vectors, possibly last-ulp different dists. Every other replay is
+bit-exact or a detected no-op.
 
 ``n_live`` is maintained incrementally (+fresh per upsert, with the
 ledger preventing both under- and double-counting across crashes) so
 the refresh decision costs no O(corpus) count per micro-batch; it is
 reconciled against a real count at every rebuild.
-
-MIGRATION: an artifact whose meta lacks ``buckets`` (pre-partitioning
-era) triggers the rebuild path on its first post-upgrade batch, which
-rewrites all artifacts partitioned and stamps the new meta keys; one
-whose meta lacks ``rev`` (bucketed but no inverted adjacency) gets
-``rev_edges`` materialized once from the live edges — one O(E)
-shuffle-write, no kNN — before proceeding incrementally.
 
 UPDATE semantics (same id, different vector): the BATCH side wins
 deterministically — stored rows with a redelivered id are anti-joined
@@ -131,7 +128,6 @@ test), which is the "upserted serving ≡ full rebuild" anchor.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -140,13 +136,20 @@ from pyspark.sql.streaming import StreamingQuery
 
 from vectordbindexing_spark.plans.partitioning import local_rows_df
 from vectordbindexing_spark.streaming.atomic import (
+    append_local_delta,
     delta_empty,
     du_parquet,
+    read_meta,
     recover_tree,
     swap_in,
     swap_in_buckets,
     write_json_atomic,
 )
+
+#: on-disk layout version stamped into meta.json at init; bump it on
+#: any layout change so older artifacts fail to load instead of being
+#: misread
+FORMAT = 1
 
 EDGE_SCHEMA = "layer int, src long, dst long, dist double"
 
@@ -244,11 +247,12 @@ def _fwd_live(
     batch·(2·M0)+losers srcs, which saturates any bucket count).
     ``bkts`` partition-prunes base and adds (both are src-bucketed, so
     one list serves both); ``src_df`` (a (src) frame) semi-joins BEFORE
-    resolution so the join work is probe-sized. Pre-LSM artifacts (no
-    fwd_delta dir) resolve to the base alone — no migration step."""
+    resolution so the join work is probe-sized. An empty or absent log
+    resolves to the base alone."""
     _, edge_path, _, _ = _paths(index_dir)
     adds_dir, tombs_dir = _fwd_delta_paths(index_dir)
     base = spark.read.parquet(edge_path)
+    # init and rebuild write the base without seq; only a fold adds it
     if "seq" not in base.columns:
         base = base.withColumn("seq", F.lit(0).cast("long"))
     if bkts is not None:
@@ -283,15 +287,6 @@ def edges_resolved(spark: SparkSession, index_dir: str) -> DataFrame:
     """The full live forward adjacency (serving + test surface) —
     base ∪ fwd delta, resolved."""
     return _fwd_live(spark, index_dir)
-
-
-def _read_rev_base(spark: SparkSession, rev_path: str) -> DataFrame:
-    """The rev base with its fold watermark; pre-delta-era bases (the
-    short-lived full-mirror layout) read as seq 0."""
-    base = spark.read.parquet(rev_path)
-    if "seq" not in base.columns:
-        base = base.withColumn("seq", F.lit(0).cast("long"))
-    return base
 
 
 def _read_adds(spark: SparkSession, adds_dir: str) -> DataFrame:
@@ -333,7 +328,7 @@ def _rev_live(
     removed delta (identical payloads, so keeping either is exact)."""
     _, _, rev_path, _ = _paths(index_dir)
     adds_dir, tombs_dir = _delta_paths(index_dir)
-    base = _read_rev_base(spark, rev_path)
+    base = spark.read.parquet(rev_path)
     if bkts is not None:
         base = base.where(F.col("bucket").isin(bkts))
     cols = ["layer", "src", "dst", "dist", "seq"]
@@ -427,15 +422,12 @@ def _write_edge_delta_local(
     collected under the MERGED_LOCAL_LIMIT gate, so both parquet
     appends (the global tombstone file, then the bucket-sorted flat
     adds file) are written straight through pyarrow
-    (atomic.write_local_parquet) instead of paying a Spark job each —
+    (atomic.append_local_delta) instead of paying a Spark job each —
     four fixed-latency jobs per micro-batch become driver-side
-    millisecond writes. Same crash contract as _move_delta_files: the
-    tombstone lands BEFORE the adds and both carry d<seq> names, so a
-    replay overwrites its own attempt. Bucket values come from the
-    pinned xxhash64 twin (bucket_of_py ≡ _bucket_of bit-for-bit), so
-    probe-side pruning sees identical values. Returns bytes appended."""
+    millisecond writes. Bucket values come from the pinned xxhash64
+    twin (bucket_of_py ≡ _bucket_of bit-for-bit), so probe-side
+    pruning sees identical values. Returns bytes appended."""
     from vectordbindexing_spark.functions.hashing import bucket_of_py
-    from vectordbindexing_spark.streaming.atomic import write_local_parquet
 
     key = 1 if bucket_col == "src" else 2
     staged = sorted(
@@ -446,34 +438,11 @@ def _write_edge_delta_local(
         ),
         key=lambda t: t[5],
     )
-    tmp_t = os.path.join(tombs_dir, f".d{seq}.parquet.tmp")
-    tmp_a = os.path.join(adds_dir, f".d{seq}-0.parquet.tmp")
-    appended = write_local_parquet(
-        [(int(i), int(seq)) for i in dirty_ids], TOMBS_SCHEMA, tmp_t
+    return append_local_delta(
+        adds_dir, tombs_dir, seq,
+        [(int(i), int(seq)) for i in dirty_ids], TOMBS_SCHEMA,
+        staged, ADDS_SCHEMA,
     )
-    os.replace(tmp_t, os.path.join(tombs_dir, f"d{seq}.parquet"))
-    appended += write_local_parquet(staged, ADDS_SCHEMA, tmp_a)
-    os.replace(tmp_a, os.path.join(adds_dir, f"d{seq}-0.parquet"))
-    return appended
-
-
-def _legacy_delta(adds_dir: str, prefix: str = "bucket=") -> bool:
-    """True while the adds log still holds the r11 one-file-PER-BUCKET
-    layout (``bucket=K/d<seq>-<i>.parquet``). Measured at 2M nodes: a
-    1000-row update batch dirties ~91% of 16384 buckets, so that
-    layout appended ~15k (fwd) + ~23k (rev) FILES per batch — after a
-    handful of batches every probe/resolve listed ~100k tiny files and
-    planned ~10k scan tasks, a read-side cost that grows with batch
-    COUNT (the classic small-files failure; write amplification was
-    fixed, listing amplification was not). New batches append a few
-    bucket-SORTED flat files instead (listing ∝ batches-since-fold,
-    bucket pruning via parquet row-group stats); while legacy dirs
-    exist the writer keeps the legacy layout (mixed flat+partitioned
-    dirs break Spark's partition discovery) and the next fold — forced
-    by this predicate — clears the log to the flat era."""
-    if not os.path.isdir(adds_dir):
-        return False
-    return any(n.startswith(prefix) for n in os.listdir(adds_dir))
 
 
 def _write_edge_delta(
@@ -488,34 +457,23 @@ def _write_edge_delta(
 ) -> int:
     """Append one batch's edge delta: ``adds`` (the batch's merged
     dirty adjacency) as a FEW bucket-sorted flat parquet files (bucket
-    rides as a data column; row-group stats carry the pruning the r11
-    per-bucket layout did with directories — see :func:`_legacy_delta`
-    for why that layout was a read-side scale defect) plus one global
-    tombstone file of the dirty srcs, every file named d<seq> so a
-    crash replay OVERWRITES its own attempt instead of duplicating
-    it. Write I/O is |adds| + |dirty| rows — never a bucket rewrite;
-    that is the point of the log. Returns the bytes appended (the
-    fold-trigger accounting, measured off the moved files so it costs
-    no extra Spark job)."""
+    rides as a data column; row-group stats carry the probe pruning)
+    plus one global tombstone file of the dirty srcs, every file named
+    d<seq> so a crash replay OVERWRITES its own attempt instead of
+    duplicating it. Write I/O is |adds| + |dirty| rows — never a bucket
+    rewrite; that is the point of the log. Returns the bytes appended
+    (the fold-trigger accounting, measured off the moved files so it
+    costs no extra Spark job)."""
     import shutil
 
-    legacy = _legacy_delta(adds_dir)
     shutil.rmtree(tmp, ignore_errors=True)
-    staged = adds.withColumn("seq", F.lit(seq).cast("long")).withColumn(
-        "bucket", _bucket_of(bucket_col, buckets)
+    (
+        adds.withColumn("seq", F.lit(seq).cast("long"))
+        .withColumn("bucket", _bucket_of(bucket_col, buckets))
+        .coalesce(1)
+        .sortWithinPartitions("bucket")
+        .write.parquet(os.path.join(tmp, "adds"))
     )
-    if legacy:
-        (
-            staged.repartition("bucket")
-            .write.partitionBy("bucket")
-            .parquet(os.path.join(tmp, "adds"))
-        )
-    else:
-        (
-            staged.coalesce(1)
-            .sortWithinPartitions("bucket")
-            .write.parquet(os.path.join(tmp, "adds"))
-        )
     (
         dirty_src.select(
             F.col("id").alias("src"), F.lit(seq).cast("long").alias("seq")
@@ -523,110 +481,58 @@ def _write_edge_delta(
         .coalesce(1)
         .write.parquet(os.path.join(tmp, "tombs"))
     )
-    appended = _move_delta_files(
-        tmp, adds_dir, tombs_dir, seq, "bucket=" if legacy else None
-    )
+    appended = _move_delta_files(tmp, adds_dir, tombs_dir, seq)
     shutil.rmtree(tmp, ignore_errors=True)
     return appended
 
 
 def _move_delta_files(
-    tmp: str, adds_dir: str, tombs_dir: str, seq: int, prefix: str | None
+    tmp: str, adds_dir: str, tombs_dir: str, seq: int
 ) -> int:
     """Move one written delta attempt (``tmp/{adds,tombs}``) into the
     live log: the tombstone FIRST (if the add-move loop dies midway,
     every landed add of this seq is already covered by its same-seq
     tombstone rule), then every add part file under distinct
-    d<seq>-<i> names (coalesce/repartition normally yield ONE part,
-    but AQE/config variation may split it — dropping parts [1:] would
-    silently lose delta rows; the pre-clears glob d<seq>* so a replay
-    still overwrites the whole attempt). ``prefix=None`` is the flat
-    layout (files straight under ``adds_dir``); a ``bucket=``/``cell=``
-    prefix moves the legacy per-partition layout. Returns bytes
-    appended (the fold-trigger accounting — filesystem sizes, no
-    extra Spark job)."""
-    appended = 0
+    d<seq>-<i> names (coalesce normally yields ONE part, but AQE/config
+    variation may split it — dropping parts [1:] would silently lose
+    delta rows; the pre-clear matches every d<seq>-<i> so a replay
+    still overwrites the whole attempt). Returns bytes appended (the
+    fold-trigger accounting — filesystem sizes, no extra Spark job)."""
     tname = [
         f for f in os.listdir(os.path.join(tmp, "tombs"))
         if f.endswith(".parquet")
     ][0]
     os.makedirs(tombs_dir, exist_ok=True)
-    appended += os.path.getsize(os.path.join(tmp, "tombs", tname))
+    appended = os.path.getsize(os.path.join(tmp, "tombs", tname))
     os.replace(
         os.path.join(tmp, "tombs", tname),
         os.path.join(tombs_dir, f"d{seq}.parquet"),
     )
-    if prefix is None:
-        parts = sorted(
-            f for f in os.listdir(os.path.join(tmp, "adds"))
-            if f.endswith(".parquet")
+    parts = sorted(
+        f for f in os.listdir(os.path.join(tmp, "adds"))
+        if f.endswith(".parquet")
+    )
+    os.makedirs(adds_dir, exist_ok=True)
+    for i, part in enumerate(parts):
+        appended += os.path.getsize(os.path.join(tmp, "adds", part))
+        os.replace(
+            os.path.join(tmp, "adds", part),
+            os.path.join(adds_dir, f"d{seq}-{i}.parquet"),
         )
-        os.makedirs(adds_dir, exist_ok=True)
-        for i, part in enumerate(parts):
-            appended += os.path.getsize(os.path.join(tmp, "adds", part))
-            os.replace(
-                os.path.join(tmp, "adds", part),
-                os.path.join(adds_dir, f"d{seq}-{i}.parquet"),
-            )
-        return appended
-    for name in sorted(os.listdir(os.path.join(tmp, "adds"))):
-        if not name.startswith(prefix):
-            continue
-        parts = sorted(
-            f for f in os.listdir(os.path.join(tmp, "adds", name))
-            if f.endswith(".parquet")
-        )
-        live_dir = os.path.join(adds_dir, name)
-        os.makedirs(live_dir, exist_ok=True)
-        for i, part in enumerate(parts):
-            appended += os.path.getsize(os.path.join(tmp, "adds", name, part))
-            os.replace(
-                os.path.join(tmp, "adds", name, part),
-                os.path.join(live_dir, f"d{seq}-{i}.parquet"),
-            )
     return appended
 
 
-def _pre_clear_rev_delta(index_dir: str, seq: int, bkts: list) -> None:
-    """Remove a crashed attempt's rev-delta files before this replay's
-    probes run: the probes must see the PRE-batch rev state, and the
-    replay's own recompute (which may differ from the crashed attempt
-    in the last distance ulp) rewrites the same d<seq> names."""
-    adds_dir, tombs_dir = _delta_paths(index_dir)
-    _pre_clear_delta(adds_dir, tombs_dir, seq, bkts)
-
-
-def _pre_clear_fwd_delta(index_dir: str, seq: int, bkts: list) -> None:
-    """:func:`_pre_clear_rev_delta` for the forward log."""
-    adds_dir, tombs_dir = _fwd_delta_paths(index_dir)
-    _pre_clear_delta(adds_dir, tombs_dir, seq, bkts)
-
-
-def _pre_clear_delta(
-    adds_dir: str, tombs_dir: str, seq: int, bkts: list,
-    prefix: str = "bucket=",
-) -> None:
-    # d<seq>-<i>.parquet (multi-part) and legacy d<seq>.parquet —
-    # never a bare d<seq>* glob (it would also match d<seq>0…)
-    def _is_seq_file(f: str) -> bool:
-        return f == f"d{seq}.parquet" or (
-            f.startswith(f"d{seq}-") and f.endswith(".parquet")
-        )
-
-    # flat-layout files sit straight under adds_dir
+def _pre_clear_delta(adds_dir: str, tombs_dir: str, seq: int) -> None:
+    """Remove a crashed attempt's delta files (``adds/d<seq>-<i>`` and
+    ``tombs/d<seq>``) before its replay's probes run: the probes must
+    see the PRE-batch log, and the replay's own recompute (which may
+    differ from the crashed attempt in the last distance ulp) rewrites
+    the same names. Never a bare d<seq>* glob — it would also match
+    d<seq>0…"""
     if os.path.isdir(adds_dir):
         for f in os.listdir(adds_dir):
-            if _is_seq_file(f):
+            if f.startswith(f"d{seq}-") and f.endswith(".parquet"):
                 os.remove(os.path.join(adds_dir, f))
-    # legacy per-bucket layout: the crashed attempt scoped its dirty
-    # bucket list into the ledger
-    for b in bkts:
-        d = os.path.join(adds_dir, f"{prefix}{b}")
-        if not os.path.isdir(d):
-            continue
-        for f in os.listdir(d):
-            if _is_seq_file(f):
-                os.remove(os.path.join(d, f))
     f = os.path.join(tombs_dir, f"d{seq}.parquet")
     if os.path.exists(f):
         os.remove(f)
@@ -668,7 +574,7 @@ def _clear_fwd_delta(index_dir: str) -> None:
 #   same (cid, id, vec) table); the graph artifact pays it to stop
 #   re-deriving the assignment per batch.
 # * ``ivf_delta/`` — the cells mirror's LSM delta log (same design as
-#   rev/fwd: per-seq adds under ``cell=K/d<seq>-<i>.parquet`` + ONE
+#   rev/fwd: per-seq cell-sorted flat adds ``d<seq>-0.parquet`` + ONE
 #   global id-tombstone file per batch; ``row.seq >= tseq`` keeps a
 #   batch's own re-adds). Batch rows are assigned driver-side
 #   (|batch|·nlist flops) and appended — never a cell rewrite. Folds
@@ -752,12 +658,6 @@ def _ivf_live(
     return live_base.unionByName(surv).select(*keep)
 
 
-def _pre_clear_ivf_delta(index_dir: str, seq: int, cells: list) -> None:
-    """:func:`_pre_clear_rev_delta` for the IVF cells log."""
-    adds_dir, tombs_dir = _ivf_delta_paths(index_dir)
-    _pre_clear_delta(adds_dir, tombs_dir, seq, cells, prefix="cell=")
-
-
 def _clear_ivf_delta(index_dir: str) -> None:
     import shutil
 
@@ -773,64 +673,22 @@ def _write_ivf_delta(
     """Append one batch's IVF-cell delta from DRIVER-LOCAL rows
     [(id, vec, cell)] (the upsert classifies and assigns the batch
     driver-side, so no distributed input exists to begin with): the
-    global id-tombstone file first, then one d<seq> file per touched
-    cell. Write I/O ∝ |batch| rows. Returns bytes appended."""
-    import shutil
-
-    from vectordbindexing_spark.streaming.atomic import write_local_parquet
-
+    global id-tombstone file first, then one cell-sorted d<seq> adds
+    file, both through pyarrow — no Spark jobs. Write I/O ∝ |batch|
+    rows. Returns bytes appended."""
     adds_dir, tombs_dir = _ivf_delta_paths(index_dir)
-    legacy = _legacy_delta(adds_dir, "cell=")
-    if not legacy:
-        # the rows are driver-local by construction — write both delta
-        # files straight through pyarrow (tombstone first, d<seq>
-        # names: the _move_delta_files crash contract), no Spark jobs
-        tmp_t = os.path.join(tombs_dir, f".d{seq}.parquet.tmp")
-        tmp_a = os.path.join(adds_dir, f".d{seq}-0.parquet.tmp")
-        appended = write_local_parquet(
-            [(int(i), int(seq)) for i, _, _ in add_rows],
-            IVF_TOMBS_SCHEMA, tmp_t,
-        )
-        os.replace(tmp_t, os.path.join(tombs_dir, f"d{seq}.parquet"))
-        staged = sorted(
-            (
-                (int(i), [float(x) for x in v], int(seq), int(c))
-                for i, v, c in add_rows
-            ),
-            key=lambda t: t[3],  # cell-sorted: row-group stats prune
-        )
-        appended += write_local_parquet(staged, IVF_ADDS_SCHEMA, tmp_a)
-        os.replace(tmp_a, os.path.join(adds_dir, f"d{seq}-0.parquet"))
-        return appended
-    # legacy per-cell layout (pre-r12 artifacts): keep the Spark
-    # partitioned writer until the next fold migrates the log
-    spark = SparkSession.getActiveSession()
-    tmp = os.path.join(index_dir, "ivf_delta.__tmp__")
-    shutil.rmtree(tmp, ignore_errors=True)
-    staged = local_rows_df(
-        spark,
-        [
+    staged = sorted(
+        (
             (int(i), [float(x) for x in v], int(seq), int(c))
             for i, v, c in add_rows
-        ],
-        IVF_ADDS_SCHEMA,
+        ),
+        key=lambda t: t[3],  # cell-sorted: row-group stats prune
     )
-    (
-        staged.repartition("cell")
-        .write.partitionBy("cell")
-        .parquet(os.path.join(tmp, "adds"))
+    return append_local_delta(
+        adds_dir, tombs_dir, seq,
+        [(int(i), int(seq)) for i, _, _ in add_rows], IVF_TOMBS_SCHEMA,
+        staged, IVF_ADDS_SCHEMA,
     )
-    (
-        local_rows_df(
-            spark, [(int(i), int(seq)) for i, _, _ in add_rows],
-            IVF_TOMBS_SCHEMA,
-        )
-        .coalesce(1)
-        .write.parquet(os.path.join(tmp, "tombs"))
-    )
-    appended = _move_delta_files(tmp, adds_dir, tombs_dir, seq, "cell=")
-    shutil.rmtree(tmp, ignore_errors=True)
-    return appended
 
 
 def _ivf_assign_vecs(df: DataFrame, centroids) -> DataFrame:
@@ -1104,10 +962,10 @@ def init_graph_artifact(
 
     n = count_parquet_rows(vec_path)
     meta = {
+        "format": FORMAT,
         "n_at_rebuild": n,
         "n_live": n,
         "buckets": buckets,
-        "rev": True,
         "rev_seq": 0,
         "rev_base_bytes": du_parquet(rev_path),
         "rev_delta_bytes": 0,
@@ -1117,8 +975,8 @@ def init_graph_artifact(
     }
     # the IVF cells mirror only pays for itself once the batch kNN is
     # past the exact limit (below it the blocked exact pass needs no
-    # artifact); smaller corpora get it lazily via MIGRATION 3 the
-    # first time an upsert actually routes past the limit
+    # artifact); smaller corpora build it lazily the first time an
+    # upsert actually routes past the limit
     ebl = (
         _default_exact_limit() if exact_base_limit is None
         else exact_base_limit
@@ -1194,8 +1052,7 @@ def upsert_graph_artifact(
     committed replay), ``"upsert"`` (incremental edges merged into the
     dirty buckets) or ``"rebuild"`` (growth crossed ``refresh_factor``
     × the corpus size at the last rebuild — full bulk build on the
-    union, the compaction; also the migration path for pre-bucketing
-    artifacts).
+    union, the compaction).
 
     ``exact_base_limit``/``planner_kwargs``: the scale route — the
     batch-vs-corpus kNN pass dispatches through plans.knn_planner.knn
@@ -1213,6 +1070,7 @@ def upsert_graph_artifact(
     pk = planner_kwargs or {}
     spark = batch.sparkSession
     vec_path, edge_path, rev_path, meta_path = _paths(index_dir)
+    meta = read_meta(meta_path, FORMAT)
     recover_tree(vec_path)
     recover_tree(edge_path)
     recover_tree(rev_path)
@@ -1222,38 +1080,28 @@ def upsert_graph_artifact(
     from vectordbindexing_spark.streaming.atomic import recover
 
     recover(cent_path)
-    meta = json.load(open(meta_path))
     M0, M1 = meta["M0"], meta["M1"]
     M_level, metric = meta["M_level"], meta["metric"]
-    # MIGRATION 1 — pre-partitioning artifact (no "buckets"): no bucket
-    # column to prune on, so the incremental path can't run; fall
-    # through to the rebuild branch, which rewrites everything
-    # partitioned and stamps the new meta keys.
-    migrate = "buckets" not in meta
-    buckets = meta.get("buckets", DEFAULT_BUCKETS)
+    buckets = meta["buckets"]
     pend = meta.get("pending") or {"ids": [], "replaced": [], "fresh": []}
-    # a crashed attempt's rev-delta files must go BEFORE any probe
-    # runs: the probes need the PRE-batch rev state, and the replay
-    # rewrites the same d<seq> names with its own recompute
+    # a crashed attempt's delta files must go BEFORE any probe runs:
+    # the probes need the PRE-batch log state, and the replay rewrites
+    # the same d<seq> names with its own recompute
     if pend.get("seq") is not None:
-        _pre_clear_rev_delta(index_dir, pend["seq"], pend.get("rev_bkts", []))
-        _pre_clear_fwd_delta(index_dir, pend["seq"], pend.get("fwd_bkts", []))
-        _pre_clear_ivf_delta(index_dir, pend["seq"], pend.get("ivf_cells", []))
-    rev_seq = int(meta.get("rev_seq", 0)) + 1
+        for adds_dir, tombs_dir in (
+            _delta_paths(index_dir),
+            _fwd_delta_paths(index_dir),
+            _ivf_delta_paths(index_dir),
+        ):
+            _pre_clear_delta(adds_dir, tombs_dir, pend["seq"])
+    rev_seq = int(meta["rev_seq"]) + 1
 
     # fold the rev delta log back into its base once it outgrows
     # REV_COMPACT_FACTOR x the base — bounds probe-side read
-    # amplification; deferred while a pending batch needs healing. A
-    # legacy one-file-per-bucket log (see _legacy_delta) folds
-    # immediately: the fold is the migration to the flat layout.
-    if (
-        not pend["ids"]
-        and meta.get("rev")
-        and (
-            meta.get("rev_delta_bytes", 0)
-            > REV_COMPACT_FACTOR * max(int(meta.get("rev_base_bytes", 0)), 1)
-            or _legacy_delta(_delta_paths(index_dir)[0])
-        )
+    # amplification; deferred while a pending batch needs healing
+    if not pend["ids"] and (
+        meta["rev_delta_bytes"]
+        > REV_COMPACT_FACTOR * max(int(meta["rev_base_bytes"]), 1)
     ):
         folded = _rev_live(spark, index_dir, keep_seq=True).withColumn(
             "bucket", _bucket_of("dst", buckets)
@@ -1266,13 +1114,9 @@ def upsert_graph_artifact(
 
     # same fold for the FORWARD log (serving reads resolve base ∪ delta,
     # so the fold also bounds serve-load read amplification)
-    if (
-        not pend["ids"]
-        and (
-            meta.get("fwd_delta_bytes", 0)
-            > REV_COMPACT_FACTOR * max(int(meta.get("fwd_base_bytes", 0)), 1)
-            or _legacy_delta(_fwd_delta_paths(index_dir)[0])
-        )
+    if not pend["ids"] and (
+        meta["fwd_delta_bytes"]
+        > REV_COMPACT_FACTOR * max(int(meta["fwd_base_bytes"]), 1)
     ):
         folded = _fwd_live(spark, index_dir, keep_seq=True).withColumn(
             "bucket", _bucket_of("src", buckets)
@@ -1289,12 +1133,8 @@ def upsert_graph_artifact(
     if (
         not pend["ids"]
         and meta.get("ivf")
-        and (
-            meta["ivf"].get("delta_bytes", 0)
-            > REV_COMPACT_FACTOR
-            * max(int(meta["ivf"].get("base_bytes", 0)), 1)
-            or _legacy_delta(_ivf_delta_paths(index_dir)[0], "cell=")
-        )
+        and meta["ivf"]["delta_bytes"]
+        > REV_COMPACT_FACTOR * max(int(meta["ivf"]["base_bytes"]), 1)
     ):
         folded = _ivf_live(spark, index_dir, keep_seq=True).localCheckpoint(
             eager=True
@@ -1352,39 +1192,30 @@ def upsert_graph_artifact(
     # marker (probe-sized via _fwd_live's src pushdown). One collect
     # returns everything the classification needs: (id, stored vec,
     # has layer-0 edges).
-    batch_bkts = [] if migrate else sorted(set(new_bkt.values()))
+    batch_bkts = sorted(set(new_bkt.values()))
     probe_rows: list = []
     if new_vec:
         ids_b = F.broadcast(_ids_df(spark, list(new_vec)))
-        stored_slice = (
-            stored
-            if migrate
-            else vecs_raw.where(F.col("bucket").isin(batch_bkts)).drop("bucket")
+        matched = (
+            vecs_raw.where(F.col("bucket").isin(batch_bkts))
+            .drop("bucket")
+            .join(ids_b, "id", "left_semi")
         )
-        matched = stored_slice.join(ids_b, "id", "left_semi")
-        if migrate:
-            # pre-bucketing artifact: no pruning possible and the
-            # rebuild branch below re-keys everything — skip the
-            # edge-marker join, it isn't consulted on this path
-            probe_rows = [
-                (r["id"], list(r["vec"]), True) for r in matched.collect()
-            ]
-        else:
-            l0 = (
-                _fwd_live(
-                    spark, index_dir, bkts=batch_bkts,
-                    src_df=_ids_df(spark, list(new_vec))
-                    .withColumnRenamed("id", "src"),
-                )
-                .where(F.col("layer") == 0)
-                .select(F.col("src").alias("id"))
-                .distinct()
-                .withColumn("_has", F.lit(True))
+        l0 = (
+            _fwd_live(
+                spark, index_dir, bkts=batch_bkts,
+                src_df=_ids_df(spark, list(new_vec))
+                .withColumnRenamed("id", "src"),
             )
-            probe_rows = [
-                (r["id"], list(r["vec"]), r["_has"] is True)
-                for r in matched.join(l0, "id", "left").collect()
-            ]
+            .where(F.col("layer") == 0)
+            .select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("_has", F.lit(True))
+        )
+        probe_rows = [
+            (r["id"], list(r["vec"]), r["_has"] is True)
+            for r in matched.join(l0, "id", "left").collect()
+        ]
 
     # driver-side classify. REPLAY DETECTION: a redelivered batch
     # (every id stored with a bit-identical vector and its edge work
@@ -1401,8 +1232,8 @@ def upsert_graph_artifact(
         if i in stored_map and stored_map[i][0] != v
     ]
     # redelivered-unchanged ids missing their layer-0 adjacency
-    # entirely: defense-in-depth for pre-ledger artifacts (the ledger
-    # below covers every crash window for batches it has seen)
+    # entirely: defense-in-depth (the ledger below covers every crash
+    # window for batches it has seen)
     needs_rows = [
         (i, v)
         for i, v in new_vec.items()
@@ -1421,7 +1252,7 @@ def upsert_graph_artifact(
     heal_rows: list = []
     heal_repl_ids: list = []
     pend_bkt: dict = {}
-    if pend["ids"] and not migrate:
+    if pend["ids"]:
         pend_bkt = {
             r["id"]: r["_bkt"]
             for r in _ids_df(spark, pend["ids"])
@@ -1487,9 +1318,7 @@ def upsert_graph_artifact(
     # incremental corpus size: meta-maintained, no O(corpus) count per
     # micro-batch; the ledger's fresh list keeps it exact across crash
     # replays, and every rebuild reconciles against a real count.
-    n_union = (
-        meta.get("n_live", meta["n_at_rebuild"]) + len(fresh_ids) + n_heal_fresh
-    )
+    n_union = meta["n_live"] + len(fresh_ids) + n_heal_fresh
 
     # stamp the work-list ledger BEFORE any swap: a crash anywhere
     # between here and the final meta write replays into the heal path.
@@ -1498,11 +1327,11 @@ def upsert_graph_artifact(
         "ids": [i for i, _ in ins_rows],
         "replaced": replaced_e_ids,
         "fresh": fresh_ids,
-        "seq": rev_seq,  # rev_bkts stamped just before the delta write
+        "seq": rev_seq,
     }
     write_json_atomic(meta_path, meta)
 
-    if migrate or n_union >= refresh_factor * meta["n_at_rebuild"]:
+    if n_union >= refresh_factor * meta["n_at_rebuild"]:
         # materialize BEFORE the vectors swap: the build's lineage
         # reads the pre-swap vec_path file listing, which the rename
         # below invalidates (a rebuild is O(corpus) compaction anyway)
@@ -1532,7 +1361,7 @@ def upsert_graph_artifact(
 
         n_real = count_parquet_rows(vec_path)  # reconcile, footers only
         meta.update(
-            n_at_rebuild=n_real, n_live=n_real, buckets=buckets, rev=True,
+            n_at_rebuild=n_real, n_live=n_real,
             rev_base_bytes=du_parquet(rev_path), rev_delta_bytes=0,
             fwd_base_bytes=du_parquet(edge_path), fwd_delta_bytes=0,
         )
@@ -1552,21 +1381,6 @@ def upsert_graph_artifact(
         write_json_atomic(meta_path, meta)
         return "rebuild"
 
-    # MIGRATION 2 — bucketed artifact without the inverted adjacency:
-    # materialize rev_edges once from the live edges (one O(E)
-    # shuffle-write, no kNN), then proceed incrementally.
-    if not meta.get("rev"):
-        swap_in(
-            _fwd_live(spark, index_dir)
-            .withColumn("seq", F.lit(0).cast("long"))
-            .withColumn("bucket", _bucket_of("dst", buckets)),
-            rev_path, coalesce=None, partition_by=["bucket"],
-        )
-        meta["rev"] = True
-        meta["rev_base_bytes"] = du_parquet(rev_path)
-        meta["rev_delta_bytes"] = 0
-        write_json_atomic(meta_path, meta)
-
     # incremental edges: inserted/updated/healed nodes vs the union —
     # exact below the limit, MAINTAINED-IVF-ARTIFACT-routed past it
     # (probe-pruned read, no per-batch fit/assign scan) — + layer-1
@@ -1580,13 +1394,14 @@ def upsert_graph_artifact(
             M1, metric, 1, ebl, pk,
         )
     else:
-        # MIGRATION 3 — the corpus crossed the exact limit but the
-        # artifact predates the IVF cells mirror: fit + materialize it
-        # once from the PRE-batch vectors (the same two O(corpus)
-        # passes a rebuild pays; batch rows ride in as cand_local)
+        # LAZY IVF MIRROR — the corpus first crossed the exact limit
+        # since init/rebuild (which build the mirror only above it):
+        # fit + materialize it once from the PRE-batch vectors (the
+        # same two O(corpus) passes a rebuild pays; batch rows ride in
+        # as cand_local)
         if not meta.get("ivf"):
             meta["ivf"] = _build_ivf_artifact(
-                spark, index_dir, meta.get("n_live", meta["n_at_rebuild"])
+                spark, index_dir, meta["n_live"]
             )
             write_json_atomic(meta_path, meta)
         nprobe = pk.get("ivf_nprobe")
@@ -1676,40 +1491,23 @@ def upsert_graph_artifact(
     # merged adjacency is capped at |dirty| · 2 layers · max_degree
     # rows by mutualize's own degree cap — a deterministic bound known
     # driver-side before any job runs. Under the gate the rows collect
-    # in the ONE job that was the eager checkpoint anyway, and then
-    # the delta footprints cost zero jobs (xxhash64 twin) and BOTH
+    # in the ONE job that was the eager checkpoint anyway, and BOTH
     # delta appends become driver-side pyarrow writes
     # (_write_edge_delta_local) — 5 fixed-latency jobs per micro-batch
-    # removed. Past the gate (or while a legacy per-bucket log layout
-    # survives) the distributed checkpoint + footprint aggregate +
-    # Spark delta writers run unchanged — the 100 TB route.
+    # removed. Past the gate the distributed checkpoint + Spark delta
+    # writers run — the 100 TB route.
     est_rows = len(dirty_ids) * 2 * (2 * max(M0, M1))
-    legacy_log = _legacy_delta(_fwd_delta_paths(index_dir)[0]) or _legacy_delta(
-        _delta_paths(index_dir)[0]
-    )
-    merged_local = est_rows <= MERGED_LOCAL_LIMIT and not legacy_log
+    merged_local = est_rows <= MERGED_LOCAL_LIMIT
     if merged_local:
         md_rows = [
             (r["layer"], r["src"], r["dst"], r["dist"])
             for r in merged.collect()
         ]
-        fwd_dirty_bkts = sorted({bucket_of_py(s, buckets) for _, s, _, _ in md_rows})
-        inv_dirty_bkts = sorted({bucket_of_py(d, buckets) for _, _, d, _ in md_rows})
     else:
         # Checkpointed: it feeds BOTH delta appends, and its lineage
         # reads edge_path/rev_path listings that later batches' folds
         # invalidate.
         merged_dirty = merged.localCheckpoint(eager=True)
-        # delta footprints: src/dst buckets of the batch's adds —
-        # collected pre-swap so the ledger can scope a replay's
-        # pre-clear. ONE job for both lists (collect_set aggregates are
-        # bucket-count-bounded)
-        fp = merged_dirty.agg(
-            F.collect_set(_bucket_of("src", buckets)).alias("sb"),
-            F.collect_set(_bucket_of("dst", buckets)).alias("db"),
-        ).collect()[0]
-        fwd_dirty_bkts = sorted(fp["sb"])
-        inv_dirty_bkts = sorted(fp["db"])
 
     # vector rows actually change only for inserts and updates; their
     # bucket list (⊆ batch_bkts, bounded by |batch|) partition-prunes
@@ -1738,7 +1536,7 @@ def upsert_graph_artifact(
     # bucket count; the delta append is |adds| + |dirty| rows):
     # forward before rev so the serving view completes first, each
     # log's tombstone file lands before its adds, and a crash anywhere
-    # replays via the ledger's (seq, bkts) pre-clear. Lineage safety:
+    # replays via the ledger's seq pre-clear. Lineage safety:
     # merged_dirty and dirty are checkpointed above, so the edge
     # appends have no live lineage; vecs_out reads only vec_path.
     # IVF-cells maintenance rows (only once the mirror exists): assign
@@ -1761,11 +1559,6 @@ def upsert_graph_artifact(
         ]
     if vb_list:
         swap_in_buckets(vecs_out, vec_path, expected=vb_list)
-    meta["pending"]["fwd_bkts"] = fwd_dirty_bkts
-    meta["pending"]["rev_bkts"] = inv_dirty_bkts
-    if ivf_add_rows:
-        meta["pending"]["ivf_cells"] = sorted({c for _, _, c in ivf_add_rows})
-    write_json_atomic(meta_path, meta)
     # under the gate both appends are |batch|·degree-bounded
     # driver-local rows → pyarrow writes, no Spark jobs; past it the
     # distributed writers run on the checkpointed frame as before
@@ -1776,14 +1569,12 @@ def upsert_graph_artifact(
     appended = _write_rev_delta(_adds, _dirty, index_dir, rev_seq, buckets)
     meta["n_live"] = n_union
     meta["rev_seq"] = rev_seq
-    meta["fwd_delta_bytes"] = (
-        int(meta.get("fwd_delta_bytes", 0)) + fwd_appended
-    )
-    meta["rev_delta_bytes"] = int(meta.get("rev_delta_bytes", 0)) + appended
+    meta["fwd_delta_bytes"] = int(meta["fwd_delta_bytes"]) + fwd_appended
+    meta["rev_delta_bytes"] = int(meta["rev_delta_bytes"]) + appended
     if ivf_add_rows:
         ivf_appended = _write_ivf_delta(ivf_add_rows, index_dir, rev_seq)
         meta["ivf"]["delta_bytes"] = (
-            int(meta["ivf"].get("delta_bytes", 0)) + ivf_appended
+            int(meta["ivf"]["delta_bytes"]) + ivf_appended
         )
     meta.pop("pending", None)
     write_json_atomic(meta_path, meta)
@@ -1795,13 +1586,14 @@ def load_graph_artifact(spark: SparkSession, index_dir: str):
     operators.search.compact_index / graph_search for serving. The
     inverted adjacency is maintenance state, not a serving input."""
     vec_path, edge_path, rev_path, meta_path = _paths(index_dir)
+    meta = read_meta(meta_path, FORMAT)
     recover_tree(vec_path)
     recover_tree(edge_path)
     recover_tree(rev_path)
     return (
         spark.read.parquet(vec_path).drop("bucket"),
         edges_resolved(spark, index_dir),
-        json.load(open(meta_path)),
+        meta,
     )
 
 

@@ -28,8 +28,6 @@ State layout under ``index_dir`` (crash-safe via streaming/atomic.py):
   the hash sets equals Jaccard over the strings up to negligible
   60-bit collisions, and the DuckDB oracle replays the identical
   hashing). Reads are always partition-pruned to candidate buckets.
-  Pre-hashing artifacts (raw ``grams`` strings) migrate in place on
-  the first upsert that touches them.
 * ``bands`` — the LSH index BASE, parquet partitioned by ``bucket =
   pmod(xxhash64(band_idx, band_key), B)``: (did, band_idx, band_key)
   with a fold-watermark ``seq``. An incoming batch's band rows prune
@@ -38,18 +36,20 @@ State layout under ``index_dir`` (crash-safe via streaming/atomic.py):
   from the graph maintainer applied verbatim, closing the r10 "bands
   swap rewrites whole dirty buckets" scale defect: with B buckets the
   dirty fraction is ≈ 1 − exp(−|batch|·bands/B) ≈ ALL of them at any
-  real batch size). ``adds/bucket=K/d<seq>-<i>.parquet`` holds one
-  batch's new band rows; ``tombs/d<seq>.parquet`` is a GLOBAL
-  per-batch did-tombstone file of that batch's work dids — a batch
-  replaces each work doc's whole band-row set, so did-level
+  real batch size). ``adds/d<seq>-0.parquet`` holds one batch's new
+  band rows, sorted by band bucket (``bucket`` rides as a data column
+  and row-group stats carry the pruning); ``tombs/d<seq>.parquet`` is
+  a GLOBAL per-batch did-tombstone file of that batch's work dids — a
+  batch replaces each work doc's whole band-row set, so did-level
   tombstones are exact wherever the stale rows sit, no old-sig
   recompute needed. Resolution (``_bands_live``): a row is live iff
   no newer did-tombstone exists (``row.seq >= tseq`` keeps a batch's
   own re-adds). The log folds back into the base when it outgrows
   BAND_COMPACT_FACTOR × the base bytes. Per-batch band write I/O is
   |batch|·bands rows, never a bucket rewrite.
-* ``meta.json`` — {n_docs, n, num_hashes, bands, buckets, pending,
-  last_emit}; atomic writes.
+* ``meta.json`` — {format, n_docs, n, num_hashes, bands, buckets,
+  pending, last_emit}; atomic writes. An artifact without the current
+  :data:`FORMAT` stamp fails to load (atomic.read_meta) — re-run init.
 * ``last_pairs`` — the most recently committed batch's detected
   pairs, swapped in before the commit that clears the pending ledger;
   paired with ``last_emit`` (that batch's stream batch_id) it lets a
@@ -82,15 +82,15 @@ Per micro-batch (:func:`upsert_neardup_artifact`):
    then adds). Write I/O ∝ |batch|, never corpus size.
 
 CRASH-WINDOW LEDGER (``meta["pending"]``, the graph maintainer's
-contract): the work list (ids + replaced ids + the delta seq and its
-add buckets) is stamped into meta.json atomically BEFORE the first
-swap and cleared by the final meta write. A crash between the
-signatures swap and the bands delta append would otherwise be
-invisible to step 2 on replay (sig already matches → "replayed" →
-stale band rows served forever); the ledger re-queues pending ids so
-their band rows are rebuilt deterministically from the now-stored
-signatures, and the replay pre-clears its own seq's half-written
-delta files before any probe runs.
+contract): the work list (ids + replaced ids + the delta seq) is
+stamped into meta.json atomically BEFORE the first swap and cleared by
+the final meta write. A crash between the signatures swap and the
+bands delta append would otherwise be invisible to step 2 on replay
+(sig already matches → "replayed" → stale band rows served forever);
+the ledger re-queues pending ids so their band rows are rebuilt
+deterministically from the now-stored signatures, and the replay
+pre-clears its own seq's half-written delta files before any probe
+runs.
 
 Reference study: `simple_sim_hash.py` (the reference's streaming-ish
 fingerprint dedup loop) re-expressed as a partitioned artifact +
@@ -100,7 +100,6 @@ Broder '97 / Leskovec MMDS ch.3 like the batch operator.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -108,20 +107,23 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from vectordbindexing_spark.plans.partitioning import local_rows_df
-from vectordbindexing_spark.streaming.graph_ingest import (
-    _legacy_delta,
-    _move_delta_files,
-)
-
 from vectordbindexing_spark.streaming.atomic import (
+    append_local_delta,
     delta_empty,
     du_parquet,
+    read_meta,
     recover,
     recover_tree,
     swap_in,
     swap_in_buckets,
     write_json_atomic,
 )
+from vectordbindexing_spark.streaming.graph_ingest import _pre_clear_delta
+
+#: on-disk layout version stamped into meta.json at init; bump it on
+#: any layout change so older artifacts fail to load instead of being
+#: misread
+FORMAT = 1
 
 DEFAULT_BUCKETS = 256
 
@@ -161,19 +163,6 @@ def _band_delta_paths(index_dir: str) -> tuple[str, str]:
     return os.path.join(root, "adds"), os.path.join(root, "tombs")
 
 
-def _bands_base(spark: SparkSession, band_path: str) -> DataFrame:
-    """The bands base with its fold watermark; pre-LSM bases (and any
-    half-swapped pre-LSM bucket) read as seq 0."""
-    base = spark.read.parquet(band_path)
-    if "seq" not in base.columns:
-        base = base.withColumn("seq", F.lit(0).cast("long"))
-    else:
-        base = base.withColumn(
-            "seq", F.coalesce(F.col("seq"), F.lit(0).cast("long"))
-        )
-    return base
-
-
 def _bands_live(
     spark: SparkSession,
     index_dir: str,
@@ -191,14 +180,14 @@ def _bands_live(
     no tombstone join, no dedup shuffle)."""
     _, band_path, _ = _paths(index_dir)
     adds_dir, tombs_dir = _band_delta_paths(index_dir)
-    base = _bands_base(spark, band_path)
+    base = spark.read.parquet(band_path)
     if bkts is not None:
         base = base.where(F.col("bucket").isin(bkts))
     cols = ["did", "band_idx", "band_key", "seq"]
     keep = cols if keep_seq else cols[:3]
     if delta_empty(adds_dir, tombs_dir):
         return base.select(*keep)
-    # guarded reads: _write_band_delta moves the did-tombstone BEFORE
+    # guarded reads: _write_band_delta lands the did-tombstone BEFORE
     # the adds, so a crash in that window leaves tombs-present with the
     # adds dir absent — read each side as empty when missing instead of
     # throwing PATH_NOT_FOUND at probe/serving time until replay
@@ -231,104 +220,34 @@ def bands_resolved(spark: SparkSession, index_dir: str) -> DataFrame:
 
 
 def _write_band_delta(
-    spark: SparkSession, br_rows: list, work_dids: list, index_dir: str,
-    seq: int, buckets: int,
+    br_rows: list, work_dids: list, index_dir: str, seq: int
 ) -> int:
     """Append one batch's band delta: the work docs' new band rows
     (DRIVER-LOCAL ``br_rows`` — [(did, band_idx, band_key, bucket)],
     the rows the upsert already collected for its probes) as ONE
     bucket-sorted flat parquet file (bucket rides as a data column;
-    row-group stats carry the probe pruning — the one-file-per-
-    touched-bucket layout appended |batch|·bands FILES per batch, a
-    listing cost that grows with batch count; see
-    graph_ingest._legacy_delta for the 2M measurement) plus ONE
-    global did-tombstone file, so a crash replay overwrites its own
-    attempt. Both files are written straight through pyarrow
-    (atomic.write_local_parquet, tombstone first — the
-    _move_delta_files crash contract): the rows are |batch|·bands-
-    bounded by design, so the two Spark write jobs the r12 path paid
-    per micro-batch were pure fixed latency. Write I/O ∝
-    |batch|·bands rows — never a bucket rewrite (the pre-LSM design
-    rewrote ≈ ALL buckets per batch at any real batch size). While
-    legacy per-bucket dirs exist the writer keeps the Spark
-    partitioned layout (mixed layouts break partition discovery); the
-    next fold migrates the log to the flat era. Returns the bytes
-    appended (fold-trigger accounting)."""
-    import shutil
-
-    from vectordbindexing_spark.streaming.atomic import write_local_parquet
-
+    row-group stats carry the probe pruning) plus ONE global
+    did-tombstone file, so a crash replay overwrites its own attempt.
+    Both files are written straight through pyarrow
+    (atomic.append_local_delta, tombstone first): the rows are
+    |batch|·bands-bounded by design, so a Spark write job per file
+    would be pure fixed latency. Write I/O ∝ |batch|·bands rows — never
+    a bucket rewrite (the pre-LSM design rewrote ≈ ALL buckets per
+    batch at any real batch size). Returns the bytes appended
+    (fold-trigger accounting)."""
     adds_dir, tombs_dir = _band_delta_paths(index_dir)
-    legacy = _legacy_delta(adds_dir)
-    if not legacy:
-        tmp_t = os.path.join(tombs_dir, f".d{seq}.parquet.tmp")
-        tmp_a = os.path.join(adds_dir, f".d{seq}-0.parquet.tmp")
-        appended = write_local_parquet(
-            [(int(i), int(seq)) for i in work_dids],
-            BANDS_TOMBS_SCHEMA, tmp_t,
-        )
-        os.replace(tmp_t, os.path.join(tombs_dir, f"d{seq}.parquet"))
-        staged = sorted(
-            (
-                (int(d), int(bi), str(bk), int(seq), int(bkt))
-                for d, bi, bk, bkt in br_rows
-            ),
-            key=lambda t: t[4],
-        )
-        appended += write_local_parquet(staged, BANDS_ADDS_SCHEMA, tmp_a)
-        os.replace(tmp_a, os.path.join(adds_dir, f"d{seq}-0.parquet"))
-        return appended
-    tmp = os.path.join(index_dir, "bands_delta.__tmp__")
-    shutil.rmtree(tmp, ignore_errors=True)
-    br_new = local_rows_df(
-        spark, [(d, bi, bk) for d, bi, bk, _ in br_rows],
-        "did long, band_idx int, band_key string",
+    staged = sorted(
+        (
+            (int(d), int(bi), str(bk), int(seq), int(bkt))
+            for d, bi, bk, bkt in br_rows
+        ),
+        key=lambda t: t[4],
     )
-    staged = br_new.withColumn("seq", F.lit(seq).cast("long")).withColumn(
-        "bucket", _band_bucket(buckets)
+    return append_local_delta(
+        adds_dir, tombs_dir, seq,
+        [(int(i), int(seq)) for i in work_dids], BANDS_TOMBS_SCHEMA,
+        staged, BANDS_ADDS_SCHEMA,
     )
-    (
-        staged.repartition("bucket")
-        .write.partitionBy("bucket")
-        .parquet(os.path.join(tmp, "adds"))
-    )
-    (
-        local_rows_df(spark, [(i,) for i in work_dids], "did long")
-        .select("did", F.lit(seq).cast("long").alias("seq"))
-        .coalesce(1)
-        .write.parquet(os.path.join(tmp, "tombs"))
-    )
-    appended = _move_delta_files(tmp, adds_dir, tombs_dir, seq, "bucket=")
-    shutil.rmtree(tmp, ignore_errors=True)
-    return appended
-
-
-def _pre_clear_band_delta(index_dir: str, seq: int, bkts: list) -> None:
-    """Remove a crashed attempt's band-delta files before this
-    replay's probes run (the probes need the PRE-batch band state; the
-    replay's own recompute rewrites the same d<seq> names)."""
-    adds_dir, tombs_dir = _band_delta_paths(index_dir)
-    def _is_seq_file(f: str) -> bool:
-        return f == f"d{seq}.parquet" or (
-            f.startswith(f"d{seq}-") and f.endswith(".parquet")
-        )
-
-    # flat-layout files sit straight under adds_dir
-    if os.path.isdir(adds_dir):
-        for f in os.listdir(adds_dir):
-            if _is_seq_file(f):
-                os.remove(os.path.join(adds_dir, f))
-    # legacy per-bucket layout (pre-r12 artifacts)
-    for b in bkts:
-        d = os.path.join(adds_dir, f"bucket={b}")
-        if not os.path.isdir(d):
-            continue
-        for f in os.listdir(d):
-            if _is_seq_file(f):
-                os.remove(os.path.join(d, f))
-    f = os.path.join(tombs_dir, f"d{seq}.parquet")
-    if os.path.exists(f):
-        os.remove(f)
 
 
 def _clear_band_delta(index_dir: str) -> None:
@@ -390,6 +309,7 @@ def init_neardup_artifact(
     write_json_atomic(
         meta_path,
         {
+            "format": FORMAT,
             "n_docs": n_docs,
             "n": n,
             "num_hashes": num_hashes,
@@ -437,9 +357,9 @@ def upsert_neardup_artifact(
 
     spark = batch.sparkSession
     sig_path, band_path, meta_path = _paths(index_dir)
+    meta = read_meta(meta_path, FORMAT)
     recover_tree(sig_path)
     recover_tree(band_path)
-    meta = json.load(open(meta_path))
     buckets = meta["buckets"]
     bands, num_hashes = meta["bands"], meta["num_hashes"]
     pend = meta.get("pending") or {"ids": [], "replaced": [], "fresh": []}
@@ -447,22 +367,15 @@ def upsert_neardup_artifact(
     # runs (probes need the PRE-batch band state); the replay rewrites
     # the same d<seq> names with its own recompute
     if pend.get("seq") is not None:
-        _pre_clear_band_delta(
-            index_dir, pend["seq"], pend.get("band_bkts", [])
-        )
-    band_seq = int(meta.get("band_seq", 0)) + 1
+        _pre_clear_delta(*_band_delta_paths(index_dir), pend["seq"])
+    band_seq = int(meta["band_seq"]) + 1
 
     # fold the bands delta log back into its base once it outgrows
     # BAND_COMPACT_FACTOR x the base — bounds probe-side read
     # amplification; deferred while a pending batch needs healing
-    if (
-        not pend["ids"]
-        and (
-            meta.get("band_delta_bytes", 0)
-            > BAND_COMPACT_FACTOR
-            * max(int(meta.get("band_base_bytes", 0)), 1)
-            or _legacy_delta(_band_delta_paths(index_dir)[0])
-        )
+    if not pend["ids"] and (
+        meta["band_delta_bytes"]
+        > BAND_COMPACT_FACTOR * max(int(meta["band_base_bytes"]), 1)
     ):
         folded = _bands_live(spark, index_dir, keep_seq=True).withColumn(
             "bucket", _band_bucket(buckets)
@@ -507,20 +420,6 @@ def upsert_neardup_artifact(
     # classify against the did-bucket-pruned stored slice
     did_bkts = sorted(set(new_bkt.values()))
     stored_sig = spark.read.parquet(sig_path)
-    # MIGRATION — pre-hashing artifact (raw gram STRINGS persisted):
-    # ghash is a pure function of the stored strings, so a one-time
-    # in-place rewrite (sorted distinct det_hash60 per doc) upgrades
-    # the layout without re-ingesting any text.
-    if "grams" in stored_sig.columns:
-        from vectordbindexing_spark.operators.dedup import grams_to_ghash
-
-        swap_in(
-            stored_sig.select(
-                "did", grams_to_ghash("grams"), "sig", "bucket"
-            ),
-            sig_path, coalesce=None, partition_by=["bucket"],
-        )
-        stored_sig = spark.read.parquet(sig_path)
     stored_slice = (
         stored_sig.where(F.col("bucket").isin(did_bkts))
         if did_bkts
@@ -552,8 +451,8 @@ def upsert_neardup_artifact(
     # the pending ledger (a pending id's bands swap may not have
     # landed — re-queue). Pending ids are excluded from the replaced
     # set: their stored sig may already be the NEW one (crash after
-    # the signatures swap), so their stale band buckets come from the
-    # ledger's band_bkts list, not from recomputing old band rows.
+    # the signatures swap); their stale band rows die by this batch's
+    # did-level tombstone, so no old band rows are recomputed.
     work_ids = sorted(
         i
         for i in batch_dids
@@ -625,9 +524,9 @@ def upsert_neardup_artifact(
 
     # ---- candidates: band rows of the work set — collected ONCE with
     # their buckets (|batch|·bands narrow rows) and re-created as a
-    # local relation: the cross/intra joins broadcast it and the delta
-    # writer re-partitions it, with no checkpoint + bucket-collect
-    # job pair ----
+    # local relation the cross/intra joins broadcast; the delta writer
+    # appends the same driver-side rows, with no checkpoint +
+    # bucket-collect job pair ----
     br_rows = (
         band_rows(g_work, bands, num_hashes // bands)
         .select(
@@ -736,20 +635,18 @@ def upsert_neardup_artifact(
     # stale band rows of replaced/updated dids need NO recompute from
     # old sigs and NO bucket rewrite: this batch's did-level tombstone
     # (seq = band_seq) kills every prior row of every work did at
-    # resolution, wherever it sits. band_bkts (the add rows' buckets)
-    # only scopes a replay's pre-clear. Buckets are all driver-local
+    # resolution, wherever it sits. Buckets are all driver-local
     # already (batch collect + heal collect) — no job.
     sig_dirty = sorted({new_bkt[i] for i in work_ids})
 
     # ---- stamp the work-list ledger BEFORE any swap: a crash between
     # here and the final meta write replays into the heal path above,
-    # and (seq, band_bkts) scopes the replay's delta pre-clear ----
+    # and seq names the delta files the replay pre-clears ----
     meta["pending"] = {
         "ids": work_ids,
         "replaced": repl_ids,
         "fresh": fresh_ids,
         "seq": band_seq,
-        "band_bkts": band_bkts,
     }
     write_json_atomic(meta_path, meta)
 
@@ -767,12 +664,11 @@ def upsert_neardup_artifact(
     # probe collect above already brought driver-side, so the append
     # is two pyarrow file writes — no Spark jobs.
     appended = _write_band_delta(
-        spark,
         [
             (r["did"], r["band_idx"], r["band_key"], r["_bkt"])
             for r in br_rows
         ],
-        work_ids, index_dir, band_seq, buckets,
+        work_ids, index_dir, band_seq,
     )
 
     if batch_id is not None:
@@ -786,9 +682,7 @@ def upsert_neardup_artifact(
 
     meta["n_docs"] = meta["n_docs"] + len(fresh_ids)
     meta["band_seq"] = band_seq
-    meta["band_delta_bytes"] = (
-        int(meta.get("band_delta_bytes", 0)) + appended
-    )
+    meta["band_delta_bytes"] = int(meta["band_delta_bytes"]) + appended
     meta["pending"] = None
     write_json_atomic(meta_path, meta)
     return pairs
