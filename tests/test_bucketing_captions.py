@@ -74,13 +74,13 @@ def test_results_json_roundtrip(spark, tables, tmp_path):
 @given(st.lists(st.floats(-1e3, 1e3), min_size=2, max_size=64),
        st.lists(st.floats(-1e3, 1e3), min_size=2, max_size=64))
 def test_pairwise_l2_triangle_and_symmetry(a, b):
-    from vectordbindexing_spark.operators.exact_knn import _pairwise_dist
+    from vectordbindexing_spark.functions.vector import dist_matrix
 
     n = min(len(a), len(b))
     A = np.array([a[:n]], dtype=np.float64)
     B = np.array([b[:n]], dtype=np.float64)
-    dab = _pairwise_dist(A, B, "l2")[0, 0]
-    dba = _pairwise_dist(B, A, "l2")[0, 0]
+    dab = dist_matrix(A, B, "l2")[0, 0]
+    dba = dist_matrix(B, A, "l2")[0, 0]
     assert dab >= 0
     assert abs(dab - dba) < 1e-6 * max(1.0, dab)
 

@@ -104,6 +104,77 @@ def test_pair_dist_udf_matches_expr(spark, tables, metric):
     assert got < 1e-9
 
 
+@pytest.mark.parametrize("metric", ["cosine", "l2", "ip"])
+def test_pair_dist_is_the_dist_matrix_diagonal(metric):
+    """The row-wise kernel and the matrix kernel are one formula: row i
+    of pair_dist(A, B) is cell (i, i) of dist_matrix(A, B)."""
+    import numpy as np
+
+    from vectordbindexing_spark.functions.vector import dist_matrix, pair_dist
+
+    rng = np.random.default_rng(3)
+    A, B = rng.normal(size=(50, 16)), rng.normal(size=(50, 16))
+    diff = pair_dist(A, B, metric) - np.diag(dist_matrix(A, B, metric))
+    assert np.max(np.abs(diff)) < 1e-12
+
+
+def _unknown_metric_entry(spark, entry):
+    """Run ``entry`` with metric="euclidean" (not in METRICS) to the
+    point where its kernel sees the metric."""
+    import numpy as np
+
+    rng = np.random.default_rng(0)
+    V = rng.normal(size=(40, 8))
+    if entry == "dist_matrix":
+        from vectordbindexing_spark.functions.vector import dist_matrix
+
+        return dist_matrix(V, V, "euclidean")
+    if entry == "pair_dist":
+        from vectordbindexing_spark.functions.vector import pair_dist
+
+        return pair_dist(V, V, "euclidean")
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in V[i]]) for i in range(len(V))],
+        "id long, vec array<double>",
+    )
+    if entry == "knn_graph_bucketed":
+        from vectordbindexing_spark.operators.graph import knn_graph
+
+        return knn_graph(df, 4, "euclidean", impl="bucketed").collect()
+    if entry == "build_sharded_index":
+        from vectordbindexing_spark.operators.shard import build_sharded_index
+
+        return build_sharded_index(df, num_shards=2, M0=4, M1=2,
+                                   metric="euclidean").collect()
+    if entry == "roargraph_build":
+        from vectordbindexing_spark.operators.graph import roargraph_build
+
+        q = df.withColumnRenamed("id", "qid").limit(5)
+        return roargraph_build(q, df, k_nn=8, n_targets=2, M_pjbp=4,
+                               metric="euclidean").collect()
+    assert entry == "compact_index"
+    from vectordbindexing_spark.operators.search import compact_index
+
+    edges = spark.createDataFrame(
+        [(0, i, (i + 1) % len(V), 0.0) for i in range(len(V))],
+        "layer int, src long, dst long, dist double",
+    )
+    return compact_index(edges, df, metric="euclidean")
+
+
+@pytest.mark.parametrize(
+    "entry",
+    ["dist_matrix", "pair_dist", "knn_graph_bucketed",
+     "build_sharded_index", "roargraph_build", "compact_index"],
+)
+def test_unknown_metric_raises(spark, entry):
+    """An unknown metric name must fail loudly, never fall through to
+    the inner-product branch. Executor-side errors arrive wrapped, so
+    match on the message."""
+    with pytest.raises(Exception, match="unknown metric"):
+        _unknown_metric_entry(spark, entry)
+
+
 def test_null_vectors_are_excluded_everywhere(spark):
     """Rows with NULL embeddings (missing vectors) are excluded on both
     sides of every KNN family member instead of crashing the Arrow

@@ -171,6 +171,10 @@ def test_multi_path_search(spark, emb):
         q, idx, k=5, ef_search=32, max_paths=1,
         q_id="vec_id", q_vec="embedding").collect())
     assert one == base  # popping 1 head per round == single-path search
+    one_stats = graph_search(q, idx, k=5, ef_search=32, max_paths=1,
+                             with_stats=True, q_id="vec_id",
+                             q_vec="embedding").collect()
+    assert all(r["path_pops"] == r["hops"] for r in one_stats)
 
     multi = graph_search(q, idx, k=5, ef_search=32, max_paths=3,
                          with_stats=True, q_id="vec_id", q_vec="embedding")
@@ -566,6 +570,18 @@ def test_build_fold_matches_per_layer_collects(spark):
         for r in assign_levels(base, id_col="id", M=M_level).collect()
     }
     assert all(assign_level_py(i, M_level) == lv[i] for i in lv)
+    # string and double ids: both twins hash the integer's digits
+    # ("007" and 7.0 level like 7)
+    for ddl, as_id in (("string", lambda i: f"{i:03d}"), ("double", float)):
+        other = spark.createDataFrame(
+            [(as_id(i),) for i in range(n)], f"id {ddl}"
+        )
+        lv_other = {
+            r["id"]: r["level"]
+            for r in assign_levels(other, id_col="id", M=M_level).collect()
+        }
+        assert all(assign_level_py(i, M_level) == lv_other[i]
+                   for i in lv_other), ddl
 
     leveled = assign_levels(base, id_col="id", M=M_level)
     upper = leveled.filter(F.col("level") >= 1)

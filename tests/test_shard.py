@@ -133,9 +133,14 @@ def test_build_shard_blocked_matches_unblocked(monkeypatch):
     the IDENTICAL edge set (selection, tie-breaks, order) as the
     single-block path — the numpy oracle pins replay the unblocked
     math, so any divergence would break ann_sharded_recall."""
+    import importlib
+
     import numpy as np
 
     from vectordbindexing_spark.operators import shard as shmod
+
+    # the module, not the exact_knn function the package re-exports
+    ekmod = importlib.import_module("vectordbindexing_spark.operators.exact_knn")
 
     rng = np.random.default_rng(11)
     ids = np.sort(rng.permutation(5000)[:200]).astype(np.int64)
@@ -145,7 +150,7 @@ def test_build_shard_blocked_matches_unblocked(monkeypatch):
     V[11] = V[3]
     for metric in ("cosine", "l2", "ip"):
         full = shmod._build_shard(ids, V, 8, 4, 16, metric, 3)
-        monkeypatch.setattr(shmod, "_BUILD_BLOCK_TARGET_BYTES", 8 * 200 * 7)
+        monkeypatch.setattr(ekmod, "_BUILD_BLOCK_TARGET_BYTES", 8 * 200 * 7)
         blocked = shmod._build_shard(ids, V, 8, 4, 16, metric, 3)
         monkeypatch.undo()
         assert full.equals(blocked), metric

@@ -9,11 +9,14 @@ d=200 in its batch kernel (`hnsw_cosine.py:24`); these are dimension-generic.
 All arithmetic is float64 over a float32-stored vector column, with the
 accumulation running sequentially left-to-right — the same formula and
 order DuckDB's ``list_inner_product`` uses, so oracle comparisons agree to
-~1 ulp. The numpy fast path lives in ``operators/exact_knn.py``.
+~1 ulp. The numpy twins live here too: :func:`dist_matrix` (query block ×
+base block) and :func:`pair_dist` (row i against row i) are the one
+home of the metric formulas every Arrow kernel calls.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -95,17 +98,57 @@ def metric_dist(a: Column | str, b: Column | str, metric: str) -> Column:
     raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
 
 
+def dist_matrix(
+    Q: np.ndarray, B: np.ndarray, metric: str, weights: np.ndarray | None = None
+) -> np.ndarray:
+    """(n_q, d) × (n_b, d) → (n_q, n_b) float64 distance matrix."""
+    if metric == "weighted_l2":
+        # Σ w_k (q_k-b_k)² = (Q²·w) + (B²·w) - 2 (Q∘w)Bᵀ  (Idea-1023.md:72-82)
+        qw = np.sum(Q * Q * weights, axis=1)
+        bw = np.sum(B * B * weights, axis=1)
+        cross = (Q * weights) @ B.T
+        return np.maximum(qw[:, None] + bw[None, :] - 2.0 * cross, 0.0)
+    if metric == "cosine":
+        qn = np.linalg.norm(Q, axis=1)
+        bn = np.linalg.norm(B, axis=1)
+        return 1.0 - (Q @ B.T) / np.outer(qn, bn)
+    if metric == "l2":
+        # ||q-b||² = ||q||² + ||b||² - 2·q·b ; clamp tiny negatives from cancellation
+        d2 = (
+            np.sum(Q * Q, axis=1)[:, None]
+            + np.sum(B * B, axis=1)[None, :]
+            - 2.0 * (Q @ B.T)
+        )
+        return np.sqrt(np.maximum(d2, 0.0))
+    if metric == "ip":
+        return -(Q @ B.T)
+    raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
+
+
+def pair_dist(A: np.ndarray, B: np.ndarray, metric: str) -> np.ndarray:
+    """Row-wise distance: row i of ``A`` against row i of ``B`` (n,)."""
+    if metric == "cosine":
+        num = np.einsum("ij,ij->i", A, B)
+        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
+        return 1.0 - num / den
+    if metric == "l2":
+        diff = A - B
+        return np.sqrt(np.einsum("ij,ij->i", diff, diff))
+    if metric == "ip":
+        return -np.einsum("ij,ij->i", A, B)
+    raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
+
+
 def pair_dist_udf(metric: str):
     """Arrow-vectorized pairwise distance: same math as ``metric_dist`` but
     evaluated a batch at a time in numpy/BLAS instead of the interpreted
     higher-order-function expression tree. Use on candidate-scoring joins
     where each row carries its own (query, neighbor) vector pair — the
     expr path re-interprets zip_with/aggregate per element there, this one
-    streams Arrow batches through one einsum."""
+    streams Arrow batches through :func:`pair_dist`."""
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
 
-    import numpy as np
     import pandas as pd
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
@@ -117,15 +160,6 @@ def pair_dist_udf(metric: str):
             return pd.Series([], dtype="float64")
         A = np.stack([np.asarray(x, dtype=np.float64) for x in a])
         B = np.stack([np.asarray(x, dtype=np.float64) for x in b])
-        if metric == "cosine":
-            num = np.einsum("ij,ij->i", A, B)
-            den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-            d = 1.0 - num / den
-        elif metric == "l2":
-            diff = A - B
-            d = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-        else:  # ip
-            d = -np.einsum("ij,ij->i", A, B)
-        return pd.Series(d)
+        return pd.Series(pair_dist(A, B, metric))
 
     return dist

@@ -25,19 +25,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordbindexing_spark.functions.vector import dist_matrix
 from vectordbindexing_spark.operators.topk import topk_per_group
 
 EDGE_TYPE_CROSS = "cross_distribution"
-
-
-def _pairwise(V: np.ndarray, metric: str) -> np.ndarray:
-    if metric == "cosine":
-        n = np.linalg.norm(V, axis=1)
-        return 1.0 - (V @ V.T) / np.outer(n, n)
-    if metric == "l2":
-        sq = np.sum(V * V, axis=1)
-        return np.sqrt(np.maximum(sq[:, None] + sq[None, :] - 2 * (V @ V.T), 0))
-    return -(V @ V.T)
 
 
 def augment_from_query_topk(
@@ -77,7 +68,7 @@ def augment_from_query_topk(
         pdf = pdf.sort_values("nbr_rank")
         ids = pdf["neighbor_id"].to_numpy()
         V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_nv"]])
-        D = _pairwise(V, metric)
+        D = dist_matrix(V, V, metric)
         src, dst, dd = [], [], []
 
         def add(i: int, j: int) -> None:

@@ -111,7 +111,7 @@ def connected_components(
     ``component`` is the minimum member id — the canonical keeper.
 
     Alternating large-star/small-star until the edge set is a fixed point
-    (checked with ONE (count, bit_xor-of-row-hash) signature aggregate
+    (checked with ONE (count, bit_xor-of-row-hash ×2) signature aggregate
     per round — see ``_sig``). Every round is localCheckpoint-ed: the
     lineage would otherwise double per round and re-execute the whole
     prefix on each action.
@@ -157,19 +157,23 @@ def connected_components(
                 _cc_local(pdf["a"].to_numpy(), pdf["b"].to_numpy()),
                 "id long, component long",
             )
-    # convergence signature: (row count, bit_xor of the row hashes) in
-    # ONE commutative aggregate per round. Equal signatures across a
-    # round ⇒ the distinct edge sets are equal (a false positive needs
-    # equal counts AND a symmetric difference whose xxhash64s XOR to
-    # exactly 0 — ~2⁻⁶⁴ on non-adversarial data), which retires the
-    # separate exceptAll probe: at scale the probe doubled final-round
-    # latency with a full second pass over both edge sets.
+    # convergence signature: (row count, two independent bit_xor folds
+    # of the row hashes) in ONE commutative aggregate per round. Equal
+    # signatures across a round ⇒ the distinct edge sets are equal (a
+    # false positive needs equal counts AND a symmetric difference whose
+    # xxhash64s XOR to exactly 0 under BOTH argument orders at once —
+    # edges are oriented a > b, so no pair appears in both orders and
+    # the two folds stay independent),
+    # which retires the separate exceptAll probe: at scale the probe
+    # doubled final-round latency with a full second pass over both
+    # edge sets.
     def _sig(df: DataFrame) -> tuple:
         row = df.agg(
             F.count(F.lit(1)).alias("c"),
             F.expr("bit_xor(xxhash64(a, b))").alias("x"),
+            F.expr("bit_xor(xxhash64(b, a))").alias("y"),
         ).collect()[0]
-        return row["c"], row["x"]
+        return row["c"], row["x"], row["y"]
 
     prev_sig = _sig(edges)
     converged = False

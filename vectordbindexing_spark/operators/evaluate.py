@@ -18,11 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vectordbindexing_spark.operators.search import (
-    CompactIndex,
-    _beam_search_layer,
-    graph_search,
-)
+from vectordbindexing_spark.operators.search import CompactIndex, graph_search
 
 
 def traced_search(

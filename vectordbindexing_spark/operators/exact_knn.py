@@ -29,7 +29,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vectordbindexing_spark.functions.vector import METRICS, metric_dist, to_double_array
+from vectordbindexing_spark.functions.vector import (
+    METRICS,
+    dist_matrix,
+    metric_dist,
+    to_double_array,
+)
 from vectordbindexing_spark.operators.topk import (
     batch_topk_by_dist_id,
     topk_per_group,
@@ -39,33 +44,9 @@ _BLOCKED_THRESHOLD_QUERIES = 100_000  # above this, queries don't broadcast
 # Per-task byte target for the blocked kernel's distance matrices; the
 # query axis chunks to fit (memory O(target), not O(n_q · batch)).
 _BLOCK_TARGET_BYTES = 128 * 1024 * 1024
-
-
-def _pairwise_dist(
-    Q: np.ndarray, B: np.ndarray, metric: str, weights: np.ndarray | None = None
-) -> np.ndarray:
-    """(n_q, d) × (n_b, d) → (n_q, n_b) float64 distance matrix."""
-    if metric == "weighted_l2":
-        # Σ w_k (q_k-b_k)² = (Q²·w) + (B²·w) - 2 (Q∘w)Bᵀ  (Idea-1023.md:72-82)
-        qw = np.sum(Q * Q * weights, axis=1)
-        bw = np.sum(B * B * weights, axis=1)
-        cross = (Q * weights) @ B.T
-        return np.maximum(qw[:, None] + bw[None, :] - 2.0 * cross, 0.0)
-    if metric == "cosine":
-        qn = np.linalg.norm(Q, axis=1)
-        bn = np.linalg.norm(B, axis=1)
-        return 1.0 - (Q @ B.T) / np.outer(qn, bn)
-    if metric == "l2":
-        # ||q-b||² = ||q||² + ||b||² - 2·q·b ; clamp tiny negatives from cancellation
-        d2 = (
-            np.sum(Q * Q, axis=1)[:, None]
-            + np.sum(B * B, axis=1)[None, :]
-            - 2.0 * (Q @ B.T)
-        )
-        return np.sqrt(np.maximum(d2, 0.0))
-    if metric == "ip":
-        return -(Q @ B.T)
-    raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
+# Row-block target for the in-group self-kNN build kernel (O(block·m)
+# memory instead of O(m²); same per-pair arithmetic).
+_BUILD_BLOCK_TARGET_BYTES = 256 * 1024 * 1024
 
 
 def exact_knn(
@@ -215,7 +196,7 @@ def exact_knn_local_queries(
             # rows changes nothing downstream.
             cq = max(1, _BLOCK_TARGET_BYTES // max(1, 8 * len(bids)))
             for s in range(0, len(bqids), cq):
-                D = _pairwise_dist(bQ[s : s + cq], B, metric, weights=bw)
+                D = dist_matrix(bQ[s : s + cq], B, metric, weights=bw)
                 if exclude_self:
                     D[np.equal.outer(bqids[s : s + cq], bids)] = np.inf
                 # exact per-batch (dist, id) selection — duplicate
@@ -245,3 +226,32 @@ def exact_knn_local_queries(
         partial = partial.filter(F.col("dist") != float("inf"))
     ranked = topk_per_group(partial, ["qid"], "dist", k, tie_col="neighbor_id")
     return ranked.select("qid", "nbr_rank", "neighbor_id", "dist")
+
+
+def blocked_self_knn(
+    ids: np.ndarray, V: np.ndarray, k: int, metric: str
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Exact kNN edges of a local node set against itself, by (dist, id)
+    per row and excluding self: ``(src, dst, dist)`` arrays in row order,
+    non-finite distances dropped. The distance matrix is computed in ROW
+    BLOCKS under ``_BUILD_BLOCK_TARGET_BYTES``: the full matrix is m²
+    doubles (2 TB at 500k rows) while blocks keep memory at O(block·m)
+    with identical per-pair arithmetic; up to ~5.6k rows one block spans
+    every row. Shared by the sharded build and the bucketed graph build."""
+    m = len(ids)
+    blk = max(1, min(m, _BUILD_BLOCK_TARGET_BYTES // max(1, 8 * m)))
+    src, dst, dist = [], [], []
+    for s in range(0, m, blk):
+        D = dist_matrix(V[s : s + blk], V, metric)
+        r = np.arange(D.shape[0])
+        D[r, s + r] = np.inf  # self-distance
+        nbr, dv = batch_topk_by_dist_id(D, ids, min(k, m))
+        fin = np.isfinite(dv)
+        src.append(np.repeat(ids[s : s + blk], fin.sum(axis=1)))
+        dst.append(nbr[fin])
+        dist.append(dv[fin])
+    return (
+        np.concatenate(src).astype(np.int64),
+        np.concatenate(dst).astype(np.int64),
+        np.concatenate(dist),
+    )

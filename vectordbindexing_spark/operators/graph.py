@@ -17,7 +17,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectordbindexing_spark.functions.hashing import det_hash64
-from vectordbindexing_spark.operators.exact_knn import exact_knn
+from vectordbindexing_spark.functions.vector import dist_matrix, pair_dist
+from vectordbindexing_spark.operators.exact_knn import blocked_self_knn, exact_knn
+from vectordbindexing_spark.operators.lsh import _score_candidates
 from vectordbindexing_spark.operators.topk import topk_per_group
 
 MAX_LEVEL = 7
@@ -39,7 +41,8 @@ def assign_levels(
     bits = int(math.log2(M))
     if 2**bits != M:
         raise ValueError("M must be a power of two for exact thresholds")
-    h = det_hash64(F.col(id_col).cast("string"))
+    # via long, so string/double ids hash the digits assign_level_py hashes
+    h = det_hash64(F.col(id_col).cast("long").cast("string"))
     level = sum(
         (h < F.lit(2 ** (32 - bits * l)).cast("long")).cast("int")
         for l in range(1, MAX_LEVEL + 1)
@@ -123,8 +126,6 @@ def _knn_graph_bucketed(
         scaled_num_bits,
         simhash_buckets,
     )
-    from vectordbindexing_spark.operators.shard import _dist_matrix
-    from vectordbindexing_spark.operators.topk import batch_topk_by_dist_id
 
     nodes = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).cast("long").alias("_nid"), F.col(vec_col).alias("_nv")
@@ -164,41 +165,12 @@ def _knn_graph_bucketed(
         .join(nodes, "_nid")
     )
 
-    kk = min(k + 1, 2 ** 31 - 1)
-
     def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame(
-                {"src": pd.Series(dtype="int64"),
-                 "dst": pd.Series(dtype="int64"),
-                 "dist": pd.Series(dtype="float64")}
-            )
         ids = pdf["_nid"].to_numpy()
         V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_nv"]])
         order = np.argsort(ids, kind="stable")
-        ids, V = ids[order], V[order]
-        blk = max(1, min(m, (256 * 1024 * 1024) // max(1, 8 * m)))
-        src_out, dst_out, d_out = [], [], []
-        for s in range(0, m, blk):
-            D = _dist_matrix(V[s : s + blk], V, metric)
-            for r in range(D.shape[0]):
-                D[r, s + r] = np.inf  # self
-            nbr, dv = batch_topk_by_dist_id(D, ids, min(kk - 1, m - 1))
-            for r in range(D.shape[0]):
-                fin = np.isfinite(dv[r])
-                src_out.append(
-                    np.full(int(fin.sum()), ids[s + r], dtype=np.int64)
-                )
-                dst_out.append(nbr[r][fin].astype(np.int64))
-                d_out.append(dv[r][fin])
-        return pd.DataFrame(
-            {
-                "src": np.concatenate(src_out),
-                "dst": np.concatenate(dst_out),
-                "dist": np.concatenate(d_out),
-            }
-        )
+        src, dst, dist = blocked_self_knn(ids[order], V[order], k, metric)
+        return pd.DataFrame({"src": src, "dst": dst, "dist": dist})
 
     per_table = salted.groupBy("bucket", "_salt").applyInPandas(
         build_group, schema="src long, dst long, dist double"
@@ -299,8 +271,6 @@ def random_matching_edges(
     pure groupBy, no global sort, no driver state. Distances come from
     one vector join + Arrow pair kernel over the O(n·rounds) edge rows.
     Output (layer, src, dst, dist) like knn_graph."""
-    from collections.abc import Iterator
-
     nv = nodes.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).cast("long").alias("_nid"), F.col(vec_col).alias("_nv")
     )
@@ -338,30 +308,7 @@ def random_matching_edges(
                         F.col("_nv").alias("_bv")), "dst")
     )
 
-    def score_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_qv"]])
-            B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_bv"]])
-            d = np.einsum("ij,ij->i", A, B)
-            if metric == "cosine":
-                d = 1.0 - d / (
-                    np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-                )
-            elif metric == "l2":
-                diff = A - B
-                d = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-            else:  # ip
-                d = -d
-            yield pd.DataFrame(
-                {"src": pdf["src"].to_numpy(),
-                 "dst": pdf["dst"].to_numpy(), "dist": d}
-            )
-
-    scored = paired.mapInPandas(
-        score_pairs, schema="src long, dst long, dist double"
-    )
+    scored = _score_candidates(paired, metric, "src long, dst long")
     return scored.select(
         F.lit(layer).alias("layer"), "src", "dst", "dist"
     )
@@ -442,16 +389,7 @@ def refine_knn_graph(
                 continue
             A = Vb[_positions(ids_l, pdf["src"].to_numpy())].astype(np.float64)
             B = Vb[_positions(ids_l, pdf["dst"].to_numpy())].astype(np.float64)
-            d = np.einsum("ij,ij->i", A, B)
-            if metric == "cosine":
-                d = 1.0 - d / (
-                    np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-                )
-            elif metric == "l2":
-                diff = A - B
-                d = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-            else:  # ip
-                d = -d
+            d = pair_dist(A, B, metric)
             yield pd.DataFrame(
                 {
                     "layer": pdf["layer"].to_numpy(),
@@ -474,39 +412,7 @@ def refine_knn_graph(
         qv = nodes.select(F.col("_nid").alias("src"), F.col("_nv").alias("_qv"))
         bv = nodes.select(F.col("_nid").alias("dst"), F.col("_nv").alias("_bv"))
         paired = cand.join(qv, "src").join(bv, "dst")
-
-        def score_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                A = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["_qv"]]
-                )
-                B = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["_bv"]]
-                )
-                d = np.einsum("ij,ij->i", A, B)
-                if metric == "cosine":
-                    d = 1.0 - d / (
-                        np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-                    )
-                elif metric == "l2":
-                    diff = A - B
-                    d = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-                else:  # ip
-                    d = -d
-                yield pd.DataFrame(
-                    {
-                        "layer": pdf["layer"].to_numpy(),
-                        "src": pdf["src"].to_numpy(),
-                        "dst": pdf["dst"].to_numpy(),
-                        "dist": d,
-                    }
-                )
-
-        return paired.mapInPandas(
-            score_pairs, schema="layer int, src long, dst long, dist double"
-        )
+        return _score_candidates(paired, metric, "layer int, src long, dst long")
 
     for _ in range(max(0, rounds)):
         rev = edges.select(
@@ -622,16 +528,7 @@ def diversify_edges(
             ["dist", "dst"], kind="mergesort"
         ).reset_index(drop=True)
         V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_dv"]])
-        if metric == "cosine":
-            nrm = np.linalg.norm(V, axis=1)
-            Dc = 1.0 - (V @ V.T) / np.outer(nrm, nrm)
-        elif metric == "l2":
-            sq = np.sum(V * V, axis=1)
-            Dc = np.sqrt(
-                np.maximum(sq[:, None] + sq[None, :] - 2 * (V @ V.T), 0)
-            )
-        else:  # ip
-            Dc = -(V @ V.T)
+        Dc = dist_matrix(V, V, metric)
         d_src = pdf["dist"].to_numpy()
         kept: list[int] = []
         for i in range(len(pdf)):
@@ -904,14 +801,7 @@ def roargraph_build(
         pdf = pdf.sort_values("nbr_rank")
         ids = pdf["neighbor_id"].to_numpy()
         V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_nv"]])
-        if metric == "cosine":
-            n = np.linalg.norm(V, axis=1)
-            D = 1.0 - (V @ V.T) / np.outer(n, n)
-        elif metric == "l2":
-            sq = np.sum(V * V, axis=1)
-            D = np.sqrt(np.maximum(sq[:, None] + sq[None, :] - 2 * (V @ V.T), 0))
-        else:  # ip
-            D = -(V @ V.T)
+        D = dist_matrix(V, V, metric)
         src, dst, dd = [], [], []
         n_t = min(n_targets, len(ids))
         for t in range(n_t):

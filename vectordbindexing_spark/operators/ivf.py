@@ -427,10 +427,8 @@ def ivf_cells_knn(
     driver-resident (|batch|-bounded callers like the streaming graph
     upsert); the exchange carries (qid, neighbor_id, dist) per-batch
     top-k partials only."""
-    from vectordbindexing_spark.operators.exact_knn import (
-        _BLOCK_TARGET_BYTES,
-        _pairwise_dist,
-    )
+    from vectordbindexing_spark.functions.vector import dist_matrix
+    from vectordbindexing_spark.operators.exact_knn import _BLOCK_TARGET_BYTES
     from vectordbindexing_spark.operators.topk import (
         batch_topk_by_dist_id,
         topk_per_group,
@@ -465,7 +463,7 @@ def ivf_cells_knn(
                 qch = max(1, _BLOCK_TARGET_BYTES // max(1, 8 * rows))
                 for qs in range(0, len(qidx), qch):
                     sub = qidx[qs : qs + qch]
-                    D = _pairwise_dist(bQ[sub], B[s0:s1], metric)
+                    D = dist_matrix(bQ[sub], B[s0:s1], metric)
                     nbr, dd = batch_topk_by_dist_id(D, bids[s0:s1], kk)
                     cq_chunks.append(np.repeat(sub, nbr.shape[1]))
                     ci_chunks.append(nbr.ravel())
@@ -516,10 +514,8 @@ def _ivf_knn_kernel(
     lowest cid, result ties to the lowest neighbor_id, distances come
     from the same batch kernels as the exact blocked scan — so the two
     impls return the same rows (pinned by test)."""
-    from vectordbindexing_spark.operators.exact_knn import (
-        _BLOCK_TARGET_BYTES,
-        _pairwise_dist,
-    )
+    from vectordbindexing_spark.functions.vector import dist_matrix
+    from vectordbindexing_spark.operators.exact_knn import _BLOCK_TARGET_BYTES
     from vectordbindexing_spark.operators.topk import (
         batch_topk_by_dist_id,
         topk_per_group,
@@ -557,7 +553,7 @@ def _ivf_knn_kernel(
                 qch = max(1, _BLOCK_TARGET_BYTES // max(1, 8 * rows))
                 for qs in range(0, len(qidx), qch):
                     sub = qidx[qs : qs + qch]
-                    D = _pairwise_dist(bQ[sub], B[s0:s1], metric)
+                    D = dist_matrix(bQ[sub], B[s0:s1], metric)
                     nbr, dd = batch_topk_by_dist_id(D, bids[s0:s1], kk)
                     cq_chunks.append(np.repeat(sub, nbr.shape[1]))
                     ci_chunks.append(nbr.ravel())

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vectordbindexing_spark.functions.hashing import simhash_bits_np
+from vectordbindexing_spark.functions.vector import pair_dist
 from vectordbindexing_spark.operators.topk import topk_per_group
 
 DEFAULT_BUCKET_CAP = 20_000  # simple_sim_hash.py:10
@@ -97,35 +98,26 @@ def probe_buckets(bucket: Column, num_bits: int) -> Column:
 
 
 def _score_candidates(
-    cand: DataFrame, metric: str, qv: str = "_qv", bv: str = "_bv"
+    cand: DataFrame,
+    metric: str,
+    keys: str = "qid long, neighbor_id long",
 ) -> DataFrame:
-    """Row-vectorized distance kernel over candidate pairs (Arrow batches)."""
+    """Row-vectorized distance kernel over candidate pairs (Arrow batches):
+    each row's ``_qv``/``_bv`` vectors → ``dist``, carrying the ``keys``
+    columns (a DDL field list) through unchanged."""
+    names = [f.split()[0] for f in keys.split(",")]
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[qv]])
-            B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[bv]])
-            d = np.einsum("ij,ij->i", Q, B)
-            if metric == "cosine":
-                d = 1.0 - d / (
-                    np.linalg.norm(Q, axis=1) * np.linalg.norm(B, axis=1)
-                )
-            elif metric == "l2":
-                diff = Q - B
-                d = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-            else:  # ip
-                d = -d
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"].to_numpy(),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "dist": d,
-                }
-            )
+            Q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_qv"]])
+            B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_bv"]])
+            out = {c: pdf[c].to_numpy() for c in names}
+            out["dist"] = pair_dist(Q, B, metric)
+            yield pd.DataFrame(out)
 
-    return cand.mapInPandas(score, schema="qid long, neighbor_id long, dist double")
+    return cand.mapInPandas(score, schema=f"{keys}, dist double")
 
 
 def lsh_knn(

@@ -87,10 +87,10 @@ def _mine_triplets_fused(base: DataFrame, k_neg: int, metric: str):
     import pandas as pd
     from pyspark.sql import Window
 
+    from vectordbindexing_spark.functions.vector import dist_matrix
     from vectordbindexing_spark.operators.exact_knn import (
         _BLOCK_TARGET_BYTES,
         _BLOCKED_THRESHOLD_QUERIES,
-        _pairwise_dist,
     )
     from vectordbindexing_spark.operators.topk import batch_topk_by_dist_id
     from vectordbindexing_spark.plans.partitioning import (
@@ -132,7 +132,7 @@ def _mine_triplets_fused(base: DataFrame, k_neg: int, metric: str):
             # the exact_knn kernel does (memory O(target), not O(n_q·n))
             cq = max(1, _BLOCK_TARGET_BYTES // max(1, 8 * len(bids)))
             for s in range(0, len(bqids), cq):
-                D = _pairwise_dist(bQ[s : s + cq], B, metric)
+                D = dist_matrix(bQ[s : s + cq], B, metric)
                 same = np.equal.outer(bqlabs[s : s + cq], blabs)
                 # positive: same label minus self, per-batch top-1
                 Dp = np.where(

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordbindexing_spark.functions.vector import METRICS
+
 
 @dataclass
 class CompactIndex:
@@ -38,6 +40,13 @@ class CompactIndex:
     # optional, CSR-parallel to indices: True where the edge is a
     # cross-distribution augmentation edge (reference edge_flags)
     edge_cross: dict[int, np.ndarray] | None = None
+
+    def __post_init__(self):
+        # checked once here so the hot ``dist`` keeps no fallback branch
+        if self.metric not in METRICS:
+            raise ValueError(
+                f"unknown metric {self.metric!r}; expected one of {METRICS}"
+            )
 
     def dist(self, q: np.ndarray, pos: np.ndarray) -> np.ndarray:
         V = self.vecs[pos].astype(np.float64)
@@ -151,6 +160,7 @@ def _beam_search_layer(
     layer: int,
     entries: np.ndarray,
     ef: int,
+    max_paths: int = 1,
     max_hops: int = 500,
     max_search_nodes: int | None = None,
     stats_out: dict | None = None,
@@ -158,7 +168,13 @@ def _beam_search_layer(
     """Best-first beam search with candidate min-heap + result max-heap and
     early exit (reference `_search_layer` hnsw_cosine.py:445-473; hop cap
     from roargraph_python.py:376; ``max_search_nodes`` visit budget from
-    hnsw_cosine_norm.py:349,697-720)."""
+    hnsw_cosine_norm.py:349,697-720). ``max_paths`` > 1 is the multi-path
+    variant (reference `_search_layer_multi_path`,
+    hnsw_cosine_status_high.py:965-1077, max_paths=3): each round expands
+    the ``max_paths`` best frontier heads together — the paths share one
+    visited set and one result beam, so this widens exploration without
+    revisits. Stats: ``visited``, ``hops`` (rounds) and ``path_pops``
+    (heads expanded; equals ``hops`` at ``max_paths=1``)."""
     indptr = index.indptr.get(layer)
     indices = index.indices.get(layer)
     if indptr is None:
@@ -176,16 +192,30 @@ def _beam_search_layer(
     visited[entries] = True
     n_visited = len(entries)
     hops = 0
+    extra_pops = 0  # heads expanded beyond one per round
     while cand and hops < max_hops:
         if max_search_nodes is not None and n_visited >= max_search_nodes:
             break
-        d, p = heapq.heappop(cand)
-        worst = -result[0][0]
-        if d > worst and len(result) >= ef:
-            break
+        if max_paths == 1:
+            d, p = heapq.heappop(cand)
+            if d > -result[0][0] and len(result) >= ef:
+                break
+            nbrs = indices[indptr[p] : indptr[p + 1]]
+            nbrs = nbrs[~visited[nbrs]]
+        else:
+            heads = [heapq.heappop(cand)
+                     for _ in range(min(max_paths, len(cand)))]
+            if heads[0][0] > -result[0][0] and len(result) >= ef:
+                break  # even the best head cannot improve the beam
+            extra_pops += len(heads) - 1
+            chunks = []
+            for _, h in heads:
+                nb = indices[indptr[h] : indptr[h + 1]]
+                nb = nb[~visited[nb]]
+                visited[nb] = True  # later heads skip earlier heads' nbrs
+                chunks.append(nb)
+            nbrs = np.concatenate(chunks)
         hops += 1
-        nbrs = indices[indptr[p] : indptr[p + 1]]
-        nbrs = nbrs[~visited[nbrs]]
         if len(nbrs) == 0:
             continue
         visited[nbrs] = True
@@ -200,78 +230,49 @@ def _beam_search_layer(
     if stats_out is not None:
         stats_out["visited"] = stats_out.get("visited", 0) + n_visited
         stats_out["hops"] = stats_out.get("hops", 0) + hops
+        stats_out["path_pops"] = (
+            stats_out.get("path_pops", 0) + hops + extra_pops
+        )
     return [(-d, p) for d, p in result]
 
 
-def _beam_search_layer_multi(
+def _layered_search(
     index: CompactIndex,
     q: np.ndarray,
-    layer: int,
-    entries: np.ndarray,
-    ef: int,
-    max_paths: int = 3,
-    max_hops: int = 500,
+    k: int,
+    ef_search: int,
+    num_entry_points: int,
+    layer1_ef_multiplier: int,
+    max_paths: int = 1,
     max_search_nodes: int | None = None,
     stats_out: dict | None = None,
 ) -> list[tuple[float, int]]:
-    """Multi-path variant of the beam (reference `_search_layer_multi_path`,
-    hnsw_cosine_status_high.py:965-1077, max_paths=3): each round expands
-    the ``max_paths`` best frontier candidates together instead of one —
-    the paths share one visited set and one result beam, so this widens
-    exploration without revisits. ``max_paths=1`` pops one candidate per
-    round, i.e. exactly the single-path best-first search. Emits a
-    ``path_pops`` stat (total path heads expanded)."""
-    indptr = index.indptr.get(layer)
-    indices = index.indices.get(layer)
-    if indptr is None:
-        return [(float(d), int(p)) for d, p in
-                zip(index.dist(q, entries), entries)]
-    visited = np.zeros(len(index.ids), dtype=bool)
-    entries = np.unique(entries)
-    d0 = index.dist(q, entries)
-    cand = [(float(d), int(p)) for d, p in zip(d0, entries)]
-    heapq.heapify(cand)
-    result = [(-d, p) for d, p in cand]
-    heapq.heapify(result)
-    while len(result) > ef:
-        heapq.heappop(result)
-    visited[entries] = True
-    n_visited = len(entries)
-    hops = 0
-    path_pops = 0
-    while cand and hops < max_hops:
-        if max_search_nodes is not None and n_visited >= max_search_nodes:
-            break
-        pops = [heapq.heappop(cand)
-                for _ in range(min(max_paths, len(cand)))]
-        worst = -result[0][0]
-        if pops[0][0] > worst and len(result) >= ef:
-            break  # even the best path head cannot improve the beam
-        hops += 1
-        path_pops += len(pops)
-        nbr_chunks = []
-        for _, p in pops:
-            nb = indices[indptr[p] : indptr[p + 1]]
-            nb = nb[~visited[nb]]
-            if len(nb):
-                visited[nb] = True
-                nbr_chunks.append(nb)
-        if not nbr_chunks:
+    """One query's layered descent, shared by the broadcast and sharded
+    routes (like the C++ multi-entry search, hnsw.cpp:769-815): beam each
+    upper layer at ``layer1_ef_multiplier``·max(ef, k) and keep its top
+    ``num_entry_points`` as the next seeds, then beam layer 0 at
+    max(ef, k). Returns the layer-0 beam sorted by (dist, id)."""
+    entries = index.entry_points
+    for layer in sorted(index.indptr, reverse=True):
+        if layer == 0:
             continue
-        nbrs = np.concatenate(nbr_chunks)
-        n_visited += len(nbrs)
-        dn = index.dist(q, nbrs)
-        for dd, pp in zip(dn, nbrs):
-            if len(result) < ef or dd < -result[0][0]:
-                heapq.heappush(cand, (float(dd), int(pp)))
-                heapq.heappush(result, (-float(dd), int(pp)))
-                if len(result) > ef:
-                    heapq.heappop(result)
-    if stats_out is not None:
-        stats_out["visited"] = stats_out.get("visited", 0) + n_visited
-        stats_out["hops"] = stats_out.get("hops", 0) + hops
-        stats_out["path_pops"] = stats_out.get("path_pops", 0) + path_pops
-    return [(-d, p) for d, p in result]
+        up = _beam_search_layer(
+            index, q, layer, entries,
+            layer1_ef_multiplier * max(ef_search, k), max_paths=max_paths,
+            max_search_nodes=max_search_nodes, stats_out=stats_out,
+        )
+        up.sort()
+        entries = np.array(
+            [p for _, p in up[:num_entry_points]], dtype=np.int64
+        )
+    # ALWAYS beam on layer 0 (an index with only upper layers degrades
+    # gracefully: no layer-0 CSR scores just the entries)
+    res = _beam_search_layer(
+        index, q, 0, entries, max(ef_search, k), max_paths=max_paths,
+        max_search_nodes=max_search_nodes, stats_out=stats_out,
+    )
+    res.sort(key=lambda t: (t[0], index.ids[t[1]]))
+    return res
 
 
 def load_compact_npy(artifact_dir: str, mmap: bool = True) -> CompactIndex:
@@ -346,7 +347,7 @@ def graph_search(
     max_search_nodes: int | None = None,
     layer1_ef_multiplier: int = 2,
     with_stats: bool = False,
-    max_paths: int | None = None,
+    max_paths: int = 1,
 ) -> DataFrame:
     """Batch ANN search: broadcast the index, stream query batches through
     a mapInPandas kernel running the layered beam search per query.
@@ -356,9 +357,9 @@ def graph_search(
     beam runs at ``layer1_ef_multiplier``×ef (the "High" method's enhanced
     layer-1 search, hnsw_cosine_status_high.py:524-734 layer1_ef=2*ef);
     ``max_search_nodes`` caps visited nodes per layer (Norm method budget);
-    ``max_paths`` switches to the multi-path beam (reference
-    `_search_layer_multi_path`, max_paths=3 — expand the m best frontier
-    heads per round; ``max_paths=1`` is exactly the single-path search).
+    ``max_paths`` is the number of frontier heads the beam expands per
+    round (reference `_search_layer_multi_path` uses 3; the default 1 is
+    the single-path search).
     Output: (qid, nbr_rank, neighbor_id, dist) like exact_knn;
     ``with_stats`` appends per-query (visited_count, hops, latency_us,
     path_pops) — the reference batch_search output dict
@@ -372,58 +373,25 @@ def graph_search(
     """
     import time as _time
     spark = queries.sparkSession
-    if isinstance(index, str):
-        import json as _json
-        import os as _os
-
-        with open(_os.path.join(index, "meta.json")) as f:
-            layers_desc = sorted(_json.load(f)["layers"], reverse=True)
-    else:
-        layers_desc = sorted(index.indptr.keys(), reverse=True)
     bc = spark.sparkContext.broadcast(index)
 
     def run(batches):
         idx = bc.value
         if isinstance(idx, str):
             idx = _artifact_cached(idx)
-
-        def beam(q, layer, entries, ef, stats):
-            if max_paths is None:
-                return _beam_search_layer(
-                    idx, q, layer, entries, ef,
-                    max_search_nodes=max_search_nodes, stats_out=stats,
-                )
-            return _beam_search_layer_multi(
-                idx, q, layer, entries, ef, max_paths=max_paths,
-                max_search_nodes=max_search_nodes, stats_out=stats,
-            )
-
         for pdf in batches:
             qids, ranks, nids, dists = [], [], [], []
             svis, shops, slat, spaths = [], [], [], []
             for qid, v in zip(pdf["qid"], pdf["v"]):
                 q = np.asarray(v, dtype=np.float64)
-                entries = idx.entry_points
                 stats: dict = {}
                 t0 = _time.perf_counter()
-                # descend the upper layers to pick layer-0 entry seeds …
-                for layer in layers_desc:
-                    if layer == 0:
-                        continue
-                    up = beam(
-                        q, layer, entries,
-                        layer1_ef_multiplier * max(ef_search, k), stats,
-                    )
-                    up.sort()
-                    entries = np.array(
-                        [p for _, p in up[:num_entry_points]], dtype=np.int64
-                    )
-                # … then ALWAYS beam on layer 0 (an index with only upper
-                # layers degrades gracefully: indptr.get(0) is None scores
-                # just the entries inside _beam_search_layer)
-                res = beam(q, 0, entries, max(ef_search, k), stats)
+                res = _layered_search(
+                    idx, q, k, ef_search, num_entry_points,
+                    layer1_ef_multiplier, max_paths=max_paths,
+                    max_search_nodes=max_search_nodes, stats_out=stats,
+                )
                 lat_us = int((_time.perf_counter() - t0) * 1e6)
-                res.sort(key=lambda t: (t[0], idx.ids[t[1]]))
                 for r, (d, p) in enumerate(res[:k], start=1):
                     qids.append(qid); ranks.append(r)
                     nids.append(int(idx.ids[p])); dists.append(float(d))

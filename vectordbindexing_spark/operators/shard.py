@@ -25,36 +25,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from vectordbindexing_spark.plans.partitioning import local_rows_df
 
-from vectordbindexing_spark.functions.hashing import det_hash64, det_hash64_py
-from vectordbindexing_spark.operators.search import CompactIndex, _beam_search_layer
-from vectordbindexing_spark.operators.topk import (
-    batch_topk_by_dist_id,
-    topk_per_group,
-)
-
-# Row-block target for the build kernel's distance matrices (O(block·m)
-# memory instead of O(m²); same per-pair arithmetic).
-_BUILD_BLOCK_TARGET_BYTES = 256 * 1024 * 1024
+from vectordbindexing_spark.functions.hashing import det_hash64
+from vectordbindexing_spark.operators.exact_knn import blocked_self_knn
+from vectordbindexing_spark.operators.graph import assign_level_py
+from vectordbindexing_spark.operators.search import CompactIndex, _layered_search
+from vectordbindexing_spark.operators.topk import topk_per_group
 
 SHARD_SCHEMA = (
     "shard int, id long, vec array<float>, level int, entry_rank int, "
     "nbrs0 array<long>, nbrs1 array<long>"
 )
-
-
-def _dist_matrix(A: np.ndarray, B: np.ndarray, metric: str) -> np.ndarray:
-    if metric == "cosine":
-        return 1.0 - (A @ B.T) / np.outer(
-            np.linalg.norm(A, axis=1), np.linalg.norm(B, axis=1)
-        )
-    if metric == "l2":
-        d2 = (
-            np.sum(A * A, axis=1)[:, None]
-            + np.sum(B * B, axis=1)[None, :]
-            - 2.0 * (A @ B.T)
-        )
-        return np.sqrt(np.maximum(d2, 0.0))
-    return -(A @ B.T)
 
 
 def _build_shard(
@@ -69,40 +49,12 @@ def _build_shard(
     """Two-layer bulk build for one shard, pure numpy (levels → kNN graphs
     → mutualize with min-dist dedup and 2·max(M0,M1) cap → entry points).
     Same formulas as graph.build_two_layer_index, executed on one group."""
-    import math
-
-    bits = int(math.log2(M_level))
     n = len(ids)
-    h = np.array([det_hash64_py(str(int(i))) for i in ids], dtype=np.int64)
-    level = np.zeros(n, dtype=np.int64)
-    for lv in range(1, 8):
-        if 32 - bits * lv > 0:
-            level += (h < 2 ** (32 - bits * lv)).astype(np.int64)
+    level = np.array([assign_level_py(i, M_level) for i in ids], dtype=np.int64)
 
     def knn_edges(sub_idx: np.ndarray, kk: int) -> list[tuple[int, int, float]]:
-        """Exact kNN edges by (dist, id) per row, distance matrix
-        computed in ROW BLOCKS: the full matrix is m² doubles — 2 TB at
-        a 500k-row shard, the thing that silently capped shard size —
-        while blocks keep memory at O(block·m) with identical per-pair
-        arithmetic. At contract/test scales (m ≤ ~5.6k under the 256 MB
-        target) the block spans every row, so the computation — and the
-        numpy oracle pin that replays it — is unchanged."""
-        sub_ids = ids[sub_idx]
-        Vs = V[sub_idx]
-        m = len(sub_ids)
-        blk = max(1, min(m, _BUILD_BLOCK_TARGET_BYTES // max(1, 8 * m)))
-        edges = []
-        for s in range(0, m, blk):
-            D = _dist_matrix(Vs[s : s + blk], Vs, metric)
-            for r in range(D.shape[0]):
-                D[r, s + r] = np.inf  # self-distance
-            nbr, dv = batch_topk_by_dist_id(D, sub_ids, min(kk, m))
-            for r in range(D.shape[0]):
-                src = int(sub_ids[s + r])
-                for nid, dd in zip(nbr[r], dv[r]):
-                    if np.isfinite(dd):
-                        edges.append((src, int(nid), float(dd)))
-        return edges
+        src, dst, dist = blocked_self_knn(ids[sub_idx], V[sub_idx], kk, metric)
+        return list(zip(src.tolist(), dst.tolist(), dist.tolist()))
 
     layers = {0: knn_edges(np.arange(n), M0)}
     um = np.flatnonzero(level >= 1)
@@ -332,24 +284,12 @@ def search_sharded(
     def search_one(pdf: pd.DataFrame) -> pd.DataFrame:
         idx = _index_from_rows(pdf, metric)
         bqids, bQ = bc.value
-        layers_desc = sorted(idx.indptr.keys(), reverse=True)
         out_q, out_n, out_d = [], [], []
         for qi in range(len(bqids)):
-            q = bQ[qi]
-            entries = idx.entry_points
-            for layer in layers_desc:
-                if layer == 0:
-                    continue
-                up = _beam_search_layer(
-                    idx, q, layer, entries,
-                    layer1_ef_multiplier * max(ef_search, k),
-                )
-                up.sort()
-                entries = np.array(
-                    [p for _, p in up[:num_entry_points]], dtype=np.int64
-                )
-            res = _beam_search_layer(idx, q, 0, entries, max(ef_search, k))
-            res.sort(key=lambda t: (t[0], idx.ids[t[1]]))
+            res = _layered_search(
+                idx, bQ[qi], k, ef_search, num_entry_points,
+                layer1_ef_multiplier,
+            )
             for d, p in res[:k]:
                 out_q.append(bqids[qi])
                 out_n.append(int(idx.ids[p]))

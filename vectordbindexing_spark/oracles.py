@@ -265,7 +265,7 @@ def whitening_norms_sql(round_to: int = 4) -> str:
 
 
 def _np_cosine_matrix(A, C):
-    """exact_knn._pairwise_dist cosine formula, one batch."""
+    """functions.vector.dist_matrix cosine formula, one batch."""
     import numpy as np
 
     return 1.0 - (A @ C.T) / np.outer(
@@ -940,7 +940,7 @@ def _bucketed_recall_pins(
     blocked probe) + 3 random-matching long links, mutualize, compact
     serve. Group membership and every kernel expression are replicated
     with the SAME shared functions the Spark kernels call
-    (simhash_bits_np, _dist_matrix, batch_topk_by_dist_id), so dists
+    (simhash_bits_np, dist_matrix, batch_topk_by_dist_id), so dists
     are bit-identical; the serve twin is cross-checked against the
     independent Algorithm-2 implementation like the two-layer pin."""
     import math
@@ -952,7 +952,7 @@ def _bucketed_recall_pins(
         simhash_bits_np,
     )
     from vectordbindexing_spark.operators.lsh import scaled_num_bits
-    from vectordbindexing_spark.operators.shard import _dist_matrix
+    from vectordbindexing_spark.functions.vector import dist_matrix
     from vectordbindexing_spark.operators.topk import batch_topk_by_dist_id
 
     GROUP_CAP, TABLES, MATCH_ROUNDS = 4096, 4, 3
@@ -997,7 +997,7 @@ def _bucketed_recall_pins(
                 order = np.argsort(gids, kind="stable")
                 gids, GV = gids[order], B[mi][order]
                 m = len(gids)
-                D = _dist_matrix(GV, GV, "cosine")
+                D = dist_matrix(GV, GV, "cosine")
                 np.fill_diagonal(D, np.inf)
                 nbr, dv = batch_topk_by_dist_id(D, gids, min(M0, m - 1))
                 for r in range(m):

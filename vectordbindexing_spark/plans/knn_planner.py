@@ -271,7 +271,7 @@ def knn(
 COMPACT_INDEX_LIMIT = 2_000_000
 # Target rows per shard for the sharded build. Each shard's build is an
 # in-executor kernel whose candidate generation is O((n/shards)²·d)
-# BLAS with O(block·n) memory (shard._BUILD_BLOCK_TARGET_BYTES row
+# BLAS with O(block·n) memory (exact_knn._BUILD_BLOCK_TARGET_BYTES row
 # blocks): at 100k rows × d=128 that is ~10¹² madds ≈ minutes per
 # executor core and ~256 MB — the honest single-task budget. The r05
 # value (500k) satisfied neither: its unblocked matrix alone was 2 TB.

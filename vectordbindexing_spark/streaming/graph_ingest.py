@@ -776,24 +776,6 @@ def _load_ivf_centroids(spark: SparkSession, index_dir: str):
     return np.array([r["cvec"] for r in rows], dtype=np.float64)
 
 
-def _level_py(i: int, M: int) -> int:
-    """Python twin of operators.graph.assign_levels for one id — the
-    upsert's query rows are driver-local, so the layer-1 subset filter
-    needs no Spark job."""
-    import math
-
-    from vectordbindexing_spark.functions.hashing import det_hash64_py
-    from vectordbindexing_spark.operators.graph import MAX_LEVEL
-
-    bits = int(math.log2(M))
-    h = det_hash64_py(str(int(i)))
-    return sum(
-        1
-        for level in range(1, MAX_LEVEL + 1)
-        if 32 - bits * level > 0 and h < 2 ** (32 - bits * level)
-    )
-
-
 def _ivf_artifact_knn(
     spark: SparkSession,
     index_dir: str,
@@ -822,7 +804,10 @@ def _ivf_artifact_knn(
     deterministic level≥ subset (the layer-1 pass)."""
     import numpy as np
 
-    from vectordbindexing_spark.operators.graph import assign_levels
+    from vectordbindexing_spark.operators.graph import (
+        assign_level_py,
+        assign_levels,
+    )
     from vectordbindexing_spark.operators.ivf import (
         _argmin_d2_blocked,
         ivf_cells_knn,
@@ -833,7 +818,8 @@ def _ivf_artifact_knn(
     npb = nprobe if nprobe is not None else max(1, len(C) // 8)
     if level_min is not None:
         q_rows = [
-            (i, v) for i, v in q_rows if _level_py(i, M_level) >= level_min
+            (i, v) for i, v in q_rows
+            if assign_level_py(i, M_level) >= level_min
         ]
     if not q_rows:
         return spark.createDataFrame(
@@ -860,7 +846,7 @@ def _ivf_artifact_knn(
         [
             (i, v)
             for i, v in batch_rows
-            if _level_py(i, M_level) >= level_min
+            if assign_level_py(i, M_level) >= level_min
         ]
         if level_min is not None
         else batch_rows
