@@ -1346,8 +1346,8 @@ def _nb_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustered-layout envelope: Morton z-values over
     (o_custkey, epoch-day(o_orderdate)) in exact integer arithmetic,
-    rows bucketed by the curve's top 6 bits (the files a zorder_write
-    would cut), per-bucket count + per-dimension min/max span — the
+    rows bucketed by the curve's top 6 bits (the files a z-ordered
+    write would cut), per-bucket count + per-dimension min/max span — the
     data-skipping envelope parquet pruning would see. The whole curve
     replays in the DuckDB oracle with no pins."""
     from vectordbindexing_spark.io.zorder import layout_span_stats
@@ -2449,69 +2449,16 @@ def queries() -> dict[str, Query]:
     # the redundant driver row goes). Never register more than ~10 new
     # queries in one round without retiring an equal number.
     #
-    # Round-13 rotation (registry unchanged at 120):
-    # (a) positions 1-20 — the 20 entries whose last driver row is r10
-    #     (r12's deferred block (c)). Their rows turn 3 rounds old this
+    # Round-14 rotation (registry unchanged at 120):
+    # (a) positions 1-20 — the 20 entries whose last driver row is r11
+    #     (r13's deferred block). Their rows turn 3 rounds old this
     #     round — they MUST refresh now.
-    # (b) positions 21-50 — 30 of the 50 entries whose last driver row
-    #     is r11 (oldest-first by registry order).
-    # (c) positions 51-70 — the 20 remaining r11-rowed entries; they
-    #     lead the r14 window.
-    # (d) positions 71-120 — the 50 entries with fresh r12 rows.
+    # (b) positions 21-70 — the 50 entries whose last driver row is r12
+    #     (oldest-first by registry order); 21-50 refresh this round,
+    #     51-70 lead the r15 window.
+    # (c) positions 71-120 — the 50 entries with fresh r13 rows.
     return {
-        # (a) last driver row r10 — window-leading, refreshed this round
-        "graph_ppr": _graph_ppr,
-        "graph_random_walks": _graph_random_walks,
-        "maxsim_knn": _maxsim_knn,
-        "mmr_rerank_knn": _mmr_rerank_knn,
-        "mine_triplets": _mine_triplets,
-        "text_tfidf_terms": _text_tfidf_terms,
-        "events_cohort_retention": _events_cohort_retention,
-        "events_transition_counts": _events_transition_counts,
-        "tpch_q4_late_orders": _tpch_q4_late_orders,
-        "tpch_q13_order_distribution": _tpch_q13_order_distribution,
-        "tpch_q22_idle_balances": _tpch_q22_idle_balances,
-        "tpch_rollup_revenue": _tpch_rollup_revenue,
-        "simhash_text_neardup": _simhash_text_neardup,
-        "dedup_groups": _dedup_groups,
-        "simhash_buckets": _simhash_buckets,
-        "events_value_histogram": _events_value_histogram,
-        "planner_filtered_route": _planner_filtered_route,
-        "media_jpeg_decode_stats": _media_jpeg_decode_stats,
-        "media_wav_features": _media_wav_features,
-        "media_video_stats": _media_video_stats,
-        # (b) last driver row r11 — refreshed this round (registry order)
-        "semantic_dedup": _semantic_dedup,
-        "ann_ladder_recall": _ann_ladder_recall,
-        "text_lang_id_lexicon": _text_lang_id_lexicon,
-        "sq8_knn": _sq8_knn,
-        "bq_hamming_knn": _bq_knn,
-        "pq_adc_knn": _pq_adc_knn,
-        "opq_knn": _opq_knn,
-        "ivfpq_knn": _ivfpq_knn,
-        "ivfpq_index_knn": _ivfpq_index_knn,
-        "ivfpq_rerank_knn": _ivfpq_rerank_knn,
-        "planner_knn_route": _planner_knn_route,
-        "planner_sq8_route": _planner_sq8_route,
-        "planner_graph_route": _planner_graph_route,
-        "knn_exact_cosine": _knn_query("cosine"),
-        "knn_exact_l2": _knn_query("l2"),
-        "knn_exact_ip": _knn_query("ip"),
-        "lsh_knn_cosine": _lsh_knn,
-        "ivf_knn_cosine": _ivf_knn,
-        "text_pii_redact": _text_pii_redact,
-        "text_repetition_stats": _text_repetition_stats,
-        "text_chunk_documents": _text_chunk_documents,
-        "text_lm_logprob": _char_trigram_logprob,
-        "kmeans_clusters": _kmeans_clusters,
-        "cluster_silhouette_simplified": _cluster_silhouette_simplified,
-        "embedding_pool_by_doc": _embedding_pool_by_doc,
-        "text_url_domains": _text_url_domains,
-        "text_line_dedup": _text_line_dedup,
-        "mix_quota_sample": _mix_quota_sample,
-        "doc_fingerprint": _doc_fingerprint,
-        "tpch_q10_returned_items": _tpch_q10,
-        # (c) last driver row r11, deferred — MUST lead the r14 window
+        # (a) last driver row r11 — window-leading, refreshed this round
         "tpch_q18_large_volume": _tpch_q18,
         "events_attribution": _events_attribution,
         "text_bpe_token_stats": _bpe_token_stats,
@@ -2532,7 +2479,7 @@ def queries() -> dict[str, Query]:
         "ann_sharded_recall": _ann_sharded_recall,
         "roargraph_recall": _roargraph_recall,
         "khop_reachability": _khop_reachability,
-        # (d) fresh r12 driver rows — tail
+        # (b) last driver row r12 — positions 21-50 refreshed this round
         "augment_star_edges": _augment_star_edges,
         "traced_steps_summary": _traced_steps_summary,
         "hnsw_level_assignment": _hnsw_levels,
@@ -2583,6 +2530,57 @@ def queries() -> dict[str, Query]:
         "graph_triangle_stats": _graph_triangle_stats,
         "graph_kcore": _graph_kcore,
         "graph_label_prop": _graph_label_prop,
+        # (c) fresh r13 driver rows — tail
+        "graph_ppr": _graph_ppr,
+        "graph_random_walks": _graph_random_walks,
+        "maxsim_knn": _maxsim_knn,
+        "mmr_rerank_knn": _mmr_rerank_knn,
+        "mine_triplets": _mine_triplets,
+        "text_tfidf_terms": _text_tfidf_terms,
+        "events_cohort_retention": _events_cohort_retention,
+        "events_transition_counts": _events_transition_counts,
+        "tpch_q4_late_orders": _tpch_q4_late_orders,
+        "tpch_q13_order_distribution": _tpch_q13_order_distribution,
+        "tpch_q22_idle_balances": _tpch_q22_idle_balances,
+        "tpch_rollup_revenue": _tpch_rollup_revenue,
+        "simhash_text_neardup": _simhash_text_neardup,
+        "dedup_groups": _dedup_groups,
+        "simhash_buckets": _simhash_buckets,
+        "events_value_histogram": _events_value_histogram,
+        "planner_filtered_route": _planner_filtered_route,
+        "media_jpeg_decode_stats": _media_jpeg_decode_stats,
+        "media_wav_features": _media_wav_features,
+        "media_video_stats": _media_video_stats,
+        "semantic_dedup": _semantic_dedup,
+        "ann_ladder_recall": _ann_ladder_recall,
+        "text_lang_id_lexicon": _text_lang_id_lexicon,
+        "sq8_knn": _sq8_knn,
+        "bq_hamming_knn": _bq_knn,
+        "pq_adc_knn": _pq_adc_knn,
+        "opq_knn": _opq_knn,
+        "ivfpq_knn": _ivfpq_knn,
+        "ivfpq_index_knn": _ivfpq_index_knn,
+        "ivfpq_rerank_knn": _ivfpq_rerank_knn,
+        "planner_knn_route": _planner_knn_route,
+        "planner_sq8_route": _planner_sq8_route,
+        "planner_graph_route": _planner_graph_route,
+        "knn_exact_cosine": _knn_query("cosine"),
+        "knn_exact_l2": _knn_query("l2"),
+        "knn_exact_ip": _knn_query("ip"),
+        "lsh_knn_cosine": _lsh_knn,
+        "ivf_knn_cosine": _ivf_knn,
+        "text_pii_redact": _text_pii_redact,
+        "text_repetition_stats": _text_repetition_stats,
+        "text_chunk_documents": _text_chunk_documents,
+        "text_lm_logprob": _char_trigram_logprob,
+        "kmeans_clusters": _kmeans_clusters,
+        "cluster_silhouette_simplified": _cluster_silhouette_simplified,
+        "embedding_pool_by_doc": _embedding_pool_by_doc,
+        "text_url_domains": _text_url_domains,
+        "text_line_dedup": _text_line_dedup,
+        "mix_quota_sample": _mix_quota_sample,
+        "doc_fingerprint": _doc_fingerprint,
+        "tpch_q10_returned_items": _tpch_q10,
     }
 
 

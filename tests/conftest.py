@@ -71,7 +71,6 @@ _SLOW_TESTS = {
     "test_kcore_random_graphs",
     # misc ≥8s
     "test_pagerank_auto_fold_switch",
-    "test_stateful_sessionize_matches_batch",
     "test_compact_deltas",
 }
 

@@ -1,34 +1,11 @@
-"""Bucketed co-located joins, caption CSV ingestion, JSON results sink,
-plus hypothesis property tests over the hashing/vector kernels."""
+"""Caption CSV ingestion, JSON results sink, plus hypothesis property
+tests over the hashing/vector kernels."""
 
 import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
-
-
-def test_bucketed_join_skips_shuffle(spark, tables, tmp_path):
-    from vectordbindexing_spark.io.bucketing import (
-        bucketed_join_is_shuffle_free,
-        save_bucketed,
-    )
-
-    spark.sql("DROP TABLE IF EXISTS b_emb")
-    spark.sql("DROP TABLE IF EXISTS b_assign")
-    emb = tables["embeddings"].select("vec_id", "label")
-    assign = tables["embeddings"].select(
-        "vec_id", (F.col("vec_id") % 7).alias("cid")
-    )
-    save_bucketed(emb, "b_emb", "vec_id", 8,
-                  path=str(tmp_path / "b_emb"))
-    save_bucketed(assign, "b_assign", "vec_id", 8,
-                  path=str(tmp_path / "b_assign"))
-    assert bucketed_join_is_shuffle_free(spark, "b_emb", "b_assign", "vec_id")
-    # sanity: same join on the raw (unbucketed) frames needs an Exchange
-    raw = emb.join(assign, "vec_id")
-    raw_plan = raw._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in raw_plan
 
 
 def test_caption_csv_ingestion(spark, tmp_path):

@@ -63,20 +63,3 @@ def test_weighted_l2_favours_low_variance_dims(spark):
     rows = {r["id"]: r["d"] for r in
             df.select("id", weighted_l2_dist("q", "b", w).alias("d")).collect()}
     assert rows[2] < rows[1]
-
-
-def test_dim_variances_match_numpy(spark, tables):
-    import numpy as np
-
-    from vectordbindexing_spark.operators.preprocess import dim_variances
-
-    emb = tables["embeddings"].limit(100)
-    X = np.stack([
-        np.asarray(r["embedding"], dtype=np.float64)
-        for r in emb.select("embedding").collect()
-    ])
-    got = {r["dim"]: r["variance"] for r in
-           dim_variances(emb, vec_col="embedding").collect()}
-    want = X.var(axis=0)
-    for d in range(X.shape[1]):
-        assert abs(got[d] - want[d]) < 1e-9

@@ -185,41 +185,6 @@ def test_multi_path_search(spark, emb):
     assert all(r["path_pops"] >= r["hops"] for r in rows)
 
 
-def test_filtered_graph_search_respects_allowed(spark, tables):
-    from pyspark.sql import functions as F
-
-    from vectordbindexing_spark.operators.graph import build_two_layer_index
-    from vectordbindexing_spark.operators.search import (
-        compact_index,
-        filtered_graph_search,
-    )
-
-    emb = tables["embeddings"]
-    b = emb.filter(F.col("vec_id") % 10 != 0)
-    q = emb.filter(F.col("vec_id") % 10 == 0).limit(20).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("vec")
-    )
-    edges = build_two_layer_index(b, M0=8, M1=4, metric="cosine",
-                                  id_col="vec_id", vec_col="embedding")
-    idx = compact_index(edges, b, id_col="vec_id", vec_col="embedding",
-                        metric="cosine")
-    allowed = b.filter(F.col("vec_id") % 2 == 0).select(
-        F.col("vec_id").alias("id")
-    )
-    out = filtered_graph_search(q, idx, allowed, k=5, overfetch=4)
-    rows = out.collect()
-    assert rows, "filtered search returned nothing"
-    assert all(r["neighbor_id"] % 2 == 0 for r in rows)
-    per_q = {}
-    for r in rows:
-        per_q.setdefault(r["qid"], []).append(r)
-    # ~half the corpus is allowed; 4x overfetch should fill k everywhere
-    assert all(len(v) == 5 for v in per_q.values())
-    for v in per_q.values():
-        d = [r["dist"] for r in sorted(v, key=lambda r: r["nbr_rank"])]
-        assert d == sorted(d)
-
-
 def test_graph_paths_exclude_null_vectors(spark):
     import numpy as np
     from pyspark.sql import functions as F

@@ -146,55 +146,6 @@ def test_per_modality_whitening_matches_numpy(spark, tables):
         assert np.allclose(np.asarray(r["wvec"]), expect, atol=1e-8)
 
 
-def test_ivf_index_persist_and_pruned_search(spark, tables, tmp_path):
-    """Persisted IVF artifact: search results identical to the in-session
-    operator with the same centroids, and the serving scan partition-prunes
-    to the probed cells."""
-    import contextlib
-    import io
-
-    from vectordbindexing_spark.operators.ivf import (
-        ivf_knn,
-        ivf_search_index,
-        kmeans_fit,
-        load_ivf_centroids,
-        save_ivf_index,
-    )
-
-    emb = tables["embeddings"]
-    q = emb.filter(F.col("vec_id") % 10 == 0)
-    b = emb.filter(F.col("vec_id") % 10 != 0).select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-    )
-    cents = kmeans_fit(b, k=8, max_iter=3, id_col="id", vec_col="vec")
-    path = str(tmp_path / "ivf")
-    save_ivf_index(b, cents, path, b_id="id", b_vec="vec")
-
-    import numpy as np
-
-    assert np.allclose(load_ivf_centroids(spark, path), cents)
-
-    served = ivf_search_index(q, path, k=5, nprobe=3,
-                              q_id="vec_id", q_vec="embedding")
-    live = ivf_knn(q, b, k=5, nlist=8, nprobe=3, centroids=cents,
-                   q_id="vec_id", q_vec="embedding", b_id="id", b_vec="vec")
-    # ids + ranks exact; dist to kernel-vs-UDF float drift (the live
-    # path scores through the broadcast kernel since r11, the persisted
-    # serve path through the assignment-table join — same math, last-ulp
-    # BLAS association differences)
-    sa = sorted(tuple(r) for r in served.collect())
-    sb = sorted(tuple(r) for r in live.collect())
-    assert len(sa) == len(sb)
-    for ra, rb in zip(sa, sb):
-        assert ra[:3] == rb[:3] and abs(ra[3] - rb[3]) < 1e-9
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        served.explain("formatted")
-    assert "PartitionFilters" in buf.getvalue()
-    assert "cid" in buf.getvalue()
-
-
 def test_assignment_blocking_is_invisible(monkeypatch):
     """Blocked (rows × nlist) assignment must equal the dense computation
     even with a degenerate 1-row block budget — same expansion-formula

@@ -381,31 +381,6 @@ def test_filtered_search_equals_prefiltered_build(spark, tables, tmp_path):
     assert sorted(tuple(r) for r in got2.collect()) == rows_want
 
 
-def test_sweep_nprobe_monotone_recall(spark, tables):
-    from pyspark.sql import functions as F
-
-    from vectordbindexing_spark.operators.evaluate import sweep_nprobe
-    from vectordbindexing_spark.operators.exact_knn import exact_knn
-
-    emb = tables["embeddings"].select(
-        F.col("vec_id").cast("long").alias("id"),
-        F.col("embedding").alias("vec"),
-    )
-    q = emb.filter(F.col("id") < 30).select(F.col("id").alias("qid"), "vec")
-    exact = exact_knn(q, emb, k=5, metric="l2", impl="blocked",
-                      q_id="qid", q_vec="vec", b_id="id", b_vec="vec")
-    tbl = sweep_nprobe(q, emb, exact, k=5, nprobe_grid=(1, 4, 8), nlist=8)
-    assert list(tbl["nprobe"]) == [1, 4, 8]
-    rec = list(tbl["recall_at_k"])
-    assert rec == sorted(rec)          # more probes never lose recall
-    assert (tbl["wall_sec"] > 0).all()
-    # with exact rerank the full-probe end of the frontier is near-exact
-    tbl2 = sweep_nprobe(q, emb, exact, k=5, nprobe_grid=(8,), nlist=8,
-                        rerank=150)
-    assert tbl2["recall_at_k"].iloc[-1] >= 0.9
-    assert tbl2["recall_at_k"].iloc[-1] >= rec[-1]
-
-
 def test_artifact_path_helpers(spark):
     """The metadata-IO routing helpers decide whether pyarrow (driver-
     local) or Spark (distributed) reads/writes the artifact's metadata —

@@ -80,59 +80,6 @@ def test_window_topk_single_logical_shuffle(plans):
     assert pt.count("Exchange") <= 2, pt.count("Exchange")
 
 
-def test_salted_join_equals_plain_join(spark):
-    """salted_join splits a hot key across num_salts tasks without
-    changing the join result."""
-    from pyspark.sql import functions as F
-
-    from vectordbindexing_spark.plans.partitioning import salted_join
-
-    # skewed: 10k rows on one key + a tail
-    skewed = spark.range(10_000).select(
-        F.when(F.col("id") < 9_000, F.lit(7)).otherwise(F.col("id") % 50)
-        .cast("long").alias("k"),
-        F.col("id").alias("payload"),
-    )
-    dim = spark.range(50).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("dim_val")
-    )
-    plain = skewed.join(dim, "k").groupBy("k").agg(
-        F.count("*").alias("n"), F.sum("payload").alias("s"),
-        F.first("dim_val").alias("d"),
-    )
-    salted = salted_join(skewed, dim, "k", num_salts=8).groupBy("k").agg(
-        F.count("*").alias("n"), F.sum("payload").alias("s"),
-        F.first("dim_val").alias("d"),
-    )
-    assert sorted(tuple(r) for r in plain.collect()) == sorted(
-        tuple(r) for r in salted.collect()
-    )
-
-
-def test_salted_join_rejects_row_duplicating_hows(spark):
-    """right/full outer would emit each unmatched dim row num_salts times;
-    the salted join must refuse rather than silently diverge from the
-    unsalted result. left_anti IS allowed (output comes from the skewed
-    side) and must match the plain anti join."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from vectordbindexing_spark.plans.partitioning import salted_join
-
-    skewed = spark.range(200).select(
-        (F.col("id") % 10).alias("k"), F.col("id").alias("payload")
-    )
-    dim = spark.range(5).select(F.col("id").alias("k"))
-    for how in ("right", "full", "right_outer", "full_outer"):
-        with pytest.raises(ValueError, match="duplicate unmatched rows"):
-            salted_join(skewed, dim, "k", how=how)
-    plain = skewed.join(dim, "k", "left_anti")
-    salted = salted_join(skewed, dim, "k", num_salts=4, how="left_anti")
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, salted.collect())
-    )
-
-
 def test_scan_local_text_ops_have_no_exchange(spark, sf_dir):
     """chunking, PII redaction and URL extraction are pure projections —
     a shuffle appearing in their plans means an accidental wide

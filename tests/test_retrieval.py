@@ -12,11 +12,7 @@ from pyspark.sql import functions as F
 
 from vectordbindexing_spark import oracles
 from vectordbindexing_spark.io.tables import load_table
-from vectordbindexing_spark.operators.retrieval import (
-    bm25_topk,
-    hybrid_search,
-    rrf_fuse,
-)
+from vectordbindexing_spark.operators.retrieval import bm25_topk, rrf_fuse
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
@@ -178,39 +174,6 @@ def test_bm25_dataframe_queries_match_literal_path(spark):
     assert lit_rows == df_rows and len(lit_rows) > 0
 
 
-def test_hybrid_search_fuses_both_sources(spark):
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    # dense side: doc 2 (keyword-invisible for 'quick dog') leads
-    vec = spark.createDataFrame(
-        [(1, 1, 2, 0.1), (1, 2, 0, 0.2), (1, 3, 4, 0.3)],
-        "qid long, nbr_rank long, neighbor_id long, dist double",
-    )
-    out = {
-        r["doc_id"]: (r["rank"], r["n_sources"])
-        for r in hybrid_search(
-            docs, [(1, "quick dog")], vec, k=5, fetch_k=3
-        ).collect()
-    }
-    # doc 0 matches both terms (kw) AND is vec rank 2 -> n_sources=2
-    assert out[0][1] == 2
-    # doc 2 appears through the dense side alone
-    assert 2 in out and out[2][1] == 1
-    # fused top-1 must be a doc present in both sources
-    top = [d for d, (rk, _) in out.items() if rk == 1][0]
-    assert out[top][1] == 2
-
-
-def test_hybrid_search_respects_fetch_k(spark):
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    vec = spark.createDataFrame(
-        [(1, r, 100 + r, r / 10.0) for r in range(1, 9)],
-        "qid long, nbr_rank long, neighbor_id long, dist double",
-    )
-    rows = hybrid_search(docs, [(1, "lorem")], vec, k=20, fetch_k=2).collect()
-    # vec candidates beyond rank 2 are cut before fusion
-    assert {r["doc_id"] for r in rows} == {2, 101, 102}
-
-
 def test_bm25_plain_sum_matches_fold_after_rounding(spark):
     queries = [(1, "quick fox dog the brown"), (2, "lorem dog")]
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
@@ -227,10 +190,7 @@ def test_bm25_auto_fold_switch(spark):
     stay hash-identical to exact_fold=True) and switches to plain sum
     for vocabulary-scale batch queries (the 29M-struct degenerate
     case)."""
-    from vectordbindexing_spark.operators.retrieval import (
-        FOLD_QT_LIMIT,
-        lexical_stats,
-    )
+    from vectordbindexing_spark.operators.retrieval import FOLD_QT_LIMIT
 
     docs = spark.range(200).select(
         F.col("id").alias("doc_id"),
@@ -257,15 +217,3 @@ def test_bm25_auto_fold_switch(spark):
     )
     out = bm25_topk(docs, big_q, k=1)
     assert out.count() == FOLD_QT_LIMIT // 2 + 100
-
-    # stats-based estimate: few pairs + small df sum -> folds and
-    # matches the served fold exactly
-    st = lexical_stats(docs)
-    auto_s = sorted(
-        map(tuple, bm25_topk(docs, small_q, k=5, stats=st).collect())
-    )
-    fold_s = sorted(
-        map(tuple, bm25_topk(docs, small_q, k=5, stats=st,
-                             exact_fold=True).collect())
-    )
-    assert auto_s == fold_s

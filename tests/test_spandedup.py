@@ -13,10 +13,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from vectordbindexing_spark.operators.spandedup import (
-    duplicated_spans,
-    remove_duplicated_spans,
-)
+from vectordbindexing_spark.operators.spandedup import duplicated_spans
 
 ROWS = [
     (1, "a b c d e f"),
@@ -55,20 +52,6 @@ def test_duplicated_spans_stats(spark, docs):
 def test_stats_schema_is_all_bigint(docs):
     out = duplicated_spans(docs, window=3)
     assert [f.dataType.simpleString() for f in out.schema.fields] == ["bigint"] * 6
-
-
-def test_remove_duplicated_spans(spark, docs):
-    got = {
-        r["doc_id"]: r["text"]
-        for r in remove_duplicated_spans(docs, window=3).collect()
-    }
-    assert got == {
-        1: "a b c d e f",  # canonical occurrences survive verbatim
-        2: "x x y",
-        3: "z",
-        4: "p q",
-        5: "",
-    }
 
 
 def test_duckdb_parity_on_fixture(spark, docs):

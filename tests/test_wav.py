@@ -75,7 +75,7 @@ def test_media_kind_sniffs_wav(spark):
     df = spark.createDataFrame(rows, schema="media_id long, content binary")
     kinds = {r["media_id"]: r["kind"] for r in media_kind(df).collect()}
     assert kinds[1] == "wav"
-    assert kinds[2] == "not_jpeg"  # routed to deployment, not decoded
+    assert kinds[2] == "not_jpeg"  # triaged out, not decoded
     assert kinds[3] == "ppm"
 
 

@@ -8,7 +8,6 @@ from vectordbindexing_spark.io.zorder import (
     interleave_bits,
     layout_span_stats,
     zorder_values,
-    zorder_write,
 )
 
 
@@ -36,41 +35,6 @@ def test_zorder_values_constant_column(spark):
         return sum(((v >> i) & 1) << (2 * i) for i in range(4))
 
     assert got == {0: spread(0), 1: spread(5), 2: spread(10), 3: spread(15)}
-
-
-def test_zorder_write_narrows_file_envelopes(spark, tmp_path):
-    """After zorder_write on (x, y), every file's min/max envelope is
-    narrow on BOTH dimensions — the property single-column sorting
-    cannot give. Verified from real parquet footers."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    n, files = 4096, 16
-    # x walks, y is a decorrelated permutation-ish mix: both uniform
-    df = spark.range(n).select(
-        F.col("id").alias("x"),
-        F.pmod(F.col("id") * 2654435761, F.lit(n)).alias("y"),
-    )
-    path = str(tmp_path / "zorq")
-    zorder_write(df, path, ["x", "y"], bits=12, n_files=files)
-    spans_x, spans_y, rows = [], [], 0
-    for f in glob.glob(path + "/part-*.parquet"):
-        md = pq.read_metadata(f)
-        if md.num_rows == 0:
-            continue
-        mnx = min(md.row_group(i).column(0).statistics.min for i in range(md.num_row_groups))
-        mxx = max(md.row_group(i).column(0).statistics.max for i in range(md.num_row_groups))
-        mny = min(md.row_group(i).column(1).statistics.min for i in range(md.num_row_groups))
-        mxy = max(md.row_group(i).column(1).statistics.max for i in range(md.num_row_groups))
-        spans_x.append(mxx - mnx)
-        spans_y.append(mxy - mny)
-        rows += md.num_rows
-    assert rows == n
-    # global span is n-1 = 4095; z-ordered files must average far below
-    # it on BOTH dims (16 files over a 2-d curve -> ~1/4 per dim)
-    assert sum(spans_x) / len(spans_x) < 4095 / 2.5
-    assert sum(spans_y) / len(spans_y) < 4095 / 2.5
 
 
 def test_layout_span_stats_partitions_rows(spark):

@@ -49,48 +49,8 @@ def det_hash60_py(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
-def gram_hashes(grams: Column) -> Column:
-    """array<string> shingles → array<long> md5-based hashes (compute once
-    per row; minhash_signature's per-i lambda would otherwise re-evaluate
-    the md5 array num_hashes times)."""
-    return F.transform(
-        grams, lambda g: F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("long")
-    )
-
-
-def minhash_signature(hashed: Column, num_hashes: int) -> Column:
-    """MinHash signature over an array<long> of pre-hashed shingles
-    (see :func:`gram_hashes`).
-
-    h_i(s) = (a_i * det_hash64(s) + b_i) mod (2^31-1), with
-    a_i = (i+1)*_A_MUL + _A_ADD, b_i = (i+1)*_B_MUL + _B_ADD.
-    Pure Column expression — JVM-side, no UDF. Empty shingle set → all
-    MERSENNE31 sentinels.
-    """
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.coalesce(
-            F.array_min(
-                F.transform(
-                    hashed,
-                    lambda h: F.pmod(
-                        (
-                            (i + 1).cast("long") * F.lit(_A_MUL) + F.lit(_A_ADD)
-                        ) % F.lit(MERSENNE31) * (h % F.lit(MERSENNE31))
-                        + (i + 1).cast("long") * F.lit(_B_MUL)
-                        + F.lit(_B_ADD),
-                        F.lit(MERSENNE31),
-                    ),
-                )
-            ),
-            F.lit(MERSENNE31).cast("long"),
-        ),
-    )
-    return sig
-
-
 def minhash_signature_sql(grams_sql: str, num_hashes: int) -> str:
-    """DuckDB SQL mirroring :func:`minhash_signature` exactly."""
+    """DuckDB SQL mirroring :func:`minhash_signature_np` exactly."""
     return f"""
     list_transform(range(0, {num_hashes}), i ->
       coalesce(
@@ -102,59 +62,6 @@ def minhash_signature_sql(grams_sql: str, num_hashes: int) -> str:
     """
 
 
-def lcg_plane_value(bit: Column, dim: Column) -> Column:
-    """Pseudo-random hyperplane entry in [-0.5, 0.5) from (bit, dim) —
-    a tiny LCG, reproducible in SQL both engines (SimHash hyperplanes;
-    replaces the reference's np.random.randn planes, simple_sim_hash.py:7-9).
-    """
-    b = bit.cast("long")
-    d = dim.cast("long")
-    m31 = F.lit(MERSENNE31).cast("long")
-    seed = (
-        b * F.lit(73_856_093).cast("long")
-        + d * F.lit(19_349_663).cast("long")
-        + F.lit(83_492_791).cast("long")
-    ) % m31
-    mixed = (seed * F.lit(_A_MUL).cast("long") + F.lit(_A_ADD).cast("long")) % m31
-    return mixed.cast("double") / F.lit(float(MERSENNE31)) - F.lit(0.5)
-
-
-LCG_PLANE_SQL = (
-    "((((bit*73856093 + dim*19349663 + 83492791) % 2147483647)"
-    " * 1103515245 + 12345) % 2147483647)::DOUBLE / 2147483647.0 - 0.5"
-)
-
-
-def simhash_bits(vec: Column, num_bits: int = 16, table: int = 0) -> Column:
-    """SimHash of a float vector: bit j = (v · plane_j) >= 0, bit-packed to
-    BIGINT (reference semantics simple_sim_hash.py:12-18, hyperplanes
-    replaced by the deterministic LCG family). ``table`` offsets the plane
-    family for multi-table LSH (independent hash tables)."""
-    proj = F.transform(
-        F.sequence(F.lit(0), F.lit(num_bits - 1)),
-        lambda j: F.aggregate(
-            F.zip_with(
-                vec,
-                F.sequence(F.lit(0), F.size(vec) - 1),
-                lambda x, i: x.cast("double")
-                * lcg_plane_value(j + F.lit(table * num_bits), i),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    weights = F.array(*[F.lit(1 << j).cast("long") for j in range(num_bits)])
-    return F.aggregate(
-        F.zip_with(
-            proj,
-            weights,
-            lambda p, w: F.when(p >= 0, w).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def det_hash64_py(s: str) -> int:
     """Python twin of :func:`det_hash64` (first 8 md5 hex chars of the
     UTF-8 bytes → int)."""
@@ -164,9 +71,13 @@ def det_hash64_py(s: str) -> int:
 
 
 def minhash_signature_np(hashes, num_hashes: int):
-    """numpy twin of :func:`minhash_signature`: (n_grams,) int64 hashes →
-    (num_hashes,) int64 signature. Empty input → all-MERSENNE31 sentinels.
-    Identical int64 arithmetic to the Column/SQL versions."""
+    """MinHash signature of one set of pre-hashed shingles: (n_grams,)
+    int64 :func:`det_hash64_py` values → (num_hashes,) int64 signature.
+
+    h_i(s) = (a_i * det_hash64(s) + b_i) mod (2^31-1), with
+    a_i = (i+1)*_A_MUL + _A_ADD, b_i = (i+1)*_B_MUL + _B_ADD. Empty input
+    → all-MERSENNE31 sentinels. Identical int64 arithmetic to
+    :func:`minhash_signature_sql`."""
     import numpy as np
 
     if len(hashes) == 0:
@@ -179,8 +90,10 @@ def minhash_signature_np(hashes, num_hashes: int):
 
 
 def lcg_planes_np(num_bits: int, dim: int, table: int = 0):
-    """(num_bits, dim) float64 hyperplane matrix — numpy twin of
-    :func:`lcg_plane_value` (identical int64 arithmetic, bit-for-bit)."""
+    """(num_bits, dim) float64 hyperplane matrix, entries in [-0.5, 0.5)
+    from (bit, dim) — a tiny LCG, reproducible bit-for-bit in SQL
+    (:func:`simhash_bits_sql`). SimHash hyperplanes; replaces the
+    reference's np.random.randn planes, simple_sim_hash.py:7-9."""
     import numpy as np
 
     j = np.arange(num_bits, dtype=np.int64)[:, None] + table * num_bits
@@ -191,10 +104,13 @@ def lcg_planes_np(num_bits: int, dim: int, table: int = 0):
 
 
 def simhash_bits_np(V, num_bits: int = 16, table: int = 0):
-    """Vectorized SimHash over a (n, d) matrix → (n,) int64 buckets.
-    Matches :func:`simhash_bits` / :func:`simhash_bits_sql` (the f64 matmul
-    vs sequential-sum difference only matters when a projection magnitude
-    is ≲1e-15 — negligible for real data)."""
+    """Vectorized SimHash over a (n, d) matrix → (n,) int64 buckets: bit
+    j = (v · plane_j) >= 0, bit-packed (reference semantics
+    simple_sim_hash.py:12-18, hyperplanes from :func:`lcg_planes_np`).
+    ``table`` offsets the plane family for multi-table LSH. Matches
+    :func:`simhash_bits_sql` (the f64 matmul vs sequential-sum difference
+    only matters when a projection magnitude is ≲1e-15 — negligible for
+    real data)."""
     import numpy as np
 
     P = lcg_planes_np(num_bits, V.shape[1], table)
@@ -204,7 +120,7 @@ def simhash_bits_np(V, num_bits: int = 16, table: int = 0):
 
 
 def simhash_bits_sql(vec_sql: str, num_bits: int = 16, table: int = 0) -> str:
-    """DuckDB SQL mirroring :func:`simhash_bits` (1-based list indexing)."""
+    """DuckDB SQL mirroring :func:`simhash_bits_np` (1-based list indexing)."""
     plane = (
         f"(((((bit + {table * num_bits})*73856093 + (i-1)*19349663 + 83492791)"
         " % 2147483647)"

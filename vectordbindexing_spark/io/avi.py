@@ -6,8 +6,8 @@ closes the triad without leaving public-spec territory: AVI is a RIFF
 container (same chunk grammar as WAV, plus nested LISTs) and Motion
 JPEG frames are plain baseline/progressive JPEG bytes the vendored
 io/jpeg.py codec already decodes. Inter-coded codecs (H.264/VP9/AV1)
-register a deployment decoder in operators.multimodal's registry, the
-same contract as arithmetic JPEG and compressed audio.
+have no vendored decoder; ``multimodal.media_kind`` triages them out,
+the same contract as arithmetic JPEG and compressed audio.
 
 Reader: walk RIFF chunks, recurse into LISTs, read fps/dims from
 ``avih``, collect ``00dc``/``00db`` frame payloads from the ``movi``

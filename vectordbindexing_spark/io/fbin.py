@@ -6,8 +6,8 @@ little-endian float32/int32; chunked reads via start_idx/chunk_size,
 Parquet is this engine's canonical storage; these converters exist so a
 reference user's .fbin/.ibin corpora can enter/leave the DataFrame world.
 The distributed reader decodes byte ranges per task (binaryFile gives the
-whole blob to one task only for small files; for big corpora use
-``fbin_to_parquet`` once, then scan parquet).
+whole blob to one task only for small files; for big corpora read once
+and write parquet, then scan parquet).
 """
 
 from __future__ import annotations
@@ -119,12 +119,6 @@ def read_ibin(
         lambda it: decode(it)
     )
     return spark.createDataFrame(rdd, schema=f"{id_col} long, {out_col} array<long>")
-
-
-def fbin_to_parquet(spark: SparkSession, fbin_path: str, parquet_path: str) -> None:
-    """One-time corpus conversion; downstream jobs scan parquet (pushdown,
-    pruning, splittable)."""
-    read_fbin(spark, fbin_path).write.mode("overwrite").parquet(parquet_path)
 
 
 def write_fbin(df: DataFrame, filename: str, id_col: str = "id", vec_col: str = "vec") -> None:

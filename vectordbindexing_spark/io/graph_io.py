@@ -20,14 +20,6 @@ from pyspark.sql import functions as F
 from vectordbindexing_spark.plans.partitioning import local_rows_df
 
 
-def save_edges_parquet(edges: DataFrame, path: str) -> None:
-    edges.write.mode("overwrite").partitionBy("layer").parquet(path)
-
-
-def load_edges_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def save_layer0_tsv(
     base: DataFrame,
     edges: DataFrame,

@@ -3,7 +3,7 @@
 The reference ingests JPEG images through PIL + CLIP
 (flickr30k_clip.ipynb cell 6); this container ships neither, so the
 multimodal operators previously treated compressed formats as a
-deployment-registered gap. This module closes it for Huffman-coded DCT
+gap. This module closes it for Huffman-coded DCT
 JPEG with a self-contained decoder (and a minimal encoder used by tests
 to generate real bitstreams): segment parser, canonical Huffman entropy
 decode with byte-unstuffing and restart markers, progressive scan
@@ -14,13 +14,10 @@ chroma upsampling and JFIF YCbCr→RGB.
 Implemented from the public spec (ITU-T T.81 §F/§G, Annex K tables); no
 code derived from libjpeg/PIL. Scope: baseline sequential (SOF0) and
 progressive (SOF2), 8-bit, Y or YCbCr — arithmetic-coded / lossless /
-12-bit processes raise ValueError (``scan_jpeg_kind`` triages those to
-a deployment decoder). The entropy decode is per-coefficient Python
+12-bit processes raise ValueError (``scan_jpeg_kind`` triages those
+out before decode). The entropy decode is per-coefficient Python
 (fine for the thumbnail-scale fixtures the tests use); dequantization
-and the IDCT are batched numpy over all blocks at once. For
-production-scale decode throughput register a libjpeg-backed decoder at
-deployment — the Spark dataflow (operators.multimodal) is
-decoder-agnostic either way.
+and the IDCT are batched numpy over all blocks at once.
 
 Decode architecture: every scan (a sequential file has one; a
 progressive file has many) deposits quantized coefficients into
@@ -1039,8 +1036,8 @@ def encode_jpeg_progressive(
 
 # ------------------------------------------------------------- triage
 
-# SOFn marker → coding process (T.81 Table B.1). Everything except
-# baseline routes to a deployment decoder.
+# SOFn marker → coding process (T.81 Table B.1). Only baseline and
+# progressive decode here; a pipeline filters the rest out.
 _SOF_KINDS = {
     0xC0: "baseline",
     0xC1: "extended_sequential",
@@ -1062,8 +1059,8 @@ def scan_jpeg_kind(buf: bytes) -> str:
     """Cheap marker sniff: which JPEG coding process a file uses, WITHOUT
     decoding (header bytes only — stops at the first SOFn or SOS). Real
     corpora mix baseline with progressive/arithmetic files; this column
-    lets a pipeline route non-baseline files to the deployment decoder
-    (see multimodal._DECODERS) instead of erroring inside decode_jpeg.
+    lets a pipeline set aside files this codec cannot decode instead of
+    erroring inside decode_jpeg.
     Returns 'not_jpeg' (no SOI), a T.81 process name from ``_SOF_KINDS``,
     or 'unknown' (truncated / no SOF before SOS)."""
     if len(buf) < 4 or buf[:2] != b"\xff\xd8":

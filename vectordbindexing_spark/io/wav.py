@@ -5,9 +5,8 @@ The reference's multimodal story is image-only (CLIP); a training-data
 engine also meets audio corpora, and WAV/PCM is simple enough to decode
 for real (like the vendored JPEG codec, unlike the still-stubbed
 compressed audio formats): RIFF chunk walk, fmt parse, 8/16-bit PCM →
-float64 in [-1, 1]. Compressed codecs (MP3/AAC/Opus) register a
-deployment decoder in operators.multimodal's registry exactly like
-non-baseline JPEG processes.
+float64 in [-1, 1]. Compressed codecs (MP3/AAC/Opus) have no vendored
+decoder and raise, exactly like the arithmetic-coded JPEG processes.
 
 Implemented from the public RIFF/WAVE format description; encoder is
 test-fixture-grade (tests and the contract query synthesize tones with
@@ -80,8 +79,7 @@ def decode_wav(buf: bytes) -> tuple[int, np.ndarray]:
     bits = int.from_bytes(fmt[14:16], "little")
     if codec != 1:
         raise ValueError(
-            f"only PCM (codec 1) supported, got codec {codec} — register "
-            "a deployment decoder for compressed audio"
+            f"only PCM (codec 1) supported, got codec {codec}"
         )
     if ch < 1:
         raise ValueError("invalid channel count")

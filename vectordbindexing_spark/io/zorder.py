@@ -14,10 +14,10 @@ integer division, bit interleave as a shift/or expression tree) so the
 DuckDB oracle replays it without a single float: the z-values are
 engine-identical by construction.
 
-Design for scale: the only non-narrow ops are one min/max aggregate
-(map-side combined, 2 longs per column) and the range shuffle of
-``zorder_write`` — which is exactly the shuffle any clustering rewrite
-must pay. The curve math itself is a per-row JVM expression.
+Design for scale: the only non-narrow op is one min/max aggregate
+(map-side combined, 2 longs per column); a clustered rewrite adds one
+range shuffle on the z-value, which any clustering rewrite must pay.
+The curve math itself is a per-row JVM expression.
 """
 
 from __future__ import annotations
@@ -109,7 +109,7 @@ def layout_span_stats(
     bucket_bits: int = 6,
 ) -> DataFrame:
     """Assign rows to 2^bucket_bits z-range buckets (the files a
-    ``zorder_write`` would cut) and report each bucket's row count and
+    z-ordered write would cut) and report each bucket's row count and
     per-column min/max span — the data-skipping envelope a reader's
     predicate pushdown would prune against. All-BIGINT output."""
     n = len(cols)
@@ -130,25 +130,3 @@ def layout_span_stats(
             *[f"span_{i}" for i in range(n)],
         )
     )
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    n_files: int = 64,
-) -> dict[str, tuple[int, int]]:
-    """Rewrite ``df`` as ``n_files`` parquet files range-partitioned and
-    sorted by z-value — the OPTIMIZE ZORDER primitive. One range
-    shuffle; every output file gets a narrow min/max envelope on every
-    cluster column."""
-    zdf, ranges = zorder_values(df, cols, bits)
-    (
-        zdf.repartitionByRange(n_files, "zval")
-        .sortWithinPartitions("zval")
-        .drop("zval")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    return ranges

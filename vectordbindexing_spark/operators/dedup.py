@@ -33,14 +33,6 @@ def exact_dedup_stats(
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Return df with exact-duplicate rows removed (keep min-id row)."""
-    keep = exact_dedup_stats(df, text_col, id_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return df.join(keep, id_col, "semi")
-
-
 def jaccard_ngram_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -346,7 +338,7 @@ def _minhash_signatures_jvm(shingled: DataFrame, num_hashes: int) -> DataFrame:
     partially-aggregated F.min columns — only (did, num_hashes longs)
     partial aggregates reach the exchange, never the shingle strings.
     Docs with zero shingles coalesce to the all-MERSENNE31 sentinel
-    signature (minhash_signature's empty-set convention)."""
+    signature (minhash_signature_np's empty-set convention)."""
     from vectordbindexing_spark.functions.hashing import (
         _A_ADD,
         _A_MUL,
@@ -650,34 +642,6 @@ def simhash_text_neardup(
         cand.select("id_a", "id_b", hamming.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
-
-
-def _pair_cos_sim(cand: DataFrame, va: str = "_va", vb: str = "_vb") -> DataFrame:
-    """Arrow-batched exact cosine similarity over candidate (id_a, id_b)
-    pairs carrying both vectors; rounds to 6dp like the broadcast kernel."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[va]])
-            B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vb]])
-            s = np.einsum("ij,ij->i", A, B) / (
-                np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-            )
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].to_numpy(),
-                    "id_b": pdf["id_b"].to_numpy(),
-                    "cos_sim": np.round(s, 6),
-                }
-            )
-
-    return cand.mapInPandas(score, schema="id_a long, id_b long, cos_sim double")
 
 
 def embedding_neardup_lsh(

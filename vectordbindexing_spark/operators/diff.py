@@ -7,7 +7,7 @@ One full-outer join on the key columns; change detection is per-column
 null-safe comparison (never a rendered-string hash — float→string
 formatting is engine-specific, direct value comparison is not). At
 100 TB both snapshots shuffle once on the key; with both sides
-bucketed by key (io.bucketing) the join is shuffle-free.
+stored as bucketed tables on the key the join is shuffle-free.
 """
 
 from __future__ import annotations

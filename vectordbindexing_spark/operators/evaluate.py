@@ -301,82 +301,3 @@ def sweep_ef(
                 }
             )
     return pd.DataFrame(rows)
-
-
-def find_ef_for_recall(
-    queries: DataFrame,
-    index: CompactIndex,
-    exact: DataFrame,
-    target_recall: float = 0.9,
-    k: int = 10,
-    ef_grid: tuple[int, ...] = (16, 32, 64, 128, 256, 512),
-    q_id: str = "qid",
-    q_vec: str = "vec",
-) -> int | None:
-    """Smallest ef in the grid reaching target recall (reference
-    find_ef_for_recall90); None if the grid tops out below target."""
-    for ef in ef_grid:
-        got = graph_search(queries, index, k=k, ef_search=ef,
-                           q_id=q_id, q_vec=q_vec)
-        if recall_vs_exact(got, exact, k) >= target_recall:
-            return ef
-    return None
-
-
-def sweep_nprobe(
-    queries: DataFrame,
-    base: DataFrame,
-    exact: DataFrame,
-    k: int = 10,
-    nprobe_grid: tuple[int, ...] = (1, 2, 4, 8, 16),
-    nlist: int = 16,
-    m: int = 8,
-    ks: int = 16,
-    rerank: int | None = None,
-    index_path: str | None = None,
-    q_id: str = "qid",
-    q_vec: str = "vec",
-    b_id: str = "id",
-    b_vec: str = "vec",
-) -> pd.DataFrame:
-    """Recall/latency frontier over IVF-PQ nprobe — the compressed-index
-    analog of :func:`sweep_ef` (the reference sweeps its search effort
-    knob the same way). Fits + persists the artifact ONCE (or reuses
-    ``index_path``), then replays the sweep against it, so the grid
-    costs |grid| partition-pruned scans, never |grid| rebuilds. Returns
-    a pandas result table (harness, not a dataflow operator)."""
-    import tempfile
-
-    from vectordbindexing_spark.operators.ivf import kmeans_fit
-    from vectordbindexing_spark.operators.ivfpq import (
-        ivfpq_search_index,
-        save_ivfpq_index,
-    )
-    from vectordbindexing_spark.operators.pq import pq_fit
-
-    path = index_path
-    if path is None:
-        b = base.select(
-            F.col(b_id).cast("long").alias(b_id), F.col(b_vec).alias(b_vec)
-        ).localCheckpoint(eager=True)
-        cents = kmeans_fit(b, nlist, max_iter=3, id_col=b_id, vec_col=b_vec)
-        books = pq_fit(b, m=m, ks=ks, max_iter=3, id_col=b_id, vec_col=b_vec)
-        path = tempfile.mkdtemp(prefix="sweep_ivfpq_")
-        save_ivfpq_index(b, cents, books, path, b_id=b_id, b_vec=b_vec)
-    rows = []
-    for nprobe in nprobe_grid:
-        t0 = time.perf_counter()
-        got = ivfpq_search_index(
-            queries, path, k=k, nprobe=nprobe, q_id=q_id, q_vec=q_vec,
-            rerank=rerank, base=base if rerank is not None else None,
-            b_id=b_id, b_vec=b_vec,
-        ).localCheckpoint(eager=True)
-        wall = time.perf_counter() - t0
-        rows.append(
-            {
-                "nprobe": nprobe,
-                "recall_at_k": round(recall_vs_exact(got, exact, k), 4),
-                "wall_sec": round(wall, 3),
-            }
-        )
-    return pd.DataFrame(rows)

@@ -1,7 +1,6 @@
-"""Event-stream batch analytics: tumbling-window aggregation and gap-based
-sessionization. These are the batch twins of the Structured Streaming path
-(vectordbindexing_spark.streaming) — identical column semantics, so a
-stream job's output can be validated against these.
+"""Event-stream batch analytics: tumbling-window aggregation, gap-based
+sessionization, as-of joins, rollup ladders, funnels and cohort
+retention.
 """
 
 from __future__ import annotations
@@ -65,38 +64,6 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             F.sum("sess_events").alias("n_events"),
             F.max("sess_events").alias("max_session_events"),
         )
-    )
-
-
-def sessionize_native(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """:func:`sessionize` through Spark's built-in ``session_window``
-    aggregation — same output schema and (pinned by test) identical
-    results. session_window merges an event into the open session when
-    its timestamp is STRICTLY inside the previous event's window, so a
-    window of ``gap·60 + 1`` seconds over second-truncated timestamps
-    merges exactly when the whole-second gap is ≤ gap·60 — i.e. the
-    lag formulation's "gap > threshold starts a new session" rule.
-    The truncation is what makes the two rules coincide: on raw
-    microsecond timestamps the boundary cases differ.
-
-    Why keep both: this form is a single aggregation (no lag window)
-    and is what Structured Streaming's watermarked session windows use,
-    so batch and streaming sessionization share one code shape; the lag
-    formulation exists because its unrolled-SQL oracle pins the exact
-    session-boundary arithmetic cross-engine."""
-    ts = F.date_trunc("second", F.col("ts").cast("timestamp"))
-    per_sess = (
-        events.withColumn("_ts", ts)
-        .groupBy(
-            "user_id",
-            F.session_window("_ts", f"{gap_minutes * 60 + 1} seconds"),
-        )
-        .agg(F.count(F.lit(1)).alias("sess_events"))
-    )
-    return per_sess.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.sum("sess_events").alias("n_events"),
-        F.max("sess_events").alias("max_session_events"),
     )
 
 
@@ -170,8 +137,7 @@ def coarsen_rollup(df: DataFrame, grain: str) -> DataFrame:
     """One rung of the rollup ladder: re-aggregate a finer grain's
     (event_type, bucket, n_events, sum_value) table to ``grain``.
     The float fold is ordered (array_sort struct fold over the finer
-    buckets) so re-aggregation is deterministic cross-engine — also
-    reused by streaming.rollup to coarsen a streamed hour sink."""
+    buckets) so re-aggregation is deterministic cross-engine."""
     return (
         df.groupBy(
             "event_type",
@@ -194,18 +160,6 @@ def coarsen_rollup(df: DataFrame, grain: str) -> DataFrame:
     )
 
 
-def rollup_grain_aggs() -> list:
-    """The finest-grain rollup aggregate expressions, shared by the
-    batch ladder (date_trunc buckets) and streaming/rollup.py
-    (F.window buckets — streaming state eviction requires a window
-    key, so the two bucketings must differ, but the AGGREGATES must
-    never drift apart or the streamed and batch ladders diverge."""
-    return [
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-    ]
-
-
 def multires_rollup(events: DataFrame) -> DataFrame:
     """Multi-resolution continuous aggregate (the Timescale hypertable
     rollup shape): hour buckets from the raw rows, then day from hour
@@ -221,7 +175,10 @@ def multires_rollup(events: DataFrame) -> DataFrame:
     summation pattern), so the whole ladder is cross-engine exact."""
     hour = events.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("bucket")
-    ).agg(*rollup_grain_aggs())
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.round(F.sum("value"), 4).alias("sum_value"),
+    )
 
     day = coarsen_rollup(hour, "day")
     week = coarsen_rollup(day, "week")

@@ -221,93 +221,6 @@ def ivf_assign(
     ).mapInPandas(assign, schema="cid long, id long")
 
 
-def save_ivf_index(
-    base: DataFrame,
-    centroids: np.ndarray,
-    path: str,
-    b_id: str = "id",
-    b_vec: str = "vec",
-) -> None:
-    """Persist the IVF artifact: ``path/centroids`` (nlist rows) and
-    ``path/lists`` — the (cid, id, vec) inverted table written
-    ``partitionBy("cid")`` so serving reads ONLY the probed cells via
-    parquet partition pruning instead of re-assigning the corpus. This is
-    the amortization step for repeated query batches: one assignment scan
-    at build time, then every search touches nprobe/nlist of the data."""
-    spark = base.sparkSession
-    assign = ivf_assign(base, centroids, b_id, b_vec)
-    inv = assign.join(
-        base.select(
-            F.col(b_id).cast("long").alias("id"), F.col(b_vec).alias("vec")
-        ),
-        "id",
-    )
-    inv.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/lists")
-    cent_df = local_rows_df(
-        spark,
-        [(int(i), [float(x) for x in row]) for i, row in enumerate(centroids)],
-        "cid long, cvec array<double>",
-    )
-    cent_df.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def load_ivf_centroids(spark, path: str) -> np.ndarray:
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    return np.array([r["cvec"] for r in rows], dtype=np.float64)
-
-
-def ivf_search_index(
-    queries: DataFrame,
-    path: str,
-    k: int = 10,
-    nprobe: int = 4,
-    metric: str = "cosine",
-    q_id: str = "qid",
-    q_vec: str = "vec",
-) -> DataFrame:
-    """Search a persisted IVF artifact. The probed cell ids are collected
-    (≤ nlist values — tiny by construction) and applied as a LITERAL
-    ``isin`` predicate, so the parquet scan provably partition-prunes to
-    the probed cells (`PartitionFilters` in the plan); candidates then
-    score through the Arrow pair kernel and a per-query top-k window.
-    Output (qid, nbr_rank, neighbor_id, dist) like ivf_knn."""
-    spark = queries.sparkSession
-    centroids = load_ivf_centroids(spark, path)
-    cent_df = local_rows_df(
-        spark,
-        [(int(i), [float(x) for x in row]) for i, row in enumerate(centroids)],
-        "cid long, cvec array<double>",
-    )
-    q = queries.filter(F.col(q_vec).isNotNull()).select(
-        F.col(q_id).cast("long").alias("qid"), to_double_array(q_vec).alias("_qv")
-    ).localCheckpoint(eager=True)  # consumed by probe + candidate join
-    qc = q.crossJoin(F.broadcast(cent_df)).withColumn(
-        "cdist", pair_dist_udf("l2")("_qv", "cvec")
-    )
-    probes = (
-        topk_per_group(qc, ["qid"], "cdist", nprobe, tie_col="cid", rank_name="_pr")
-        .select("qid", "cid")
-        .localCheckpoint(eager=True)
-    )
-    probed_cids = sorted(
-        r["cid"] for r in probes.select("cid").distinct().collect()
-    )
-    lists = spark.read.parquet(f"{path}/lists").filter(
-        F.col("cid").isin(probed_cids)
-    )
-    cand = probes.join(lists, "cid").select(
-        "qid", F.col("id").alias("neighbor_id"), to_double_array("vec").alias("_bv")
-    )
-    scored = cand.join(q, "qid").withColumn(
-        "dist", pair_dist_udf(metric)("_qv", "_bv")
-    )
-    ranked = topk_per_group(
-        scored.select("qid", "neighbor_id", "dist"), ["qid"], "dist", k,
-        tie_col="neighbor_id",
-    )
-    return ranked.select("qid", "nbr_rank", "neighbor_id", "dist")
-
-
 def ivf_knn(
     queries: DataFrame,
     base: DataFrame,

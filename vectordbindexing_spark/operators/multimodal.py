@@ -10,10 +10,9 @@ feature-extract / embed stages. Decoders:
   pure-python parser, no external libs; runs in CI).
 - ``decoder="jpeg"`` — REAL decode of baseline JPEG (vendored pure-numpy
   ITU-T T.81 sequential-DCT decoder, ``io/jpeg.py``; round-trip-tested
-  against its paired encoder). Progressive/arithmetic JPEG and other
-  compressed formats (PNG/WebP) still need a native lib — register
-  another ``_DECODERS`` entry at deployment; the dataflow (schema,
-  batching, partitioning, UDF signature) is unchanged.
+  against its paired encoder). Arithmetic-coded/12-bit JPEG and other
+  compressed formats (PNG/WebP) need a native codec the engine does not
+  vendor; :func:`media_kind` routes them out before decode.
 - ``decoder="fake"`` — deterministic bytes-derived pseudo-decode for
   plumbing tests on arbitrary binary payloads.
 """
@@ -26,20 +25,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id long, kind string, content binary, mime string, n_bytes long"
-)
-
-
-def attach_media_metadata(
-    df: DataFrame, content_col: str = "content"
-) -> DataFrame:
-    """Typed metadata columns for an opaque binary column (size, sha-ish
-    fingerprint) — pure expressions, no decode."""
-    return df.withColumn("n_bytes", F.length(content_col).cast("long")).withColumn(
-        "content_md5", F.md5(F.col(content_col))
-    )
 
 
 def _fake_decode(buf: bytes) -> np.ndarray:
@@ -93,21 +78,6 @@ def _decode_jpeg_luma(buf: bytes) -> np.ndarray:
 _DECODERS = {"fake": _fake_decode, "ppm": _decode_ppm, "jpeg": _decode_jpeg_luma}
 
 
-def register_decoder(name: str, fn) -> None:
-    """Deployment hook for codecs the container lacks (arithmetic/12-bit
-    JPEG, PNG/WebP via PIL, MP3/AAC via ffmpeg): ``fn(buf: bytes) ->
-    np.ndarray`` (2-D luma/sample grid). The registered decoder rides
-    the same mapInPandas dataflow — schema, Arrow batching,
-    partitioning are decoder-agnostic, and the function is
-    cloudpickled to executors with the kernel closure, so a plain
-    module-level or locally-defined callable works. Overwriting an
-    existing name is allowed (deployments shadow the vendored
-    pure-python decoders with native ones)."""
-    if not callable(fn):
-        raise TypeError(f"decoder {name!r} must be callable")
-    _DECODERS[name] = fn
-
-
 def decode_image_features(
     df: DataFrame,
     content_col: str = "content",
@@ -117,9 +87,8 @@ def decode_image_features(
     """binary → (media_id, width, height, mean_intensity, features[8]).
 
     ``decoder='ppm'`` really decodes P6 PPM bytes; ``'fake'`` exercises the
-    identical dataflow on arbitrary binary payloads. Compressed formats:
-    add a ``_DECODERS`` entry backed by PIL/ffmpeg at deployment — the
-    dataflow is decoder-agnostic.
+    identical dataflow on arbitrary binary payloads. Formats without a
+    vendored codec are filtered out first by :func:`media_kind`.
     """
     if decoder not in _DECODERS:
         raise ValueError(
@@ -251,7 +220,7 @@ def audio_features(
     zero_cross_rate, spectral_centroid_hz) — the audio leg of the
     multimodal ingest path, REAL through PCM (vendored io/wav.py, like
     the image leg's PPM/JPEG). Compressed audio (MP3/AAC/Opus) is
-    triaged by :func:`media_kind` to a deployment decoder. Null
+    triaged out by :func:`media_kind` (no vendored codec). Null
     payloads are excluded (same contract as the image path)."""
     from vectordbindexing_spark.io.wav import audio_features_np, decode_wav
 
@@ -326,8 +295,8 @@ def video_features(
     frame decode. ``motion`` is the mean absolute luma difference
     between consecutive SAMPLED frames (stride ``frame_stride``) — the
     cheap static-vs-moving triage signal; width/height/mean_luma come
-    from the decoded samples. Inter-coded video routes to a deployment
-    decoder via :func:`media_kind`."""
+    from the decoded samples. Inter-coded video (no vendored codec) is
+    triaged out by :func:`media_kind`."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -369,8 +338,8 @@ def media_kind(
     decode), so a corpus pass costs one scan of marker prefixes; the
     canonical use is ``filter(kind.isin('baseline', 'progressive'))``
     (both decode via the vendored codec) before decode_image_features
-    and shipping the rest — arithmetic-coded, lossless, 12-bit — to the
-    deployment decoder instead of erroring mid-job."""
+    and setting the rest aside — arithmetic-coded, lossless, 12-bit have
+    no vendored codec — instead of erroring mid-job."""
     from vectordbindexing_spark.io.jpeg import scan_jpeg_kind
 
     def sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

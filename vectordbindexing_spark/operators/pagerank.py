@@ -38,12 +38,13 @@ from pyspark.sql import functions as F
 
 #: auto exact_fold: past this many edges (== folded structs built PER
 #: ITERATION) the source-ordered collect_list fold switches to a plain
-#: ``sum()`` — the same trap/fix as retrieval.FOLD_CONTRIB_LIMIT. The
+#: ``sum()`` — the same trap/fix as retrieval.FOLD_QT_LIMIT. The
 #: edge table is already eagerly checkpointed when counted, so the
 #: probe is free. Contract-scale graphs (thousands of edges) stay on
 #: the bit-deterministic fold; library-scale graphs get the cheap sum.
-#: 1M (not BM25's 2M): the fold materializes its structs once PER
-#: ITERATION, so the break-even edge count is ~iters x lower.
+#: 1M (not the 2M of a one-pass fold): the fold materializes its
+#: structs once PER ITERATION, so the break-even edge count is ~iters x
+#: lower.
 PR_FOLD_EDGE_LIMIT = 1_000_000
 
 

@@ -140,54 +140,6 @@ def _whitening_matrix(
     raise ValueError(f"unknown whitening mode {mode!r}")
 
 
-def dim_variances(
-    df: DataFrame, vec_col: str = "vec", group_col: str | None = None
-) -> DataFrame:
-    """Per-dimension population variance, optionally per group (modality):
-    the σ²_t,k / σ²_v,k vectors of the Idea-1023 weighted-L2 distance
-    (Idea-1023.md:78-82, which cites streaming variance — Spark's partial
-    aggregation gives exactly that).
-
-    Declarative formulation (posexplode → groupBy(dim)) so a SQL oracle can
-    reproduce it; for wide tables use the one-pass ``_moments`` kernel and
-    take diag(cov) instead.
-    """
-    ex = df.select(
-        *( [F.col(group_col)] if group_col else [] ),
-        F.posexplode(to_double_array(vec_col)).alias("dim", "x"),
-    )
-    keys = ([group_col] if group_col else []) + ["dim"]
-    return ex.groupBy(*keys).agg(
-        (F.avg(F.col("x") * F.col("x")) - F.avg("x") * F.avg("x")).alias("variance")
-    )
-
-
-def blended_inv_weights(
-    df: DataFrame,
-    vec_col: str,
-    modality_col: str,
-    mod_a: str,
-    mod_b: str,
-    alpha: float = 0.5,
-    eps: float = 1e-6,
-) -> list[float]:
-    """w_k = 1/(α·σ²_a,k + (1-α)·σ²_b,k + ε) as a plain list (broadcast into
-    the weighted-L2 expression)."""
-    rows = (
-        dim_variances(df.filter(F.col(modality_col).isin(mod_a, mod_b)),
-                      vec_col, modality_col)
-        .collect()
-    )
-    by = {}
-    for r in rows:
-        by.setdefault(r[modality_col], {})[r["dim"]] = r["variance"]
-    dims = sorted(by[mod_a])
-    return [
-        1.0 / (alpha * by[mod_a][d] + (1 - alpha) * by[mod_b][d] + eps)
-        for d in dims
-    ]
-
-
 def whitening_fit(
     df: DataFrame,
     vec_col: str = "vec",

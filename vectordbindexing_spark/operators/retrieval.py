@@ -52,46 +52,6 @@ from vectordbindexing_spark.plans.partitioning import local_rows_df
 
 from vectordbindexing_spark.functions.text import words
 
-# lexical-stats table reserved keys (tokens from the whitespace
-# tokenizer cannot start with NUL unless the raw text contains it —
-# lexical_stats drops such tokens defensively)
-RESERVED_PREFIX = "\x00"
-TERM_CORPUS = "\x00corpus"
-
-
-def lexical_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Lexical index statistics of a document set: one row per term
-    (term, df, tf) plus the ``TERM_CORPUS`` row carrying
-    (n_docs → df, sum_dl → tf). This is the additive summary a
-    streaming maintainer can merge batch-by-batch
-    (``streaming.lexical``): df/tf/N/Σdl all sum across disjoint
-    document batches, so stats(∪ batches) = Σ stats(batch) as long as
-    each document arrives exactly once (the append-only corpus
-    contract; put ``streaming.filter_gate`` upstream for at-least-once
-    sources). ``bm25_topk(..., stats=...)`` serves from it."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        words(F.lower(F.coalesce(F.col(text_col), F.lit("")))).alias("toks"),
-    )
-    per_term = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .where(~F.col("term").startswith(RESERVED_PREFIX))
-        .groupBy("term")
-        .agg(
-            F.countDistinct("doc_id").cast("long").alias("df"),
-            F.count(F.lit(1)).cast("long").alias("tf"),
-        )
-    )
-    corpus = toks.agg(
-        F.count(F.lit(1)).cast("long").alias("df"),
-        F.coalesce(F.sum(F.size("toks")), F.lit(0)).cast("long").alias("tf"),
-    ).select(F.lit(TERM_CORPUS).alias("term"), "df", "tf")
-    return per_term.unionByName(corpus)
-
 
 def _query_terms(queries: list[tuple[int, str]]) -> list[tuple[int, str]]:
     """(query_id, term) pairs — lowercased, whitespace-split, deduped
@@ -108,13 +68,10 @@ def _query_terms(queries: list[tuple[int, str]]) -> list[tuple[int, str]]:
     return out
 
 
-#: auto exact_fold: estimated matched (query,doc,term) contributions
-#: above this switch to plain sum() — measured 29M folded structs cost
-#: 118 s vs 31.5 s plain at 200k docs x 2000 full-vocab queries
-FOLD_CONTRIB_LIMIT = 2_000_000
-#: auto exact_fold without a stats table (no df available pre-scan):
-#: switch on the (query,term) pair count instead — contract/ad-hoc
-#: queries carry a handful, batch mining carries vocabulary-scale
+#: auto exact_fold: past this many (query,term) pairs switch to plain
+#: sum() — contract/ad-hoc queries carry a handful, batch mining carries
+#: vocabulary-scale; measured 29M folded structs cost 118 s vs 31.5 s
+#: plain at 200k docs x 2000 full-vocab queries
 FOLD_QT_LIMIT = 10_000
 
 
@@ -127,18 +84,8 @@ def bm25_topk(
     text_col: str = "text",
     id_col: str = "doc_id",
     exact_fold: bool | None = None,
-    stats: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k documents per query under BM25.
-
-    ``stats`` (optional): a lexical-stats table in the
-    :func:`lexical_stats` layout — per-term (term, df, tf) plus the
-    ``TERM_CORPUS`` row carrying (n_docs, sum_dl). When given, df/N/Σdl
-    come from it instead of being recomputed from ``docs``: the
-    incremental-index serving shape (score a batch, a slice, or the
-    full corpus against stats a stream maintains —
-    ``streaming.lexical``). Terms absent from ``stats`` are skipped
-    (the stats table is authoritative for the corpus).
 
     ``queries`` is either a small driver-side list of
     (query_id, query_text) — the ad-hoc search shape, filtered with an
@@ -155,12 +102,10 @@ def bm25_topk(
     accumulation, can drift in the last ulp): at 2000 queries × 200k
     docs the query terms cover the vocabulary, the fold materializes
     ~29M structs and costs 127 s vs 22 s for the sum. The default
-    (``None``) picks automatically: with ``stats`` it estimates the
-    matched contributions as Σ df over the (query,term) pairs and
-    folds below FOLD_CONTRIB_LIMIT; without stats it folds while the
-    (query,term) pair count stays under FOLD_QT_LIMIT (bounded probe,
-    no corpus scan either way). Callers that need the deterministic
-    fold regardless of scale pass True explicitly.
+    (``None``) picks automatically: it folds while the (query,term)
+    pair count stays under FOLD_QT_LIMIT (bounded probe, no corpus
+    scan). Callers that need the deterministic fold regardless of
+    scale pass True explicitly.
 
     Output: (query_id, rank, doc_id, score) with
     score = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)),
@@ -194,16 +139,11 @@ def bm25_topk(
         def term_filter(occ: DataFrame) -> DataFrame:
             return occ.where(F.col("term").isin(terms))
 
-    if stats is None:
-        # corpus stats: one scan-local aggregate, broadcast back as 1 row
-        corpus = base.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(F.size("toks")).cast("long").alias("sum_dl"),
-        )
-    else:
-        corpus = stats.where(F.col("term") == TERM_CORPUS).select(
-            F.col("df").alias("n_docs"), F.col("tf").alias("sum_dl")
-        )
+    # corpus stats: one scan-local aggregate, broadcast back as 1 row
+    corpus = base.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum(F.size("toks")).cast("long").alias("sum_dl"),
+    )
     # tf over query terms only — the filter runs before the groupBy
     tf = (
         term_filter(
@@ -215,38 +155,21 @@ def bm25_topk(
         )
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"), F.max("dl").alias("dl"))
-    )
-    if stats is None:
-        tf = tf.withColumn(
+        .withColumn(
             "df",
             F.count(F.lit(1)).over(Window.partitionBy("term")).cast("long"),
         )
-    else:
-        term_df = stats.where(
-            (F.col("term") != TERM_CORPUS)
-            & ~F.col("term").startswith(RESERVED_PREFIX)
-        ).select("term", F.col("df").cast("long").alias("df"))
-        tf = tf.join(F.broadcast(term_df), "term")
+    )
     if exact_fold is None:
         # auto: fold only while the contribution stream stays small.
         # Driver-list queries know their pair count for free; DataFrame
         # queries probe it with a bounded count (stops at the limit, no
-        # corpus scan). With a stats table the matched contributions
-        # are exactly sum(df) over the (query,term) pairs — a join of
-        # two broadcast-sized tables.
+        # corpus scan).
         if isinstance(queries, DataFrame):
             n_qt = qt.limit(FOLD_QT_LIMIT + 1).count()
         else:
             n_qt = len(qterms)
-        if stats is not None and n_qt <= FOLD_QT_LIMIT:
-            est = (
-                qt.join(F.broadcast(term_df), "term")
-                .agg(F.sum("df"))
-                .first()[0]
-            )
-            exact_fold = (est or 0) <= FOLD_CONTRIB_LIMIT
-        else:
-            exact_fold = n_qt <= FOLD_QT_LIMIT
+        exact_fold = n_qt <= FOLD_QT_LIMIT
     qt = F.broadcast(qt)
     contrib = (
         tf.join(qt, "term")
@@ -338,46 +261,6 @@ def rrf_fuse(
         .where(F.col("rank") <= topk)
         .select("query_id", "rank", "doc_id", "rrf_score", "n_sources")
     )
-
-
-def hybrid_search(
-    docs: DataFrame,
-    queries: "list[tuple[int, str]] | DataFrame",
-    vec_ranks: DataFrame,
-    k: int = 10,
-    fetch_k: int = 20,
-    k_rrf: int = 60,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Hybrid retrieval: BM25 top-``fetch_k`` fused with a vector
-    ranklist via RRF — the deployment shape of every hybrid vector-DB
-    query path (keyword recall ⊕ semantic recall).
-
-    ``vec_ranks`` is the output of ANY dense route — ``exact_knn``,
-    ``lsh_knn``, ``ivfpq_knn`` or the planner — in their shared
-    (qid, nbr_rank, neighbor_id, …) contract, with qid matching the
-    BM25 query ids. Keeping the dense side an input (rather than
-    computing it here) lets the caller pick the index the corpus size
-    demands; fusion only ever sees |q|·2·fetch_k rank rows.
-    """
-    kw = bm25_topk(
-        docs, queries, k=fetch_k, k1=k1, b=b,
-        text_col=text_col, id_col=id_col,
-    )
-    ranks = kw.select(
-        "query_id", F.lit("kw").alias("src"), "rank", "doc_id"
-    ).unionByName(
-        vec_ranks.select(
-            F.col("qid").cast("long").alias("query_id"),
-            F.lit("vec").alias("src"),
-            F.col("nbr_rank").cast("long").alias("rank"),
-            F.col("neighbor_id").cast("long").alias("doc_id"),
-        ).where(F.col("rank") <= fetch_k)
-    )
-    return rrf_fuse(ranks, k_rrf=k_rrf, topk=k)
 
 
 def maxsim_topk(

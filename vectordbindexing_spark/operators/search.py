@@ -536,45 +536,11 @@ def frontier_search(
     )
 
 
-def filtered_graph_search(
-    queries: DataFrame,
-    index: CompactIndex,
-    allowed: DataFrame,
-    k: int = 10,
-    overfetch: int = 4,
-    ef_search: int = 64,
-    q_id: str = "qid",
-    q_vec: str = "vec",
-    **kwargs,
-) -> DataFrame:
-    """Metadata-filtered graph ANN by overfetch + post-filter — the
-    standard practical recipe when the index was built unfiltered: beam
-    search for k·``overfetch`` candidates (ef is raised to at least
-    the overfetched k so the beam can actually hold them), LEFT SEMI
-    join against the ``allowed`` id set, re-rank to k.
-
-    Contract differences vs the IVF-PQ ``allowed=`` path (which filters
-    BEFORE scoring and always returns the best allowed rows): a query
-    whose entire graph neighborhood is filtered away can return fewer
-    than k rows — selectivity below ~1/overfetch calls for a bigger
-    overfetch or the IVF-PQ filtered route. Returns
-    (qid, nbr_rank, neighbor_id, dist)."""
-    from vectordbindexing_spark.operators.topk import topk_per_group
-
-    kk = max(k, 1) * max(overfetch, 1)
-    got = graph_search(
-        queries, index, k=kk, ef_search=max(ef_search, kk),
-        q_id=q_id, q_vec=q_vec, **kwargs,
-    )
-    return allowed_topk(got, allowed, k)
-
-
 def allowed_topk(got: DataFrame, allowed: DataFrame, k: int) -> DataFrame:
     """Post-filter + re-rank tail of the overfetch filtered-ANN recipe:
     LEFT SEMI join the (qid, nbr_rank, neighbor_id, dist) candidates
-    against the allowed id set, then re-rank to k. Shared by
-    filtered_graph_search and plans.knn_planner.graph_knn so the two
-    routes cannot drift."""
+    against the allowed id set, then re-rank to k (the filtered route
+    of plans.knn_planner.graph_knn)."""
     from vectordbindexing_spark.operators.topk import topk_per_group
 
     kept = got.join(

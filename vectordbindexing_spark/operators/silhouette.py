@@ -115,7 +115,7 @@ def silhouette(
 
 #: auto exact_mean: past this many exploded (point, dimension) values
 #: the id-ordered centroid-mean fold switches to plain avg() — the
-#: same fold-cost trap/fix as retrieval.FOLD_CONTRIB_LIMIT and
+#: same fold-cost trap/fix as retrieval.FOLD_QT_LIMIT and
 #: pagerank.PR_FOLD_EDGE_LIMIT; the probe is a bounded limit().count()
 SIMPLIFIED_FOLD_CELL_LIMIT = 2_000_000
 

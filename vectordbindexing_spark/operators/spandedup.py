@@ -161,67 +161,3 @@ def duplicated_spans(
         F.coalesce("dup_cover", zero).alias("dup_cover"),
         F.coalesce("removable_cover", zero).alias("removable_cover"),
     )
-
-
-def remove_duplicated_spans(
-    df: DataFrame,
-    window: int = 15,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Rewrite each doc with its removable duplicated tokens cut
-    (canonical occurrences survive, so every span's text still exists
-    exactly once in the corpus — the Lee et al. contract).
-
-    The cut runs JVM-side: the removable windows are re-unioned into
-    [start, end) intervals per doc, collected to an array column (small:
-    only this doc's duplicated islands), and the kept tokens selected
-    with a filter over the token array. No Python in the row path.
-    """
-    toks = words(F.coalesce(F.col(text_col), F.lit("")))
-    docs = df.select(F.col(id_col), toks.alias("_toks"))
-    ex = (
-        df.select(F.col(id_col), F.posexplode(window_hash_col(toks, window)).alias("pos", "whash"))
-        # same guarded canonical key as duplicated_spans: a doc with
-        # >= 2^22 windows would silently collide keys and delete the
-        # wrong (or the only) occurrence of a span
-        .withColumn(
-            "_ckey",
-            F.when(
-                F.col("pos") < POS_LIMIT, F.col(id_col) * POS_LIMIT + F.col("pos")
-            ).otherwise(
-                F.raise_error(F.lit("remove_duplicated_spans: pos >= 2^22; chunk the doc first"))
-            ),
-        )
-        .repartition("whash")  # hash once; agg + join probe reuse the exchange
-    )
-    agg = (
-        ex.groupBy("whash")
-        .agg(F.count(F.lit(1)).alias("_n_occ"), F.min("_ckey").alias("_ckey_min"))
-        .filter(F.col("_n_occ") >= 2)
-        .select("whash", "_ckey_min")
-    )
-    rm = ex.join(agg, "whash").filter(F.col("_ckey") != F.col("_ckey_min"))
-    wspec = Window.partitionBy(id_col).orderBy("pos")
-    prev = F.lag("pos").over(wspec)
-    isl = F.sum(
-        F.when(prev.isNull() | (F.col("pos") - prev >= window), 1).otherwise(0)
-    ).over(wspec.rowsBetween(Window.unboundedPreceding, 0))
-    intervals = (
-        rm.withColumn("_isl", isl)
-        .groupBy(id_col, "_isl")
-        .agg(F.min("pos").alias("_s"), (F.max("pos") + F.lit(window)).alias("_e"))
-        .groupBy(id_col)
-        .agg(F.collect_list(F.struct("_s", "_e")).alias("_cuts"))
-    )
-    joined = docs.join(intervals, id_col, "left")
-    kept = F.filter(
-        F.transform(F.col("_toks"), lambda t, i: F.struct(t.alias("t"), i.alias("i"))),
-        lambda s: ~F.exists(
-            F.coalesce(F.col("_cuts"), F.array().cast("array<struct<_s:int,_e:int>>")),
-            lambda c: (s["i"] >= c["_s"]) & (s["i"] < c["_e"]),
-        ),
-    )
-    return joined.select(
-        F.col(id_col), F.concat_ws(" ", F.transform(kept, lambda s: s["t"])).alias(text_col)
-    )

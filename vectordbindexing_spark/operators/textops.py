@@ -265,36 +265,15 @@ def corpus_filter_gate(
     high_punct > no_stopwords).
 
     One scan + one shuffle: every feature is a Column expression over the
-    text; the keeper flag is a row_number window over md5(text) (the
-    same exact-dup semantics as dedup.exact_dedup — min id wins), so no
-    join is needed. Output: (doc_id, pred_lang, n_tokens, punct_ratio,
-    is_keeper, keep, reason).
+    text; the keeper flag is a row_number window over md5(text) (exact
+    duplicates by text hash — min id wins), so no join is needed.
+    Output: (doc_id, pred_lang, n_tokens, punct_ratio, is_keeper, keep,
+    reason).
     """
     from pyspark.sql import Window
 
     w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
     is_keeper = F.row_number().over(w) == 1
-    return gate_with_keeper(
-        df, is_keeper, text_col, id_col, lang, min_tokens, max_tokens,
-        max_punct_ratio,
-    )
-
-
-def gate_with_keeper(
-    df: DataFrame,
-    is_keeper: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang: str = "en",
-    min_tokens: int = 5,
-    max_tokens: int = 10_000,
-    max_punct_ratio: float = 0.2,
-) -> DataFrame:
-    """The stateless verdict of corpus_filter_gate with the exact-dup
-    keeper supplied as a Column — shared by the batch gate (md5 window,
-    min id wins) and the streaming gate (stateful first-arrival dedup,
-    streaming.filter_gate), so the rule set and reason priority cannot
-    drift between the two."""
     toks = words(_txt(text_col))
     n_tok = F.size(toks).cast("long")
     n_chars = F.length(_txt(text_col)).cast("double")

@@ -118,51 +118,3 @@ def hash_ordered_sample(
             pdf = src.orderBy("_h", "i").limit(sample_size).drop("_h").toPandas()
         return pdf
     return src.orderBy("_h", "i").limit(sample_size).drop("_h").toPandas()
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: str,
-    num_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join for when AQE's skew splitting can't help (e.g.
-    one key holds >1 partition-budget of rows on BOTH sides is not the
-    case here — ``other`` must be the replicable side).
-
-    The skewed side gets a deterministic salt derived from xxhash64 of
-    ALL its columns (content-derived → stable across retries, unlike
-    rand()); ``other`` is replicated ``num_salts``× via an exploded
-    literal range. The join key becomes (on, salt), splitting one hot
-    key's rows across ``num_salts`` tasks. Cost: |other| × num_salts rows
-    through the exchange — size num_salts to the observed skew, and
-    prefer plain AQE first.
-
-    Only ``inner``/``left``/``left_semi``/``left_anti`` are allowed: those
-    equal the unsalted join because output rows come from the skewed side
-    (each appears under exactly one salt, and ``other`` carries every key
-    under every salt). Right/full-outer would emit each unmatched
-    ``other`` row ``num_salts`` times (it exists once per salt but matches
-    none) — rejected.
-    """
-    allowed = {
-        "inner", "left", "left_outer", "leftouter",
-        "left_semi", "leftsemi", "semi",
-        "left_anti", "leftanti", "anti",
-    }
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join(how={how!r}) would duplicate unmatched rows of "
-            f"the replicated side; use one of {sorted(allowed)}"
-        )
-    salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(num_salts)
-    ).cast("int")
-    left = skewed.withColumn("_salt", salt)
-    right = other.withColumn(
-        "_salt",
-        F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)).cast("array<int>")),
-    )
-    out = left.join(right, [on, "_salt"], how)
-    return out.drop("_salt")

@@ -1,6 +1,3 @@
-from vectordbindexing_spark.streaming.ingest import (
-    incremental_index_stream,
-    streaming_event_counts,
-)
+from vectordbindexing_spark.streaming.ingest import incremental_index_stream
 
-__all__ = ["incremental_index_stream", "streaming_event_counts"]
+__all__ = ["incremental_index_stream"]

@@ -1,6 +1,5 @@
-"""Streaming upsert into a persisted two-layer GRAPH serving artifact —
-the graph analog of streaming/ivfpq_ingest.py (reference study:
-`hnsw_insert.ipynb`, +1%…+10% incremental inserts).
+"""Streaming upsert into a persisted two-layer GRAPH serving artifact
+(reference study: `hnsw_insert.ipynb`, +1%…+10% incremental inserts).
 
 State layout under ``index_dir`` (each bucket dir swapped crash-safely
 via streaming/atomic.py, so a crash at any point leaves a servable
@@ -565,13 +564,12 @@ def _clear_fwd_delta(index_dir: str) -> None:
 #
 # * ``ivf_centroids`` — (cid, cvec) parquet, fitted at init/rebuild on
 #   the bounded deterministic sample (ivf.kmeans_fit), FROZEN between
-#   rebuilds (the ivfpq_ingest.py freeze-then-refit contract: upsert
-#   stays O(batch), drift is repaid at the next rebuild).
+#   rebuilds (freeze-then-refit: upsert stays O(batch), drift is
+#   repaid at the next rebuild).
 # * ``ivf_cells``  — (id, vec, seq) parquet partitioned by ``cell=``:
 #   the corpus mirrored by coarse cell, so a batch's kNN reads ONLY the
 #   cells its queries probe. This is the classic second copy every IVF
-#   serving artifact keeps (operators.ivf.save_ivf_index stores the
-#   same (cid, id, vec) table); the graph artifact pays it to stop
+#   serving artifact keeps; the graph artifact pays it to stop
 #   re-deriving the assignment per batch.
 # * ``ivf_delta/`` — the cells mirror's LSM delta log (same design as
 #   rev/fwd: per-seq cell-sorted flat adds ``d<seq>-0.parquet`` + ONE
@@ -1351,8 +1349,8 @@ def upsert_graph_artifact(
             rev_base_bytes=du_parquet(rev_path), rev_delta_bytes=0,
             fwd_base_bytes=du_parquet(edge_path), fwd_delta_bytes=0,
         )
-        # REFIT the IVF mirror (the ivfpq_ingest freeze-then-refit
-        # contract: rebuild is where quantizer drift is repaid); below
+        # REFIT the IVF mirror (freeze-then-refit: rebuild is where
+        # quantizer drift is repaid); below
         # the exact limit the mirror is dead weight and is dropped
         if n_real > ebl:
             meta["ivf"] = _build_ivf_artifact(spark, index_dir, n_real)

@@ -9,10 +9,6 @@ delta's kNN edges against the existing index — search unions
 into its graph. Periodic compaction folds deltas into a full rebuild
 (the reference observes search-steps degradation after +10% inserts —
 BASELINE.md — which is the signal to compact).
-
-Also: a windowed streaming aggregation (watermark + tumbling window) whose
-batch twin is operators.events.hourly_stats, so stream output can be
-verified against the batch oracle.
 """
 
 from __future__ import annotations
@@ -124,41 +120,3 @@ def compact_deltas(
     full.write.mode("overwrite").parquet(os.path.join(out_dir, "vectors"))
     edges.write.mode("overwrite").parquet(os.path.join(out_dir, "edges"))
     return full, edges
-
-
-def streaming_event_counts(
-    events_stream: DataFrame,
-    watermark: str = "1 hour",
-    window: str = "1 hour",
-) -> DataFrame:
-    """Watermarked tumbling-window counts per event_type — streaming twin of
-    operators.events.hourly_stats (same output columns, so results can be
-    hash-compared against the batch run of the same data).
-
-    ``withWatermark`` requires an event-time column of type TIMESTAMP —
-    the driver's events parquet now reads as TIMESTAMP_NTZ, so cast to
-    LTZ for the watermark/window and cast the window boundary back to the
-    input's type (wall-clock-preserving round trip under any fixed-offset
-    session timezone) so stream output stays hash-comparable with the
-    batch twin.
-    """
-    ts_type = dict(events_stream.dtypes).get("ts", "timestamp")
-    stream = events_stream
-    if ts_type != "timestamp":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.col("event_type"), F.window("ts", window))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.approx_count_distinct("user_id").alias("n_users_approx"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            F.col("window.start").cast(ts_type).alias("hour"),
-            "n_events",
-            "n_users_approx",
-            "sum_value",
-        )
-    )
