@@ -27,12 +27,12 @@ def test_xxhash64_long_twin_matches_spark(spark):
 
 
 def test_bucket_of_py_matches_maintainer_bucket_expr(spark):
-    from vectordbindexing_spark.streaming.graph_ingest import _bucket_of
+    from vectordbindexing_spark.streaming.deltalog import bucket
 
     for buckets in (8, 64, 1024):
         rows = (
             spark.range(-50, 500, 7)
-            .select(F.col("id"), _bucket_of("id", buckets).alias("b"))
+            .select(F.col("id"), bucket(buckets, "id").alias("b"))
             .collect()
         )
         for r in rows:

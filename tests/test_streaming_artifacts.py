@@ -1,27 +1,48 @@
 """Contracts shared by the two LSM-style streaming maintainers (graph
-and neardup): the replay pre-clear of a delta log, and the meta.json
-format stamp that makes a foreign artifact fail loudly."""
+and neardup) and their four delta logs (streaming/deltalog.py): the
+replay pre-clear, exact resolution after a fold whose clear died
+midway, and the meta.json format stamp that makes a foreign artifact
+fail loudly."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 
 import vectordbindexing_spark.streaming.graph_ingest as gi
 import vectordbindexing_spark.streaming.neardup as nd
+from vectordbindexing_spark.streaming import deltalog
+
+# ids: "graph"/"neardup" name the rev and bands logs
+LOGS = {"graph": gi.REV, "graph_fwd": gi.FWD, "graph_ivf": gi.IVF,
+        "neardup": nd.BANDS}
 
 
-@pytest.mark.parametrize(
-    "delta_paths", [gi._delta_paths, nd._band_delta_paths],
-    ids=["graph", "neardup"],
-)
-def test_pre_clear_delta_removes_only_its_own_seq(tmp_path, delta_paths):
+def _crash_at(monkeypatch, fn, spec, msg, once=False):
+    """Make ``deltalog.<fn>`` raise OSError(msg) when called for
+    ``spec`` (only on its first such call when ``once``); other logs
+    pass through."""
+    real, hits = getattr(deltalog, fn), []
+
+    def boom(s, *a, **kw):
+        if s == spec and not (once and hits):
+            hits.append(1)
+            raise OSError(msg)
+        return real(s, *a, **kw)
+
+    monkeypatch.setattr(deltalog, fn, boom)
+
+
+@pytest.mark.parametrize("log", list(LOGS))
+def test_pre_clear_delta_removes_only_its_own_seq(tmp_path, log):
     """The replay pre-clear must match d<seq>-<i>.parquet EXACTLY — a
     bare d<seq>* pattern would also delete d<seq>0…'s files (seq 1
     eating seq 10's delta) — and remove the seq's tombstone file."""
-    adds_dir, tombs_dir = delta_paths(str(tmp_path))
+    spec = LOGS[log]
+    adds_dir, tombs_dir = deltalog.paths(spec, str(tmp_path))
     os.makedirs(adds_dir)
     os.makedirs(tombs_dir)
     for n in ["d1-0", "d1-1", "d10-0", "d12-0"]:
@@ -29,9 +50,128 @@ def test_pre_clear_delta_removes_only_its_own_seq(tmp_path, delta_paths):
     for n in ["d1.parquet", "d10.parquet"]:
         open(os.path.join(tombs_dir, n), "wb").close()
 
-    gi._pre_clear_delta(adds_dir, tombs_dir, 1)
+    deltalog.pre_clear(spec, str(tmp_path), 1)
     assert sorted(os.listdir(adds_dir)) == ["d10-0.parquet", "d12-0.parquet"]
     assert sorted(os.listdir(tombs_dir)) == ["d10.parquet"]
+
+
+def _rows(df) -> list:
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def _graph_upsert(art, b):
+    return gi.upsert_graph_artifact(
+        b, art, refresh_factor=10.0, exact_base_limit=100
+    )
+
+
+@pytest.fixture(scope="module")
+def upserted_graph(spark, tmp_path_factory):
+    """A 300-row graph artifact with its IVF mirror (exact limit 100)
+    after one upsert that updates id 7 and inserts id 1000 — every
+    graph log then holds adds and tombstones. Tests copy it."""
+    art = str(tmp_path_factory.mktemp("graph") / "art")
+    base = spark.createDataFrame(
+        [(i, [float((i * 7) % 11), float(i % 5), 1.0 + i % 3])
+         for i in range(300)],
+        "id long, vec array<double>",
+    )
+    gi.init_graph_artifact(
+        base, art, M0=4, M1=2, buckets=8, exact_base_limit=100
+    )
+    batch = spark.createDataFrame(
+        [(7, [0.5, 4.0, 2.0]), (1000, [3.0, 1.0, 2.5])],
+        "id long, vec array<double>",
+    )
+    assert _graph_upsert(art, batch) == "upsert"
+    return art
+
+
+@pytest.mark.parametrize("log", list(LOGS))
+def test_fold_whose_clear_died_after_adds_resolves_exactly(
+    spark, tmp_path, monkeypatch, upserted_graph, log
+):
+    """A fold swaps the resolved rows (each keeping its seq) into the
+    base, then clears the log. If that clear dies after removing
+    ``adds/`` but before ``tombs/``, the surviving tombstones are no
+    newer than the folded rows of their keys, and the seq rule must
+    keep those rows: the resolved view still equals the truth (the
+    vectors dir for the IVF mirror, the pre-fold views otherwise).
+    Skipping the seq comparison for base rows dropped every id of
+    the folded batch from the IVF mirror."""
+    spec = LOGS[log]
+    art = str(tmp_path / "art")
+    if spec is nd.BANDS:
+        docs = spark.createDataFrame(
+            [(i, f"alpha{i} bravo{i} charlie{i} delta{i}") for i in range(20)],
+            "doc_id long, text string",
+        )
+        nd.init_neardup_artifact(docs, art, buckets=8)
+        nd.upsert_neardup_artifact(
+            spark.createDataFrame(
+                [(3, "alpha9 bravo9 charlie9 echo"), (100, "x y z w")],
+                "doc_id long, text string",
+            ),
+            art,
+        )
+        truth = _rows(nd.bands_resolved(spark, art))
+
+        def fold():  # an empty batch: the fold runs, nothing else
+            nd.upsert_neardup_artifact(
+                spark.createDataFrame([], "doc_id long, text string"), art
+            )
+
+    else:
+        shutil.copytree(upserted_graph, art)
+        if spec is gi.IVF:
+            truth = _rows(
+                spark.read.parquet(art + "/vectors").select("id", "vec")
+            )
+        else:
+            truth = _rows(gi.edges_resolved(spark, art))
+
+        def fold():
+            _graph_upsert(
+                art, spark.createDataFrame([], "id long, vec array<double>")
+            )
+
+    adds_dir, tombs_dir = deltalog.paths(spec, art)
+    assert os.listdir(adds_dir) and os.listdir(tombs_dir)
+    real_clear = deltalog.clear
+
+    def half_clear(s, index_dir):
+        if s != spec:
+            return real_clear(s, index_dir)
+        shutil.rmtree(adds_dir)
+        raise OSError("simulated crash between removing adds/ and tombs/")
+
+    monkeypatch.setattr(deltalog, "COMPACT_FACTOR", 0.0)
+    monkeypatch.setattr(deltalog, "clear", half_clear)
+    with pytest.raises(OSError):
+        fold()
+    assert not os.path.exists(adds_dir) and os.listdir(tombs_dir)
+
+    view = deltalog.resolve(spark, spec, art)
+    if spec is gi.IVF:
+        view = view.select("id", "vec")
+    assert _rows(view) == truth
+
+
+@pytest.mark.parametrize("log", ["graph", "graph_fwd", "graph_ivf"])
+def test_spark_read_tombstones_resolve_like_the_local_reduce(
+    spark, monkeypatch, upserted_graph, log
+):
+    """Past _LOCAL_TOMBS_BYTES the newest-tombstone table is read and
+    reduced by Spark instead of pyarrow; both routes resolve the same
+    rows."""
+    spec = LOGS[log]
+    want = _rows(deltalog.resolve(spark, spec, upserted_graph, keep_seq=True))
+    monkeypatch.setattr(deltalog, "_LOCAL_TOMBS_BYTES", 0)
+    got = _rows(deltalog.resolve(spark, spec, upserted_graph, keep_seq=True))
+    assert got == want and len(got) > 0
 
 
 def _graph(spark, art):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from test_streaming_artifacts import _crash_at
 from vectordbindexing_spark.io.synthetic import (
     synthetic_queries,
     synthetic_vectors,
@@ -18,6 +19,7 @@ from vectordbindexing_spark.operators.search import (
     compact_index,
     graph_search,
 )
+from vectordbindexing_spark.streaming import deltalog
 from vectordbindexing_spark.streaming.graph_ingest import (
     graph_upsert_stream,
     init_graph_artifact,
@@ -203,10 +205,10 @@ def test_crash_between_vector_and_edge_swap_heals_on_replay(
     art = str(tmp_path / "crash_art")
     init_graph_artifact(base, art, M0=M0, M1=M1)
 
-    def boom(*a, **kw):
-        raise OSError("simulated crash before the forward delta append")
-
-    monkeypatch.setattr(gi, "_write_fwd_delta", boom)
+    _crash_at(
+        monkeypatch, "append", gi.FWD,
+        "simulated crash before the forward delta append",
+    )
     with pytest.raises(OSError):
         upsert_graph_artifact(b1, art, refresh_factor=10.0)
     monkeypatch.undo()
@@ -226,8 +228,9 @@ def test_crash_between_vector_and_edge_swap_heals_on_replay(
 
 def test_upsert_planner_route_past_exact_limit(spark, corpus, tmp_path):
     """Forcing exact_base_limit below the corpus size sends the
-    batch-vs-union kNN through plans.knn_planner.knn (the 100 TB
-    route); inserted nodes must still come back servable."""
+    batch-vs-union kNN through the maintained IVF mirror (the 100 TB
+    route; the mirror is built lazily by this first past-limit
+    upsert); inserted nodes must still come back servable."""
     full, base, b1, b2, q = corpus
     art = str(tmp_path / "planner_art")
     init_graph_artifact(base, art, M0=M0, M1=M1)
@@ -235,7 +238,6 @@ def test_upsert_planner_route_past_exact_limit(spark, corpus, tmp_path):
         upsert_graph_artifact(
             b1, art, refresh_factor=10.0,
             exact_base_limit=50,
-            planner_kwargs={"memory_tight": False},
         )
         == "upsert"
     )
@@ -271,10 +273,10 @@ def test_crash_between_vec_and_edge_swap_on_UPDATE_heals_on_replay(
         [(upd_id, newvec)], "id long, vec array<double>"
     )
 
-    def boom(*a, **kw):
-        raise OSError("simulated crash before the forward delta append")
-
-    monkeypatch.setattr(gi, "_write_fwd_delta", boom)
+    _crash_at(
+        monkeypatch, "append", gi.FWD,
+        "simulated crash before the forward delta append",
+    )
     with pytest.raises(OSError):
         upsert_graph_artifact(upd, art, refresh_factor=10.0)
     monkeypatch.undo()
@@ -454,7 +456,7 @@ def test_rev_delta_is_append_only_and_compaction_folds(
     assert fwd_rows() == rev_rows()
 
     # force the fold: threshold 0 -> the next upsert compacts FIRST
-    monkeypatch.setattr(gi, "REV_COMPACT_FACTOR", 0.0)
+    monkeypatch.setattr(deltalog, "COMPACT_FACTOR", 0.0)
     upd = spark.createDataFrame(
         [(5, [0.5] * D)], "id long, vec array<double>"
     )
@@ -491,17 +493,11 @@ def test_half_finished_compaction_is_exact_and_self_heals(
     init_graph_artifact(base, art, M0=M0, M1=M1)
     assert upsert_graph_artifact(b1, art, refresh_factor=10.0) == "upsert"
 
-    monkeypatch.setattr(gi, "REV_COMPACT_FACTOR", 0.0)
-    real_clear = gi._clear_rev_delta
-    calls = {"n": 0}
-
-    def boom(index_dir):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise OSError("simulated crash before the delta removal")
-        return real_clear(index_dir)
-
-    monkeypatch.setattr(gi, "_clear_rev_delta", boom)
+    monkeypatch.setattr(deltalog, "COMPACT_FACTOR", 0.0)
+    _crash_at(
+        monkeypatch, "clear", gi.REV,
+        "simulated crash before the delta removal", once=True,
+    )
     upd = spark.createDataFrame(
         [(5, [0.5] * D)], "id long, vec array<double>"
     )
@@ -550,10 +546,10 @@ def test_crash_before_rev_delta_write_heals_on_replay(
     art = str(tmp_path / "revcrash_art")
     init_graph_artifact(base, art, M0=M0, M1=M1)
 
-    def boom(*a, **kw):
-        raise OSError("simulated crash before the rev delta write")
-
-    monkeypatch.setattr(gi, "_write_rev_delta", boom)
+    _crash_at(
+        monkeypatch, "append", gi.REV,
+        "simulated crash before the rev delta write",
+    )
     with pytest.raises(OSError):
         upsert_graph_artifact(b1, art, refresh_factor=10.0)
     monkeypatch.undo()
@@ -594,7 +590,7 @@ def test_write_rev_delta_moves_every_part_file(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         DataFrame, "coalesce", lambda self, *a, **kw: self
     )
-    appended = gi._write_rev_delta(adds, dirty, str(tmp_path), 1, buckets=2)
+    appended = deltalog.append(gi.REV, str(tmp_path), 1, adds, dirty, buckets=2)
     monkeypatch.undo()
 
     adds_dir = os.path.join(str(tmp_path), "rev_delta", "adds")
@@ -602,7 +598,7 @@ def test_write_rev_delta_moves_every_part_file(spark, tmp_path, monkeypatch):
 
     parts = _glob.glob(os.path.join(adds_dir, "d1-*.parquet"))
     assert len(parts) > 2  # the multi-part layout actually materialized
-    got = spark.read.schema(gi.ADDS_SCHEMA).parquet(adds_dir)
+    got = spark.read.schema(gi.REV.adds_schema).parquet(adds_dir)
     assert got.count() == 64
     assert appended > 0
 
@@ -648,7 +644,7 @@ def test_fwd_delta_is_append_only_serving_resolves_and_folds(
     assert _recall(spark, q, vecs, edges, gt1) >= 0.8
 
     # force the fold: threshold 0 → the next upsert compacts FIRST
-    monkeypatch.setattr(gi, "REV_COMPACT_FACTOR", 0.0)
+    monkeypatch.setattr(deltalog, "COMPACT_FACTOR", 0.0)
     upd = spark.createDataFrame(
         [(5, [0.5] * D)], "id long, vec array<double>"
     )
@@ -676,10 +672,10 @@ def test_fwd_delta_is_append_only_serving_resolves_and_folds(
 def test_fwd_tombs_without_adds_serves_instead_of_throwing(
     spark, corpus, tmp_path
 ):
-    """The fwd-delta crash window: _write_edge_delta moves the global
-    tombstone file BEFORE the per-bucket adds, so a crash between the
-    two (or a batch whose merged adjacency is empty) leaves
-    fwd_delta/tombs populated with fwd_delta/adds absent. delta_empty
+    """The fwd-delta crash window: deltalog.append lands the global
+    tombstone file BEFORE the adds, so a crash between the two (or a
+    batch whose merged adjacency is empty) leaves fwd_delta/tombs
+    populated with fwd_delta/adds absent. delta_empty
     is then False, and an unguarded adds read would throw
     PATH_NOT_FOUND on EVERY serving read until the batch replays —
     the resolved view must instead read the adds as empty and keep
@@ -693,7 +689,7 @@ def test_fwd_tombs_without_adds_serves_instead_of_throwing(
     init_graph_artifact(base, art, M0=M0, M1=M1)
     assert upsert_graph_artifact(b1, art, refresh_factor=10.0) == "upsert"
 
-    fwd_adds, fwd_tombs = gi._fwd_delta_paths(art)
+    fwd_adds, fwd_tombs = deltalog.paths(gi.FWD, art)
     tomb_srcs = {
         r["src"]
         for r in spark.read.parquet(fwd_tombs).select("src").collect()
@@ -721,7 +717,7 @@ def _ivf_state(spark, art):
 
     return {
         (r["id"], tuple(r["vec"]))
-        for r in gi._ivf_live(spark, art).collect()
+        for r in deltalog.resolve(spark, gi.IVF, art).collect()
     }
 
 
@@ -806,7 +802,7 @@ def test_maintained_ivf_mirror_stays_in_sync_and_append_only(
     assert _ivf_state(spark, art) == pre
 
     # forced fold: delta subsumed into the base, state identical
-    monkeypatch.setattr(gi, "REV_COMPACT_FACTOR", 0.0)
+    monkeypatch.setattr(deltalog, "COMPACT_FACTOR", 0.0)
     upd2 = spark.createDataFrame(
         [(9, [0.75] * D)], "id long, vec array<double>"
     )
@@ -836,16 +832,10 @@ def test_ivf_mirror_crash_before_delta_append_heals_on_replay(
     art = str(tmp_path / "ivf_crash")
     init_graph_artifact(base, art, M0=M0, M1=M1, exact_base_limit=100)
 
-    real = gi._write_ivf_delta
-    calls = {"n": 0}
-
-    def boom(*a, **kw):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise OSError("simulated crash before the IVF delta append")
-        return real(*a, **kw)
-
-    monkeypatch.setattr(gi, "_write_ivf_delta", boom)
+    _crash_at(
+        monkeypatch, "append", gi.IVF,
+        "simulated crash before the IVF delta append", once=True,
+    )
     with pytest.raises(OSError):
         upsert_graph_artifact(
             b1, art, refresh_factor=10.0, exact_base_limit=100

@@ -11,7 +11,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from test_streaming_artifacts import _crash_at
 from vectordbindexing_spark.operators.dedup import minhash_dedup_pairs
+from vectordbindexing_spark.streaming import deltalog
 from vectordbindexing_spark.streaming.neardup import (
     init_neardup_artifact,
     neardup_stream,
@@ -169,10 +171,10 @@ def test_crash_between_sig_and_band_swap_heals_on_replay(
     art = str(tmp_path / "crash")
     init_neardup_artifact(base, art, buckets=16)
 
-    def boom(*a, **kw):
-        raise OSError("simulated crash before the bands delta append")
-
-    monkeypatch.setattr(nd, "_write_band_delta", boom)
+    _crash_at(
+        monkeypatch, "append", nd.BANDS,
+        "simulated crash before the bands delta append",
+    )
     with pytest.raises(OSError):
         upsert_neardup_artifact(b1, art)
     monkeypatch.undo()
@@ -211,10 +213,10 @@ def test_crash_on_UPDATE_heals_stale_bands_via_ledger_buckets(
     init_neardup_artifact(base, art, buckets=16)
     upd = spark.createDataFrame([(0, _text(7))], "doc_id long, text string")
 
-    def boom(*a, **kw):
-        raise OSError("simulated crash before the bands delta append")
-
-    monkeypatch.setattr(nd, "_write_band_delta", boom)
+    _crash_at(
+        monkeypatch, "append", nd.BANDS,
+        "simulated crash before the bands delta append",
+    )
     with pytest.raises(OSError):
         upsert_neardup_artifact(upd, art)
     monkeypatch.undo()
@@ -238,10 +240,10 @@ def test_pending_ids_absent_from_batch_heal_from_stored_sigs(
     art = str(tmp_path / "orphan")
     init_neardup_artifact(base, art, buckets=16)
 
-    def boom(*a, **kw):
-        raise OSError("simulated crash before the bands delta append")
-
-    monkeypatch.setattr(nd, "_write_band_delta", boom)
+    _crash_at(
+        monkeypatch, "append", nd.BANDS,
+        "simulated crash before the bands delta append",
+    )
     with pytest.raises(OSError):
         upsert_neardup_artifact(b1, art)
     monkeypatch.undo()
@@ -514,7 +516,7 @@ def test_bands_delta_is_append_only_and_compaction_folds(
     assert _state(spark, art) == _state(spark, ref)
 
     # force the fold: threshold 0 -> the next upsert compacts FIRST
-    monkeypatch.setattr(nd, "BAND_COMPACT_FACTOR", 0.0)
+    monkeypatch.setattr(deltalog, "COMPACT_FACTOR", 0.0)
     upsert_neardup_artifact(b2, art)
     monkeypatch.undo()
     # the fold consumed d1; the new batch appended d2 only
@@ -534,11 +536,11 @@ def test_bands_delta_is_append_only_and_compaction_folds(
 def test_band_tombs_without_adds_serves_instead_of_throwing(
     spark, docs, tmp_path
 ):
-    """The bands-delta crash window: _write_band_delta moves the global
-    did-tombstone file BEFORE the per-bucket adds, so a crash between
-    the two leaves bands_delta/tombs populated with bands_delta/adds
-    absent. delta_empty is then False, and an unguarded adds read
-    would throw PATH_NOT_FOUND on every bands_resolved / candidate
+    """The bands-delta crash window: deltalog.append lands the global
+    did-tombstone file BEFORE the adds, so a crash between the two
+    leaves bands_delta/tombs populated with bands_delta/adds absent.
+    delta_empty is then False, and an unguarded adds read would throw
+    PATH_NOT_FOUND on every bands_resolved / candidate
     probe until the batch replays — the resolved view must instead
     read the adds as empty and serve base − tombstoned dids."""
     import shutil
@@ -552,7 +554,7 @@ def test_band_tombs_without_adds_serves_instead_of_throwing(
     upd = spark.createDataFrame([(0, _text(7))], "doc_id long, text string")
     upsert_neardup_artifact(upd, art)
 
-    adds_dir, tombs_dir = nd._band_delta_paths(art)
+    adds_dir, tombs_dir = deltalog.paths(nd.BANDS, art)
     tomb_dids = {
         r["did"]
         for r in spark.read.parquet(tombs_dir).select("did").collect()

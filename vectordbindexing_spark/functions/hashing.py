@@ -173,6 +173,6 @@ def xxhash64_long_py(value: int, seed: int = 42) -> int:
 
 def bucket_of_py(value: int, n_buckets: int) -> int:
     """Python twin of the maintainers' ``pmod(xxhash64(key), B)``
-    bucket expression (graph_ingest._bucket_of / neardup._did_bucket):
+    bucket expression (streaming.deltalog.bucket over one id column):
     Python's ``%`` on a positive modulus already equals Spark's pmod."""
     return xxhash64_long_py(int(value)) % n_buckets

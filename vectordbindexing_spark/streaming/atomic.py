@@ -202,18 +202,6 @@ def recover_tree(artifact_path: str, partition_col: str = "bucket") -> int:
     return n
 
 
-def delta_empty(*dirs: str) -> bool:
-    """True iff none of the given delta-log dirs holds a parquet file —
-    a filesystem check, no Spark job (the LSM maintainers' fast path:
-    an empty log means the base alone is the resolved state)."""
-    for d in dirs:
-        if os.path.isdir(d):
-            for _root, _sub, files in os.walk(d):
-                if any(f.endswith(".parquet") for f in files):
-                    return False
-    return True
-
-
 def du_parquet(path: str) -> int:
     """Total parquet bytes under ``path`` — LSM fold triggers run on
     bytes (the actual IO cost driver), and sizing from the filesystem
@@ -253,40 +241,6 @@ def read_meta(path: str, fmt: int) -> dict:
     return meta
 
 
-def write_local_parquet(rows: list, schema, path: str) -> int:
-    """DRIVER-LOCAL rows → one parquet file at ``path``, no Spark job.
-
-    The LSM delta appends are |batch|-bounded BY DESIGN (each
-    maintainer already classifies its micro-batch driver-side from one
-    bounded collect), yet every append paid a full Spark job — write
-    tasks, commit protocol, temp-dir listing — per tiny file, and the
-    per-job fixed latency (~0.3-0.5 s at local[32]) dominated upsert
-    wall-clock at micro-batch sizes. Writing the rows straight through
-    pyarrow keeps the bytes identical for Spark readers (the delta
-    readers pass an explicit read schema, so only parquet physical
-    types matter) and costs milliseconds. This layer is already
-    local-filesystem-only (os.rename swaps, os.listdir recovery), so a
-    driver-side file write introduces no new deployment constraint.
-    Returns bytes written (the fold-trigger accounting)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType, _parse_datatype_string
-
-    st = (
-        schema
-        if isinstance(schema, StructType)
-        else _parse_datatype_string(schema)
-    )
-    asch = to_arrow_schema(st)
-    cols = list(zip(*rows)) if rows else [[] for _ in asch]
-    arrays = [pa.array(list(c), type=f.type) for c, f in zip(cols, asch)]
-    table = pa.Table.from_arrays(arrays, schema=asch)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    pq.write_table(table, path)
-    return os.path.getsize(path)
-
-
 def count_parquet_rows(path: str) -> int:
     """Row count of a parquet dir from file FOOTERS — a driver-side
     metadata read (no Spark job) for the maintainers' post-swap counts
@@ -301,28 +255,3 @@ def count_parquet_rows(path: str) -> int:
             if f.endswith(".parquet"):
                 total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
     return total
-
-
-def append_local_delta(
-    adds_dir: str,
-    tombs_dir: str,
-    seq: int,
-    tomb_rows: list,
-    tomb_schema,
-    add_rows: list,
-    add_schema,
-) -> int:
-    """Append one batch to an LSM delta log from DRIVER-LOCAL rows: the
-    tombstone file ``tombs/d<seq>.parquet`` FIRST (every add of this
-    seq that lands is then already covered by its same-seq tombstone
-    rule), then ``adds/d<seq>-0.parquet``. Each file is written to a
-    hidden temp name and renamed into place, and both carry the batch's
-    seq, so a crash replay overwrites its own attempt. Returns bytes
-    appended (the fold-trigger accounting)."""
-    tmp_t = os.path.join(tombs_dir, f".d{seq}.parquet.tmp")
-    tmp_a = os.path.join(adds_dir, f".d{seq}-0.parquet.tmp")
-    appended = write_local_parquet(tomb_rows, tomb_schema, tmp_t)
-    os.replace(tmp_t, os.path.join(tombs_dir, f"d{seq}.parquet"))
-    appended += write_local_parquet(add_rows, add_schema, tmp_a)
-    os.replace(tmp_a, os.path.join(adds_dir, f"d{seq}-0.parquet"))
-    return appended

@@ -1,62 +1,42 @@
 """Streaming upsert into a persisted two-layer GRAPH serving artifact
 (reference study: `hnsw_insert.ipynb`, +1%…+10% incremental inserts).
 
-State layout under ``index_dir`` (each bucket dir swapped crash-safely
-via streaming/atomic.py, so a crash at any point leaves a servable
-artifact):
+State layout under ``index_dir`` (each dir swapped crash-safely via
+streaming/atomic.py, so a crash at any point leaves a servable
+artifact; the three ``*_delta/`` dirs are LSM delta logs — one design,
+described in streaming/deltalog.py):
 
 * ``vectors``  — parquet partitioned by ``bucket = pmod(xxhash64(id),
   B)``: (id, vec), the full current corpus
-* ``edges``    — the serving graph BASE, parquet partitioned by
-  ``bucket = pmod(xxhash64(src), B)``: (layer, src, dst, dist) with a
-  fold-watermark ``seq`` after the first fold
-* ``fwd_delta/`` — the serving graph's LSM delta log (r11: the
-  forward dirty-bucket swap measured 91% of the artifact rewritten
-  per 1000-node update batch at 2M — the dirty set is
-  |batch|·2·M0 + losers srcs, which saturates any bucket count).
-  Same design as rev_delta but bucketed by SRC; serving resolves
-  base ∪ adds − src-tombstones (``edges_resolved``), and the log
-  folds into the base past REV_COMPACT_FACTOR and at every rebuild
-* ``rev_edges``— the inverted adjacency BASE, partitioned by
-  ``bucket = pmod(xxhash64(dst), B)`` with a fold-watermark ``seq``
-  column. Every dst-side probe (who points AT this node?)
-  partition-prunes here instead of scanning the whole src-bucketed
-  artifact — without it each micro-batch paid two O(E) scans (the
-  replaced-id "losers" probe and the dirty-dst candidate scan), the
-  r09 scale soft spot.
-* ``rev_delta/`` — the mirror's LSM-style delta log (the r10 fix for
-  the mirror's write amplification: rewriting dirty rev buckets cost
-  a third dirty-fraction swap per batch, measured at ~+50% upsert
-  wall-clock at 500k). ``adds/d<seq>-<i>.parquet`` holds one batch's
-  merged dirty adjacency as a dst-bucket-sorted flat file (``bucket``
-  rides as a data column and row-group stats carry the pruning; every
-  writer part file is moved — AQE may split one);
-  ``tombs/d<seq>.parquet`` is a GLOBAL per-batch tombstone file of
-  that batch's dirty srcs. Resolution (``_rev_live``): a row is live
-  iff no newer src-tombstone exists (``row.seq >= tseq`` keeps a
-  batch's own re-adds); src-level global tombstones need no
-  per-bucket coverage, so replay-divergent recomputes (kNN edge sets
-  that differ in the last distance ulp between attempts) cannot
-  strand stale adds. Probes filter by their broadcast dst set BEFORE
-  resolution, so the resolve join is probe-sized. The log folds back
-  into the base when it outgrows REV_COMPACT_FACTOR x the base rows,
-  and for free at every rebuild; a half-finished fold is exact (base
-  keeps each row's seq, duplicates between base and a not-yet-removed
-  delta are identical payloads deduped on key).
+* ``edges`` + ``fwd_delta/`` — the serving graph (layer, src, dst,
+  dist), bucketed by src, and its :data:`FWD` log (r11: the forward
+  dirty-bucket swap rewrote 91% of the artifact per 1000-node update
+  batch at 2M — the dirty set |batch|·2·M0 + losers saturates any
+  bucket count). Serving reads :func:`edges_resolved`.
+* ``rev_edges`` + ``rev_delta/`` — the inverted adjacency, bucketed by
+  dst, and its :data:`REV` log. Every dst-side probe (who points AT
+  this node?) partition-prunes here instead of scanning the whole
+  src-bucketed artifact — without it each micro-batch paid two O(E)
+  scans, the r09 scale soft spot; rewriting its dirty buckets instead
+  of logging cost ~+50% upsert wall-clock at 500k (r10).
+* ``ivf_centroids``, ``ivf_cells`` + ``ivf_delta/`` — the IVF mirror
+  that serves the batch kNN past the exact limit (block comment above
+  :data:`IVF`).
 * ``meta.json``— {format, n_at_rebuild, n_live, build params, buckets,
-  pending}; written atomically (write-temp + os.replace) so a crash
-  mid-dump can never brick the artifact. ``format`` stamps the on-disk
-  layout above: an artifact without the current :data:`FORMAT` fails
-  to load (atomic.read_meta) instead of being misread — re-run init.
+  pending, per-log byte counters}; written atomically (write-temp +
+  os.replace) so a crash mid-dump can never brick the artifact.
+  ``format`` stamps the on-disk layout above: an artifact without the
+  current :data:`FORMAT` fails to load (atomic.read_meta) instead of
+  being misread — re-run init.
 
 Per micro-batch (:func:`upsert_graph_artifact`):
 
 1. kNN edges of the NEW nodes against (stored ∪ batch) — below
    ``exact_base_limit`` one blocked exact pass (O(n·|B|), the
    per-insert cost of the reference's `add_items_batch` amortized over
-   the batch, hnsw_cosine_norm.py:480-580); past it the pass dispatches
-   through ``plans.knn_planner.knn`` (the mine_triplets treatment), so
-   a 100 TB corpus pays an IVF/IVF-PQ probe, not a full scan. Layer-1
+   the batch, hnsw_cosine_norm.py:480-580); past it the pass reads the
+   maintained IVF mirror (:func:`_ivf_artifact_knn`), so a 100 TB
+   corpus pays a probe-pruned cell read, not a full scan. Layer-1
    edges likewise over the level≥1 subset (level assignment is a
    deterministic function of the id, graph.py:26, so stored nodes keep
    their levels without re-reading anything).
@@ -128,22 +108,26 @@ test), which is the "upserted serving ≡ full rebuild" anchor.
 from __future__ import annotations
 
 import os
+import shutil
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from vectordbindexing_spark.plans.partitioning import local_rows_df
+from vectordbindexing_spark.streaming import deltalog
 from vectordbindexing_spark.streaming.atomic import (
-    append_local_delta,
-    delta_empty,
+    count_parquet_rows,
     du_parquet,
     read_meta,
+    recover,
     recover_tree,
     swap_in,
     swap_in_buckets,
     write_json_atomic,
 )
+from vectordbindexing_spark.streaming.deltalog import bucket
 
 #: on-disk layout version stamped into meta.json at init; bump it on
 #: any layout change so older artifacts fail to load instead of being
@@ -167,20 +151,6 @@ EDGE_SCHEMA = "layer int, src long, dst long, dist double"
 DEFAULT_BUCKETS = 1024
 
 
-def _parallel_swaps(*thunks) -> None:
-    """Run independent artifact writes concurrently (guide §2.6): each
-    swap_in is its own job chain on a distinct path, so overlapping
-    them back-fills the tail of one write with the next one's tasks.
-    Callers keep the VECTORS swap sequential-first where the crash
-    contract needs vectors ⊇ edge endpoints; only the order-free writes
-    go through here."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        for f in [pool.submit(t) for t in thunks]:
-            f.result()
-
-
 def _paths(index_dir: str) -> tuple[str, str, str, str]:
     return (
         os.path.join(index_dir, "vectors"),
@@ -188,10 +158,6 @@ def _paths(index_dir: str) -> tuple[str, str, str, str]:
         os.path.join(index_dir, "rev_edges"),
         os.path.join(index_dir, "meta.json"),
     )
-
-
-def _bucket_of(col: str, n_buckets: int):
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
 
 
 def _build_params(M0: int, M1: int, M_level: int, metric: str) -> dict:
@@ -202,365 +168,55 @@ def _ids_df(spark: SparkSession, ids: list) -> DataFrame:
     return local_rows_df(spark, [(int(i),) for i in ids], "id long")
 
 
-#: compact the rev delta log back into its base once the accumulated
-#: delta rows exceed this fraction of the base (bounds probe-side read
-#: amplification; the fold also happens for free at every rebuild)
-REV_COMPACT_FACTOR = 0.25
-
 #: Bounded-collect gate for the incremental upsert's merged dirty
 #: adjacency: mutualize caps it at |dirty| · 2 layers · max_degree
 #: rows (a deterministic bound computed driver-side), and under this
 #: many rows (~64 MB of edge tuples — the CC gate's scale) the rows
-#: collect so the delta footprints and BOTH delta appends run driver-
-#: side (see _write_edge_delta_local). Past it the distributed
-#: checkpoint + Spark writers run unchanged.
+#: collect so the delta footprints and BOTH edge-log appends run
+#: driver-side through pyarrow. Past it the distributed checkpoint +
+#: Spark writers run unchanged.
 MERGED_LOCAL_LIMIT = 2_000_000
 
-ADDS_SCHEMA = "layer int, src long, dst long, dist double, seq long, bucket int"
-TOMBS_SCHEMA = "src long, seq long"
-
-
-def _delta_paths(index_dir: str) -> tuple[str, str]:
-    root = os.path.join(index_dir, "rev_delta")
-    return os.path.join(root, "adds"), os.path.join(root, "tombs")
-
-
-def _fwd_delta_paths(index_dir: str) -> tuple[str, str]:
-    root = os.path.join(index_dir, "fwd_delta")
-    return os.path.join(root, "adds"), os.path.join(root, "tombs")
-
-
-def _fwd_live(
-    spark: SparkSession,
-    index_dir: str,
-    bkts: list | None = None,
-    src_df: DataFrame | None = None,
-    keep_seq: bool = False,
-) -> DataFrame:
-    """Resolved live FORWARD adjacency rows (layer, src, dst, dist):
-    base ∪ fwd_delta adds, minus rows superseded by a newer
-    src-tombstone (``row.seq >= tseq`` keeps a batch's own re-adds) —
-    the rev_delta LSM design applied to the serving-side artifact (the
-    r11 2M measurement showed the forward dirty-bucket swap rewriting
-    91% of the artifact per 1000-node update batch: the dirty set is
-    batch·(2·M0)+losers srcs, which saturates any bucket count).
-    ``bkts`` partition-prunes base and adds (both are src-bucketed, so
-    one list serves both); ``src_df`` (a (src) frame) semi-joins BEFORE
-    resolution so the join work is probe-sized. An empty or absent log
-    resolves to the base alone."""
-    _, edge_path, _, _ = _paths(index_dir)
-    adds_dir, tombs_dir = _fwd_delta_paths(index_dir)
-    base = spark.read.parquet(edge_path)
-    # init and rebuild write the base without seq; only a fold adds it
-    if "seq" not in base.columns:
-        base = base.withColumn("seq", F.lit(0).cast("long"))
-    if bkts is not None:
-        base = base.where(F.col("bucket").isin(bkts))
-    cols = ["layer", "src", "dst", "dist", "seq"]
-    keep = cols if keep_seq else cols[:4]
-    if delta_empty(adds_dir, tombs_dir):
-        rows = base.select(*cols)
-        if src_df is not None:
-            rows = rows.join(F.broadcast(src_df), "src", "left_semi")
-        return rows.select(*keep)
-    # guarded reads: _write_edge_delta moves the tombstone file BEFORE
-    # the adds, so a crash in that window (or an empty merged adjacency)
-    # leaves tombs-present/adds-missing — read each side as empty when
-    # its dir is absent instead of throwing PATH_NOT_FOUND at serving
-    adds = _read_adds(spark, adds_dir)
-    if bkts is not None:
-        adds = adds.where(F.col("bucket").isin(bkts))
-    rows = base.select(*cols).unionByName(adds.select(*cols))
-    if src_df is not None:
-        rows = rows.join(F.broadcast(src_df), "src", "left_semi")
-    tombs = _read_tomb_max(spark, tombs_dir)
-    live = (
-        rows.join(tombs, "src", "left")
-        .where(F.col("tseq").isNull() | (F.col("seq") >= F.col("tseq")))
-        .dropDuplicates(["layer", "src", "dst"])
-    )
-    return live.select(*keep)
+#: the serving graph's log: src-bucketed like its base, src-tombstoned
+#: (a batch rewrites each dirty src's whole adjacency)
+FWD = deltalog.LogSpec(
+    base="edges",
+    root="fwd_delta",
+    cols=("layer", "src", "dst", "dist"),
+    key="src",
+    dedup=("layer", "src", "dst"),
+    part="bucket",
+    bucket_by=("src",),
+    adds_schema="layer int, src long, dst long, dist double, seq long, "
+    "bucket int",
+    tombs_schema="src long, seq long",
+    meta_prefix="fwd_",
+)
+#: the inverted adjacency's log: the same rows bucketed by dst, the
+#: dst-side probes' key; still src-tombstoned
+REV = replace(
+    FWD, base="rev_edges", root="rev_delta", bucket_by=("dst",),
+    meta_prefix="rev_",
+)
 
 
 def edges_resolved(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The full live forward adjacency (serving + test surface) —
-    base ∪ fwd delta, resolved."""
-    return _fwd_live(spark, index_dir)
-
-
-def _read_adds(spark: SparkSession, adds_dir: str) -> DataFrame:
-    if not os.path.isdir(adds_dir):
-        return spark.createDataFrame([], ADDS_SCHEMA)
-    return spark.read.schema(ADDS_SCHEMA).parquet(adds_dir)
-
-
-def _read_tomb_max(spark: SparkSession, tombs_dir: str) -> DataFrame:
-    """(src, tseq): the newest tombstone per dirtied src. Tombstones
-    are GLOBAL (one tiny file per batch, rows = that batch's dirty
-    srcs): a src-level kill needs no per-bucket coverage, which is
-    what makes replay-divergent batches (kNN edge sets that differ in
-    the last ulp between attempts) safe — any stale add of a dirty src
-    dies regardless of which dst bucket it landed in."""
-    if not os.path.isdir(tombs_dir):
-        return spark.createDataFrame([], "src long, tseq long")
-    return (
-        spark.read.schema(TOMBS_SCHEMA).parquet(tombs_dir)
-        .groupBy("src").agg(F.max("seq").alias("tseq"))
-    )
-
-
-def _rev_live(
-    spark: SparkSession,
-    index_dir: str,
-    bkts: list | None = None,
-    dst_df: DataFrame | None = None,
-    keep_seq: bool = False,
-) -> DataFrame:
-    """Resolved live inverted-adjacency rows (layer, src, dst, dist):
-    base ∪ delta adds, minus rows superseded by a newer src tombstone
-    (``row.seq >= tseq`` keeps a batch's own re-adds). ``bkts``
-    partition-prunes both reads; ``dst_df`` (a (dst) frame) semi-joins
-    BEFORE resolution so the join work is probe-sized, never
-    slice-sized — dst is part of every row, so the filter keeps whole
-    src-group slices intact per bucket. The final key-dedup only fires
-    on rows duplicated between a half-compacted base and a not-yet-
-    removed delta (identical payloads, so keeping either is exact)."""
-    _, _, rev_path, _ = _paths(index_dir)
-    adds_dir, tombs_dir = _delta_paths(index_dir)
-    base = spark.read.parquet(rev_path)
-    if bkts is not None:
-        base = base.where(F.col("bucket").isin(bkts))
-    cols = ["layer", "src", "dst", "dist", "seq"]
-    keep = cols if keep_seq else ["layer", "src", "dst", "dist"]
-    if delta_empty(adds_dir, tombs_dir):
-        # empty log (right after init/rebuild/fold — and the state every
-        # probe of a batch's FIRST post-compaction upsert sees): the
-        # base alone is the resolved mirror, so skip the union, the
-        # tombstone join and the key-dedup shuffle entirely
-        rows = base.select(*cols)
-        if dst_df is not None:
-            rows = rows.join(F.broadcast(dst_df), "dst", "left_semi")
-        return rows.select(*keep)
-    adds = _read_adds(spark, adds_dir)
-    if bkts is not None:
-        adds = adds.where(F.col("bucket").isin(bkts))
-    rows = base.select(*cols).unionByName(adds.select(*cols))
-    if dst_df is not None:
-        rows = rows.join(F.broadcast(dst_df), "dst", "left_semi")
-    live = (
-        rows.join(_read_tomb_max(spark, tombs_dir), "src", "left")
-        .where(F.col("tseq").isNull() | (F.col("seq") >= F.col("tseq")))
-        .dropDuplicates(["layer", "src", "dst"])
-    )
-    return live.select(*keep)
+    """The full live forward adjacency (serving + test surface)."""
+    return deltalog.resolve(spark, FWD, index_dir)
 
 
 def rev_edges_resolved(spark: SparkSession, index_dir: str) -> DataFrame:
     """The full live inverted adjacency (test/inspection surface) —
-    must always equal the forward ``edges`` artifact row-for-row."""
-    return _rev_live(spark, index_dir)
-
-
-def _write_rev_delta(
-    adds,
-    dirty_src,
-    index_dir: str,
-    seq: int,
-    buckets: int,
-) -> int:
-    """Append one batch's rev delta (adds bucketed by DST — the
-    mirror's probe key). ``adds``/``dirty_src`` are either DataFrames
-    (the distributed route — :func:`_write_edge_delta`) or driver-local
-    [(layer, src, dst, dist)] rows + an id list (the
-    MERGED_LOCAL_LIMIT route — :func:`_write_edge_delta_local`, no
-    Spark jobs). One entry point for both routes so the crash-matrix
-    tests' injection covers whichever executes."""
-    adds_dir, tombs_dir = _delta_paths(index_dir)
-    if isinstance(adds, list):
-        return _write_edge_delta_local(
-            adds, dirty_src, adds_dir, tombs_dir, seq, buckets, "dst"
-        )
-    return _write_edge_delta(
-        adds, dirty_src, os.path.join(index_dir, "rev_delta.__tmp__"),
-        adds_dir, tombs_dir, seq, buckets, "dst",
-    )
-
-
-def _write_fwd_delta(
-    adds,
-    dirty_src,
-    index_dir: str,
-    seq: int,
-    buckets: int,
-) -> int:
-    """Append one batch's FORWARD delta (adds bucketed by SRC — the
-    serving key). Same dual routes as :func:`_write_rev_delta`."""
-    adds_dir, tombs_dir = _fwd_delta_paths(index_dir)
-    if isinstance(adds, list):
-        return _write_edge_delta_local(
-            adds, dirty_src, adds_dir, tombs_dir, seq, buckets, "src"
-        )
-    return _write_edge_delta(
-        adds, dirty_src, os.path.join(index_dir, "fwd_delta.__tmp__"),
-        adds_dir, tombs_dir, seq, buckets, "src",
-    )
-
-
-def _write_edge_delta_local(
-    add_rows: list,
-    dirty_ids: list,
-    adds_dir: str,
-    tombs_dir: str,
-    seq: int,
-    buckets: int,
-    bucket_col: str,
-) -> int:
-    """:func:`_write_edge_delta` for DRIVER-LOCAL add rows
-    [(layer, src, dst, dist)] — the r13 fold: the incremental upsert's
-    merged dirty adjacency is |batch|·degree-bounded and already
-    collected under the MERGED_LOCAL_LIMIT gate, so both parquet
-    appends (the global tombstone file, then the bucket-sorted flat
-    adds file) are written straight through pyarrow
-    (atomic.append_local_delta) instead of paying a Spark job each —
-    four fixed-latency jobs per micro-batch become driver-side
-    millisecond writes. Bucket values come from the pinned xxhash64
-    twin (bucket_of_py ≡ _bucket_of bit-for-bit), so probe-side
-    pruning sees identical values. Returns bytes appended."""
-    from vectordbindexing_spark.functions.hashing import bucket_of_py
-
-    key = 1 if bucket_col == "src" else 2
-    staged = sorted(
-        (
-            (int(r[0]), int(r[1]), int(r[2]), float(r[3]), int(seq),
-             bucket_of_py(r[key], buckets))
-            for r in add_rows
-        ),
-        key=lambda t: t[5],
-    )
-    return append_local_delta(
-        adds_dir, tombs_dir, seq,
-        [(int(i), int(seq)) for i in dirty_ids], TOMBS_SCHEMA,
-        staged, ADDS_SCHEMA,
-    )
-
-
-def _write_edge_delta(
-    adds: DataFrame,
-    dirty_src: DataFrame,
-    tmp: str,
-    adds_dir: str,
-    tombs_dir: str,
-    seq: int,
-    buckets: int,
-    bucket_col: str,
-) -> int:
-    """Append one batch's edge delta: ``adds`` (the batch's merged
-    dirty adjacency) as a FEW bucket-sorted flat parquet files (bucket
-    rides as a data column; row-group stats carry the probe pruning)
-    plus one global tombstone file of the dirty srcs, every file named
-    d<seq> so a crash replay OVERWRITES its own attempt instead of
-    duplicating it. Write I/O is |adds| + |dirty| rows — never a bucket
-    rewrite; that is the point of the log. Returns the bytes appended
-    (the fold-trigger accounting, measured off the moved files so it
-    costs no extra Spark job)."""
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        adds.withColumn("seq", F.lit(seq).cast("long"))
-        .withColumn("bucket", _bucket_of(bucket_col, buckets))
-        .coalesce(1)
-        .sortWithinPartitions("bucket")
-        .write.parquet(os.path.join(tmp, "adds"))
-    )
-    (
-        dirty_src.select(
-            F.col("id").alias("src"), F.lit(seq).cast("long").alias("seq")
-        )
-        .coalesce(1)
-        .write.parquet(os.path.join(tmp, "tombs"))
-    )
-    appended = _move_delta_files(tmp, adds_dir, tombs_dir, seq)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return appended
-
-
-def _move_delta_files(
-    tmp: str, adds_dir: str, tombs_dir: str, seq: int
-) -> int:
-    """Move one written delta attempt (``tmp/{adds,tombs}``) into the
-    live log: the tombstone FIRST (if the add-move loop dies midway,
-    every landed add of this seq is already covered by its same-seq
-    tombstone rule), then every add part file under distinct
-    d<seq>-<i> names (coalesce normally yields ONE part, but AQE/config
-    variation may split it — dropping parts [1:] would silently lose
-    delta rows; the pre-clear matches every d<seq>-<i> so a replay
-    still overwrites the whole attempt). Returns bytes appended (the
-    fold-trigger accounting — filesystem sizes, no extra Spark job)."""
-    tname = [
-        f for f in os.listdir(os.path.join(tmp, "tombs"))
-        if f.endswith(".parquet")
-    ][0]
-    os.makedirs(tombs_dir, exist_ok=True)
-    appended = os.path.getsize(os.path.join(tmp, "tombs", tname))
-    os.replace(
-        os.path.join(tmp, "tombs", tname),
-        os.path.join(tombs_dir, f"d{seq}.parquet"),
-    )
-    parts = sorted(
-        f for f in os.listdir(os.path.join(tmp, "adds"))
-        if f.endswith(".parquet")
-    )
-    os.makedirs(adds_dir, exist_ok=True)
-    for i, part in enumerate(parts):
-        appended += os.path.getsize(os.path.join(tmp, "adds", part))
-        os.replace(
-            os.path.join(tmp, "adds", part),
-            os.path.join(adds_dir, f"d{seq}-{i}.parquet"),
-        )
-    return appended
-
-
-def _pre_clear_delta(adds_dir: str, tombs_dir: str, seq: int) -> None:
-    """Remove a crashed attempt's delta files (``adds/d<seq>-<i>`` and
-    ``tombs/d<seq>``) before its replay's probes run: the probes must
-    see the PRE-batch log, and the replay's own recompute (which may
-    differ from the crashed attempt in the last distance ulp) rewrites
-    the same names. Never a bare d<seq>* glob — it would also match
-    d<seq>0…"""
-    if os.path.isdir(adds_dir):
-        for f in os.listdir(adds_dir):
-            if f.startswith(f"d{seq}-") and f.endswith(".parquet"):
-                os.remove(os.path.join(adds_dir, f))
-    f = os.path.join(tombs_dir, f"d{seq}.parquet")
-    if os.path.exists(f):
-        os.remove(f)
-
-
-def _clear_rev_delta(index_dir: str) -> None:
-    import shutil
-
-    shutil.rmtree(os.path.join(index_dir, "rev_delta"), ignore_errors=True)
-    shutil.rmtree(
-        os.path.join(index_dir, "rev_delta.__tmp__"), ignore_errors=True
-    )
-
-
-def _clear_fwd_delta(index_dir: str) -> None:
-    import shutil
-
-    shutil.rmtree(os.path.join(index_dir, "fwd_delta"), ignore_errors=True)
-    shutil.rmtree(
-        os.path.join(index_dir, "fwd_delta.__tmp__"), ignore_errors=True
-    )
+    must always equal the forward adjacency row-for-row."""
+    return deltalog.resolve(spark, REV, index_dir)
 
 
 # --------------------------------------------------------------- IVF artifact
 #
 # The maintained IVF artifact that makes the past-exact-limit batch kNN
 # an nprobe/nlist-PRUNED read instead of an O(corpus) fit+assign per
-# micro-batch (the r11 2M measurement's residual floor: the planner
-# route re-fit centroids and re-assigned every stored row each batch).
+# micro-batch (the r11 2M measurement's residual floor: re-fitting
+# centroids and re-assigning every stored row each batch).
 #
 # * ``ivf_centroids`` — (cid, cvec) parquet, fitted at init/rebuild on
 #   the bounded deterministic sample (ivf.kmeans_fit), FROZEN between
@@ -571,121 +227,28 @@ def _clear_fwd_delta(index_dir: str) -> None:
 #   cells its queries probe. This is the classic second copy every IVF
 #   serving artifact keeps; the graph artifact pays it to stop
 #   re-deriving the assignment per batch.
-# * ``ivf_delta/`` — the cells mirror's LSM delta log (same design as
-#   rev/fwd: per-seq cell-sorted flat adds ``d<seq>-0.parquet`` + ONE
-#   global id-tombstone file per batch; ``row.seq >= tseq`` keeps a
-#   batch's own re-adds). Batch rows are assigned driver-side
-#   (|batch|·nlist flops) and appended — never a cell rewrite. Folds
-#   past REV_COMPACT_FACTOR and for free at every rebuild.
+# * ``ivf_delta/`` — the cells mirror's :data:`IVF` log, id-tombstoned.
+#   Batch rows are assigned driver-side (|batch|·nlist flops) and
+#   appended — never a cell rewrite.
 
-IVF_ADDS_SCHEMA = "id long, vec array<double>, seq long, cell int"
-IVF_TOMBS_SCHEMA = "id long, seq long"
+IVF = deltalog.LogSpec(
+    base="ivf_cells",
+    root="ivf_delta",
+    cols=("id", "vec", "cell"),
+    key="id",
+    dedup=("id",),
+    part="cell",
+    bucket_by=(),
+    adds_schema="id long, vec array<double>, seq long, cell int",
+    tombs_schema="id long, seq long",
+    meta_scope="ivf",
+)
 
 
 def _ivf_paths(index_dir: str) -> tuple[str, str]:
     return (
-        os.path.join(index_dir, "ivf_cells"),
+        os.path.join(index_dir, IVF.base),
         os.path.join(index_dir, "ivf_centroids"),
-    )
-
-
-def _ivf_delta_paths(index_dir: str) -> tuple[str, str]:
-    root = os.path.join(index_dir, "ivf_delta")
-    return os.path.join(root, "adds"), os.path.join(root, "tombs")
-
-
-def _ivf_live(
-    spark: SparkSession,
-    index_dir: str,
-    cells: list | None = None,
-    keep_seq: bool = False,
-) -> DataFrame:
-    """Resolved live IVF-cell rows (id, vec, cell): base ∪ delta adds,
-    minus rows superseded by a newer id-tombstone (``row.seq >= tseq``
-    keeps a batch's own re-adds). ``cells`` partition-prunes base and
-    adds to the probed cells. Both delta sides read as empty when their
-    dir is missing (the tombstone lands first — same crash window as
-    the fwd/rev logs)."""
-    cells_path, _ = _ivf_paths(index_dir)
-    adds_dir, tombs_dir = _ivf_delta_paths(index_dir)
-    base = spark.read.parquet(cells_path)
-    if cells is not None:
-        base = base.where(F.col("cell").isin(cells))
-    cols = ["id", "vec", "cell", "seq"]
-    keep = cols if keep_seq else cols[:3]
-    if delta_empty(adds_dir, tombs_dir):
-        return base.select(*keep)
-    if os.path.isdir(adds_dir):
-        adds = spark.read.schema(IVF_ADDS_SCHEMA).parquet(adds_dir)
-    else:
-        adds = spark.createDataFrame([], IVF_ADDS_SCHEMA)
-    if cells is not None:
-        adds = adds.where(F.col("cell").isin(cells))
-    if os.path.isdir(tombs_dir):
-        tombs = (
-            spark.read.schema(IVF_TOMBS_SCHEMA).parquet(tombs_dir)
-            .groupBy("id").agg(F.max("seq").alias("tseq"))
-        )
-    else:
-        tombs = spark.createDataFrame([], "id long, tseq long")
-    # every live tombstone is NEWER than every base row (a fold clears
-    # the log, so surviving tombstones postdate the fold watermark any
-    # folded row carries): the base side resolves with a broadcast
-    # anti-join on the tombstoned ids — never a corpus-wide shuffle
-    # (the first cut's dropDuplicates(id) re-shuffled ~the whole
-    # mirror per batch kNN once the delta was non-empty). The
-    # broadcast is forced only while the tombstone log is small
-    # (it folds at REV_COMPACT_FACTOR x base, but guard anyway).
-    tomb_ids = tombs.select("id")
-    if du_parquet(tombs_dir) < 64 * 1024 * 1024:
-        tomb_ids = F.broadcast(tomb_ids)
-        tombs = F.broadcast(tombs)
-    live_base = base.select(*cols).join(tomb_ids, "id", "left_anti")
-    # the adds side is |delta|-bounded: drop adds superseded by a
-    # newer tombstone (row.seq >= tseq keeps a batch's own re-adds),
-    # then keep the newest re-add per id
-    w = Window.partitionBy("id").orderBy(F.col("seq").desc())
-    surv = (
-        adds.select(*cols)
-        .join(tombs, "id", "left")
-        .where(F.col("tseq").isNull() | (F.col("seq") >= F.col("tseq")))
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(*cols)
-    )
-    return live_base.unionByName(surv).select(*keep)
-
-
-def _clear_ivf_delta(index_dir: str) -> None:
-    import shutil
-
-    shutil.rmtree(os.path.join(index_dir, "ivf_delta"), ignore_errors=True)
-    shutil.rmtree(
-        os.path.join(index_dir, "ivf_delta.__tmp__"), ignore_errors=True
-    )
-
-
-def _write_ivf_delta(
-    add_rows: list, index_dir: str, seq: int
-) -> int:
-    """Append one batch's IVF-cell delta from DRIVER-LOCAL rows
-    [(id, vec, cell)] (the upsert classifies and assigns the batch
-    driver-side, so no distributed input exists to begin with): the
-    global id-tombstone file first, then one cell-sorted d<seq> adds
-    file, both through pyarrow — no Spark jobs. Write I/O ∝ |batch|
-    rows. Returns bytes appended."""
-    adds_dir, tombs_dir = _ivf_delta_paths(index_dir)
-    staged = sorted(
-        (
-            (int(i), [float(x) for x in v], int(seq), int(c))
-            for i, v, c in add_rows
-        ),
-        key=lambda t: t[3],  # cell-sorted: row-group stats prune
-    )
-    return append_local_delta(
-        adds_dir, tombs_dir, seq,
-        [(int(i), int(seq)) for i, _, _ in add_rows], IVF_TOMBS_SCHEMA,
-        staged, IVF_ADDS_SCHEMA,
     )
 
 
@@ -758,7 +321,7 @@ def _build_ivf_artifact(
         ),
         cells_path, coalesce=None, partition_by=["cell"],
     )
-    _clear_ivf_delta(index_dir)
+    deltalog.clear(IVF, index_dir)
     return {
         "nlist": int(nlist),
         "base_bytes": du_parquet(cells_path),
@@ -782,7 +345,6 @@ def _ivf_artifact_knn(
     k: int,
     metric: str,
     layer: int,
-    nprobe: int | None = None,
     level_min: int | None = None,
     M_level: int = 16,
 ) -> DataFrame:
@@ -813,7 +375,7 @@ def _ivf_artifact_knn(
     )
 
     C = _load_ivf_centroids(spark, index_dir)
-    npb = nprobe if nprobe is not None else max(1, len(C) // 8)
+    npb = max(1, len(C) // 8)
     if level_min is not None:
         q_rows = [
             (i, v) for i, v in q_rows
@@ -831,7 +393,7 @@ def _ivf_artifact_knn(
     # artifact row is stale for updates and a duplicate for re-adds —
     # the authoritative row comes in through cand_local)
     excluded = _ids_df(spark, [i for i, _ in batch_rows])
-    art = _ivf_live(spark, index_dir, cells=probed).join(
+    art = deltalog.resolve(spark, IVF, index_dir, parts=probed).join(
         F.broadcast(excluded), "id", "left_anti"
     )
     if level_min is not None:
@@ -865,8 +427,9 @@ def _ivf_artifact_knn(
         "id long, vec array<double>, cell int",
     )
     cand = art.select("id", "vec", "cell").unionByName(cand_local)
-    # k+1 overfetch + self-drop + re-rank: the same convention as the
-    # planner branch of _knn_edges, so route flips never change degree
+    # k+1 overfetch + self-drop + re-rank per qid: a route that misses
+    # the query itself must still keep exactly k, never one over the
+    # layer degree cap the exact route keeps
     raw = ivf_cells_knn(cand, qids, Q, C, k + 1, npb, metric).where(
         F.col("neighbor_id") != F.col("qid")
     )
@@ -884,10 +447,53 @@ def _ivf_artifact_knn(
     )
 
 
-def _default_exact_limit() -> int:
-    from vectordbindexing_spark.plans.knn_planner import EXACT_BASE_LIMIT
+def _bulk_write(
+    spark: SparkSession, vecs: DataFrame, index_dir: str, meta: dict, ebl: int
+) -> None:
+    """The bulk (re)write init and every rebuild share: build the
+    two-layer index over ``vecs``, swap vectors, then edges and rev
+    edges (overlapped), clear both edge logs — the fresh bases subsume
+    them — and refit the IVF mirror, or drop it at or below the exact
+    limit ``ebl``, where it is dead weight (freeze-then-refit: this is
+    where quantizer drift is repaid). Updates ``meta``'s counters; the
+    caller writes it."""
+    from vectordbindexing_spark.operators.graph import build_two_layer_index
 
-    return EXACT_BASE_LIMIT
+    vec_path, edge_path, rev_path, _ = _paths(index_dir)
+    buckets = meta["buckets"]
+    # one build, two partitioned writes; materialized BEFORE the vectors
+    # swap, whose rename invalidates a rebuild's pre-swap file listing
+    edges = build_two_layer_index(
+        vecs, M0=meta["M0"], M1=meta["M1"], metric=meta["metric"],
+        M_level=meta["M_level"],
+    ).localCheckpoint(eager=True)
+    swap_in(
+        vecs.withColumn("bucket", bucket(buckets, "id")),
+        vec_path, coalesce=None, partition_by=["bucket"],
+    )
+    deltalog.parallel_swaps(
+        lambda: swap_in(
+            edges.withColumn("bucket", bucket(buckets, "src")),
+            edge_path, coalesce=None, partition_by=["bucket"],
+        ),
+        lambda: swap_in(
+            edges.withColumn("seq", F.lit(0).cast("long"))
+            .withColumn("bucket", bucket(buckets, "dst")),
+            rev_path, coalesce=None, partition_by=["bucket"],
+        ),
+    )
+    for spec in (REV, FWD):
+        deltalog.clear(spec, index_dir)
+        deltalog.reset_bytes(spec, meta, index_dir)
+    n = count_parquet_rows(vec_path)  # parquet footers, no Spark job
+    meta.update(n_at_rebuild=n, n_live=n)
+    if n > ebl:
+        meta["ivf"] = _build_ivf_artifact(spark, index_dir, n)
+    else:
+        meta.pop("ivf", None)
+        deltalog.clear(IVF, index_dir)
+        for p in _ivf_paths(index_dir):
+            shutil.rmtree(p, ignore_errors=True)
 
 
 def init_graph_artifact(
@@ -911,116 +517,27 @@ def init_graph_artifact(
     first read or upserted (a backfill is re-runnable by definition);
     the upsert-path ordering rules (vectors ⊇ edge endpoints, forward
     before rev) only bind once a ledger-protected batch can observe
-    the intermediate state."""
-    from vectordbindexing_spark.operators.graph import build_two_layer_index
+    the intermediate state.
+
+    The IVF cells mirror only pays for itself once the batch kNN is
+    past ``exact_base_limit`` (default plans.knn_planner.EXACT_BASE_LIMIT;
+    below it the blocked exact pass needs no artifact); smaller corpora
+    build it lazily the first time an upsert routes past the limit."""
+    from vectordbindexing_spark.plans.knn_planner import EXACT_BASE_LIMIT
 
     os.makedirs(index_dir, exist_ok=True)
-    vec_path, edge_path, rev_path, meta_path = _paths(index_dir)
     vecs = base.select(
         F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
     ).where(F.col("vec").isNotNull())
-    edges = build_two_layer_index(
-        vecs, M0=M0, M1=M1, metric=metric, M_level=M_level
-    ).localCheckpoint(eager=True)  # one build, two partitioned writes
-    swap_in(
-        vecs.withColumn("bucket", _bucket_of("id", buckets)),
-        vec_path, coalesce=None, partition_by=["bucket"],
-    )
-    _parallel_swaps(
-        lambda: swap_in(
-            edges.withColumn("bucket", _bucket_of("src", buckets)),
-            edge_path, coalesce=None, partition_by=["bucket"],
-        ),
-        lambda: swap_in(
-            edges.withColumn("seq", F.lit(0).cast("long"))
-            .withColumn("bucket", _bucket_of("dst", buckets)),
-            rev_path, coalesce=None, partition_by=["bucket"],
-        ),
-    )
-    _clear_rev_delta(index_dir)
-    _clear_fwd_delta(index_dir)
-    spark = base.sparkSession
-    # post-swap corpus size from parquet footers — a driver-side
-    # metadata read, not a Spark count job
-    from vectordbindexing_spark.streaming.atomic import count_parquet_rows
-
-    n = count_parquet_rows(vec_path)
     meta = {
         "format": FORMAT,
-        "n_at_rebuild": n,
-        "n_live": n,
         "buckets": buckets,
         "rev_seq": 0,
-        "rev_base_bytes": du_parquet(rev_path),
-        "rev_delta_bytes": 0,
-        "fwd_base_bytes": du_parquet(edge_path),
-        "fwd_delta_bytes": 0,
         **_build_params(M0, M1, M_level, metric),
     }
-    # the IVF cells mirror only pays for itself once the batch kNN is
-    # past the exact limit (below it the blocked exact pass needs no
-    # artifact); smaller corpora build it lazily the first time an
-    # upsert actually routes past the limit
-    ebl = (
-        _default_exact_limit() if exact_base_limit is None
-        else exact_base_limit
-    )
-    if n > ebl:
-        meta["ivf"] = _build_ivf_artifact(spark, index_dir, n)
-    write_json_atomic(meta_path, meta)
-
-
-def _knn_edges(
-    queries: DataFrame,
-    base: DataFrame,
-    k: int,
-    metric: str,
-    layer: int,
-    exact_base_limit: int,
-    planner_kwargs: dict,
-    n_hint: int | None = None,
-) -> DataFrame:
-    """Batch-vs-corpus kNN for one layer: blocked exact below the
-    limit (bit-stable, what the parity pins replay), planner-dispatched
-    (IVF/IVF-PQ/SQ8 by scale) past it. ``n_hint`` spares the sizing
-    job when the caller already tracks the corpus size (the upsert's
-    meta-maintained n_live)."""
-    n_b = n_hint if n_hint is not None else (
-        base.limit(exact_base_limit + 1).count()
-    )
-    if n_b <= exact_base_limit:
-        from vectordbindexing_spark.operators.exact_knn import exact_knn
-
-        raw = exact_knn(
-            queries, base, k=k, metric=metric,
-            q_id="id", q_vec="vec", b_id="id", b_vec="vec",
-            exclude_self=True,
-        )
-    else:
-        from vectordbindexing_spark.plans.knn_planner import knn as planner_knn
-
-        pk = {"approximate_ok": True, "repeated_queries": True}
-        pk.update(planner_kwargs)
-        raw = planner_knn(
-            queries, base, k=k + 1, metric=metric,
-            q_id="id", q_vec="vec", b_id="id", b_vec="vec", **pk,
-        ).where(F.col("neighbor_id") != F.col("qid"))  # planner lacks
-        # exclude_self; overfetch one and drop the self-hit. When the
-        # approximate route misses the query itself the k+1 survivors
-        # would all stay, leaving this node one OVER the layer degree
-        # cap vs the exact path — re-rank per qid and keep exactly k
-        w = Window.partitionBy("qid").orderBy("dist", "neighbor_id")
-        raw = (
-            raw.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= k)
-            .drop("_rk")
-        )
-    return raw.select(
-        F.lit(layer).alias("layer"),
-        F.col("qid").alias("src"),
-        F.col("neighbor_id").alias("dst"),
-        "dist",
-    )
+    ebl = EXACT_BASE_LIMIT if exact_base_limit is None else exact_base_limit
+    _bulk_write(base.sparkSession, vecs, index_dir, meta, ebl)
+    write_json_atomic(_paths(index_dir)[3], meta)
 
 
 def upsert_graph_artifact(
@@ -1030,7 +547,6 @@ def upsert_graph_artifact(
     vec_col: str = "vec",
     refresh_factor: float = 1.5,
     exact_base_limit: int | None = None,
-    planner_kwargs: dict | None = None,
 ) -> str:
     """One foreachBatch step. Returns ``"noop"`` (empty batch or fully
     committed replay), ``"upsert"`` (incremental edges merged into the
@@ -1038,20 +554,23 @@ def upsert_graph_artifact(
     × the corpus size at the last rebuild — full bulk build on the
     union, the compaction).
 
-    ``exact_base_limit``/``planner_kwargs``: the scale route — the
-    batch-vs-corpus kNN pass dispatches through plans.knn_planner.knn
-    when the corpus exceeds the limit (default
-    plans.knn_planner.EXACT_BASE_LIMIT); kwargs forward planner options
-    (recall_target, memory_tight, threshold overrides for tests)."""
+    ``exact_base_limit``: the scale route — past it (default
+    plans.knn_planner.EXACT_BASE_LIMIT) the batch-vs-corpus kNN pass
+    reads the maintained IVF mirror instead of the blocked exact
+    pass."""
+    import numpy as np
+
+    from vectordbindexing_spark.operators.exact_knn import (
+        exact_knn_local_queries,
+    )
     from vectordbindexing_spark.operators.graph import (
+        assign_level_py,
         assign_levels,
-        build_two_layer_index,
         mutualize,
     )
     from vectordbindexing_spark.plans.knn_planner import EXACT_BASE_LIMIT
 
     ebl = EXACT_BASE_LIMIT if exact_base_limit is None else exact_base_limit
-    pk = planner_kwargs or {}
     spark = batch.sparkSession
     vec_path, edge_path, rev_path, meta_path = _paths(index_dir)
     meta = read_meta(meta_path, FORMAT)
@@ -1061,8 +580,6 @@ def upsert_graph_artifact(
     cells_path, cent_path = _ivf_paths(index_dir)
     if os.path.isdir(cells_path):
         recover_tree(cells_path, partition_col="cell")
-    from vectordbindexing_spark.streaming.atomic import recover
-
     recover(cent_path)
     M0, M1 = meta["M0"], meta["M1"]
     M_level, metric = meta["M_level"], meta["metric"]
@@ -1072,62 +589,16 @@ def upsert_graph_artifact(
     # the probes need the PRE-batch log state, and the replay rewrites
     # the same d<seq> names with its own recompute
     if pend.get("seq") is not None:
-        for adds_dir, tombs_dir in (
-            _delta_paths(index_dir),
-            _fwd_delta_paths(index_dir),
-            _ivf_delta_paths(index_dir),
-        ):
-            _pre_clear_delta(adds_dir, tombs_dir, pend["seq"])
+        for spec in (REV, FWD, IVF):
+            deltalog.pre_clear(spec, index_dir, pend["seq"])
     rev_seq = int(meta["rev_seq"]) + 1
 
-    # fold the rev delta log back into its base once it outgrows
-    # REV_COMPACT_FACTOR x the base — bounds probe-side read
-    # amplification; deferred while a pending batch needs healing
-    if not pend["ids"] and (
-        meta["rev_delta_bytes"]
-        > REV_COMPACT_FACTOR * max(int(meta["rev_base_bytes"]), 1)
-    ):
-        folded = _rev_live(spark, index_dir, keep_seq=True).withColumn(
-            "bucket", _bucket_of("dst", buckets)
-        ).localCheckpoint(eager=True)  # lineage reads the paths it replaces
-        swap_in(folded, rev_path, coalesce=None, partition_by=["bucket"])
-        _clear_rev_delta(index_dir)
-        meta["rev_base_bytes"] = du_parquet(rev_path)
-        meta["rev_delta_bytes"] = 0
-        write_json_atomic(meta_path, meta)
-
-    # same fold for the FORWARD log (serving reads resolve base ∪ delta,
-    # so the fold also bounds serve-load read amplification)
-    if not pend["ids"] and (
-        meta["fwd_delta_bytes"]
-        > REV_COMPACT_FACTOR * max(int(meta["fwd_base_bytes"]), 1)
-    ):
-        folded = _fwd_live(spark, index_dir, keep_seq=True).withColumn(
-            "bucket", _bucket_of("src", buckets)
-        ).localCheckpoint(eager=True)
-        swap_in(folded, edge_path, coalesce=None, partition_by=["bucket"])
-        _clear_fwd_delta(index_dir)
-        meta["fwd_base_bytes"] = du_parquet(edge_path)
-        meta["fwd_delta_bytes"] = 0
-        write_json_atomic(meta_path, meta)
-
-    # and for the IVF cells log (bounds the probed-cell read
-    # amplification of the batch kNN; centroids stay frozen — a fold
-    # is compaction, never a refit)
-    if (
-        not pend["ids"]
-        and meta.get("ivf")
-        and meta["ivf"]["delta_bytes"]
-        > REV_COMPACT_FACTOR * max(int(meta["ivf"]["base_bytes"]), 1)
-    ):
-        folded = _ivf_live(spark, index_dir, keep_seq=True).localCheckpoint(
-            eager=True
-        )
-        swap_in(folded, cells_path, coalesce=None, partition_by=["cell"])
-        _clear_ivf_delta(index_dir)
-        meta["ivf"]["base_bytes"] = du_parquet(cells_path)
-        meta["ivf"]["delta_bytes"] = 0
-        write_json_atomic(meta_path, meta)
+    # fold each outgrown log back into its base (the IVF fold is
+    # compaction, never a refit: centroids stay frozen); deferred while
+    # a pending batch needs healing
+    if not pend["ids"]:
+        for spec in (REV, FWD, IVF):
+            deltalog.fold_if_due(spark, spec, index_dir, meta, meta_path)
 
     # ---- classification: TWO |batch|-bounded jobs ----
     # Job 1 — the batch's deterministic winners (duplicate ids resolve
@@ -1147,7 +618,7 @@ def upsert_graph_artifact(
         .where(F.col("vec").isNotNull())
         .groupBy("id")
         .agg(F.max("vec").alias("vec"))
-        .select("id", "vec", _bucket_of("id", buckets).alias("_bkt"))
+        .select("id", "vec", bucket(buckets, "id").alias("_bkt"))
         .collect()
     )
     new_vec = {r["id"]: list(r["vec"]) for r in new_rows}
@@ -1158,7 +629,7 @@ def upsert_graph_artifact(
     stored = vecs_raw.drop("bucket")
     # local frames round-trip through the STORED vec element type so
     # the unions below line up whatever the caller fed the stream
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import FloatType, LongType, StructField, StructType
 
     row_schema = StructType(
         [StructField("id", LongType(), False), stored.schema["vec"]]
@@ -1173,7 +644,7 @@ def upsert_graph_artifact(
     # bucket footprint (bounded by |batch| — unpruned, a replay no-op
     # would pay a full corpus scan to discover there is nothing to do)
     # semi-joined to the batch ids, left-joined to a layer-0 adjacency
-    # marker (probe-sized via _fwd_live's src pushdown). One collect
+    # marker (probe-sized via the resolver's src semi-join). One collect
     # returns everything the classification needs: (id, stored vec,
     # has layer-0 edges).
     batch_bkts = sorted(set(new_bkt.values()))
@@ -1186,9 +657,9 @@ def upsert_graph_artifact(
             .join(ids_b, "id", "left_semi")
         )
         l0 = (
-            _fwd_live(
-                spark, index_dir, bkts=batch_bkts,
-                src_df=_ids_df(spark, list(new_vec))
+            deltalog.resolve(
+                spark, FWD, index_dir, parts=batch_bkts,
+                semi=_ids_df(spark, list(new_vec))
                 .withColumnRenamed("id", "src"),
             )
             .where(F.col("layer") == 0)
@@ -1240,7 +711,7 @@ def upsert_graph_artifact(
         pend_bkt = {
             r["id"]: r["_bkt"]
             for r in _ids_df(spark, pend["ids"])
-            .select("id", _bucket_of("id", buckets).alias("_bkt"))
+            .select("id", bucket(buckets, "id").alias("_bkt"))
             .collect()
         }
         stored_pend_rows = [
@@ -1275,7 +746,6 @@ def upsert_graph_artifact(
         return "noop"
     fresh = _rows_df(fresh_rows)
     changed = _rows_df(changed_rows)
-    ins = _rows_df(ins_rows)
     fresh_ids = [i for i, _ in fresh_rows]
     # replaced for EDGE purposes (stale-geometry drop): batch updates
     # plus healed pending updates. Replaced for VECTOR purposes is the
@@ -1316,51 +786,7 @@ def upsert_graph_artifact(
     write_json_atomic(meta_path, meta)
 
     if n_union >= refresh_factor * meta["n_at_rebuild"]:
-        # materialize BEFORE the vectors swap: the build's lineage
-        # reads the pre-swap vec_path file listing, which the rename
-        # below invalidates (a rebuild is O(corpus) compaction anyway)
-        edges = build_two_layer_index(
-            union, M0=M0, M1=M1, metric=metric, M_level=M_level
-        ).localCheckpoint(eager=True)
-        swap_in(
-            union.withColumn("bucket", _bucket_of("id", buckets)),
-            vec_path, coalesce=None, partition_by=["bucket"],
-        )
-        _parallel_swaps(
-            lambda: swap_in(
-                edges.withColumn("bucket", _bucket_of("src", buckets)),
-                edge_path, coalesce=None, partition_by=["bucket"],
-            ),
-            lambda: swap_in(
-                edges.withColumn("seq", F.lit(0).cast("long"))
-                .withColumn("bucket", _bucket_of("dst", buckets)),
-                rev_path, coalesce=None, partition_by=["bucket"],
-            ),
-        )
-        _clear_rev_delta(index_dir)  # the fresh bases subsume the logs
-        _clear_fwd_delta(index_dir)
-        from vectordbindexing_spark.streaming.atomic import (
-            count_parquet_rows,
-        )
-
-        n_real = count_parquet_rows(vec_path)  # reconcile, footers only
-        meta.update(
-            n_at_rebuild=n_real, n_live=n_real,
-            rev_base_bytes=du_parquet(rev_path), rev_delta_bytes=0,
-            fwd_base_bytes=du_parquet(edge_path), fwd_delta_bytes=0,
-        )
-        # REFIT the IVF mirror (freeze-then-refit: rebuild is where
-        # quantizer drift is repaid); below
-        # the exact limit the mirror is dead weight and is dropped
-        if n_real > ebl:
-            meta["ivf"] = _build_ivf_artifact(spark, index_dir, n_real)
-        else:
-            meta.pop("ivf", None)
-            _clear_ivf_delta(index_dir)
-            import shutil
-
-            shutil.rmtree(cells_path, ignore_errors=True)
-            shutil.rmtree(cent_path, ignore_errors=True)
+        _bulk_write(spark, union, index_dir, meta, ebl)
         meta.pop("pending", None)
         write_json_atomic(meta_path, meta)
         return "rebuild"
@@ -1370,12 +796,33 @@ def upsert_graph_artifact(
     # (probe-pruned read, no per-batch fit/assign scan) — + layer-1
     # over the deterministic level>=1 subset
     if n_union <= ebl:
-        l0 = _knn_edges(ins, union, M0, metric, 0, ebl, pk, n_hint=n_union)
-        up_ins = assign_levels(ins, M=M_level).filter(F.col("level") >= 1)
-        up_union = assign_levels(union, M=M_level).filter(F.col("level") >= 1)
-        l1 = _knn_edges(
-            up_ins.select("id", "vec"), up_union.select("id", "vec"),
-            M1, metric, 1, ebl, pk,
+        # the queries are the driver-local ins rows, rounded through the
+        # STORED vec element type like every corpus-side row
+        qdt = np.float32 if isinstance(
+            stored.schema["vec"].dataType.elementType, FloatType
+        ) else np.float64
+
+        def _exact(rows: list, corpus: DataFrame, k: int, layer: int):
+            if not rows:
+                return spark.createDataFrame([], EDGE_SCHEMA)
+            return exact_knn_local_queries(
+                np.array([i for i, _ in rows], dtype=np.int64),
+                np.asarray([v for _, v in rows], dtype=qdt).astype(np.float64),
+                corpus, k, metric, exclude_self=True,
+            ).select(
+                F.lit(layer).alias("layer"),
+                F.col("qid").alias("src"),
+                F.col("neighbor_id").alias("dst"),
+                "dist",
+            )
+
+        l0 = _exact(ins_rows, union, M0, 0)
+        l1 = _exact(
+            [(i, v) for i, v in ins_rows if assign_level_py(i, M_level) >= 1],
+            assign_levels(union, M=M_level)
+            .filter(F.col("level") >= 1)
+            .select("id", "vec"),
+            M1, 1,
         )
     else:
         # LAZY IVF MIRROR — the corpus first crossed the exact limit
@@ -1388,14 +835,13 @@ def upsert_graph_artifact(
                 spark, index_dir, meta["n_live"]
             )
             write_json_atomic(meta_path, meta)
-        nprobe = pk.get("ivf_nprobe")
         l0 = _ivf_artifact_knn(
             spark, index_dir, ins_rows, ins_rows, M0, metric, 0,
-            nprobe=nprobe, M_level=M_level,
+            M_level=M_level,
         )
         l1 = _ivf_artifact_knn(
             spark, index_dir, ins_rows, ins_rows, M1, metric, 1,
-            nprobe=nprobe, level_min=1, M_level=M_level,
+            level_min=1, M_level=M_level,
         )
     # collect the batch's new edges: |ins|·(M0+M1+2) rows, bounded by
     # the batch the classification already holds driver-side — ONE job
@@ -1418,9 +864,9 @@ def upsert_graph_artifact(
     if replaced_e_ids:
         loser_ids = [
             r["src"]
-            for r in _rev_live(
-                spark, index_dir, bkts=repl_bkts,
-                dst_df=replaced_e.withColumnRenamed("id", "dst"),
+            for r in deltalog.resolve(
+                spark, REV, index_dir, parts=repl_bkts,
+                semi=replaced_e.withColumnRenamed("id", "dst"),
             ).select("src").distinct().collect()
         ]
     # DIRTY set: nodes whose adjacency can change — batch ids, new
@@ -1445,16 +891,16 @@ def upsert_graph_artifact(
     # is dirty from the inverted one (srcs-not-dirty only, to avoid
     # double-counting rows with both endpoints dirty). src_rows is
     # ALSO exactly the row set this batch's forward tombstones kill.
-    src_rows = _fwd_live(
-        spark, index_dir, bkts=dirty_bkts,
-        src_df=dirty.withColumnRenamed("id", "src"),
+    src_rows = deltalog.resolve(
+        spark, FWD, index_dir, parts=dirty_bkts,
+        semi=dirty.withColumnRenamed("id", "src"),
     )
     # dirty ids hash to the same values whether keyed as src or dst,
     # so dirty_bkts prunes the dst-partitioned log too; the dst filter
     # is applied INSIDE the resolver, before per-src resolution
-    dst_rows = _rev_live(
-        spark, index_dir, bkts=dirty_bkts,
-        dst_df=dirty.withColumnRenamed("id", "dst"),
+    dst_rows = deltalog.resolve(
+        spark, REV, index_dir, parts=dirty_bkts,
+        semi=dirty.withColumnRenamed("id", "dst"),
     ).join(dirty_b.withColumnRenamed("id", "src"), "src", "left_anti")
     # minus stale rows (either endpoint replaced — their dists
     # describe the old vector)
@@ -1476,10 +922,9 @@ def upsert_graph_artifact(
     # rows by mutualize's own degree cap — a deterministic bound known
     # driver-side before any job runs. Under the gate the rows collect
     # in the ONE job that was the eager checkpoint anyway, and BOTH
-    # delta appends become driver-side pyarrow writes
-    # (_write_edge_delta_local) — 5 fixed-latency jobs per micro-batch
-    # removed. Past the gate the distributed checkpoint + Spark delta
-    # writers run — the 100 TB route.
+    # delta appends become driver-side pyarrow writes — 5 fixed-latency
+    # jobs per micro-batch removed. Past the gate the distributed
+    # checkpoint + Spark delta writers run — the 100 TB route.
     est_rows = len(dirty_ids) * 2 * (2 * max(M0, M1))
     merged_local = est_rows <= MERGED_LOCAL_LIMIT
     if merged_local:
@@ -1507,7 +952,7 @@ def upsert_graph_artifact(
         .join(F.broadcast(replaced_v), "id", "left_anti")
         .unionByName(changed)
         .unionByName(fresh)
-        .withColumn("bucket", _bucket_of("id", buckets))
+        .withColumn("bucket", bucket(buckets, "id"))
     )
     # vectors first: a crash between the vectors swap and the edge
     # appends leaves vectors a SUPERSET of the edges' endpoints
@@ -1529,8 +974,6 @@ def upsert_graph_artifact(
     # batch kNNs
     ivf_add_rows: list = []
     if meta.get("ivf"):
-        import numpy as np
-
         from vectordbindexing_spark.operators.ivf import _argmin_d2_blocked
 
         C = _load_ivf_centroids(spark, index_dir)
@@ -1544,22 +987,24 @@ def upsert_graph_artifact(
     if vb_list:
         swap_in_buckets(vecs_out, vec_path, expected=vb_list)
     # under the gate both appends are |batch|·degree-bounded
-    # driver-local rows → pyarrow writes, no Spark jobs; past it the
-    # distributed writers run on the checkpointed frame as before
-    _adds, _dirty = (
-        (md_rows, dirty_ids) if merged_local else (merged_dirty, dirty)
-    )
-    fwd_appended = _write_fwd_delta(_adds, _dirty, index_dir, rev_seq, buckets)
-    appended = _write_rev_delta(_adds, _dirty, index_dir, rev_seq, buckets)
+    # driver-local rows (bucket values from the pinned xxhash64 twin)
+    # → pyarrow writes, no Spark jobs; past it the distributed writers
+    # run on the checkpointed frame
+    appends = [
+        (FWD, [(*r, bucket_of_py(r[1], buckets)) for r in md_rows], dirty_ids),
+        (REV, [(*r, bucket_of_py(r[2], buckets)) for r in md_rows], dirty_ids),
+    ] if merged_local else [
+        (FWD, merged_dirty, dirty), (REV, merged_dirty, dirty)
+    ]
+    if ivf_add_rows:
+        appends.append((IVF, ivf_add_rows, [i for i, _ in ins_rows]))
+    for spec, adds, keys in appends:
+        deltalog.add_delta_bytes(
+            spec, meta,
+            deltalog.append(spec, index_dir, rev_seq, adds, keys, buckets),
+        )
     meta["n_live"] = n_union
     meta["rev_seq"] = rev_seq
-    meta["fwd_delta_bytes"] = int(meta["fwd_delta_bytes"]) + fwd_appended
-    meta["rev_delta_bytes"] = int(meta["rev_delta_bytes"]) + appended
-    if ivf_add_rows:
-        ivf_appended = _write_ivf_delta(ivf_add_rows, index_dir, rev_seq)
-        meta["ivf"]["delta_bytes"] = (
-            int(meta["ivf"]["delta_bytes"]) + ivf_appended
-        )
     meta.pop("pending", None)
     write_json_atomic(meta_path, meta)
     return "upsert"
@@ -1589,7 +1034,6 @@ def graph_upsert_stream(
     vec_col: str = "vec",
     refresh_factor: float = 1.5,
     exact_base_limit: int | None = None,
-    planner_kwargs: dict | None = None,
 ) -> StreamingQuery:
     """Attach the artifact maintainer to a vector stream; returns the
     StreamingQuery (caller awaits/stops). The artifact must exist
@@ -1600,7 +1044,6 @@ def graph_upsert_stream(
                 b, index_dir, id_col=id_col, vec_col=vec_col,
                 refresh_factor=refresh_factor,
                 exact_base_limit=exact_base_limit,
-                planner_kwargs=planner_kwargs,
             )
         )
         .option("checkpointLocation", checkpoint)

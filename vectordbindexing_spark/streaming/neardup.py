@@ -32,21 +32,13 @@ State layout under ``index_dir`` (crash-safe via streaming/atomic.py):
   pmod(xxhash64(band_idx, band_key), B)``: (did, band_idx, band_key)
   with a fold-watermark ``seq``. An incoming batch's band rows prune
   reads to exactly the buckets its own band keys hash into.
-* ``bands_delta/`` — the bands LSM delta log (the rev_delta design
-  from the graph maintainer applied verbatim, closing the r10 "bands
-  swap rewrites whole dirty buckets" scale defect: with B buckets the
-  dirty fraction is ≈ 1 − exp(−|batch|·bands/B) ≈ ALL of them at any
-  real batch size). ``adds/d<seq>-0.parquet`` holds one batch's new
-  band rows, sorted by band bucket (``bucket`` rides as a data column
-  and row-group stats carry the pruning); ``tombs/d<seq>.parquet`` is
-  a GLOBAL per-batch did-tombstone file of that batch's work dids — a
-  batch replaces each work doc's whole band-row set, so did-level
-  tombstones are exact wherever the stale rows sit, no old-sig
-  recompute needed. Resolution (``_bands_live``): a row is live iff
-  no newer did-tombstone exists (``row.seq >= tseq`` keeps a batch's
-  own re-adds). The log folds back into the base when it outgrows
-  BAND_COMPACT_FACTOR × the base bytes. Per-batch band write I/O is
-  |batch|·bands rows, never a bucket rewrite.
+* ``bands_delta/`` — the bands index's :data:`BANDS` delta log
+  (streaming/deltalog.py; it closed the r10 "bands swap rewrites whole
+  dirty buckets" defect: with B buckets the dirty fraction is
+  ≈ 1 − exp(−|batch|·bands/B) ≈ ALL of them at any real batch size). A
+  batch replaces each work doc's whole band-row set, so one did-level
+  tombstone per batch is exact wherever the stale rows sit — no old-sig
+  recompute needed. Per-batch band write I/O is |batch|·bands rows.
 * ``meta.json`` — {format, n_docs, n, num_hashes, bands, buckets,
   pending, last_emit}; atomic writes. An artifact without the current
   :data:`FORMAT` stamp fails to load (atomic.read_meta) — re-run init.
@@ -107,10 +99,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from vectordbindexing_spark.plans.partitioning import local_rows_df
+from vectordbindexing_spark.streaming import deltalog
 from vectordbindexing_spark.streaming.atomic import (
-    append_local_delta,
-    delta_empty,
-    du_parquet,
+    count_parquet_rows,
     read_meta,
     recover,
     recover_tree,
@@ -118,7 +109,7 @@ from vectordbindexing_spark.streaming.atomic import (
     swap_in_buckets,
     write_json_atomic,
 )
-from vectordbindexing_spark.streaming.graph_ingest import _pre_clear_delta
+from vectordbindexing_spark.streaming.deltalog import bucket
 
 #: on-disk layout version stamped into meta.json at init; bump it on
 #: any layout change so older artifacts fail to load instead of being
@@ -129,134 +120,34 @@ DEFAULT_BUCKETS = 256
 
 PAIR_SCHEMA = "id_a long, id_b long, jaccard double"
 
-#: fold the bands delta log back into its base once the accumulated
-#: delta bytes exceed this fraction of the base (bounds probe-side
-#: read amplification)
-BAND_COMPACT_FACTOR = 0.25
-
-BANDS_ADDS_SCHEMA = (
-    "did long, band_idx int, band_key string, seq long, bucket int"
+#: the band index's log, did-tombstoned and bucketed by band
+BANDS = deltalog.LogSpec(
+    base="bands",
+    root="bands_delta",
+    cols=("did", "band_idx", "band_key"),
+    key="did",
+    dedup=("did", "band_idx", "band_key"),
+    part="bucket",
+    bucket_by=("band_idx", "band_key"),
+    adds_schema="did long, band_idx int, band_key string, seq long, "
+    "bucket int",
+    tombs_schema="did long, seq long",
+    meta_prefix="band_",
 )
-BANDS_TOMBS_SCHEMA = "did long, seq long"
 
 
 def _paths(index_dir: str) -> tuple[str, str, str]:
     return (
         os.path.join(index_dir, "signatures"),
-        os.path.join(index_dir, "bands"),
+        os.path.join(index_dir, BANDS.base),
         os.path.join(index_dir, "meta.json"),
     )
-
-
-def _did_bucket(buckets: int):
-    return F.pmod(F.xxhash64(F.col("did")), F.lit(buckets)).cast("int")
-
-
-def _band_bucket(buckets: int):
-    return F.pmod(
-        F.xxhash64(F.col("band_idx"), F.col("band_key")), F.lit(buckets)
-    ).cast("int")
-
-
-def _band_delta_paths(index_dir: str) -> tuple[str, str]:
-    root = os.path.join(index_dir, "bands_delta")
-    return os.path.join(root, "adds"), os.path.join(root, "tombs")
-
-
-def _bands_live(
-    spark: SparkSession,
-    index_dir: str,
-    bkts: list | None = None,
-    keep_seq: bool = False,
-) -> DataFrame:
-    """Resolved live band rows (did, band_idx, band_key): base ∪ delta
-    adds, minus rows superseded by a newer did-tombstone
-    (``row.seq >= tseq`` keeps a batch's own re-adds) — the graph
-    maintainer's rev_delta LSM design applied to the bands index. A
-    batch replaces each work doc's WHOLE band-row set, so one global
-    did-level tombstone per batch is exact regardless of which buckets
-    the stale rows sit in. ``bkts`` partition-prunes base and adds;
-    with an empty log the base alone is the resolved state (no union,
-    no tombstone join, no dedup shuffle)."""
-    _, band_path, _ = _paths(index_dir)
-    adds_dir, tombs_dir = _band_delta_paths(index_dir)
-    base = spark.read.parquet(band_path)
-    if bkts is not None:
-        base = base.where(F.col("bucket").isin(bkts))
-    cols = ["did", "band_idx", "band_key", "seq"]
-    keep = cols if keep_seq else cols[:3]
-    if delta_empty(adds_dir, tombs_dir):
-        return base.select(*keep)
-    # guarded reads: _write_band_delta lands the did-tombstone BEFORE
-    # the adds, so a crash in that window leaves tombs-present with the
-    # adds dir absent — read each side as empty when missing instead of
-    # throwing PATH_NOT_FOUND at probe/serving time until replay
-    if os.path.isdir(adds_dir):
-        adds = spark.read.schema(BANDS_ADDS_SCHEMA).parquet(adds_dir)
-    else:
-        adds = spark.createDataFrame([], BANDS_ADDS_SCHEMA)
-    if bkts is not None:
-        adds = adds.where(F.col("bucket").isin(bkts))
-    rows = base.select(*cols).unionByName(adds.select(*cols))
-    if os.path.isdir(tombs_dir):
-        tombs = (
-            spark.read.schema(BANDS_TOMBS_SCHEMA).parquet(tombs_dir)
-            .groupBy("did").agg(F.max("seq").alias("tseq"))
-        )
-    else:
-        tombs = spark.createDataFrame([], "did long, tseq long")
-    live = (
-        rows.join(tombs, "did", "left")
-        .where(F.col("tseq").isNull() | (F.col("seq") >= F.col("tseq")))
-        .dropDuplicates(["did", "band_idx", "band_key"])
-    )
-    return live.select(*keep)
 
 
 def bands_resolved(spark: SparkSession, index_dir: str) -> DataFrame:
     """The full live band index (test/inspection surface) — must
     always equal the bulk init of the latest-wins corpus."""
-    return _bands_live(spark, index_dir)
-
-
-def _write_band_delta(
-    br_rows: list, work_dids: list, index_dir: str, seq: int
-) -> int:
-    """Append one batch's band delta: the work docs' new band rows
-    (DRIVER-LOCAL ``br_rows`` — [(did, band_idx, band_key, bucket)],
-    the rows the upsert already collected for its probes) as ONE
-    bucket-sorted flat parquet file (bucket rides as a data column;
-    row-group stats carry the probe pruning) plus ONE global
-    did-tombstone file, so a crash replay overwrites its own attempt.
-    Both files are written straight through pyarrow
-    (atomic.append_local_delta, tombstone first): the rows are
-    |batch|·bands-bounded by design, so a Spark write job per file
-    would be pure fixed latency. Write I/O ∝ |batch|·bands rows — never
-    a bucket rewrite (the pre-LSM design rewrote ≈ ALL buckets per
-    batch at any real batch size). Returns the bytes appended
-    (fold-trigger accounting)."""
-    adds_dir, tombs_dir = _band_delta_paths(index_dir)
-    staged = sorted(
-        (
-            (int(d), int(bi), str(bk), int(seq), int(bkt))
-            for d, bi, bk, bkt in br_rows
-        ),
-        key=lambda t: t[4],
-    )
-    return append_local_delta(
-        adds_dir, tombs_dir, seq,
-        [(int(i), int(seq)) for i in work_dids], BANDS_TOMBS_SCHEMA,
-        staged, BANDS_ADDS_SCHEMA,
-    )
-
-
-def _clear_band_delta(index_dir: str) -> None:
-    import shutil
-
-    shutil.rmtree(os.path.join(index_dir, "bands_delta"), ignore_errors=True)
-    shutil.rmtree(
-        os.path.join(index_dir, "bands_delta.__tmp__"), ignore_errors=True
-    )
+    return deltalog.resolve(spark, BANDS, index_dir)
 
 
 def init_neardup_artifact(
@@ -286,40 +177,32 @@ def init_neardup_artifact(
         "seq", F.lit(0).cast("long")
     )
     # both writes read the SAME eagerly-checkpointed signature frame
-    # and land on distinct paths — overlap them (guide §2.6) so the
-    # second write's tasks back-fill the first one's tail. Init is not
-    # crash-windowed (same contract as init_graph_artifact: a backfill
-    # re-runs to completion before first read), so ordering is free.
-    from vectordbindexing_spark.streaming.graph_ingest import _parallel_swaps
-
-    _parallel_swaps(
+    # and land on distinct paths — overlap them so the second write's
+    # tasks back-fill the first one's tail. Init is not crash-windowed
+    # (same contract as init_graph_artifact: a backfill re-runs to
+    # completion before first read), so ordering is free.
+    deltalog.parallel_swaps(
         lambda: swap_in(
-            g.withColumn("bucket", _did_bucket(buckets)),
+            g.withColumn("bucket", bucket(buckets, "did")),
             sig_path, coalesce=None, partition_by=["bucket"],
         ),
         lambda: swap_in(
-            br.withColumn("bucket", _band_bucket(buckets)),
+            br.withColumn("bucket", bucket(buckets, *BANDS.bucket_by)),
             band_path, coalesce=None, partition_by=["bucket"],
         ),
     )
-    # post-swap doc count from parquet footers — no Spark job
-    from vectordbindexing_spark.streaming.atomic import count_parquet_rows
-
-    n_docs = count_parquet_rows(sig_path)
-    write_json_atomic(
-        meta_path,
-        {
-            "format": FORMAT,
-            "n_docs": n_docs,
-            "n": n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "buckets": buckets,
-            "band_seq": 0,
-            "band_base_bytes": du_parquet(band_path),
-            "band_delta_bytes": 0,
-        },
-    )
+    meta = {
+        "format": FORMAT,
+        # post-swap doc count from parquet footers — no Spark job
+        "n_docs": count_parquet_rows(sig_path),
+        "n": n,
+        "num_hashes": num_hashes,
+        "bands": bands,
+        "buckets": buckets,
+        "band_seq": 0,
+    }
+    deltalog.reset_bytes(BANDS, meta, index_dir)
+    write_json_atomic(meta_path, meta)
 
 
 def upsert_neardup_artifact(
@@ -367,24 +250,13 @@ def upsert_neardup_artifact(
     # runs (probes need the PRE-batch band state); the replay rewrites
     # the same d<seq> names with its own recompute
     if pend.get("seq") is not None:
-        _pre_clear_delta(*_band_delta_paths(index_dir), pend["seq"])
+        deltalog.pre_clear(BANDS, index_dir, pend["seq"])
     band_seq = int(meta["band_seq"]) + 1
 
-    # fold the bands delta log back into its base once it outgrows
-    # BAND_COMPACT_FACTOR x the base — bounds probe-side read
-    # amplification; deferred while a pending batch needs healing
-    if not pend["ids"] and (
-        meta["band_delta_bytes"]
-        > BAND_COMPACT_FACTOR * max(int(meta["band_base_bytes"]), 1)
-    ):
-        folded = _bands_live(spark, index_dir, keep_seq=True).withColumn(
-            "bucket", _band_bucket(buckets)
-        ).localCheckpoint(eager=True)  # lineage reads paths it replaces
-        swap_in(folded, band_path, coalesce=None, partition_by=["bucket"])
-        _clear_band_delta(index_dir)
-        meta["band_base_bytes"] = du_parquet(band_path)
-        meta["band_delta_bytes"] = 0
-        write_json_atomic(meta_path, meta)
+    # fold the outgrown log back into its base; deferred while a
+    # pending batch needs healing
+    if not pend["ids"]:
+        deltalog.fold_if_due(spark, BANDS, index_dir, meta, meta_path)
 
     empty_pairs = spark.createDataFrame([], PAIR_SCHEMA)
     # deterministic in-batch winner for duplicate ids: greatest text
@@ -410,7 +282,7 @@ def upsert_neardup_artifact(
     # client-side instead (the graph maintainer's r12 fold, applied
     # here) ----
     id_rows = g_new.select(
-        "did", _did_bucket(buckets).alias("_bkt")
+        "did", bucket(buckets, "did").alias("_bkt")
     ).collect()
     batch_dids = [r["did"] for r in id_rows]
     new_bkt = {r["did"]: r["_bkt"] for r in id_rows}
@@ -483,7 +355,7 @@ def upsert_neardup_artifact(
                                 spark, [(i,) for i in missing_pend],
                                 "did long",
                             )
-                            .select(_did_bucket(buckets))
+                            .select(bucket(buckets, "did"))
                             .collect()
                         }
                     )
@@ -531,7 +403,7 @@ def upsert_neardup_artifact(
         band_rows(g_work, bands, num_hashes // bands)
         .select(
             "did", "band_idx", "band_key",
-            _band_bucket(buckets).alias("_bkt"),
+            bucket(buckets, *BANDS.bucket_by).alias("_bkt"),
         )
         .collect()
     )
@@ -553,7 +425,7 @@ def upsert_neardup_artifact(
     # the cross + intra joins, so dropping their stored rows is always
     # safe (and is what makes the replay ≡ first-delivery).
     stored_bands = (
-        _bands_live(spark, index_dir, bkts=band_bkts)
+        deltalog.resolve(spark, BANDS, index_dir, parts=band_bkts)
         .join(work_df, "did", "left_anti")
     )
     cross_ids = (
@@ -654,7 +526,7 @@ def upsert_neardup_artifact(
     sig_out = (
         stored_sig.where(F.col("bucket").isin(sig_dirty))
         .join(work_df, "did", "left_anti")
-        .unionByName(g_work.withColumn("bucket", _did_bucket(buckets)))
+        .unionByName(g_work.withColumn("bucket", bucket(buckets, "did")))
     )
     swap_in_buckets(sig_out, sig_path, expected=sig_dirty)
 
@@ -663,12 +535,13 @@ def upsert_neardup_artifact(
     # a bucket rewrite. The rows (and their buckets) are the ones the
     # probe collect above already brought driver-side, so the append
     # is two pyarrow file writes — no Spark jobs.
-    appended = _write_band_delta(
+    appended = deltalog.append(
+        BANDS, index_dir, band_seq,
         [
             (r["did"], r["band_idx"], r["band_key"], r["_bkt"])
             for r in br_rows
         ],
-        work_ids, index_dir, band_seq,
+        work_ids,
     )
 
     if batch_id is not None:
@@ -682,7 +555,7 @@ def upsert_neardup_artifact(
 
     meta["n_docs"] = meta["n_docs"] + len(fresh_ids)
     meta["band_seq"] = band_seq
-    meta["band_delta_bytes"] = int(meta["band_delta_bytes"]) + appended
+    deltalog.add_delta_bytes(BANDS, meta, appended)
     meta["pending"] = None
     write_json_atomic(meta_path, meta)
     return pairs
