@@ -1,7 +1,7 @@
 """Contracts shared by the two LSM-style streaming maintainers (graph
 and neardup) and their four delta logs (streaming/deltalog.py): the
-replay pre-clear, exact resolution after a fold whose clear died
-midway, and the meta.json format stamp that makes a foreign artifact
+replay pre-clear, the clear's order and exact resolution after a fold
+whose clear died midway, and the meta.json format stamp that makes a foreign artifact
 fail loudly."""
 
 from __future__ import annotations
@@ -90,20 +90,12 @@ def upserted_graph(spark, tmp_path_factory):
     return art
 
 
-@pytest.mark.parametrize("log", list(LOGS))
-def test_fold_whose_clear_died_after_adds_resolves_exactly(
-    spark, tmp_path, monkeypatch, upserted_graph, log
-):
-    """A fold swaps the resolved rows (each keeping its seq) into the
-    base, then clears the log. If that clear dies after removing
-    ``adds/`` but before ``tombs/``, the surviving tombstones are no
-    newer than the folded rows of their keys, and the seq rule must
-    keep those rows: the resolved view still equals the truth (the
-    vectors dir for the IVF mirror, the pre-fold views otherwise).
-    Skipping the seq comparison for base rows dropped every id of
-    the folded batch from the IVF mirror."""
-    spec = LOGS[log]
-    art = str(tmp_path / "art")
+def _folding(spark, art, upserted_graph, spec):
+    """An artifact whose ``spec`` log holds adds and tombstones, the
+    truth its resolved view must keep (the vectors dir for the IVF
+    mirror, the pre-fold views otherwise) and a call that folds it
+    (an empty batch with COMPACT_FACTOR 0: the fold runs, nothing
+    else)."""
     if spec is nd.BANDS:
         docs = spark.createDataFrame(
             [(i, f"alpha{i} bravo{i} charlie{i} delta{i}") for i in range(20)],
@@ -119,7 +111,7 @@ def test_fold_whose_clear_died_after_adds_resolves_exactly(
         )
         truth = _rows(nd.bands_resolved(spark, art))
 
-        def fold():  # an empty batch: the fold runs, nothing else
+        def fold():
             nd.upsert_neardup_artifact(
                 spark.createDataFrame([], "doc_id long, text string"), art
             )
@@ -140,6 +132,29 @@ def test_fold_whose_clear_died_after_adds_resolves_exactly(
 
     adds_dir, tombs_dir = deltalog.paths(spec, art)
     assert os.listdir(adds_dir) and os.listdir(tombs_dir)
+    return truth, fold
+
+
+def _view(spark, spec, art) -> list:
+    view = deltalog.resolve(spark, spec, art)
+    return _rows(view.select("id", "vec") if spec is gi.IVF else view)
+
+
+@pytest.mark.parametrize("log", list(LOGS))
+def test_fold_whose_clear_died_after_adds_resolves_exactly(
+    spark, tmp_path, monkeypatch, upserted_graph, log
+):
+    """A fold swaps the resolved rows (each keeping its seq) into the
+    base, then clears the log. If that clear dies after removing
+    ``adds/`` but before ``tombs/``, the surviving tombstones are no
+    newer than the folded rows of their keys, and the seq rule must
+    keep those rows: the resolved view still equals the truth.
+    Skipping the seq comparison for base rows dropped every id of
+    the folded batch from the IVF mirror."""
+    spec = LOGS[log]
+    art = str(tmp_path / "art")
+    truth, fold = _folding(spark, art, upserted_graph, spec)
+    adds_dir, tombs_dir = deltalog.paths(spec, art)
     real_clear = deltalog.clear
 
     def half_clear(s, index_dir):
@@ -153,25 +168,41 @@ def test_fold_whose_clear_died_after_adds_resolves_exactly(
     with pytest.raises(OSError):
         fold()
     assert not os.path.exists(adds_dir) and os.listdir(tombs_dir)
-
-    view = deltalog.resolve(spark, spec, art)
-    if spec is gi.IVF:
-        view = view.select("id", "vec")
-    assert _rows(view) == truth
+    assert _view(spark, spec, art) == truth
 
 
-@pytest.mark.parametrize("log", ["graph", "graph_fwd", "graph_ivf"])
-def test_spark_read_tombstones_resolve_like_the_local_reduce(
-    spark, monkeypatch, upserted_graph, log
+@pytest.mark.parametrize("dies_at", ["adds", "tombs"])
+@pytest.mark.parametrize("log", list(LOGS))
+def test_clear_removes_adds_before_tombs(
+    spark, tmp_path, monkeypatch, upserted_graph, log, dies_at
 ):
-    """Past _LOCAL_TOMBS_BYTES the newest-tombstone table is read and
-    reduced by Spark instead of pyarrow; both routes resolve the same
-    rows."""
+    """The fold's real clear, dying as it removes ``adds/`` or
+    ``tombs/``, leaves the whole log or tombstones without adds —
+    never adds without the tombstones that retire their superseded
+    rows — and both states resolve to the truth: leftover adds shadow
+    their folded copies, lone tombstones keep them by the seq rule."""
     spec = LOGS[log]
-    want = _rows(deltalog.resolve(spark, spec, upserted_graph, keep_seq=True))
-    monkeypatch.setattr(deltalog, "_LOCAL_TOMBS_BYTES", 0)
-    got = _rows(deltalog.resolve(spark, spec, upserted_graph, keep_seq=True))
-    assert got == want and len(got) > 0
+    art = str(tmp_path / "art")
+    truth, fold = _folding(spark, art, upserted_graph, spec)
+    adds_dir, tombs_dir = deltalog.paths(spec, art)
+    dying = adds_dir if dies_at == "adds" else tombs_dir
+
+    def failing(real):
+        def f(path, *a, **kw):
+            if path == dying:
+                raise OSError(f"simulated crash removing {path}")
+            return real(path, *a, **kw)
+
+        return f
+
+    monkeypatch.setattr(deltalog, "COMPACT_FACTOR", 0.0)
+    monkeypatch.setattr(os, "rename", failing(os.rename))
+    monkeypatch.setattr(shutil, "rmtree", failing(shutil.rmtree))
+    with pytest.raises(OSError):
+        fold()
+    assert os.listdir(tombs_dir)
+    assert os.path.exists(adds_dir) == (dies_at == "adds")
+    assert _view(spark, spec, art) == truth
 
 
 def _graph(spark, art):

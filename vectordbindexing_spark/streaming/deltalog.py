@@ -19,13 +19,15 @@ A log is a base parquet dir partitioned by ``part`` plus, under
 Resolution (:func:`resolve`): a row — base or add — is live iff
 ``row.seq >= tseq``, where ``tseq`` is the newest tombstone of its key
 (no tombstone: live). ``>=`` keeps a batch's own re-adds, because every
-append tombstones each key it adds AT THE SAME seq. That also bounds
-the work: the newest tombstone per key is reduced driver-side and
-broadcast, untombstoned base rows pass through that join unshuffled,
-and only the rows of tombstoned keys — base rows with ``seq >= tseq``
-(left by a fold whose clear died midway) plus the surviving adds, a
-set bounded by the delta — go through the key dedup. No read pays a
-corpus-sized shuffle, and an empty log resolves to the base alone.
+append tombstones each key it adds AT THE SAME seq, so a surviving add
+has ``seq == tseq``. The one copy a live row can have is a base row
+left by a fold whose clear died before ``adds/`` left: it equals its
+add, so a base row of a key that still has a surviving add yields to
+the adds. A table of ``tseq`` and the newest add seq per tombstoned
+key is built from the log alone and broadcast; the base is scanned
+once and passes that join unshuffled, only the adds (a set bounded by
+the delta) go through the key dedup, and an empty log resolves to the
+base alone. No read pays a corpus-sized shuffle.
 
 Appends (:func:`append`) land the tombstone file FIRST, then the adds,
 so a crash between the two leaves tombstones with no adds (read as
@@ -41,9 +43,13 @@ The log folds back into its base (:func:`fold_if_due`) once its bytes
 exceed :data:`COMPACT_FACTOR` × the base bytes — bounding probe-side
 read amplification — and for free whenever the owner rewrites the
 base (init, rebuild). The fold writes each resolved row with its seq
-and then clears the log; a fold whose clear died midway is exact,
-since the folded rows keep their seq and duplicates of a leftover add
-are identical payloads deduped on key."""
+and then clears the log: ``adds/`` leaves first, in one rename, then
+``tombs/``. A clear that dies midway is exact: it leaves either the
+whole log, whose adds shadow their folded copies, or tombstones alone,
+no newer than the folded rows of their keys, which the seq rule keeps.
+Adds left without their tombstones would resurrect the rows those
+retired, and half of one key's adds would shadow folded rows whose
+adds are gone."""
 
 from __future__ import annotations
 
@@ -64,10 +70,10 @@ from vectordbindexing_spark.streaming.atomic import (
 #: base bytes
 COMPACT_FACTOR = 0.25
 
-#: tombstone logs under this many bytes are reduced driver-side and
-#: broadcast into the resolve joins; a larger one (a log at corpus
-#: scale that has not folded yet) is read and joined by Spark
-_LOCAL_TOMBS_BYTES = 64 * 1024 * 1024
+#: a tombstone log under this many bytes is broadcast into the resolve
+#: joins; a larger one (a log at corpus scale that has not folded yet)
+#: is joined as Spark plans it
+_BROADCAST_TOMBS_BYTES = 64 * 1024 * 1024
 
 
 @dataclass(frozen=True)
@@ -148,61 +154,43 @@ def resolve(
     adds_dir, tombs_dir = paths(spec, index_dir)
     if delta_empty(adds_dir, tombs_dir):
         return base.select(*keep)
-    if os.path.isdir(adds_dir):
-        adds = spark.read.schema(spec.adds_schema).parquet(adds_dir)
-    else:
-        adds = spark.createDataFrame([], spec.adds_schema)
-    tombs = _newest_tombs(spark, spec, tombs_dir)
-    # both sides take the same broadcast left join (one exchange); a
-    # base row with no tombstone (tseq null) passes through unshuffled
-    base = base.join(tombs, spec.key, "left")
-    tseq = F.col("tseq")
-    tombed = (
-        base.where(tseq.isNotNull())
-        .unionByName(_narrow(adds).join(tombs, spec.key, "left"))
-        .where(tseq.isNull() | (F.col("seq") >= tseq))
+
+    def _read(d: str, schema: str) -> DataFrame:
+        if os.path.isdir(d):
+            return spark.read.schema(schema).parquet(d)
+        return spark.createDataFrame([], schema)
+
+    # per tombstoned key: its newest tombstone and its newest add
+    adds = _narrow(_read(adds_dir, spec.adds_schema))
+    null = F.lit(None).cast("long")
+    keys = (
+        _read(tombs_dir, spec.tombs_schema)
+        .select(spec.key, F.col("seq").alias("tseq"), null.alias("aseq"))
+        .unionByName(
+            adds.select(spec.key, null.alias("tseq"), F.col("seq").alias("aseq"))
+        )
+        .groupBy(spec.key)
+        .agg(F.max("tseq").alias("tseq"), F.max("aseq").alias("aseq"))
+    )
+    if du_parquet(tombs_dir) < _BROADCAST_TOMBS_BYTES:
+        keys = F.broadcast(keys)
+    tseq, seq = F.col("tseq"), F.col("seq")
+    shadowed = F.coalesce(F.col("aseq") >= tseq, F.lit(False))
+    live_base = (
+        base.join(keys, spec.key, "left")
+        .where(tseq.isNull() | ((seq >= tseq) & ~shadowed))
+        .select(*cols)
+    )
+    # every add tombstones its key at its own seq, so tseq >= aseq and
+    # this is seq >= tseq; naming aseq keeps both joins on ONE
+    # broadcast table (a tseq-only join would be planned separately)
+    live_adds = (
+        adds.join(keys, spec.key, "left")
+        .where(seq >= F.greatest(tseq, F.col("aseq")))
         .select(*cols)
         .dropDuplicates(list(spec.dedup))
     )
-    return (
-        base.where(tseq.isNull()).select(*cols).unionByName(tombed)
-        .select(*keep)
-    )
-
-
-def _newest_tombs(spark: SparkSession, spec: LogSpec, tombs_dir: str):
-    """(key, tseq): the newest tombstone per key. Under
-    _LOCAL_TOMBS_BYTES the files are read and reduced through pyarrow
-    and broadcast as a local relation — no Spark job, where a Spark
-    read costs a scan job and a shuffle job per resolve."""
-    schema = f"{spec.key} long, tseq long"
-    files = sorted(
-        os.path.join(tombs_dir, f)
-        for f in (os.listdir(tombs_dir) if os.path.isdir(tombs_dir) else [])
-        if f.endswith(".parquet") and not f.startswith(".")
-    )
-    if not files:
-        return F.broadcast(spark.createDataFrame([], schema))
-    if du_parquet(tombs_dir) >= _LOCAL_TOMBS_BYTES:
-        return (
-            spark.read.schema(spec.tombs_schema).parquet(tombs_dir)
-            .groupBy(spec.key).agg(F.max("seq").alias("tseq"))
-        )
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    t = (
-        pa.concat_tables(
-            [pq.read_table(f, columns=[spec.key, "seq"]) for f in files]
-        )
-        .group_by(spec.key)
-        .aggregate([("seq", "max")])
-    )
-    return F.broadcast(
-        spark.createDataFrame(
-            t.select([spec.key, "seq_max"]).to_pandas(), schema
-        )
-    )
+    return live_base.unionByName(live_adds).select(*keep)
 
 
 def _write_local_parquet(rows: list, schema, path: str) -> int:
@@ -320,9 +308,17 @@ def pre_clear(spec: LogSpec, index_dir: str, seq: int) -> None:
 
 
 def clear(spec: LogSpec, index_dir: str) -> None:
-    """Drop the whole log (its base now subsumes it)."""
-    for d in (spec.root, spec.root + ".__tmp__"):
-        shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
+    """Drop the whole log (its base now subsumes it): ``adds/`` first,
+    renamed out in one step, then ``tombs/`` (module docstring: the
+    order keeps a clear that dies midway exact)."""
+    root = os.path.join(index_dir, spec.root)
+    adds_dir, tombs_dir = paths(spec, index_dir)
+    trash = root + ".__tmp__"
+    shutil.rmtree(trash, ignore_errors=True)
+    if os.path.isdir(adds_dir):
+        os.rename(adds_dir, trash)
+    for d in (tombs_dir, root, trash):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _acct(spec: LogSpec, meta: dict) -> dict | None:
