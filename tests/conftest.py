@@ -55,6 +55,8 @@ _SLOW_TESTS = {
     "test_fwd_tombs_without_adds_serves_instead_of_throwing",
     "test_update_same_id_new_vector_batch_wins_and_stale_edges_drop",
     "test_upsert_planner_route_past_exact_limit",
+    "test_driver_batch_knn_matches_spark_exact_route",
+    "test_read_parquet_schema_equals_spark_inference",
     # streaming neardup heavy rows (8-10s)
     "test_crash_between_sig_and_band_swap_heals_on_replay",
     "test_bands_delta_is_append_only_and_compaction_folds",

@@ -568,3 +568,50 @@ def test_build_fold_matches_per_layer_collects(spark):
         ).select("layer", "src", "dst", "dist").collect()
     )
     assert old == new
+
+
+def test_blocked_kernel_excludes_self_by_id_and_drops_non_finite(spark):
+    """The driver-held kernel (blocked_self_knn) and the Spark blocked
+    kernel behind knn_graph(impl='blocked') and the blocked build share
+    two rules: a corpus row is excluded when its ID equals the query's
+    (so neither copy of a duplicated id links to the other), and
+    non-finite distances — a zero vector under cosine — drop instead
+    of ranking (the Spark kernel raised on them before). On the
+    unique-id rows both kernels give the same edges."""
+    import math
+
+    import numpy as np
+
+    from vectordbindexing_spark.operators.exact_knn import blocked_self_knn
+    from vectordbindexing_spark.operators.graph import (
+        build_two_layer_index,
+        knn_graph,
+    )
+
+    rng = np.random.default_rng(3)
+    rows = [(i, [float(x) for x in rng.normal(size=4)]) for i in range(12)]
+    rows.append((5, [float(x) for x in rng.normal(size=4)]))  # duplicate id
+    rows.append((99, [0.0] * 4))  # cosine NaN against everything
+    df = spark.createDataFrame(rows, "id long, vec array<double>")
+
+    ids = np.array([i for i, _ in rows], dtype=np.int64)
+    V = np.array([v for _, v in rows], dtype=np.float64)
+    src, dst, dist = blocked_self_knn(ids, V, ids, V, 4, "cosine")
+    assert not np.any(src == dst) and np.all(np.isfinite(dist))
+    assert 99 not in src and 99 not in dst
+    assert np.sum(src == 5) == 2 * 4  # both copies keep a full list
+
+    knn = knn_graph(df, 4, "cosine", impl="blocked").collect()
+    built = build_two_layer_index(df, M0=4, M1=2, metric="cosine").collect()
+    assert knn and built
+    for r in knn + built:
+        assert r["src"] != r["dst"]
+        assert 99 not in (r["src"], r["dst"])
+        assert math.isfinite(r["dist"])
+    got = sorted((r["src"], r["dst"], r["dist"]) for r in knn if r["src"] != 5)
+    want = sorted(
+        (a, b, c) for a, b, c in zip(src.tolist(), dst.tolist(), dist.tolist())
+        if a != 5
+    )
+    assert [g[:2] for g in got] == [w[:2] for w in want]
+    assert max(abs(g[2] - w[2]) for g, w in zip(got, want)) <= 1e-12

@@ -328,16 +328,36 @@ def test_local_rows_df_plans_as_jvm_local_relation(spark):
     tiny write at local[32] — the r12 streaming-upsert discovery). The
     helper falls back silently on ANY conversion error, so a pandas/
     Arrow regression would otherwise re-introduce the tax with no test
-    tripping: this pin makes that failure loud."""
+    tripping: this pin makes that failure loud. NO rows (an insert-only
+    upsert's replaced-id list) is one of those shapes: an empty pickled
+    RDD still starts a Python worker per partition on every scan."""
+    from pyspark.sql.types import (
+        ArrayType,
+        FloatType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
     from vectordbindexing_spark.plans.partitioning import local_rows_df
 
+    row_schema = StructType([
+        StructField("id", LongType(), False),
+        StructField("vec", ArrayType(FloatType(), True), True),
+    ])
     # the maintainers' hot shapes: narrow ids, band rows, float vectors
     for rows, schema in [
         ([(1,), (2,)], "did long"),
         ([(1, 0, "3_4"), (2, 1, "5_6")],
          "did long, band_idx int, band_key string"),
         ([(1, [0.5, 1.5]), (2, [2.5, 3.5])], "id long, vec array<double>"),
+        ([], "did long"),
+        ([], row_schema),
     ]:
-        p = _plan(local_rows_df(spark, rows, schema))
+        df = local_rows_df(spark, rows, schema)
+        p = _plan(df)
         assert "LocalTableScan" in p, p
         assert "ExistingRDD" not in p, p
+        if isinstance(schema, StructType):
+            assert df.schema == schema
+        assert [tuple(r) for r in df.collect()] == rows

@@ -853,3 +853,126 @@ def test_ivf_mirror_crash_before_delta_append_heals_on_replay(
     vecs, edges, _ = load_graph_artifact(spark, art)
     gt1 = _gt(q, base.unionByName(b1))
     assert _recall(spark, q, vecs, edges, gt1) >= 0.6
+
+
+def _resolved_rows(spark, art):
+    from vectordbindexing_spark.streaming.graph_ingest import (
+        edges_resolved,
+        rev_edges_resolved,
+    )
+
+    return {
+        name: sorted(
+            (r["layer"], r["src"], r["dst"], r["dist"]) for r in fn(spark, art)
+            .select("layer", "src", "dst", "dist").collect()
+        )
+        for name, fn in (("fwd", edges_resolved), ("rev", rev_edges_resolved))
+    }
+
+
+def test_driver_batch_knn_matches_spark_exact_route(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """While the union is within BLOCKED_BUILD_LIMIT and the batch's
+    distance matrix is one block, the upsert scores its batch on the
+    driver against the pyarrow-read live vectors; forcing the Spark
+    blocked exact route (limit 0, around the upserts only) must resolve
+    to the same adjacency through an insert batch and an update batch:
+    identical (layer, src, dst) in both logs, dists within 1e-12. A
+    zero vector (cosine NaN against everything) rides in each batch —
+    inserted fresh, then an update turning a stored row to zero — and
+    both routes drop its non-finite distances alike."""
+    import vectordbindexing_spark.operators.graph as graph
+
+    full, base, b1, b2, q = corpus
+    zero = [0.0] * D
+    ins = b1.unionByName(
+        spark.createDataFrame([(N0 + 3 * NB, zero)], b1.schema)
+    )
+    # ids 0..19 re-ingested with other rows' vectors, id 20 zeroed: an
+    # update batch
+    upd = full.where(F.col("id") >= N0 + NB).limit(20).select(
+        (F.col("id") - (N0 + NB)).alias("id"), "vec"
+    ).unionByName(
+        spark.createDataFrame([(20, zero)], b1.schema)
+    ).localCheckpoint(eager=True)
+    got = {}
+    for route, limit in (("driver", None), ("spark", 0)):
+        art = str(tmp_path / route)
+        init_graph_artifact(base, art, M0=M0, M1=M1, buckets=8)
+        for b in (ins, upd):
+            with monkeypatch.context() as m:
+                if limit is not None:
+                    m.setattr(graph, "BLOCKED_BUILD_LIMIT", limit)
+                assert upsert_graph_artifact(b, art, refresh_factor=10.0) == (
+                    "upsert"
+                )
+        got[route] = _resolved_rows(spark, art)
+    for log in ("fwd", "rev"):
+        drv, spk = got["driver"][log], got["spark"][log]
+        assert [r[:3] for r in drv] == [r[:3] for r in spk], log
+        assert max(abs(a[3] - b[3]) for a, b in zip(drv, spk)) <= 1e-12
+        for zid in (N0 + 3 * NB, 20):
+            assert all(zid not in r[1:3] for r in drv), (log, zid)
+
+
+@pytest.mark.parametrize("vec_type", ["float", "double"])
+def test_read_parquet_schema_equals_spark_inference(
+    spark, tmp_path, monkeypatch, vec_type
+):
+    """atomic.read_parquet's footer-derived schema (plus the partition
+    column as int) must be the schema Spark infers, on every dir it
+    reads: vectors, unfolded bases (no seq) and folded ones (with seq)
+    of the edge logs and the IVF cells mirror, and the band index."""
+    import os
+
+    import numpy as np
+
+    from vectordbindexing_spark.streaming.atomic import read_parquet
+    from vectordbindexing_spark.streaming.neardup import (
+        init_neardup_artifact,
+    )
+
+    rng = np.random.default_rng(11)
+    base = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=4)]) for i in range(40)],
+        f"id long, vec array<{vec_type}>",
+    )
+    art = str(tmp_path / "art")
+    init_graph_artifact(base, art, M0=4, M1=2, buckets=4, exact_base_limit=10)
+    dirs = [("vectors", "bucket"), ("edges", "bucket"),
+            ("rev_edges", "bucket"), ("ivf_cells", "cell")]
+
+    def check():
+        for sub, part in dirs:
+            p = os.path.join(art, sub)
+            assert read_parquet(spark, p, part).schema == (
+                spark.read.parquet(p).schema
+            ), sub
+
+    check()
+    assert "seq" not in spark.read.parquet(os.path.join(art, "edges")).columns
+    monkeypatch.setattr(deltalog, "COMPACT_FACTOR", 0)
+    for lo in (100, 120):  # the second upsert folds the first one's logs
+        b = spark.createDataFrame(
+            [(i, [float(x) for x in rng.normal(size=4)])
+             for i in range(lo, lo + 5)],
+            f"id long, vec array<{vec_type}>",
+        )
+        assert upsert_graph_artifact(b, art, exact_base_limit=10,
+                                     refresh_factor=10.0) == "upsert"
+    assert "seq" in spark.read.parquet(os.path.join(art, "edges")).columns
+    check()
+
+    nd = str(tmp_path / "nd")
+    init_neardup_artifact(
+        spark.createDataFrame(
+            [(i, f"doc {i} text body") for i in range(10)],
+            "doc_id long, text string",
+        ),
+        nd, buckets=4,
+    )
+    bands = os.path.join(nd, "bands")
+    assert read_parquet(spark, bands, "bucket").schema == (
+        spark.read.parquet(bands).schema
+    )

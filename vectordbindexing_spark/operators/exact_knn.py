@@ -17,7 +17,16 @@ FAISS IndexFlat in the notebooks). Two Spark physical strategies:
   final global top-k window. This is the 100 TB path: one scan of base,
   no shuffle of vectors, shuffle volume O(batches · n_q · k).
 
-Both accumulate in float64 so results agree with the DuckDB oracle.
+Rows already on the driver can skip Spark: :func:`blocked_self_knn` is
+the same (dist, id) top-k over driver-held arrays. Executors run it on
+the groups of the sharded and bucketed graph builds; the driver runs
+it for the streaming upsert's batch kNN while :func:`driver_knn_fits`.
+Graph builds over a whole node set keep the ``mapInPandas`` kernel,
+which spreads the blocks over the executor cores.
+
+Either kernel ranks a NaN distance (cosine of a zero vector) as +inf.
+
+All accumulate in float64 so results agree with the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -196,7 +205,11 @@ def exact_knn_local_queries(
             # rows changes nothing downstream.
             cq = max(1, _BLOCK_TARGET_BYTES // max(1, 8 * len(bids)))
             for s in range(0, len(bqids), cq):
-                D = dist_matrix(bQ[s : s + cq], B, metric, weights=bw)
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    D = dist_matrix(bQ[s : s + cq], B, metric, weights=bw)
+                # NaN (cosine of a zero vector) → +inf: it ranks last
+                # instead of poisoning the selector's boundary distance
+                D[np.isnan(D)] = np.inf
                 if exclude_self:
                     D[np.equal.outer(bqids[s : s + cq], bids)] = np.inf
                 # exact per-batch (dist, id) selection — duplicate
@@ -222,32 +235,63 @@ def exact_knn_local_queries(
         partial_topk, schema="qid long, neighbor_id long, dist double"
     )
     if exclude_self:
-        # masked self-distances are +inf; drop any that survived a small batch
+        # masked self-distances (and NaN ones) are +inf; drop any that
+        # survived a small batch — a graph edge needs a finite distance
         partial = partial.filter(F.col("dist") != float("inf"))
     ranked = topk_per_group(partial, ["qid"], "dist", k, tie_col="neighbor_id")
     return ranked.select("qid", "nbr_rank", "neighbor_id", "dist")
 
 
+def driver_knn_fits(n_q: int, n_b: int) -> bool:
+    """Whether :func:`blocked_self_knn` scores ``n_q`` queries against
+    ``n_b`` corpus rows in ONE block (n_q·n_b doubles ≤
+    ``_BUILD_BLOCK_TARGET_BYTES``: 100 queries against 335k rows) —
+    one BLAS call and one selection, the bound under which the
+    streaming upsert scores its batch on the driver. Past it the blocks
+    run one after another in the driver process while the Spark kernel
+    runs them on every executor core."""
+    return n_q * n_b * 8 <= _BUILD_BLOCK_TARGET_BYTES
+
+
 def blocked_self_knn(
-    ids: np.ndarray, V: np.ndarray, k: int, metric: str
+    qids: np.ndarray,
+    Q: np.ndarray,
+    bids: np.ndarray,
+    B: np.ndarray,
+    k: int,
+    metric: str,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Exact kNN edges of a local node set against itself, by (dist, id)
-    per row and excluding self: ``(src, dst, dist)`` arrays in row order,
-    non-finite distances dropped. The distance matrix is computed in ROW
-    BLOCKS under ``_BUILD_BLOCK_TARGET_BYTES``: the full matrix is m²
-    doubles (2 TB at 500k rows) while blocks keep memory at O(block·m)
-    with identical per-pair arithmetic; up to ~5.6k rows one block spans
-    every row. Shared by the sharded build and the bucketed graph build."""
-    m = len(ids)
-    blk = max(1, min(m, _BUILD_BLOCK_TARGET_BYTES // max(1, 8 * m)))
+    """Exact kNN edges of driver-held query rows against driver-held
+    corpus rows: per query the top-k corpus rows by (dist, id),
+    excluding every corpus row whose id EQUALS the query's id
+    (``exact_knn(exclude_self=True)``'s rule) — ``(src, dst, dist)``
+    arrays in query row order, non-finite distances (a zero vector
+    under cosine) dropped. The self case — a node set's kNN graph —
+    passes the same arrays as both sides.
+
+    The distance matrix is computed in QUERY ROW BLOCKS under
+    ``_BUILD_BLOCK_TARGET_BYTES``: the full matrix is n_q·n_b doubles
+    (2 TB at 500k rows) while blocks keep memory at O(block·n_b) with
+    identical per-pair arithmetic; up to ~5.8k corpus rows one block
+    spans every query of a self graph. Shared by the sharded build and
+    the bucketed graph build (in-executor groups) and by the streaming
+    upsert's batch kNN on the driver (:func:`driver_knn_fits`)."""
+    nq, nb = len(qids), len(bids)
+    if nq == 0 or nb == 0:
+        return (
+            np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64)
+        )
+    blk = max(1, min(nq, _BUILD_BLOCK_TARGET_BYTES // max(1, 8 * nb)))
     src, dst, dist = [], [], []
-    for s in range(0, m, blk):
-        D = dist_matrix(V[s : s + blk], V, metric)
-        r = np.arange(D.shape[0])
-        D[r, s + r] = np.inf  # self-distance
-        nbr, dv = batch_topk_by_dist_id(D, ids, min(k, m))
+    for s in range(0, nq, blk):
+        # NaN (cosine of a zero vector) → +inf: it must rank last and
+        # drop, not poison the selector's boundary distance
+        with np.errstate(invalid="ignore", divide="ignore"):
+            D = dist_matrix(Q[s : s + blk], B, metric)
+        D[np.isnan(D) | np.equal.outer(qids[s : s + blk], bids)] = np.inf
+        nbr, dv = batch_topk_by_dist_id(D, bids, min(k, nb))
         fin = np.isfinite(dv)
-        src.append(np.repeat(ids[s : s + blk], fin.sum(axis=1)))
+        src.append(np.repeat(qids[s : s + blk], fin.sum(axis=1)))
         dst.append(nbr[fin])
         dist.append(dv[fin])
     return (

@@ -169,7 +169,8 @@ def _knn_graph_bucketed(
         ids = pdf["_nid"].to_numpy()
         V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_nv"]])
         order = np.argsort(ids, kind="stable")
-        src, dst, dist = blocked_self_knn(ids[order], V[order], k, metric)
+        ids, V = ids[order], V[order]
+        src, dst, dist = blocked_self_knn(ids, V, ids, V, k, metric)
         return pd.DataFrame({"src": src, "dst": dst, "dist": dist})
 
     per_table = salted.groupBy("bucket", "_salt").applyInPandas(

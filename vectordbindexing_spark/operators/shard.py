@@ -53,7 +53,8 @@ def _build_shard(
     level = np.array([assign_level_py(i, M_level) for i in ids], dtype=np.int64)
 
     def knn_edges(sub_idx: np.ndarray, kk: int) -> list[tuple[int, int, float]]:
-        src, dst, dist = blocked_self_knn(ids[sub_idx], V[sub_idx], kk, metric)
+        sid, sV = ids[sub_idx], V[sub_idx]
+        src, dst, dist = blocked_self_knn(sid, sV, sid, sV, kk, metric)
         return list(zip(src.tolist(), dst.tolist(), dist.tolist()))
 
     layers = {0: knn_edges(np.arange(n), M0)}

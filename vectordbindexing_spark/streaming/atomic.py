@@ -255,3 +255,47 @@ def count_parquet_rows(path: str) -> int:
             if f.endswith(".parquet"):
                 total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
     return total
+
+
+def _first_parquet_file(path: str) -> str | None:
+    for root, dirs, files in os.walk(path):
+        # Spark's discovery skips hidden (swap siblings) and _ entries
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                return os.path.join(root, f)
+    return None
+
+
+def _nullable(t):
+    """Spark's read-side ``asNullable``: parquet columns read back
+    nullable whatever the writer declared."""
+    from pyspark.sql.types import ArrayType, StructField, StructType
+
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    return t
+
+
+def read_parquet(spark, path: str, partition_col: str | None = None):
+    """``spark.read.parquet(path)`` without the schema-inference job:
+    the schema is read driver-side from ONE data file's footer (every
+    file of a maintainer dir shares it), plus the ``partition_col=K``
+    directory column as ``int`` — the schema Spark would infer. A dir
+    with no data file falls back to Spark's own inference."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import IntegerType, StructField
+
+    f = _first_parquet_file(path)
+    if f is None:
+        return spark.read.parquet(path)
+    schema = _nullable(from_arrow_schema(pq.read_schema(f)))
+    if partition_col is not None:
+        schema = schema.add(StructField(partition_col, IntegerType(), True))
+    return spark.read.schema(schema).parquet(path)
+

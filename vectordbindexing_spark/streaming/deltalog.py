@@ -36,8 +36,8 @@ the batch's seq so a crash replay overwrites its own attempt — after
 :func:`pre_clear` removed it, so the replay's probes see the
 pre-batch log. Two writer routes: driver-local rows go straight
 through pyarrow (micro-batches — a Spark job per tiny file would be
-pure fixed latency); a DataFrame goes through the Spark writer (the
-batch past the maintainer's bounded-collect gate).
+pure fixed latency), as named columns; a DataFrame goes through the
+Spark writer (the batch past the maintainer's bounded-collect gate).
 
 The log folds back into its base (:func:`fold_if_due`) once its bytes
 exceed :data:`COMPACT_FACTOR` × the base bytes — bounding probe-side
@@ -60,8 +60,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vectordbindexing_spark.plans.partitioning import local_rows_df
 from vectordbindexing_spark.streaming.atomic import (
     du_parquet,
+    read_parquet,
     swap_in,
     write_json_atomic,
 )
@@ -146,7 +148,7 @@ def resolve(
             df = df.join(F.broadcast(semi), semi.columns, "left_semi")
         return df
 
-    base = spark.read.parquet(os.path.join(index_dir, spec.base))
+    base = read_parquet(spark, os.path.join(index_dir, spec.base), spec.part)
     # a base written by init/rebuild may carry no seq; only a fold adds it
     if "seq" not in base.columns:
         base = base.withColumn("seq", F.lit(0).cast("long"))
@@ -158,7 +160,7 @@ def resolve(
     def _read(d: str, schema: str) -> DataFrame:
         if os.path.isdir(d):
             return spark.read.schema(schema).parquet(d)
-        return spark.createDataFrame([], schema)
+        return local_rows_df(spark, [], schema)
 
     # per tombstoned key: its newest tombstone and its newest add
     adds = _narrow(_read(adds_dir, spec.adds_schema))
@@ -193,21 +195,25 @@ def resolve(
     return live_base.unionByName(live_adds).select(*keep)
 
 
-def _write_local_parquet(rows: list, schema, path: str) -> int:
-    """DRIVER-LOCAL rows → one parquet file at ``path``, no Spark job.
-    The delta readers pass an explicit read schema, so only the
-    parquet physical types matter and Spark reads the bytes exactly as
-    a Spark-written file. Returns bytes written."""
+def _write_local_parquet(cols: dict, schema: str, path: str, order=None) -> int:
+    """DRIVER-LOCAL columns (name → array-like) → one parquet file at
+    ``path``, rows taken in ``order`` when given, no Spark job. The
+    delta readers pass an explicit read schema, so only the parquet
+    physical types matter and Spark reads the bytes exactly as a
+    Spark-written file. Returns bytes written."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
     asch = to_arrow_schema(_parse_datatype_string(schema))
-    cols = list(zip(*rows)) if rows else [[] for _ in asch]
-    arrays = [pa.array(list(c), type=f.type) for c, f in zip(cols, asch)]
+    table = pa.Table.from_arrays(
+        [pa.array(cols[f.name], type=f.type) for f in asch], schema=asch
+    )
+    if order is not None:
+        table = table.take(order)
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    pq.write_table(pa.Table.from_arrays(arrays, schema=asch), path)
+    pq.write_table(table, path)
     return os.path.getsize(path)
 
 
@@ -220,31 +226,35 @@ def append(
     buckets: int | None = None,
 ) -> int:
     """Append one batch: tombstones for ``tomb_keys``, then ``adds``.
-    Either driver-local — ``adds`` rows (payload..., partition value),
-    ``tomb_keys`` a key list — written through pyarrow with no Spark
-    job, or distributed — ``adds`` a payload-column DataFrame,
-    ``tomb_keys`` a one-column key frame, partitioned by
-    ``spec.bucket_by`` over ``buckets`` — written by Spark. Returns the
-    bytes appended (the fold-trigger accounting)."""
+    Either driver-local — ``adds`` a mapping from each payload column
+    and ``spec.part`` to its values, ``tomb_keys`` a key list — written
+    through pyarrow with no Spark job, or distributed — ``adds`` a
+    payload-column DataFrame, ``tomb_keys`` a one-column key frame,
+    partitioned by ``spec.bucket_by`` over ``buckets`` — written by
+    Spark. Returns the bytes appended (the fold-trigger accounting)."""
     adds_dir, tombs_dir = paths(spec, index_dir)
-    if isinstance(adds, list):
+    if isinstance(adds, dict):
         return _append_local(spec, adds_dir, tombs_dir, seq, adds, tomb_keys)
     return _append_spark(
         spec, index_dir, adds_dir, tombs_dir, seq, adds, tomb_keys, buckets
     )
 
 
-def _append_local(spec, adds_dir, tombs_dir, seq, add_rows, tomb_keys) -> int:
-    staged = sorted(
-        ((*r[:-1], seq, r[-1]) for r in add_rows), key=lambda t: t[-1]
-    )
+def _append_local(spec, adds_dir, tombs_dir, seq, adds, tomb_keys) -> int:
+    import numpy as np
+
+    part = np.asarray(adds[spec.part])
     tmp_t = os.path.join(tombs_dir, f".d{seq}.parquet.tmp")
     tmp_a = os.path.join(adds_dir, f".d{seq}-0.parquet.tmp")
     appended = _write_local_parquet(
-        [(k, seq) for k in tomb_keys], spec.tombs_schema, tmp_t
+        {spec.key: tomb_keys, "seq": np.full(len(tomb_keys), seq, np.int64)},
+        spec.tombs_schema, tmp_t,
     )
     os.replace(tmp_t, os.path.join(tombs_dir, f"d{seq}.parquet"))
-    appended += _write_local_parquet(staged, spec.adds_schema, tmp_a)
+    appended += _write_local_parquet(
+        {**adds, "seq": np.full(len(part), seq, np.int64)},
+        spec.adds_schema, tmp_a, order=np.argsort(part, kind="stable"),
+    )
     os.replace(tmp_a, os.path.join(adds_dir, f"d{seq}-0.parquet"))
     return appended
 

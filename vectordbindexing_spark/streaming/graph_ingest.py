@@ -31,15 +31,22 @@ described in streaming/deltalog.py):
 
 Per micro-batch (:func:`upsert_graph_artifact`):
 
-1. kNN edges of the NEW nodes against (stored ∪ batch) — below
-   ``exact_base_limit`` one blocked exact pass (O(n·|B|), the
-   per-insert cost of the reference's `add_items_batch` amortized over
-   the batch, hnsw_cosine_norm.py:480-580); past it the pass reads the
-   maintained IVF mirror (:func:`_ivf_artifact_knn`), so a 100 TB
-   corpus pays a probe-pruned cell read, not a full scan. Layer-1
-   edges likewise over the level≥1 subset (level assignment is a
-   deterministic function of the id, graph.py:26, so stored nodes keep
-   their levels without re-reading anything).
+1. kNN edges of the NEW nodes against (stored ∪ batch), one exact
+   pass of O(n·|B|) — the per-insert cost of the reference's
+   `add_items_batch` amortized over the batch
+   (hnsw_cosine_norm.py:480-580). Up to ``graph.BLOCKED_BUILD_LIMIT``
+   rows — the corpus size the bulk build already collects to the
+   driver — and while the batch's distance matrix is one block
+   (``exact_knn.driver_knn_fits``), the live vectors are read through
+   pyarrow and scored by the driver-held kernel
+   (:func:`_local_batch_knn`), no Spark job; otherwise up to
+   ``exact_base_limit`` the Spark blocked kernel scans them; past it
+   the pass reads the maintained IVF mirror
+   (:func:`_ivf_artifact_knn`), so a 100 TB corpus pays a
+   probe-pruned cell read, not a full scan. Layer-1 edges likewise
+   over the level≥1 subset (level assignment is a deterministic
+   function of the id, graph.py:26, so stored nodes keep their levels
+   without re-reading anything).
 2. DIRTY-SCOPED ``mutualize``: only nodes whose adjacency can change —
    the batch ids, the new edges' endpoints, and nodes that lose an
    edge to a replaced id — are re-capped (same bidirection +
@@ -121,6 +128,7 @@ from vectordbindexing_spark.streaming.atomic import (
     count_parquet_rows,
     du_parquet,
     read_meta,
+    read_parquet,
     recover,
     recover_tree,
     swap_in,
@@ -303,7 +311,7 @@ def _build_ivf_artifact(
 
     vec_path, _, _, _ = _paths(index_dir)
     cells_path, cent_path = _ivf_paths(index_dir)
-    vecs = spark.read.parquet(vec_path).drop("bucket")
+    vecs = read_parquet(spark, vec_path, "bucket").drop("bucket")
     nlist = min(max(16, int(max(n, 1) ** 0.5)), MAX_NLIST)
     centroids = kmeans_fit(vecs, nlist)
     cent_df = local_rows_df(
@@ -382,9 +390,7 @@ def _ivf_artifact_knn(
             if assign_level_py(i, M_level) >= level_min
         ]
     if not q_rows:
-        return spark.createDataFrame(
-            [], "layer int, src long, dst long, dist double"
-        )
+        return local_rows_df(spark, [], EDGE_SCHEMA)
     qids = np.array([i for i, _ in q_rows], dtype=np.int64)
     Q = np.stack([np.asarray(v, dtype=np.float64) for _, v in q_rows])
     probed = sorted(probe_cells(Q, C, npb))
@@ -445,6 +451,78 @@ def _ivf_artifact_knn(
         F.col("neighbor_id").alias("dst"),
         "dist",
     )
+
+
+def _as_stored(rows: list, vdt, d: int):
+    """``(ids, Q)`` of driver-local ``(id, vec)`` rows, every vector
+    rounded through the STORED element type ``vdt`` and widened to
+    float64 — how every batch row enters the exact batch kNN, on
+    either route."""
+    import numpy as np
+
+    return (
+        np.array([i for i, _ in rows], dtype=np.int64),
+        np.asarray([v for _, v in rows], dtype=vdt)
+        .astype(np.float64)
+        .reshape(len(rows), d),
+    )
+
+
+def _local_batch_knn(
+    vec_path: str,
+    ins_rows: list,
+    drop_ids: list,
+    add_rows: list,
+    vdt,
+    M0: int,
+    M1: int,
+    M_level: int,
+    metric: str,
+) -> list:
+    """Both layers' batch-vs-corpus kNN edges computed on the driver.
+    The live vectors are read once through pyarrow — no Spark job; hive
+    discovery skips the hidden ``.bucket=K.old`` swap siblings and
+    ``_SUCCESS`` markers, as Spark's does — and the batch's corpus
+    edit (``drop_ids``, ``add_rows``: the same pair the upsert's Spark
+    union applies) is applied to them. The driver-held exact kernel
+    then scores the ``ins_rows`` queries per layer, layer 1 over the
+    level≥1 subset on both sides. Returns (layer, src, dst, dist)
+    rows."""
+    import numpy as np
+    import pyarrow.dataset as ds
+
+    from vectordbindexing_spark.operators.exact_knn import blocked_self_knn
+    from vectordbindexing_spark.operators.graph import assign_level_py
+
+    t = ds.dataset(vec_path, format="parquet", partitioning="hive").to_table(
+        columns=["id", "vec"]
+    )
+    sids = t.column("id").to_numpy()
+    d = len(ins_rows[0][1])
+    S = (
+        t.column("vec").combine_chunks().flatten().to_numpy()
+        .astype(np.float64).reshape(len(sids), d)
+    )
+    keep = ~np.isin(sids, np.asarray(drop_ids, dtype=np.int64))
+    aids, A = _as_stored(add_rows, vdt, d)
+    bids, B = np.concatenate([sids[keep], aids]), np.concatenate([S[keep], A])
+    qids, Q = _as_stored(ins_rows, vdt, d)
+
+    def _upper(ids: np.ndarray) -> np.ndarray:
+        return np.array(
+            [assign_level_py(i, M_level) >= 1 for i in ids], dtype=bool
+        )
+
+    qu, bu = _upper(qids), _upper(bids)
+    rows: list = []
+    for layer, k, qm, bm in ((0, M0, ..., ...), (1, M1, qu, bu)):
+        src, dst, dist = blocked_self_knn(
+            qids[qm], Q[qm], bids[bm], B[bm], k, metric
+        )
+        rows += zip(
+            [layer] * len(src), src.tolist(), dst.tolist(), dist.tolist()
+        )
+    return rows
 
 
 def _bulk_write(
@@ -561,9 +639,11 @@ def upsert_graph_artifact(
     import numpy as np
 
     from vectordbindexing_spark.operators.exact_knn import (
+        driver_knn_fits,
         exact_knn_local_queries,
     )
     from vectordbindexing_spark.operators.graph import (
+        BLOCKED_BUILD_LIMIT,
         assign_level_py,
         assign_levels,
         mutualize,
@@ -625,7 +705,7 @@ def upsert_graph_artifact(
     new_bkt = {r["id"]: r["_bkt"] for r in new_rows}
     if not new_vec and not pend["ids"]:
         return "noop"
-    vecs_raw = spark.read.parquet(vec_path)
+    vecs_raw = read_parquet(spark, vec_path, "bucket")
     stored = vecs_raw.drop("bucket")
     # local frames round-trip through the STORED vec element type so
     # the unions below line up whatever the caller fed the stream
@@ -744,8 +824,6 @@ def upsert_graph_artifact(
             meta.pop("pending", None)
             write_json_atomic(meta_path, meta)
         return "noop"
-    fresh = _rows_df(fresh_rows)
-    changed = _rows_df(changed_rows)
     fresh_ids = [i for i, _ in fresh_rows]
     # replaced for EDGE purposes (stale-geometry drop): batch updates
     # plus healed pending updates. Replaced for VECTOR purposes is the
@@ -753,22 +831,30 @@ def upsert_graph_artifact(
     # winning one and must NOT be anti-joined out of the corpus.
     replaced_v_ids = [i for i, _ in changed_rows]
     replaced_e_ids = sorted(set(replaced_v_ids) | set(heal_repl_ids))
-    replaced_v = _ids_df(spark, replaced_v_ids)
     replaced_e = _ids_df(spark, replaced_e_ids)
     repl_bkts = sorted(
         {new_bkt[i] for i in replaced_v_ids}
         | {pend_bkt[i] for i in heal_repl_ids}
     )
-    # batch wins deterministically for updates; unchanged redelivered
-    # ids keep their stored row (bit-identical anyway). Deliberately
-    # NOT checkpointed: the lineage (parquet scan + broadcast anti +
-    # local-frame unions) is cheap to recompute and fully consumed
-    # (via the checkpointed kNN edges / rebuild output) before any swap.
-    union = (
-        stored.join(F.broadcast(replaced_v), "id", "left_anti")
-        .unionByName(changed)
-        .unionByName(fresh)
-    )
+    # THE batch's corpus edit — one (drop, add) pair that every reader
+    # of the post-batch corpus applies: the union (rebuild, Spark kNN
+    # route), the vectors swap and the driver kNN route. Batch wins
+    # deterministically for updates: the replaced ids' stored rows
+    # drop, then the changed and fresh rows append, rounded through
+    # the stored element type; unchanged redelivered ids keep their
+    # stored row (bit-identical anyway).
+    add_rows = changed_rows + fresh_rows
+    drop_df = F.broadcast(_ids_df(spark, replaced_v_ids))
+    add_df = _rows_df(add_rows)
+
+    def _edited(corpus: DataFrame) -> DataFrame:
+        return corpus.join(drop_df, "id", "left_anti").unionByName(add_df)
+
+    # Deliberately NOT checkpointed: the lineage (parquet scan +
+    # broadcast anti + local-frame union) is cheap to recompute and
+    # fully consumed (via the checkpointed kNN edges / rebuild output)
+    # before any swap.
+    union = _edited(stored)
     # incremental corpus size: meta-maintained, no O(corpus) count per
     # micro-batch; the ledger's fresh list keeps it exact across crash
     # replays, and every rebuild reconciles against a real count.
@@ -792,23 +878,32 @@ def upsert_graph_artifact(
         return "rebuild"
 
     # incremental edges: inserted/updated/healed nodes vs the union —
-    # exact below the limit, MAINTAINED-IVF-ARTIFACT-routed past it
-    # (probe-pruned read, no per-batch fit/assign scan) — + layer-1
-    # over the deterministic level>=1 subset
-    if n_union <= ebl:
-        # the queries are the driver-local ins rows, rounded through the
-        # STORED vec element type like every corpus-side row
-        qdt = np.float32 if isinstance(
-            stored.schema["vec"].dataType.elementType, FloatType
-        ) else np.float64
+    # on the driver while the union is a corpus the bulk build also
+    # collects there and the batch's distance matrix is one block, the
+    # Spark blocked exact pass up to the exact limit,
+    # MAINTAINED-IVF-ARTIFACT-routed past it (probe-pruned read, no
+    # per-batch fit/assign scan) — + layer-1 over the deterministic
+    # level>=1 subset. Both exact routes drop non-finite distances.
+    vdt = np.float32 if isinstance(
+        stored.schema["vec"].dataType.elementType, FloatType
+    ) else np.float64
+    local_knn = n_union <= min(ebl, BLOCKED_BUILD_LIMIT) and driver_knn_fits(
+        len(ins_rows), n_union
+    )
+    if local_knn:
+        edge_rows = _local_batch_knn(
+            vec_path, ins_rows, replaced_v_ids, add_rows, vdt,
+            M0, M1, M_level, metric,
+        )
+    elif n_union <= ebl:
+        d = len(ins_rows[0][1])
 
         def _exact(rows: list, corpus: DataFrame, k: int, layer: int):
             if not rows:
-                return spark.createDataFrame([], EDGE_SCHEMA)
+                return local_rows_df(spark, [], EDGE_SCHEMA)
             return exact_knn_local_queries(
-                np.array([i for i, _ in rows], dtype=np.int64),
-                np.asarray([v for _, v in rows], dtype=qdt).astype(np.float64),
-                corpus, k, metric, exclude_self=True,
+                *_as_stored(rows, vdt, d), corpus, k, metric,
+                exclude_self=True,
             ).select(
                 F.lit(layer).alias("layer"),
                 F.col("qid").alias("src"),
@@ -843,15 +938,16 @@ def upsert_graph_artifact(
             spark, index_dir, ins_rows, ins_rows, M1, metric, 1,
             level_min=1, M_level=M_level,
         )
-    # collect the batch's new edges: |ins|·(M0+M1+2) rows, bounded by
-    # the batch the classification already holds driver-side — ONE job
-    # running both layer kernels (replacing the eager checkpoint), and
-    # every downstream consumer (the dirty set, the mutualize input)
-    # reads the rows as a JVM local relation with no recompute
-    edge_rows = [
-        (r["layer"], r["src"], r["dst"], r["dist"])
-        for r in l0.unionByName(l1).collect()
-    ]
+    if not local_knn:
+        # collect the batch's new edges: |ins|·(M0+M1+2) rows, bounded
+        # by the batch the classification already holds driver-side —
+        # ONE job running both layer kernels, and every downstream
+        # consumer (the dirty set, the mutualize input) reads the rows
+        # as a JVM local relation with no recompute
+        edge_rows = [
+            (r["layer"], r["src"], r["dst"], r["dist"])
+            for r in l0.unionByName(l1).collect()
+        ]
     new_edges = local_rows_df(spark, edge_rows, EDGE_SCHEMA)
 
     # nodes losing a stale edge to a replaced id: a pure dst-side
@@ -928,10 +1024,12 @@ def upsert_graph_artifact(
     est_rows = len(dirty_ids) * 2 * (2 * max(M0, M1))
     merged_local = est_rows <= MERGED_LOCAL_LIMIT
     if merged_local:
-        md_rows = [
-            (r["layer"], r["src"], r["dst"], r["dist"])
-            for r in merged.collect()
-        ]
+        # one Arrow collect carrying both logs' partition values
+        md = merged.select(
+            *FWD.cols,
+            bucket(buckets, "src").alias("_fb"),
+            bucket(buckets, "dst").alias("_rb"),
+        ).toPandas()
     else:
         # Checkpointed: it feeds BOTH delta appends, and its lineage
         # reads edge_path/rev_path listings that later batches' folds
@@ -949,9 +1047,7 @@ def upsert_graph_artifact(
     vecs_out = (
         vecs_raw.where(F.col("bucket").isin(vb_list))
         .drop("bucket")
-        .join(F.broadcast(replaced_v), "id", "left_anti")
-        .unionByName(changed)
-        .unionByName(fresh)
+        .transform(_edited)
         .withColumn("bucket", bucket(buckets, "id"))
     )
     # vectors first: a crash between the vectors swap and the edge
@@ -972,7 +1068,7 @@ def upsert_graph_artifact(
     # the batch driver-side (|batch|·nlist flops — the whole point: the
     # corpus is never re-assigned) so the mirror keeps serving pruned
     # batch kNNs
-    ivf_add_rows: list = []
+    ivf_adds = None
     if meta.get("ivf"):
         from vectordbindexing_spark.operators.ivf import _argmin_d2_blocked
 
@@ -981,23 +1077,26 @@ def upsert_graph_artifact(
             np.stack([np.asarray(v, dtype=np.float64) for _, v in ins_rows]),
             C,
         )
-        ivf_add_rows = [
-            (i, v, int(c)) for (i, v), c in zip(ins_rows, ins_cells)
-        ]
+        ivf_adds = {
+            "id": [i for i, _ in ins_rows],
+            "vec": [v for _, v in ins_rows],
+            "cell": ins_cells,
+        }
     if vb_list:
         swap_in_buckets(vecs_out, vec_path, expected=vb_list)
     # under the gate both appends are |batch|·degree-bounded
-    # driver-local rows (bucket values from the pinned xxhash64 twin)
-    # → pyarrow writes, no Spark jobs; past it the distributed writers
-    # run on the checkpointed frame
-    appends = [
-        (FWD, [(*r, bucket_of_py(r[1], buckets)) for r in md_rows], dirty_ids),
-        (REV, [(*r, bucket_of_py(r[2], buckets)) for r in md_rows], dirty_ids),
-    ] if merged_local else [
-        (FWD, merged_dirty, dirty), (REV, merged_dirty, dirty)
-    ]
-    if ivf_add_rows:
-        appends.append((IVF, ivf_add_rows, [i for i, _ in ins_rows]))
+    # driver-local columns → pyarrow writes, no Spark jobs; past it the
+    # distributed writers run on the checkpointed frame
+    if merged_local:
+        cols = {c: md[c].to_numpy() for c in FWD.cols}
+        appends = [
+            (FWD, {**cols, "bucket": md["_fb"].to_numpy()}, dirty_ids),
+            (REV, {**cols, "bucket": md["_rb"].to_numpy()}, dirty_ids),
+        ]
+    else:
+        appends = [(FWD, merged_dirty, dirty), (REV, merged_dirty, dirty)]
+    if ivf_adds is not None:
+        appends.append((IVF, ivf_adds, ivf_adds["id"]))
     for spec, adds, keys in appends:
         deltalog.add_delta_bytes(
             spec, meta,
@@ -1020,7 +1119,7 @@ def load_graph_artifact(spark: SparkSession, index_dir: str):
     recover_tree(edge_path)
     recover_tree(rev_path)
     return (
-        spark.read.parquet(vec_path).drop("bucket"),
+        read_parquet(spark, vec_path, "bucket").drop("bucket"),
         edges_resolved(spark, index_dir),
         meta,
     )

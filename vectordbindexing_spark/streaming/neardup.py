@@ -258,7 +258,7 @@ def upsert_neardup_artifact(
     if not pend["ids"]:
         deltalog.fold_if_due(spark, BANDS, index_dir, meta, meta_path)
 
-    empty_pairs = spark.createDataFrame([], PAIR_SCHEMA)
+    empty_pairs = local_rows_df(spark, [], PAIR_SCHEMA)
     # deterministic in-batch winner for duplicate ids: greatest text
     latest = (
         batch.select(
@@ -537,10 +537,10 @@ def upsert_neardup_artifact(
     # is two pyarrow file writes — no Spark jobs.
     appended = deltalog.append(
         BANDS, index_dir, band_seq,
-        [
-            (r["did"], r["band_idx"], r["band_key"], r["_bkt"])
-            for r in br_rows
-        ],
+        {
+            **{c: [r[c] for r in br_rows] for c in BANDS.cols},
+            BANDS.part: [r["_bkt"] for r in br_rows],
+        },
         work_ids,
     )
 
