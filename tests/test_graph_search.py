@@ -615,3 +615,30 @@ def test_blocked_kernel_excludes_self_by_id_and_drops_non_finite(spark):
     )
     assert [g[:2] for g in got] == [w[:2] for w in want]
     assert max(abs(g[2] - w[2]) for g, w in zip(got, want)) <= 1e-12
+
+
+def test_expr_knn_graph_ranks_zero_vector_like_blocked(spark):
+    """Under cosine a zero vector has no distance to anything. The
+    Column-expression kernel (knn_graph(impl='expr'), exact_knn's
+    declarative join) gives it +inf instead of raising ANSI's
+    DIVIDE_BY_ZERO, and under exclude_self drops it as the blocked
+    kernel does, so both impls give the same graph on the other rows."""
+    import numpy as np
+
+    from vectordbindexing_spark.operators.graph import knn_graph
+
+    rng = np.random.default_rng(11)
+    rows = [(i, [float(x) for x in rng.normal(size=4)]) for i in range(13)]
+    rows.append((99, [0.0] * 4))
+    df = spark.createDataFrame(rows, "id long, vec array<double>")
+
+    def edges(impl):
+        return sorted(
+            (r["src"], r["dst"], r["dist"])
+            for r in knn_graph(df, 4, "cosine", impl=impl).collect()
+        )
+
+    expr, blocked = edges("expr"), edges("blocked")
+    assert all(99 not in (s, d) for s, d, _ in expr)
+    assert [e[:2] for e in expr] == [b[:2] for b in blocked]
+    assert max(abs(e[2] - b[2]) for e, b in zip(expr, blocked)) <= 1e-12

@@ -330,7 +330,10 @@ def test_local_rows_df_plans_as_jvm_local_relation(spark):
     Arrow regression would otherwise re-introduce the tax with no test
     tripping: this pin makes that failure loud. NO rows (an insert-only
     upsert's replaced-id list) is one of those shapes: an empty pickled
-    RDD still starts a Python worker per partition on every scan."""
+    RDD still starts a Python worker per partition on every scan. The
+    rows go through one Arrow table, so the plan holds in a session
+    without ``spark.sql.execution.arrow.pyspark.enabled`` (a vanilla
+    session, like the one ``__spark_entry__`` is driven with) too."""
     from pyspark.sql.types import (
         ArrayType,
         FloatType,
@@ -345,19 +348,36 @@ def test_local_rows_df_plans_as_jvm_local_relation(spark):
         StructField("id", LongType(), False),
         StructField("vec", ArrayType(FloatType(), True), True),
     ])
-    # the maintainers' hot shapes: narrow ids, band rows, float vectors
-    for rows, schema in [
-        ([(1,), (2,)], "did long"),
-        ([(1, 0, "3_4"), (2, 1, "5_6")],
-         "did long, band_idx int, band_key string"),
-        ([(1, [0.5, 1.5]), (2, [2.5, 3.5])], "id long, vec array<double>"),
-        ([], "did long"),
-        ([], row_schema),
-    ]:
-        df = local_rows_df(spark, rows, schema)
-        p = _plan(df)
-        assert "LocalTableScan" in p, p
-        assert "ExistingRDD" not in p, p
-        if isinstance(schema, StructType):
-            assert df.schema == schema
-        assert [tuple(r) for r in df.collect()] == rows
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
+    was = spark.conf.get(arrow, None)
+    try:
+        for enabled in ("true", "false"):
+            spark.conf.set(arrow, enabled)
+            # the maintainers' hot shapes: narrow ids, band rows, vectors
+            for rows, schema in [
+                ([(1,), (2,)], "did long"),
+                ([(1, 0, "3_4"), (2, 1, "5_6")],
+                 "did long, band_idx int, band_key string"),
+                ([(1, [0.5, 1.5]), (2, [2.5, 3.5])],
+                 "id long, vec array<double>"),
+                ([(1, [0.1, 1.0 / 3.0])], row_schema),
+                ([], "did long"),
+                ([], row_schema),
+            ]:
+                df = local_rows_df(spark, rows, schema)
+                p = _plan(df)
+                assert "LocalTableScan" in p, (enabled, p)
+                assert "ExistingRDD" not in p, (enabled, p)
+                if isinstance(schema, StructType):
+                    assert df.schema == schema
+                # bit-identical to the pickled route's JVM coercion
+                # (float32 rounding included)
+                want = spark.createDataFrame(rows, schema).collect()
+                assert df.collect() == want
+                if schema != row_schema:
+                    assert [tuple(r) for r in want] == rows
+    finally:
+        if was is None:
+            spark.conf.unset(arrow)
+        else:
+            spark.conf.set(arrow, was)

@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 
 import pytest
 
@@ -203,6 +204,150 @@ def test_clear_removes_adds_before_tombs(
     assert os.listdir(tombs_dir)
     assert os.path.exists(adds_dir) == (dies_at == "adds")
     assert _view(spark, spec, art) == truth
+
+
+@pytest.fixture(scope="module")
+def upserted_neardup(spark, tmp_path_factory):
+    """A 20-doc neardup artifact after one upsert that updates doc 3
+    and inserts doc 100: its band log holds adds and tombstones."""
+    art = str(tmp_path_factory.mktemp("neardup") / "art")
+    nd.init_neardup_artifact(
+        spark.createDataFrame(
+            [(i, f"alpha{i} bravo{i} charlie{i} delta{i}") for i in range(20)],
+            "doc_id long, text string",
+        ),
+        art, buckets=8,
+    )
+    nd.upsert_neardup_artifact(
+        spark.createDataFrame(
+            [(3, "alpha9 bravo9 charlie9 echo"), (100, "x y z w")],
+            "doc_id long, text string",
+        ),
+        art,
+    )
+    return art
+
+
+def _fold(spark, spec, art) -> int:
+    """Fold ``spec``'s log of ``art`` now (COMPACT_FACTOR 0 is the
+    caller's); returns the Spark jobs the fold ran."""
+    meta_path = os.path.join(art, "meta.json")
+    meta = json.load(open(meta_path))
+    sc, group = spark.sparkContext, f"fold-{uuid.uuid4()}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        assert deltalog.fold_if_due(spark, spec, art, meta, meta_path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _base_rows(spark, spec, art) -> list:
+    """The base as stored: payload, seq and partition value per row."""
+    from vectordbindexing_spark.streaming.atomic import read_parquet
+
+    return _rows(read_parquet(spark, os.path.join(art, spec.base), spec.part))
+
+
+def _fold_whose_clear_died(spark, spec, art, monkeypatch, left) -> None:
+    """Fold ``art``'s log and die in the clear, leaving the whole log
+    (``left="log"``) or its tombstones alone (``left="tombs"``) next
+    to a base that already holds the folded rows."""
+    adds_dir, _ = deltalog.paths(spec, art)
+
+    def dying_clear(s, index_dir):
+        if left == "tombs":
+            shutil.rmtree(adds_dir)
+        raise OSError("simulated crash in the fold's clear")
+
+    with monkeypatch.context() as m:
+        m.setattr(deltalog, "clear", dying_clear)
+        with pytest.raises(OSError):
+            _fold(spark, spec, art)
+
+
+@pytest.mark.parametrize("state", ["fresh", "log_left", "tombs_left"])
+@pytest.mark.parametrize("log", list(LOGS))
+def test_driver_fold_matches_spark_fold(
+    spark, tmp_path, monkeypatch, upserted_graph, upserted_neardup, log,
+    state,
+):
+    """The two fold routes of one log, from copies of one artifact:
+    the driver fold runs no Spark job, and both leave the same
+    resolved rows (seq included, equal to the pre-fold view), the same
+    stored rows under the same partition values — Spark's bucket
+    expression, or the row's own ``cell`` — and a base whose footer
+    schema is the schema Spark infers. Besides a log over an unfolded
+    base, the source may be an earlier fold whose clear died: folded
+    base rows beside the whole log (the adds must shadow them) or
+    beside lone tombstones (the seq rule must keep them)."""
+    from pyspark.sql import functions as F
+
+    from vectordbindexing_spark.streaming.atomic import read_parquet
+
+    spec = LOGS[log]
+    src = str(tmp_path / "src")
+    shutil.copytree(upserted_neardup if spec is nd.BANDS else upserted_graph, src)
+    truth = _rows(deltalog.resolve(spark, spec, src, keep_seq=True))
+    monkeypatch.setattr(deltalog, "COMPACT_FACTOR", 0.0)
+    if state != "fresh":
+        _fold_whose_clear_died(spark, spec, src, monkeypatch, state[:-5])
+    arts = {}
+    for route in ("driver", "spark"):
+        arts[route] = art = str(tmp_path / route)
+        shutil.copytree(src, art)
+        if route == "spark":
+            monkeypatch.setattr(deltalog, "DRIVER_LOG_BYTES", 0)
+        jobs = _fold(spark, spec, art)
+        assert (jobs == 0) == (route == "driver"), (route, jobs)
+        assert not any(os.path.exists(d) for d in deltalog.paths(spec, art))
+        assert _rows(deltalog.resolve(spark, spec, art, keep_seq=True)) == truth
+    assert _base_rows(spark, spec, arts["driver"]) == _base_rows(
+        spark, spec, arts["spark"]
+    )
+    base_path = os.path.join(arts["driver"], spec.base)
+    base = read_parquet(spark, base_path, spec.part)
+    assert base.schema == spark.read.parquet(base_path).schema
+    if spec.bucket_by:
+        buckets = json.load(open(os.path.join(src, "meta.json")))["buckets"]
+        want = deltalog.bucket(buckets, *spec.bucket_by)
+        assert base.where(F.col(spec.part) != want).count() == 0
+
+
+@pytest.mark.parametrize("log", list(LOGS))
+def test_driver_fold_dying_before_its_swap_leaves_base_exact(
+    spark, tmp_path, monkeypatch, upserted_graph, upserted_neardup, log
+):
+    """A driver fold that dies after writing its temp base and before
+    the swap leaves the live base complete and untouched: after
+    ``recover_tree`` the base and log resolve exactly as before, and
+    the next fold replaces the stale temp and folds them."""
+    from vectordbindexing_spark.streaming.atomic import recover_tree
+
+    spec = LOGS[log]
+    art = str(tmp_path / "art")
+    shutil.copytree(upserted_neardup if spec is nd.BANDS else upserted_graph, art)
+    base_path = os.path.join(art, spec.base)
+    truth = _rows(deltalog.resolve(spark, spec, art, keep_seq=True))
+    stored = _base_rows(spark, spec, art)
+
+    def boom(src, live):
+        assert os.path.exists(os.path.join(src, "_SUCCESS"))
+        raise OSError("simulated crash before the fold's swap")
+
+    monkeypatch.setattr(deltalog, "COMPACT_FACTOR", 0.0)
+    monkeypatch.setattr(deltalog, "_swap_dir", boom)
+    with pytest.raises(OSError):
+        _fold(spark, spec, art)
+    monkeypatch.undo()
+    recover_tree(base_path, partition_col=spec.part)
+    assert os.path.exists(os.path.join(base_path, "_SUCCESS"))
+    assert _base_rows(spark, spec, art) == stored
+    assert _rows(deltalog.resolve(spark, spec, art, keep_seq=True)) == truth
+
+    monkeypatch.setattr(deltalog, "COMPACT_FACTOR", 0.0)
+    assert _fold(spark, spec, art) == 0
+    assert _rows(deltalog.resolve(spark, spec, art, keep_seq=True)) == truth
 
 
 def _graph(spark, art):

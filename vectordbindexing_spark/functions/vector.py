@@ -54,8 +54,14 @@ def unit_norm(a: Column | str, eps: float = 1e-12) -> Column:
 
 
 def cosine_dist(a: Column | str, b: Column | str) -> Column:
-    """1 - dot(a,b) / (||a||·||b||) — works on non-normalized inputs too."""
-    return F.lit(1.0) - dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """1 - dot(a,b) / (||a||·||b||) — works on non-normalized inputs too.
+    A zero vector has no direction: its distance is +inf (it ranks
+    last), the value the numpy kernels give its NaN, where ANSI
+    division would raise DIVIDE_BY_ZERO."""
+    den = l2_norm(a) * l2_norm(b)
+    return F.when(den == 0, F.lit(float("inf"))).otherwise(
+        F.lit(1.0) - dot(a, b) / den
+    )
 
 
 def l2_dist(a: Column | str, b: Column | str) -> Column:

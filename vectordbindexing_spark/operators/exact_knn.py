@@ -129,7 +129,11 @@ def _exact_knn_expr(
     # crossJoin: Catalyst broadcasts the smaller side (BroadcastNestedLoopJoin)
     pairs = q.crossJoin(b).withColumn("dist", dist)
     if exclude_self:
-        pairs = pairs.filter(F.col("qid") != F.col("neighbor_id"))
+        # as in the blocked kernel: a graph edge needs a finite distance
+        pairs = pairs.filter(
+            (F.col("qid") != F.col("neighbor_id"))
+            & (F.col("dist") != float("inf"))
+        )
     ranked = topk_per_group(
         pairs.select("qid", "neighbor_id", "dist"),
         ["qid"],

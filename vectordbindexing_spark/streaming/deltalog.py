@@ -43,7 +43,17 @@ The log folds back into its base (:func:`fold_if_due`) once its bytes
 exceed :data:`COMPACT_FACTOR` × the base bytes — bounding probe-side
 read amplification — and for free whenever the owner rewrites the
 base (init, rebuild). The fold writes each resolved row with its seq
-and then clears the log: ``adds/`` leaves first, in one rename, then
+into the base's hidden temp sibling, swaps it in (``atomic``'s
+two-rename swap, so ``recover_tree`` judges it like any other swap)
+and then clears the log. Two routes share that sequence: a log whose
+meta.json base plus delta bytes stay under :data:`DRIVER_LOG_BYTES`
+folds on the driver — base, adds and tombstones read through
+``pyarrow.dataset``, :func:`resolve`'s seq rule applied in numpy, each
+row kept in the partition it is stored in, one file per partition,
+no Spark job (at the ``annbench`` ``ingest`` size a Spark fold was
+six jobs of fixed latency to rewrite 1 MB); a larger log runs the
+same resolve as a Spark job chain and re-derives the partition
+column. The clear removes ``adds/`` first, in one rename, then
 ``tombs/``. A clear that dies midway is exact: it leaves either the
 whole log, whose adds shadow their folded copies, or tombstones alone,
 no newer than the folded rows of their keys, which the seq rule keeps.
@@ -62,9 +72,11 @@ from pyspark.sql import functions as F
 
 from vectordbindexing_spark.plans.partitioning import local_rows_df
 from vectordbindexing_spark.streaming.atomic import (
+    _swap_dir,
     du_parquet,
     read_parquet,
     swap_in,
+    tmp_path,
     write_json_atomic,
 )
 
@@ -72,10 +84,11 @@ from vectordbindexing_spark.streaming.atomic import (
 #: base bytes
 COMPACT_FACTOR = 0.25
 
-#: a tombstone log under this many bytes is broadcast into the resolve
-#: joins; a larger one (a log at corpus scale that has not folded yet)
-#: is joined as Spark plans it
-_BROADCAST_TOMBS_BYTES = 64 * 1024 * 1024
+#: the driver's share of a log: a log whose base plus delta bytes
+#: (meta.json counters) stay under this folds on the driver, and a
+#: tombstone log under it is broadcast into the resolve joins; a larger
+#: one (a log at corpus scale) folds and joins as Spark plans it
+DRIVER_LOG_BYTES = 64 * 1024 * 1024
 
 
 @dataclass(frozen=True)
@@ -174,7 +187,7 @@ def resolve(
         .groupBy(spec.key)
         .agg(F.max("tseq").alias("tseq"), F.max("aseq").alias("aseq"))
     )
-    if du_parquet(tombs_dir) < _BROADCAST_TOMBS_BYTES:
+    if du_parquet(tombs_dir) < DRIVER_LOG_BYTES:
         keys = F.broadcast(keys)
     tseq, seq = F.col("tseq"), F.col("seq")
     shadowed = F.coalesce(F.col("aseq") >= tseq, F.lit(False))
@@ -195,6 +208,13 @@ def resolve(
     return live_base.unionByName(live_adds).select(*keep)
 
 
+def _arrow_schema(ddl: str):
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_schema(_parse_datatype_string(ddl))
+
+
 def _write_local_parquet(cols: dict, schema: str, path: str, order=None) -> int:
     """DRIVER-LOCAL columns (name → array-like) → one parquet file at
     ``path``, rows taken in ``order`` when given, no Spark job. The
@@ -203,10 +223,8 @@ def _write_local_parquet(cols: dict, schema: str, path: str, order=None) -> int:
     Spark-written file. Returns bytes written."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
 
-    asch = to_arrow_schema(_parse_datatype_string(schema))
+    asch = _arrow_schema(schema)
     table = pa.Table.from_arrays(
         [pa.array(cols[f.name], type=f.type) for f in asch], schema=asch
     )
@@ -357,27 +375,156 @@ def fold_if_due(
     meta_path: str,
 ) -> bool:
     """Fold the log into its base once it outgrows COMPACT_FACTOR × the
-    base, then clear it and commit the counters. Callers defer this
-    while a pending batch needs healing. Returns whether it folded."""
+    base — on the driver while base plus delta bytes stay under
+    DRIVER_LOG_BYTES, else through Spark — then clear it and commit
+    the counters. Callers defer this while a pending batch needs
+    healing. Returns whether it folded."""
     d, p = _acct(spec, meta), spec.meta_prefix
     if not d or d[p + "delta_bytes"] <= COMPACT_FACTOR * max(
         int(d[p + "base_bytes"]), 1
     ):
         return False
-    folded = resolve(spark, spec, index_dir, keep_seq=True)
-    if spec.bucket_by:
-        folded = folded.withColumn(
-            spec.part, bucket(meta["buckets"], *spec.bucket_by)
-        )
     base_path = os.path.join(index_dir, spec.base)
-    swap_in(
-        folded.localCheckpoint(eager=True),  # lineage reads the base it replaces
-        base_path, coalesce=None, partition_by=[spec.part],
-    )
+    if int(d[p + "base_bytes"]) + int(d[p + "delta_bytes"]) < DRIVER_LOG_BYTES:
+        _fold_local(spec, index_dir, base_path)
+    else:
+        folded = resolve(spark, spec, index_dir, keep_seq=True)
+        if spec.bucket_by:
+            folded = folded.withColumn(
+                spec.part, bucket(meta["buckets"], *spec.bucket_by)
+            )
+        swap_in(
+            folded.localCheckpoint(eager=True),  # lineage reads the base it replaces
+            base_path, coalesce=None, partition_by=[spec.part],
+        )
     clear(spec, index_dir)
     reset_bytes(spec, meta, index_dir)
     write_json_atomic(meta_path, meta)
     return True
+
+
+_NO_SEQ = -(2**63)  # a key with no tombstone / no add (SQL NULL)
+
+
+def _newest(keys, seqs):
+    """Each distinct key (sorted) and its greatest seq."""
+    import numpy as np
+
+    order = np.lexsort((seqs, keys))
+    k, q = keys[order], seqs[order]
+    last = np.append(k[1:] != k[:-1], True) if len(k) else np.zeros(0, bool)
+    return k[last], q[last]
+
+
+def _lookup(table, q):
+    """``table``'s value per key in ``q``; :data:`_NO_SEQ` where absent."""
+    import numpy as np
+
+    keys, vals = table
+    if not len(keys):
+        return np.full(len(q), _NO_SEQ, np.int64)
+    i = np.minimum(np.searchsorted(keys, q), len(keys) - 1)
+    return np.where(keys[i] == q, vals[i], _NO_SEQ)
+
+
+def _dictionary_pays(t) -> list:
+    """The integer and string columns of ``t`` whose dictionary plus
+    bit-packed indices undercut plain encoding — parquet-mr's fallback
+    test, which Spark's writer applies per column chunk and pyarrow
+    does not: a dictionary of near-distinct neighbour ids made a
+    4.8M-row fold's base 11% larger than Spark's."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n, pays = len(t), []
+    for c in t.column_names:
+        col = t.column(c)
+        if pa.types.is_string(col.type):
+            width = 4 + pc.sum(pc.binary_length(col)).as_py() / max(n, 1)
+        elif pa.types.is_integer(col.type):
+            width = col.type.bit_width / 8
+        else:
+            continue
+        distinct = pc.count_distinct(col).as_py()
+        if distinct * width + n * max(distinct - 1, 1).bit_length() / 8 < n * width:
+            pays.append(c)
+    return pays
+
+
+def _fold_local(spec: LogSpec, index_dir: str, base_path: str) -> None:
+    """The driver fold (module docstring): :func:`resolve`'s seq rule
+    over pyarrow reads of base, adds and tombstones, written as one
+    file per partition — one row group sorted by ``spec.key`` — into
+    the base's temp sibling, then swapped in. Each row keeps the
+    partition value it is stored under (``buckets`` is fixed between
+    rebuilds; IVF's ``cell`` is payload)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    asch = _arrow_schema(spec.adds_schema)  # payload + seq + part
+    hive = ds.partitioning(pa.schema([asch.field(spec.part)]), flavor="hive")
+    adds_dir, tombs_dir = paths(spec, index_dir)
+
+    def _read(d, schema, **kw):
+        if not os.path.isdir(d):
+            return schema.empty_table()
+        return ds.dataset(d, format="parquet", schema=schema, **kw).to_table()
+
+    base = _read(base_path, asch, partitioning=hive)
+    # a base written by init/rebuild carries no seq: it reads as null
+    base = base.set_column(
+        base.schema.get_field_index("seq"), "seq",
+        base.column("seq").fill_null(0),
+    )
+    adds = _read(adds_dir, asch)
+    tombs = _read(tombs_dir, _arrow_schema(spec.tombs_schema))
+
+    def _keys_seqs(t):
+        return t.column(spec.key).to_numpy(), t.column("seq").to_numpy()
+
+    bk, bs = _keys_seqs(base)
+    ak, as_ = _keys_seqs(adds)
+    tseq, aseq = _newest(*_keys_seqs(tombs)), _newest(ak, as_)
+    bt, ba = _lookup(tseq, bk), _lookup(aseq, bk)
+    live_base = (bt == _NO_SEQ) | ((bs >= bt) & (ba < bt))
+    live_adds = as_ >= np.maximum(_lookup(tseq, ak), _lookup(aseq, ak))
+    adds = adds.filter(pa.array(live_adds))
+    if adds.num_rows:
+        # one row per spec.dedup identity: the first of each run
+        adds = adds.take(
+            pc.sort_indices(adds, [(c, "ascending") for c in spec.dedup])
+        )
+        cols = [adds.column(c).to_numpy() for c in spec.dedup]
+        first = np.ones(adds.num_rows, bool)
+        first[1:] = np.logical_or.reduce([c[1:] != c[:-1] for c in cols])
+        adds = adds.filter(pa.array(first))
+    rows = pa.concat_tables([base.filter(pa.array(live_base)), adds])
+    rows = rows.take(
+        pc.sort_indices(rows, [(spec.part, "ascending"), (spec.key, "ascending")])
+    )
+    out = [c for c in (*spec.cols, "seq") if c != spec.part]
+    part = rows.column(spec.part).to_numpy()
+    cuts = [0, *(np.flatnonzero(np.diff(part)) + 1), len(part)]
+    cuts = cuts if len(part) else [0]
+    tmp = tmp_path(base_path)
+    shutil.rmtree(tmp, ignore_errors=True)  # a crashed attempt's temp
+    os.makedirs(tmp)
+    for lo, hi in zip(cuts, cuts[1:]):
+        d = os.path.join(tmp, f"{spec.part}={part[lo]}")
+        os.makedirs(d)
+        t = rows.slice(lo, hi - lo).select(out)
+        # one row group per file (pyarrow's defaults wrote ~7% more
+        # bytes than Spark), dictionaries only where they pay
+        pq.write_table(
+            t, os.path.join(d, "part-00000.parquet"),
+            row_group_size=len(t), use_dictionary=_dictionary_pays(t),
+            store_schema=False,
+        )
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
+    _swap_dir(tmp, base_path)
 
 
 def parallel_swaps(*thunks) -> None:
