@@ -642,3 +642,202 @@ def test_expr_knn_graph_ranks_zero_vector_like_blocked(spark):
     assert all(99 not in (s, d) for s, d, _ in expr)
     assert [e[:2] for e in expr] == [b[:2] for b in blocked]
     assert max(abs(e[2] - b[2]) for e, b in zip(expr, blocked)) <= 1e-12
+
+
+def _oracle_index(seed, n=400, d=12, dup_every=None):
+    """A two-layer adjacency built by the numpy twins (kNN with (dist, id)
+    ties → mutualize → CSR over id-ascending positions), the CompactIndex
+    over exactly that CSR, and the twin's inputs. ``dup_every`` copies
+    the vector of every ``dup_every``-th row onto the next row, so exact
+    distance ties occur."""
+    import numpy as np
+
+    from vectordbindexing_spark.operators.search import CompactIndex
+    from vectordbindexing_spark.oracles import (
+        _np_compact,
+        _np_cosine_matrix,
+        _np_mutualize,
+    )
+
+    rng = np.random.default_rng(seed)
+    bids = np.arange(n, dtype=np.int64) * 3 + 1
+    B = rng.normal(size=(n, d)).astype(np.float32)
+    if dup_every:
+        B[1::dup_every] = B[0::dup_every][: len(B[1::dup_every])]
+
+    def knn_edges(sub, kk):
+        D = _np_cosine_matrix(B[sub].astype(np.float64),
+                              B[sub].astype(np.float64))
+        np.fill_diagonal(D, np.inf)
+        return [(int(bids[sub[i]]), int(bids[sub[j]]), float(D[i, j]))
+                for i in range(len(sub))
+                for j in np.lexsort((bids[sub], D[i]))[:kk]]
+
+    adj = _np_mutualize(
+        {0: knn_edges(np.arange(n), 8), 1: knn_edges(np.arange(0, n, 9), 4)},
+        cap=16,
+    )
+    pos_ids, PVi, csr, ep = _np_compact(adj, bids, B, 3)
+    idx = CompactIndex(
+        pos_ids, PVi, {L: c[0] for L, c in csr.items()},
+        {L: c[1] for L, c in csr.items()}, ep, "cosine",
+    )
+    return adj, bids, B, idx
+
+
+def _one_partition_queries(spark, Q):
+    """All queries in ONE partition (the others empty, so graph_search's
+    repartition leaves the layout alone): one Arrow batch of len(Q)."""
+    sc = spark.sparkContext
+    rows = [(i, [float(x) for x in q]) for i, q in enumerate(Q)]
+    rdd = sc.parallelize(rows, 1).union(
+        sc.parallelize([], max(1, sc.defaultParallelism - 1))
+    )
+    return spark.createDataFrame(rdd, "qid long, vec array<double>")
+
+
+def _serve_both(spark, adj, bids, B, idx, Q, **kw):
+    """(graph_search rows by qid, oracle rows by qid, stats by qid)."""
+    from collections import defaultdict
+
+    from vectordbindexing_spark.operators.search import graph_search
+    from vectordbindexing_spark.oracles import _np_serve
+
+    twin_stats: list = []
+    twin = _np_serve(adj, bids, B, Q, k=10, ef_search=32,
+                     num_entry_points=3, layer1_ef_multiplier=2,
+                     stats=twin_stats, **kw)
+    got, stats = defaultdict(list), {}
+    for r in graph_search(_one_partition_queries(spark, Q), idx, k=10,
+                          ef_search=32, with_stats=True, **kw).collect():
+        got[r["qid"]].append((r["nbr_rank"], r["dist"], r["neighbor_id"]))
+        stats[r["qid"]] = (r["visited_count"], r["hops"], r["latency_us"])
+    return got, twin, twin_stats, stats
+
+
+@pytest.mark.parametrize("budget", [None, 40])
+def test_lockstep_kernel_matches_heap_twin(spark, budget):
+    """On distinct distances the lockstep batch kernel is the per-query
+    heap beam result for result: the same ranked neighbours (distances
+    to the last ulps: the kernel scores a round with one batched dot
+    product) and the same visited_count and hops, with and without the
+    max_search_nodes budget. 130 queries in one partition make one
+    Arrow batch that the kernel splits into chunks of 64 + 64 + 2."""
+    import numpy as np
+
+    adj, bids, B, idx = _oracle_index(3)
+    Q = np.random.default_rng(4).normal(size=(130, B.shape[1]))
+    got, twin, twin_stats, stats = _serve_both(
+        spark, adj, bids, B, idx, Q, max_search_nodes=budget
+    )
+    assert sorted(got) == list(range(130))
+    for qi in range(130):
+        rows = sorted(got[qi])
+        assert [r[0] for r in rows] == list(range(1, len(rows) + 1))
+        assert [r[2] for r in rows] == [nid for _, nid in twin[qi]], qi
+        assert np.allclose([r[1] for r in rows], [d for d, _ in twin[qi]],
+                           rtol=0, atol=1e-12)
+        assert stats[qi][:2] == twin_stats[qi], qi
+    if budget is not None:  # the budget really cut the search short
+        assert max(v for v, _, _ in stats.values()) < 3 * budget
+    # one latency per chunk: the batch was searched as 64 + 64 + 2
+    from collections import Counter
+
+    sizes = sorted(Counter(s[2] for s in stats.values()).values())
+    assert sum(sizes) == 130 and 2 in sizes and set(sizes) <= {2, 64, 128}
+
+
+def test_duplicate_vectors_differ_from_heap_twin_only_among_ties(spark):
+    """Duplicated vectors give exact distance ties. The kernel scores a
+    pair the same whatever else its round scores, so a duplicate pair
+    ties exactly and ranks by id; the heap twin scores a hop's
+    neighbours with one matrix-vector product whose last ulps move
+    with a row's place in the hop. Ranked distances agree, and a
+    neighbour id differs from the twin's only where the two ids carry
+    the same vector."""
+    import numpy as np
+
+    adj, bids, B, idx = _oracle_index(5, dup_every=3)
+    vec_of = {int(i): B[p] for p, i in enumerate(bids)}
+    Q = np.random.default_rng(6).normal(size=(130, B.shape[1]))
+    got, twin, _, _ = _serve_both(spark, adj, bids, B, idx, Q)
+    n_tied = 0
+    for qi in range(130):
+        rows = sorted(got[qi])
+        assert np.allclose([r[1] for r in rows], [d for d, _ in twin[qi]],
+                           rtol=0, atol=1e-12)
+        for (_, d, nid), (_, tid) in zip(rows, twin[qi]):
+            if nid != tid:
+                assert np.array_equal(vec_of[nid], vec_of[tid]), qi
+                n_tied += 1
+        # exact ties rank by id
+        assert rows == sorted(rows, key=lambda r: (r[1], r[2]))
+    assert n_tied > 0  # the corpus really exercises ties
+
+
+def test_tie_rule_full_beam_keeps_smaller_id(spark):
+    """Pin the kernel's tie rule on a 5-node layer-0 graph (cosine,
+    query (1, 0), ef = k = 2). B (id 2) and C (id 3) tie exactly at
+    1 - 1/√2. Expanding the entry E fills the beam with B and C;
+    expanding B finds A, which is nearer, so the full beam drops one
+    of the tied pair. The kernel keeps the smaller id (B) and never
+    expands the dropped C, so F, reachable only through C, stays
+    unseen. The heap twin drops B instead, still expands C (its
+    distance equals the worst kept one) and finds F."""
+    import numpy as np
+
+    from vectordbindexing_spark.operators.search import CompactIndex, graph_search
+    from vectordbindexing_spark.oracles import _np_compact, _np_serve
+
+    #              E        A        B        C         F
+    B = np.array([[0, 1], [2, 1], [1, 1], [1, -1], [4, 1]], dtype=np.float32)
+    bids = np.arange(5, dtype=np.int64)
+    E, A, Bn, C, F = range(5)
+    adj = {0: {E: [(0.0, Bn), (0.0, C)], A: [(0.0, Bn)],
+               Bn: [(0.0, E), (0.0, A)], C: [(0.0, E), (0.0, F)],
+               F: [(0.0, C)]}}
+    pos_ids, PVi, csr, ep = _np_compact(adj, bids, B, 1)
+    assert list(ep) == [E]
+    idx = CompactIndex(pos_ids, PVi, {0: csr[0][0]}, {0: csr[0][1]}, ep)
+    q = spark.createDataFrame([(0, [1.0, 0.0])], "qid long, vec array<double>")
+    rows = graph_search(q, idx, k=2, ef_search=2, num_entry_points=1,
+                        with_stats=True).collect()
+    assert [r["neighbor_id"] for r in rows] == [A, Bn]
+    assert (rows[0]["visited_count"], rows[0]["hops"]) == (4, 3)
+
+    twin_stats: list = []
+    twin = _np_serve(adj, bids, B, np.array([[1.0, 0.0]]), k=2,
+                     ef_search=2, num_entry_points=1,
+                     layer1_ef_multiplier=2, stats=twin_stats)
+    assert [nid for _, nid in twin[0]] == [F, A]
+    assert twin_stats == [(5, 5)]
+
+
+def test_row_norms_persist_and_match_gathered_norms(tmp_path, monkeypatch):
+    """The index's row norms are the values ``CompactIndex.dist`` used to
+    compute per hop (np.linalg.norm of the gathered float64 rows), bit
+    for bit, whatever the norm block size; save_compact_npy persists
+    them and load_compact_npy maps them."""
+    import numpy as np
+
+    from vectordbindexing_spark.operators import search
+    from vectordbindexing_spark.operators.shard import save_compact_npy
+
+    rng = np.random.default_rng(8)
+    V = rng.normal(size=(1000, 37)).astype(np.float32)
+    pos = rng.integers(0, 1000, 300)
+    monkeypatch.setattr(search, "_NORM_BLOCK_ROWS", 64)
+    norms = search._row_norms(V)
+    assert np.array_equal(
+        norms[pos], np.linalg.norm(V[pos].astype(np.float64), axis=1)
+    )
+    ptr = np.zeros(1001, dtype=np.int64)
+    idx = search.CompactIndex(
+        np.arange(1000, dtype=np.int64), V, {0: ptr},
+        {0: np.zeros(0, dtype=np.int64)}, np.array([0]),
+    )
+    assert np.array_equal(idx.norms, norms)
+    save_compact_npy(idx, str(tmp_path))
+    loaded = search.load_compact_npy(str(tmp_path))
+    assert isinstance(loaded.norms, np.memmap)
+    assert np.array_equal(loaded.norms, norms)

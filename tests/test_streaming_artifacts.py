@@ -415,3 +415,23 @@ def test_foreign_format_fails_loudly_and_leaves_artifact_untouched(
             assert meta_path in msg and "re-run init" in msg
             assert f"format {stamp}, expected 1" in msg
         assert _files(art) == before
+
+
+def test_arrow_schema_parses_each_ddl_once(spark, monkeypatch):
+    """Every driver-local append and driver fold turns its spec's DDL
+    into an Arrow schema; the DDL parse is a py4j call into the JVM, so
+    a second call for the same DDL must reuse the first parse."""
+    import pyspark.sql.types as T
+
+    real, parses = T._parse_datatype_string, []
+
+    def counting(ddl):
+        parses.append(ddl)
+        return real(ddl)
+
+    monkeypatch.setattr(T, "_parse_datatype_string", counting)
+    ddl = f"k long, v double, tag_{uuid.uuid4().hex} string"
+    first = deltalog._arrow_schema(ddl)
+    assert deltalog._arrow_schema(ddl) is first
+    assert parses == [ddl]
+    assert first.names[:2] == ["k", "v"]

@@ -9,6 +9,17 @@ executors in Arrow batches, each executor holds one shared read-only copy
 of the index. This is the batch-serving unit the reference's
 ``batch_search`` loops over (`hnsw.cpp:817-828`).
 
+The kernel (:func:`batch_search`) searches an Arrow batch in lockstep
+chunks of at most 64 queries (SURVEY.md:227 — the batch, not the query,
+is the unit). Each round, every query of a chunk still searching
+expands the best unexpanded entry of its beam; the CSR neighbours of all
+those heads are gathered, filtered against the visited words, scored
+with one batched dot product and merged into the ``(queries, ef)`` beams
+in one numpy pass per round. Visited state is one ``uint64`` per node,
+kept per worker process: bit b belongs to query b of the chunk (hence
+the 64-query chunk), and a layer clears the words it set when it ends
+(the O(1)-reset visited list of ``hnsw.h:219-222``, SURVEY.md:344).
+
 For indexes larger than executor memory the build-side tables stay
 DataFrames and search becomes iterative frontier joins (not needed at the
 driver's scale factors; the compact path covers ≤ tens of GB per executor).
@@ -16,7 +27,8 @@ driver's scale factors; the compact path covers ≤ tens of GB per executor).
 
 from __future__ import annotations
 
-import heapq
+import threading
+import time
 from dataclasses import dataclass
 
 import numpy as np
@@ -25,6 +37,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectordbindexing_spark.functions.vector import METRICS
+
+# rows per norm block: bounds the float64 copy of the vectors
+_NORM_BLOCK_ROWS = 1 << 16
+
+
+def _row_norms(vecs: np.ndarray) -> np.ndarray:
+    """Per-row L2 norms, computed exactly as ``np.linalg.norm(V.astype(
+    float64), axis=1)`` (each row's value does not depend on the block
+    it is computed in), one block of rows at a time."""
+    out = np.empty(len(vecs), dtype=np.float64)
+    for lo in range(0, len(vecs), _NORM_BLOCK_ROWS):
+        block = np.asarray(vecs[lo : lo + _NORM_BLOCK_ROWS], dtype=np.float64)
+        out[lo : lo + len(block)] = np.linalg.norm(block, axis=1)
+    return out
 
 
 @dataclass
@@ -40,6 +66,9 @@ class CompactIndex:
     # optional, CSR-parallel to indices: True where the edge is a
     # cross-distribution augmentation edge (reference edge_flags)
     edge_cross: dict[int, np.ndarray] | None = None
+    # (n,) float64 row norms of ``vecs``; computed here when not given
+    # (save_compact_npy persists them, load_compact_npy maps them)
+    norms: np.ndarray | None = None
 
     def __post_init__(self):
         # checked once here so the hot ``dist`` keeps no fallback branch
@@ -47,17 +76,32 @@ class CompactIndex:
             raise ValueError(
                 f"unknown metric {self.metric!r}; expected one of {METRICS}"
             )
+        if self.norms is None:
+            self.norms = _row_norms(self.vecs)
 
     def dist(self, q: np.ndarray, pos: np.ndarray) -> np.ndarray:
         V = self.vecs[pos].astype(np.float64)
         if self.metric == "cosine":
-            qn = np.linalg.norm(q)
-            vn = np.linalg.norm(V, axis=1)
-            return 1.0 - (V @ q) / (vn * qn)
+            return 1.0 - (V @ q) / (self.norms[pos] * np.linalg.norm(q))
         if self.metric == "l2":
             d = V - q
             return np.sqrt(np.sum(d * d, axis=1))
         return -(V @ q)
+
+    def pair_dist(
+        self, Q: np.ndarray, qn: np.ndarray, owner: np.ndarray, pos: np.ndarray
+    ) -> np.ndarray:
+        """Row-wise distance of query ``Q[owner[i]]`` (norm ``qn``) to
+        node ``pos[i]``: one batched dot product for a whole round."""
+        V = np.asarray(self.vecs)[pos].astype(np.float64)
+        Qg = Q[owner]
+        if self.metric == "l2":
+            d = V - Qg
+            return np.sqrt(np.einsum("ij,ij->i", d, d))
+        dot = np.einsum("ij,ij->i", V, Qg)
+        if self.metric == "cosine":
+            return 1.0 - dot / (np.asarray(self.norms)[pos] * qn[owner])
+        return -dot
 
 
 def compact_index(
@@ -154,125 +198,218 @@ def compact_index(
     )
 
 
-def _beam_search_layer(
-    index: CompactIndex,
-    q: np.ndarray,
-    layer: int,
-    entries: np.ndarray,
-    ef: int,
-    max_paths: int = 1,
-    max_hops: int = 500,
-    max_search_nodes: int | None = None,
-    stats_out: dict | None = None,
-) -> list[tuple[float, int]]:
-    """Best-first beam search with candidate min-heap + result max-heap and
-    early exit (reference `_search_layer` hnsw_cosine.py:445-473; hop cap
-    from roargraph_python.py:376; ``max_search_nodes`` visit budget from
-    hnsw_cosine_norm.py:349,697-720). ``max_paths`` > 1 is the multi-path
-    variant (reference `_search_layer_multi_path`,
-    hnsw_cosine_status_high.py:965-1077, max_paths=3): each round expands
-    the ``max_paths`` best frontier heads together — the paths share one
-    visited set and one result beam, so this widens exploration without
-    revisits. Stats: ``visited``, ``hops`` (rounds) and ``path_pops``
-    (heads expanded; equals ``hops`` at ``max_paths=1``)."""
-    indptr = index.indptr.get(layer)
-    indices = index.indices.get(layer)
-    if indptr is None:
-        return [(float(d), int(p)) for d, p in
-                zip(index.dist(q, entries), entries)]
-    visited = np.zeros(len(index.ids), dtype=bool)
-    entries = np.unique(entries)
-    d0 = index.dist(q, entries)
-    cand = [(float(d), int(p)) for d, p in zip(d0, entries)]
-    heapq.heapify(cand)
-    result = [(-d, p) for d, p in cand]
-    heapq.heapify(result)
-    while len(result) > ef:
-        heapq.heappop(result)
-    visited[entries] = True
-    n_visited = len(entries)
-    hops = 0
-    extra_pops = 0  # heads expanded beyond one per round
-    while cand and hops < max_hops:
-        if max_search_nodes is not None and n_visited >= max_search_nodes:
-            break
-        if max_paths == 1:
-            d, p = heapq.heappop(cand)
-            if d > -result[0][0] and len(result) >= ef:
+# Lockstep batch kernel. A chunk holds at most 64 queries: query b of a
+# chunk owns bit b of every node's visited word.
+_CHUNK = 64
+_BITS = np.left_shift(np.uint64(1), np.arange(_CHUNK, dtype=np.uint64))
+_PAD = np.iinfo(np.int64).max  # empty beam slot; sorts after every position
+_MAX_HOPS = 500  # expansion rounds per query per layer (roargraph_python.py:376)
+
+# visited words, one per node, reused by every search a (worker) thread
+# runs; all zero between layers, since each layer clears what it set
+_scratch = threading.local()
+
+
+def _visited_words(n: int) -> np.ndarray:
+    words = getattr(_scratch, "visited", None)
+    if words is None or len(words) < n:
+        words = _scratch.visited = np.zeros(n, dtype=np.uint64)
+    return words
+
+
+def _merge(D, P, X, owner, d, pos):
+    """Merge candidates (``owner`` ascending) into the sorted beams in
+    place: each row keeps its ``ef`` smallest (dist, position) pairs,
+    the candidates unexpanded. A NaN distance sorts after the empty
+    slots, so it never enters a beam."""
+    ef = D.shape[1]
+    starts = np.concatenate(([0], np.flatnonzero(owner[1:] != owner[:-1]) + 1))
+    rows = owner[starts]
+    cnt = np.diff(starts, append=len(owner))
+    r = np.repeat(np.arange(len(rows)), cnt)
+    c = ef + np.arange(len(owner)) - np.repeat(starts, cnt)
+    shape = (len(rows), ef + int(cnt.max()))
+    Dm = np.full(shape, np.inf)
+    Pm = np.full(shape, _PAD)
+    Xm = np.ones(shape, dtype=bool)
+    Dm[:, :ef], Pm[:, :ef], Xm[:, :ef] = D[rows], P[rows], X[rows]
+    Dm[r, c], Pm[r, c], Xm[r, c] = d, pos, False
+    o = Dm.argsort(1)
+    ri = np.arange(len(rows))[:, None]
+    Ds, Ps = Dm[ri, o], Pm[ri, o]
+    tie = ((Ds[:, 1:] == Ds[:, :-1]) & (Ps[:, 1:] != _PAD)).any(1)
+    if tie.any():  # exact distance ties: order them by position
+        t = np.flatnonzero(tie)
+        o[t] = np.lexsort((Pm[t], Dm[t]), axis=-1)
+        Ds, Ps = Dm[ri, o], Pm[ri, o]
+    D[rows], P[rows], X[rows] = Ds[:, :ef], Ps[:, :ef], Xm[ri, o[:, :ef]]
+
+
+def _seed(index, Q, qn, entries, ef):
+    """(D, P, X) beams of width ``ef`` holding each row's scored
+    ``entries`` (``_PAD``-padded positions), best first."""
+    b = len(Q)
+    D = np.full((b, ef), np.inf)
+    P = np.full((b, ef), _PAD)
+    X = np.ones((b, ef), dtype=bool)
+    r, c = np.nonzero(entries != _PAD)
+    if len(r):
+        pos = entries[r, c]
+        _merge(D, P, X, r, index.pair_dist(Q, qn, r, pos), pos)
+    return D, P, X
+
+
+def _beam_layer(index, layer, Q, qn, entries, ef, max_paths,
+                max_search_nodes, stats):
+    """One layer's beam search for a chunk, in lockstep rounds. A row
+    stops where the per-query heap beam stops (reference `_search_layer`
+    hnsw_cosine.py:445-473): when its beam holds no unexpanded entry —
+    with a full beam the heap's next head would be farther than the
+    worst kept entry — after ``_MAX_HOPS`` rounds, or once it has
+    visited ``max_search_nodes`` nodes (hnsw_cosine_norm.py:349,697-720).
+    A neighbour enters a full beam only when strictly nearer than its
+    worst entry. Returns (D, P) sorted by (dist, position)."""
+    b, n = len(Q), len(index.ids)
+    indptr = index.indptr[layer]
+    indices = np.asarray(index.indices[layer])
+    bits = _BITS[:b]
+    vis = _visited_words(n)
+    D, P, X = _seed(index, Q, qn, entries, ef)
+    er, ec = np.nonzero(entries != _PAD)
+    touched = [entries[er, ec]]
+    visited = np.bincount(er, minlength=b)
+    hops = np.zeros(b, dtype=np.int64)
+    pops = np.zeros(b, dtype=np.int64)
+    alive = np.ones(b, dtype=bool)
+    try:
+        np.bitwise_or.at(vis, touched[0], bits[er])
+        while True:
+            alive &= hops < _MAX_HOPS
+            if max_search_nodes is not None:
+                alive &= visited < max_search_nodes
+            act = np.flatnonzero(alive)
+            if len(act) == 0:
                 break
-            nbrs = indices[indptr[p] : indptr[p + 1]]
-            nbrs = nbrs[~visited[nbrs]]
-        else:
-            heads = [heapq.heappop(cand)
-                     for _ in range(min(max_paths, len(cand)))]
-            if heads[0][0] > -result[0][0] and len(result) >= ef:
-                break  # even the best head cannot improve the beam
-            extra_pops += len(heads) - 1
-            chunks = []
-            for _, h in heads:
-                nb = indices[indptr[h] : indptr[h + 1]]
-                nb = nb[~visited[nb]]
-                visited[nb] = True  # later heads skip earlier heads' nbrs
-                chunks.append(nb)
-            nbrs = np.concatenate(chunks)
-        hops += 1
-        if len(nbrs) == 0:
+            U = ~X[act]
+            if max_paths == 1:
+                hc = U.argmax(1)
+                has = U[np.arange(len(act)), hc]
+                hr, hc = act[has], hc[has]
+                npop = has
+            else:  # the max_paths best unexpanded entries of each row
+                take = U & (np.cumsum(U, 1) <= max_paths)
+                r, hc = np.nonzero(take)
+                hr = act[r]
+                npop = take.sum(1)
+            alive[act[npop == 0]] = False
+            if len(hr) == 0:
+                break
+            hops[act] += npop > 0
+            pops[act] += npop
+            X[hr, hc] = True
+            # every head's CSR row, one gather for the whole chunk
+            heads = P[hr, hc]
+            start = indptr[heads]
+            cnt = indptr[heads + 1] - start
+            offs = np.repeat(start - (np.cumsum(cnt) - cnt), cnt)
+            node = indices[offs + np.arange(len(offs))]
+            owner = np.repeat(hr, cnt)
+            fresh = (vis[node] & bits[owner]) == 0
+            node, owner = node[fresh], owner[fresh]
+            if max_paths > 1:  # heads of one row may share neighbours
+                key = np.unique(owner * n + node)
+                owner, node = key // n, key % n
+            if len(node) == 0:
+                continue
+            np.bitwise_or.at(vis, node, bits[owner])
+            touched.append(node)
+            visited += np.bincount(owner, minlength=b)
+            d = index.pair_dist(Q, qn, owner, node)
+            keep = (P[owner, -1] == _PAD) | (d < D[owner, -1])
+            if keep.any():
+                _merge(D, P, X, owner[keep], d[keep], node[keep])
+    finally:
+        vis[np.concatenate(touched)] = 0
+    stats["visited_count"] += visited
+    stats["hops"] += hops
+    stats["path_pops"] += pops
+    return D, P
+
+
+def _search_chunk(index, Q, k, ef_search, num_entry_points,
+                  layer1_ef_multiplier, max_paths, max_search_nodes, stats):
+    """Layered descent for ≤ 64 queries (like the C++ multi-entry
+    search, hnsw.cpp:769-815): beam each upper layer at
+    ``layer1_ef_multiplier``·max(ef, k) and keep each row's best
+    ``num_entry_points`` as its next seeds, then beam layer 0 at
+    max(ef, k). Returns the best k (dist, position) per row in
+    (dist, id) order, ``_PAD`` where a row has fewer."""
+    qn = np.linalg.norm(Q, axis=1)
+    ep = np.unique(index.entry_points)
+    entries = np.broadcast_to(ep, (len(Q), len(ep)))
+    ef = max(ef_search, k)
+    for layer in sorted(index.indptr, reverse=True):
+        if layer == 0:
             continue
-        visited[nbrs] = True
-        n_visited += len(nbrs)
-        dn = index.dist(q, nbrs)
-        for dd, pp in zip(dn, nbrs):
-            if len(result) < ef or dd < -result[0][0]:
-                heapq.heappush(cand, (float(dd), int(pp)))
-                heapq.heappush(result, (-float(dd), int(pp)))
-                if len(result) > ef:
-                    heapq.heappop(result)
-    if stats_out is not None:
-        stats_out["visited"] = stats_out.get("visited", 0) + n_visited
-        stats_out["hops"] = stats_out.get("hops", 0) + hops
-        stats_out["path_pops"] = (
-            stats_out.get("path_pops", 0) + hops + extra_pops
+        _, P = _beam_layer(
+            index, layer, Q, qn, entries, layer1_ef_multiplier * ef,
+            max_paths, max_search_nodes, stats,
         )
-    return [(-d, p) for d, p in result]
+        entries = P[:, :num_entry_points]
+    if 0 in index.indptr:
+        D, P = _beam_layer(
+            index, 0, Q, qn, entries, ef, max_paths, max_search_nodes, stats
+        )
+    else:  # only upper layers: the entries, scored
+        D, P, _ = _seed(index, Q, qn, entries, entries.shape[1])
+    ids = np.where(P == _PAD, _PAD, index.ids[np.minimum(P, len(index.ids) - 1)])
+    o = np.lexsort((ids, D), axis=-1)[:, :k]
+    return np.take_along_axis(D, o, 1), np.take_along_axis(P, o, 1)
 
 
-def _layered_search(
+def batch_search(
     index: CompactIndex,
-    q: np.ndarray,
+    Q: np.ndarray,
     k: int,
     ef_search: int,
     num_entry_points: int,
     layer1_ef_multiplier: int,
     max_paths: int = 1,
     max_search_nodes: int | None = None,
-    stats_out: dict | None = None,
-) -> list[tuple[float, int]]:
-    """One query's layered descent, shared by the broadcast and sharded
-    routes (like the C++ multi-entry search, hnsw.cpp:769-815): beam each
-    upper layer at ``layer1_ef_multiplier``·max(ef, k) and keep its top
-    ``num_entry_points`` as the next seeds, then beam layer 0 at
-    max(ef, k). Returns the layer-0 beam sorted by (dist, id)."""
-    entries = index.entry_points
-    for layer in sorted(index.indptr, reverse=True):
-        if layer == 0:
-            continue
-        up = _beam_search_layer(
-            index, q, layer, entries,
-            layer1_ef_multiplier * max(ef_search, k), max_paths=max_paths,
-            max_search_nodes=max_search_nodes, stats_out=stats_out,
+) -> tuple[np.ndarray, np.ndarray, dict[str, np.ndarray]]:
+    """Search the (nq, d) queries ``Q`` in chunks of ≤ 64, the kernel of
+    :func:`graph_search` and :func:`operators.shard.search_sharded`.
+
+    Returns (D, P, stats): (nq, k) distances and positions of each
+    query's result in (dist, id) order, P = -1 past a short result, and
+    per-query int64 arrays ``visited_count``, ``hops`` (rounds that
+    expanded a head, over all layers), ``latency_us`` (chunk time ÷
+    chunk size) and ``path_pops`` (heads expanded: the ``max_paths``
+    best unexpanded beam entries per round; equals ``hops`` at
+    ``max_paths=1``)."""
+    Q = np.asarray(Q, dtype=np.float64)
+    nq = len(Q)
+    D = np.full((nq, k), np.inf)
+    P = np.full((nq, k), -1, dtype=np.int64)
+    stats = {
+        name: np.zeros(nq, dtype=np.int64)
+        for name in ("visited_count", "hops", "latency_us", "path_pops")
+    }
+    for lo in range(0, nq, _CHUNK):
+        t0 = time.perf_counter()
+        sl = slice(lo, min(lo + _CHUNK, nq))
+        d, p = _search_chunk(
+            index, Q[sl], k, ef_search, num_entry_points,
+            layer1_ef_multiplier, max_paths, max_search_nodes,
+            {name: v[sl] for name, v in stats.items()},
         )
-        up.sort()
-        entries = np.array(
-            [p for _, p in up[:num_entry_points]], dtype=np.int64
+        w = d.shape[1]
+        D[sl, :w] = d
+        P[sl, :w] = np.where(p == _PAD, -1, p)
+        stats["latency_us"][sl] = int(
+            (time.perf_counter() - t0) * 1e6 / (sl.stop - lo)
         )
-    # ALWAYS beam on layer 0 (an index with only upper layers degrades
-    # gracefully: no layer-0 CSR scores just the entries)
-    res = _beam_search_layer(
-        index, q, 0, entries, max(ef_search, k), max_paths=max_paths,
-        max_search_nodes=max_search_nodes, stats_out=stats_out,
-    )
-    res.sort(key=lambda t: (t[0], index.ids[t[1]]))
-    return res
+    return D, P, stats
 
 
 def load_compact_npy(artifact_dir: str, mmap: bool = True) -> CompactIndex:
@@ -309,6 +446,10 @@ def load_compact_npy(artifact_dir: str, mmap: bool = True) -> CompactIndex:
         arr("entry_points.npy", None),
         meta["metric"],
         edge_cross or None,
+        # an artifact saved without norms gets them computed at load
+        arr("norms.npy") if os.path.exists(
+            os.path.join(artifact_dir, "norms.npy")
+        ) else None,
     )
 
 
@@ -350,20 +491,30 @@ def graph_search(
     max_paths: int = 1,
 ) -> DataFrame:
     """Batch ANN search: broadcast the index, stream query batches through
-    a mapInPandas kernel running the layered beam search per query.
+    a mapInPandas kernel (:func:`batch_search`) that searches each Arrow
+    batch in lockstep chunks of ≤ 64 queries.
 
     Two-phase like the C++ multi-entry search (hnsw.cpp:769-815): beam on
     the top layer to pick entry seeds, then beam on layer 0. The upper-layer
     beam runs at ``layer1_ef_multiplier``×ef (the "High" method's enhanced
     layer-1 search, hnsw_cosine_status_high.py:524-734 layer1_ef=2*ef);
     ``max_search_nodes`` caps visited nodes per layer (Norm method budget);
-    ``max_paths`` is the number of frontier heads the beam expands per
-    round (reference `_search_layer_multi_path` uses 3; the default 1 is
-    the single-path search).
-    Output: (qid, nbr_rank, neighbor_id, dist) like exact_knn;
-    ``with_stats`` appends per-query (visited_count, hops, latency_us,
-    path_pops) — the reference batch_search output dict
-    (hnsw_with_bridges_optimized.py:185-237).
+    ``max_paths`` is the number of beam heads each query expands per
+    round: its ``max_paths`` best unexpanded entries, which share one
+    visited set and one beam (reference `_search_layer_multi_path`,
+    hnsw_cosine_status_high.py:965-1077, uses 3; the default 1 is the
+    single-path search).
+    Output: (qid, nbr_rank, neighbor_id, dist) like exact_knn, ranked by
+    (dist, neighbor_id); ``with_stats`` appends per-query (visited_count,
+    hops, latency_us, path_pops) — the reference batch_search output dict
+    (hnsw_with_bridges_optimized.py:185-237). ``latency_us`` is the
+    query's chunk time divided by the chunk size.
+
+    The beam keeps the ``ef`` smallest (dist, id) pairs it admitted: a
+    neighbour enters a full beam only when strictly nearer than its worst
+    entry, an entry the beam drops is never expanded, and on an exact
+    distance tie the smaller id stays. On distinct distances this is the
+    per-query heap beam (``oracles._np_serve``) result for result.
 
     ``index`` may be a ``_compact_npy`` artifact DIRECTORY instead of an
     in-memory CompactIndex: then only the path string is broadcast and
@@ -371,7 +522,6 @@ def graph_search(
     (:func:`load_compact_npy`, per-process cached) — no driver-side
     load, no N-copies-per-box broadcast deserialization.
     """
-    import time as _time
     spark = queries.sparkSession
     bc = spark.sparkContext.broadcast(index)
 
@@ -380,32 +530,22 @@ def graph_search(
         if isinstance(idx, str):
             idx = _artifact_cached(idx)
         for pdf in batches:
-            qids, ranks, nids, dists = [], [], [], []
-            svis, shops, slat, spaths = [], [], [], []
-            for qid, v in zip(pdf["qid"], pdf["v"]):
-                q = np.asarray(v, dtype=np.float64)
-                stats: dict = {}
-                t0 = _time.perf_counter()
-                res = _layered_search(
-                    idx, q, k, ef_search, num_entry_points,
-                    layer1_ef_multiplier, max_paths=max_paths,
-                    max_search_nodes=max_search_nodes, stats_out=stats,
-                )
-                lat_us = int((_time.perf_counter() - t0) * 1e6)
-                for r, (d, p) in enumerate(res[:k], start=1):
-                    qids.append(qid); ranks.append(r)
-                    nids.append(int(idx.ids[p])); dists.append(float(d))
-                    svis.append(stats.get("visited", 0))
-                    shops.append(stats.get("hops", 0))
-                    slat.append(lat_us)
-                    spaths.append(stats.get("path_pops", 0))
-            out = {"qid": qids, "nbr_rank": ranks, "neighbor_id": nids,
-                   "dist": dists}
+            if len(pdf) == 0:
+                continue
+            Q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
+            D, P, stats = batch_search(
+                idx, Q, k, ef_search, num_entry_points, layer1_ef_multiplier,
+                max_paths=max_paths, max_search_nodes=max_search_nodes,
+            )
+            r, c = np.nonzero(P >= 0)
+            out = {
+                "qid": pdf["qid"].to_numpy()[r],
+                "nbr_rank": c + 1,
+                "neighbor_id": idx.ids[P[r, c]],
+                "dist": D[r, c],
+            }
             if with_stats:
-                out.update(
-                    {"visited_count": svis, "hops": shops,
-                     "latency_us": slat, "path_pops": spaths}
-                )
+                out.update({name: v[r] for name, v in stats.items()})
             yield pd.DataFrame(out)
 
     from vectordbindexing_spark.plans.partitioning import repartition_for_compute

@@ -28,7 +28,7 @@ from vectordbindexing_spark.plans.partitioning import local_rows_df
 from vectordbindexing_spark.functions.hashing import det_hash64
 from vectordbindexing_spark.operators.exact_knn import blocked_self_knn
 from vectordbindexing_spark.operators.graph import assign_level_py
-from vectordbindexing_spark.operators.search import CompactIndex, _layered_search
+from vectordbindexing_spark.operators.search import CompactIndex, batch_search
 from vectordbindexing_spark.operators.topk import topk_per_group
 
 SHARD_SCHEMA = (
@@ -156,7 +156,7 @@ def compact_npy_dir(path: str) -> str | None:
 def save_compact_npy(index: CompactIndex, artifact_dir: str) -> None:
     """Write the CompactIndex arrays as raw .npy files + meta.json — the
     mmap-able serving form :func:`operators.search.load_compact_npy`
-    opens in O(metadata). Layout: ids/vecs/entry_points.npy,
+    opens in O(metadata). Layout: ids/vecs/norms/entry_points.npy,
     indptr_L/indices_L.npy per layer, edge_cross_L.npy when present."""
     import json
     import os
@@ -167,6 +167,7 @@ def save_compact_npy(index: CompactIndex, artifact_dir: str) -> None:
         os.path.join(artifact_dir, "vecs.npy"),
         np.ascontiguousarray(index.vecs, dtype=np.float32),
     )
+    np.save(os.path.join(artifact_dir, "norms.npy"), index.norms)
     np.save(
         os.path.join(artifact_dir, "entry_points.npy"), index.entry_points
     )
@@ -285,18 +286,12 @@ def search_sharded(
     def search_one(pdf: pd.DataFrame) -> pd.DataFrame:
         idx = _index_from_rows(pdf, metric)
         bqids, bQ = bc.value
-        out_q, out_n, out_d = [], [], []
-        for qi in range(len(bqids)):
-            res = _layered_search(
-                idx, bQ[qi], k, ef_search, num_entry_points,
-                layer1_ef_multiplier,
-            )
-            for d, p in res[:k]:
-                out_q.append(bqids[qi])
-                out_n.append(int(idx.ids[p]))
-                out_d.append(float(d))
+        D, P, _ = batch_search(
+            idx, bQ, k, ef_search, num_entry_points, layer1_ef_multiplier
+        )
+        r, c = np.nonzero(P >= 0)
         return pd.DataFrame(
-            {"qid": out_q, "neighbor_id": out_n, "dist": out_d}
+            {"qid": bqids[r], "neighbor_id": idx.ids[P[r, c]], "dist": D[r, c]}
         )
 
     per_shard = index_df.groupBy("shard").applyInPandas(

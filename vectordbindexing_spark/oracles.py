@@ -289,8 +289,9 @@ def _np_two_layer_topk(
     """Per-query top-k [(dist, neighbor_id), ...] — numpy twin of the
     two-layer pipeline (deterministic level assignment → layer-1/layer-0
     exact kNN graphs with (dist, id) ties → mutualize with min-dist dedup
-    and 2·max(M0,M1) cap → max-degree entry points → layered beam search
-    with heap tie-breaks identical to operators.search._beam_search_layer).
+    and 2·max(M0,M1) cap → max-degree entry points → per-query heap
+    beam search, which the lockstep kernel operators.search.batch_search
+    reproduces result for result on distinct distances).
     """
     import heapq
     import math
@@ -407,9 +408,14 @@ def _np_serve(
     ef_search: int,
     num_entry_points: int,
     layer1_ef_multiplier: int,
+    max_search_nodes: int | None = None,
+    stats: list | None = None,
 ):
     """CSR build + entry points + layered beam search per query — numpy
-    twin of compact_index + graph_search over a prebuilt adjacency."""
+    twin of compact_index + graph_search over a prebuilt adjacency.
+    ``max_search_nodes`` caps visited nodes per layer like graph_search's;
+    ``stats``, when given, receives one (visited, hops) pair per query,
+    summed over layers."""
     import heapq
 
     import numpy as np
@@ -422,7 +428,7 @@ def _np_serve(
         Vv = PVi[pos].astype(np.float64)
         return 1.0 - (Vv @ q) / (np.linalg.norm(Vv, axis=1) * np.linalg.norm(q))
 
-    def beam(q, layer, entries, ef, max_hops=500):
+    def beam(q, layer, entries, ef, count, max_hops=500):
         indptr_a, indices_a = csr.get(layer, (None, None))
         if indptr_a is None:
             return [
@@ -438,8 +444,11 @@ def _np_serve(
         while len(result) > ef:
             heapq.heappop(result)
         visited[entries] = True
+        n_visited = len(entries)
         hops = 0
         while cand and hops < max_hops:
+            if max_search_nodes is not None and n_visited >= max_search_nodes:
+                break
             d, p = heapq.heappop(cand)
             worst = -result[0][0]
             if d > worst and len(result) >= ef:
@@ -450,6 +459,7 @@ def _np_serve(
             if len(nbrs) == 0:
                 continue
             visited[nbrs] = True
+            n_visited += len(nbrs)
             dn = idist(q, nbrs)
             for dd, pp in zip(dn, nbrs):
                 if len(result) < ef or dd < -result[0][0]:
@@ -457,23 +467,31 @@ def _np_serve(
                     heapq.heappush(result, (-float(dd), int(pp)))
                     if len(result) > ef:
                         heapq.heappop(result)
+        count[0] += n_visited
+        count[1] += hops
         return [(-d, p) for d, p in result]
 
     out = []
     for qi in range(len(Q)):
         q = Q[qi]
         entries = ep_pos
+        count = [0, 0]
         for layer in sorted(csr, reverse=True):
             if layer == 0:
                 continue
-            up = beam(q, layer, entries, layer1_ef_multiplier * max(ef_search, k))
+            up = beam(
+                q, layer, entries, layer1_ef_multiplier * max(ef_search, k),
+                count,
+            )
             up.sort()
             entries = np.array(
                 [p for _, p in up[:num_entry_points]], dtype=np.int64
             )
-        res = beam(q, 0, entries, max(ef_search, k))
+        res = beam(q, 0, entries, max(ef_search, k), count)
         res.sort(key=lambda t: (t[0], pos_ids[t[1]]))
         out.append([(float(d), int(pos_ids[p])) for d, p in res[:k]])
+        if stats is not None:
+            stats.append(tuple(count))
     return out
 
 

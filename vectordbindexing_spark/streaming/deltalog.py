@@ -63,6 +63,7 @@ adds are gone."""
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 from dataclasses import dataclass
@@ -208,7 +209,11 @@ def resolve(
     return live_base.unionByName(live_adds).select(*keep)
 
 
+@functools.lru_cache(maxsize=None)
 def _arrow_schema(ddl: str):
+    """Arrow schema of a DDL string. Parsing goes through the JVM (a
+    py4j call), and the specs' schemas are constants, so each DDL is
+    parsed once per process."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
